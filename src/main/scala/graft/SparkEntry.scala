@@ -398,7 +398,7 @@ object SparkEntry {
     // (rows-only; bitext_ann_gate is the hash-green companion)
     "bitext_mining_ann" -> ((s, dir) => Similarity.mineBitextAnn(s, dir)),
     // pair recall of the ANN miner vs the exact tier ≥ 0.8 (measured
-    // 0.939/0.961/0.949 at sf0.001/0.01/0.1 — tools/BitextProbe), plus
+    // 0.939/0.961/0.949 at sf0.001/0.01/0.1), plus
     // the one-pair-per-source bound; side sizes + exact pair count
     // SQL-recomputed
     "bitext_ann_gate" -> ((s, dir) => Similarity.bitextAnnGate(s, dir)),
@@ -3246,7 +3246,6 @@ object SparkEntry {
     // count); the cell-bounding invariants re-stated as constant flags —
     // all deterministic (seeded codebook, ordered tie-breaks), measured
     // recall 0.857/1.0/0.979 at sf0.001/0.01/0.1 vs the 0.75 floor
-    // (graft.tools.SemDedupSweep)
     "semantic_dedup_gate" ->
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),

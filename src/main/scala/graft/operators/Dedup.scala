@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
+import graft.gates.Audit
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -222,18 +223,18 @@ object Dedup {
     * Postings-list self-join: |A∩B| from the join, |A∪B| = |A|+|B|−|A∩B|.
     * Join volume is Σ_f df_f² over feature doc-frequencies.
     *
-    * Three exact implementations ship, selected per corpus statistics by
+    * Two exact implementations ship, selected per corpus statistics by
     * `jaccardPairsAuto`: this postings join (sparse vocab → short posting
-    * lists), `jaccardPairsPrefix` (AllPairs prefix filtering for Zipfian
-    * vocabularies), and `jaccardPairsBitmap` (dense small vocab, where
-    * posting lists are all long and the join volume explodes — this
-    * synthetic corpus' 961-bigram vocab is exactly that case). The LSH
+    * lists) and `jaccardPairsBitmap` (dense small vocab, where posting
+    * lists are all long and the join volume explodes — this synthetic
+    * corpus' 961-bigram vocab is exactly that case). The LSH
     * tier (minhashLshPairs) is the 100 TB candidate generator either
     * way; the exact tiers verify candidates. */
   def jaccardPairs(docs: DataFrame, tau: Double): DataFrame =
     jaccardPairsFromPostings(bigramPostings(docs), tau)
 
-  /** Exact-rational candidate bound shared by the prefix/bitmap tiers.
+  /** Exact-rational candidate bound shared by the prefix/bitmap tiers
+    * (the prefix tier is [[containmentPairsPrefix]]).
     *
     * Every exact tier's EMIT filter accepts `round(ratio, 6) >= tau`,
     * i.e. the exact rational ratio ≥ tau − 5e-7 (half-up at 6 dp). A
@@ -264,45 +265,6 @@ object Dedup {
         col("a.feat") === col("b.feat") &&
         col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    finishJaccard(inter, sizes, tau)
-  }
-
-  /** AllPairs prefix-filtered exact Jaccard (identical output to
-    * `jaccardPairs` — asserted in DedupSpec).
-    *
-    * Any pair with J ≥ tau has overlap ≥ ⌈tau·|X|⌉ for each side X
-    * (|A∩B| ≥ tau·|A∪B| ≥ tau·max), and under a global feature order the
-    * first common feature of such a pair must sit inside BOTH docs'
-    * prefixes of length |X| − ⌈tau·|X|⌉ + 1. Candidates come from a
-    * prefix-postings join (each doc's globally rarest features), then
-    * true overlaps are recounted for candidates only. */
-  def jaccardPairsPrefix(docs: DataFrame, tau: Double): DataFrame = {
-    // the prefix plan reads the postings five ways (sizes, dfreq, prefix,
-    // and both recount sides) — checkpoint once, same as the auto path
-    val posts = bigramPostings(docs).localCheckpoint(true)
-    val sizes = posts.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
-    // global order: ascending document frequency, feature hash tiebreak
-    val dfreq = posts.groupBy("feat").agg(count(lit(1)).as("df"))
-    val rankW = Window.partitionBy("doc_id").orderBy("df", "feat")
-    val prefix = posts.join(dfreq, "feat")
-      .join(sizes, "doc_id")
-      .withColumn("pos", row_number().over(rankW))
-      // prefix length from the emit-boundary overlap bound (n such that
-      // n/|X| ≥ tau − 5e-7), not ⌈tau·|X|⌉ — see [[requiredOverlap]]
-      .filter(col("pos") <=
-        col("set_size") - requiredOverlap(tau, col("set_size")) + 1)
-      .select("doc_id", "feat")
-    val cand = prefix.as("a")
-      .join(prefix.as("b"),
-        col("a.feat") === col("b.feat") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val pa = posts.select(col("doc_id").as("id_a"), col("feat"))
-    val pb = posts.select(col("doc_id").as("id_b"), col("feat"))
-    val inter = cand.join(pa, "id_a").join(pb, Seq("id_b", "feat"))
-      .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_inter"))
     finishJaccard(inter, sizes, tau)
   }
@@ -437,8 +399,8 @@ object Dedup {
     * Featureless docs (< 2 tokens) never enter the postings, so the
     * denominator is always ≥ 1.
     *
-    * Like the Jaccard family, three exact implementations ship behind
-    * [[containmentPairsAuto]]: this postings self-join (sparse vocab),
+    * Three exact implementations ship behind [[containmentPairsAuto]]:
+    * this postings self-join (sparse vocab),
     * [[containmentPairsPrefix]] (Zipfian vocab), and a bitmap tier
     * (dense small vocab — where this join's Σ df² volume explodes,
     * 17 s vs 1.5 s at sf0.1 on the synthetic corpus). */
@@ -467,8 +429,8 @@ object Dedup {
     * |A∩B| ≥ ⌈tau·min(|A|,|B|)⌉ (the larger directional ratio is
     * n/min). For the smaller side X that means overlap ≥ ⌈tau·|X|⌉, so
     * under a global feature order X's first |X| − ⌈tau·|X|⌉ + 1
-    * features must hit the OTHER doc's full set. Unlike the Jaccard
-    * tier, prefix-vs-prefix is NOT sound here — the larger side's
+    * features must hit the OTHER doc's full set. Unlike AllPairs
+    * Jaccard prefix filtering, prefix-vs-prefix is NOT sound here — the larger side's
     * required overlap (⌈tau·min⌉) is below its own ⌈tau·|X|⌉ prefix
     * guarantee — so candidates come from a prefix-vs-FULL-postings
     * join: Σ_f df_prefix(f)·df(f), and with the order ascending in
@@ -1097,6 +1059,10 @@ object Dedup {
     labels.select(col("id").as("doc_id"), col("comp"))
   }
 
+  /** Resume-store namespaces of the star closures running in this JVM. */
+  private val liveStarStores =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Connected components via alternating large-star/small-star
     * [Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC 2014] — the diameter-INDEPENDENT tier. Min-label propagation
@@ -1156,19 +1122,6 @@ object Dedup {
           struct(col("u"), col("m").as("v")))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"))
     }
-    // Resume store (spark.graft.resumeDir): a restarted run seeds from
-    // the highest complete round snapshot instead of recomputing the
-    // loop from the input — sound because large/small-star preserves
-    // connectivity, so the unique fixpoint (min-rooted star forest) is
-    // reachable from ANY intermediate round's edge set. `roundNo` names
-    // snapshots globally across restarts; `iter` only budgets THIS
-    // run's rounds.
-    val session = pairs.sparkSession
-    val resumed = Checkpoints.latestRound(session, "components_star")
-    var roundNo = resumed.map(_._1).getOrElse(0)
-    var edges = Checkpoints.materialize(
-      resumed.map(_._2).getOrElse(canon(init)))
-    if (resumed.isEmpty) Checkpoints.saveRound(edges, "components_star", 0)
     // Fixpoint check = ONE scan-only aggregate per round over the
     // checkpointed blocks: (cardinality, order-free content fingerprint
     // Σ xxhash64(u,v) mod 2¹²⁸-ish in decimal(38,0) — overflow-safe
@@ -1185,35 +1138,58 @@ object Dedup {
     // bench queries at ~50 AQE-stage jobs each with ~0.1 s fixed cost
     // per job, and this audit is 1 job/round instead of 2-4 (guide §1.2:
     // remove passes before tuning inside them).
-    def audit(e: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-    }
-    var (edgeCount, edgeFp) = audit(edges)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = Checkpoints.materialize(
-        canon(smallStar(canon(largeStar(edges)))))
-      roundNo += 1
-      Checkpoints.saveRound(next, "components_star", roundNo)
-      val (nextCount, nextFp) = audit(next)
-      converged = nextCount == edgeCount && nextFp.compareTo(edgeFp) == 0
-      // the comparison was this round's last read of the old edges
-      Checkpoints.dropRound(edges)
-      edges = next
-      edgeCount = nextCount
-      edgeFp = nextFp
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponentsStar did not converge in $maxIter rounds — " +
-        s"O(log² n) bound exceeded, which indicates a bug, not a deep " +
-        s"graph")
-    // success: a stale fixpoint must never seed a later run's resume
-    Checkpoints.clearRounds(session, "components_star")
+    def audit(e: DataFrame): (Long, String) =
+      Audit.fingerprint(e, Seq("u", "v"))
+    var edges = Checkpoints.materialize(canon(init))
+    var edgeFp = audit(edges)
+    // Resume store (spark.graft.resumeDir): a restarted run seeds from
+    // the highest complete round snapshot instead of recomputing the
+    // loop from the input — sound because large/small-star preserves
+    // connectivity, so the unique fixpoint (min-rooted star forest) is
+    // reachable from ANY intermediate round's edge set. The namespace
+    // is keyed by the input edge set's fingerprint (the round-0 audit
+    // above — no extra action): concurrent closures over different
+    // graphs never share snapshots, and a restart never seeds from
+    // another graph's round. A concurrent closure over the SAME graph
+    // in this JVM (the dedup gates' two pair tiers agree exactly at
+    // full recall) runs store-less: two writers on one round path
+    // would race each other's overwrite. `roundNo` names snapshots
+    // globally across restarts; `iter` only budgets THIS run's rounds.
+    val session = pairs.sparkSession
+    val store = Some(s"components_star-${edgeFp._1}-${edgeFp._2}")
+      .filter(liveStarStores.add)
+    try {
+      val resumed = store.flatMap(Checkpoints.latestRound(session, _))
+      var roundNo = resumed.map(_._1).getOrElse(0)
+      resumed match {
+        case Some((_, snap)) =>
+          Checkpoints.dropRound(edges)
+          edges = Checkpoints.materialize(snap)
+          edgeFp = audit(edges)
+        case None => store.foreach(Checkpoints.saveRound(edges, _, 0))
+      }
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        val next = Checkpoints.materialize(
+          canon(smallStar(canon(largeStar(edges)))))
+        roundNo += 1
+        store.foreach(Checkpoints.saveRound(next, _, roundNo))
+        val nextFp = audit(next)
+        converged = nextFp == edgeFp
+        // the comparison was this round's last read of the old edges
+        Checkpoints.dropRound(edges)
+        edges = next
+        edgeFp = nextFp
+        iter += 1
+      }
+      require(converged,
+        s"connectedComponentsStar did not converge in $maxIter rounds — " +
+          s"O(log² n) bound exceeded, which indicates a bug, not a deep " +
+          s"graph")
+      // success: a stale fixpoint must never seed a later run's resume
+      store.foreach(Checkpoints.clearRounds(session, _))
+    } finally store.foreach(liveStarStores.remove)
     // fixpoint edges are (member, root) stars; roots label themselves
     edges.select(col("u").as("doc_id"), col("v").as("comp"))
       .union(edges.select(col("v").as("doc_id"), col("v").as("comp"))
@@ -1357,42 +1333,34 @@ object Dedup {
     // exact tier, the most expensive subquery here, re-runs per
     // action. The two tiers are independent chains: overlap their
     // materializations (guide §2.6)
-    val (globalPairs, semPairs) = Similarity.inParallel(
+    val (globalPairs, semPairs) = Audit.parallel(
       embeddingNearDupPairs(emb, tau)
         .select("id_a", "id_b").localCheckpoint(true),
       semanticPairs(emb, tau, cells, lloydIters, probes)
         .localCheckpoint(true))
-    // ONE full-join aggregate decides nExact + nExtra + nMissed (both
+    // ONE full-join aggregate decides nSem + nHit + nExact (both
     // tiers unique per (id_a, id_b): the θ-join emits each ordered
     // pair once, semanticPairs is distinct — so the full join holds
     // matched + sem-only + exact-only rows exactly once each); the r19
     // form was three separate count/anti-join actions. The two closure
     // counts are independent loops — overlap them, and overlap the
     // pair fold + corpus count against the closures
-    val pairAgg = semPairs.withColumn("__s", lit(1L)).join(
-        globalPairs.withColumn("__g", lit(1L)),
-        Seq("id_a", "id_b"), "full")
-      .agg(coalesce(sum("__g"), lit(0L)),
-        coalesce(sum(when(col("__g").isNull, 1L)), lit(0L)),
-        coalesce(sum(when(col("__s").isNull, 1L)), lit(0L)))
+    val pairAgg = Audit.overlap(semPairs, globalPairs, Seq("id_a", "id_b"))
     val ((nVec, pairRow), (semNonRoot, globalNonRoot)) =
-      Similarity.inParallel(
-        Similarity.inParallel(emb.count(), pairAgg.head()),
-        Similarity.inParallel(
+      Audit.parallel(
+        Audit.parallel(emb.count(), pairAgg.head()),
+        Audit.parallel(
           connectedComponentsStar(semPairs)
             .filter(col("comp") =!= col("doc_id")).count(),
           connectedComponentsStar(globalPairs)
             .filter(col("comp") =!= col("doc_id")).count()))
-    val nExact = pairRow.getLong(0)
-    val nExtra = pairRow.getLong(1)
-    val nMissed = pairRow.getLong(2)
-    val recall =
-      if (nExact == 0) 1.0 else (nExact - nMissed).toDouble / nExact
+    val nHit = pairRow.getLong(1)
+    val nExact = pairRow.getLong(2)
     val semSurvivors = nVec - semNonRoot
     val globalSurvivors = nVec - globalNonRoot
     Seq((nVec, nExact,
-      if (nExtra == 0) 1 else 0,
-      if (recall >= recallFloor) 1 else 0,
+      if (pairRow.getLong(0) == nHit) 1 else 0,
+      Audit.recallOk(nHit, nExact, recallFloor),
       if (semSurvivors >= globalSurvivors) 1 else 0))
       .toDF("n_vectors", "n_pairs_exact", "subset_ok", "recall_ok",
         "survivors_ok")
@@ -1467,34 +1435,26 @@ object Dedup {
     // pair tiers, fold the three agreement counts into ONE full-join
     // aggregate (both tiers unique per (id_a, id_b)), and overlap the
     // two closure counts (guide §1.2 + §2.6)
-    val (globalPairs, graphPairs) = Similarity.inParallel(
+    val (globalPairs, graphPairs) = Audit.parallel(
       embeddingNearDupPairs(emb, tau)
         .select("id_a", "id_b").localCheckpoint(true),
       semanticPairsGraph(emb, tau, k).localCheckpoint(true))
-    val pairAgg = graphPairs.withColumn("__s", lit(1L)).join(
-        globalPairs.withColumn("__g", lit(1L)),
-        Seq("id_a", "id_b"), "full")
-      .agg(coalesce(sum("__g"), lit(0L)),
-        coalesce(sum(when(col("__g").isNull, 1L)), lit(0L)),
-        coalesce(sum(when(col("__s").isNull, 1L)), lit(0L)))
+    val pairAgg = Audit.overlap(graphPairs, globalPairs, Seq("id_a", "id_b"))
     val ((nVec, pairRow), (graphNonRoot, globalNonRoot)) =
-      Similarity.inParallel(
-        Similarity.inParallel(emb.count(), pairAgg.head()),
-        Similarity.inParallel(
+      Audit.parallel(
+        Audit.parallel(emb.count(), pairAgg.head()),
+        Audit.parallel(
           connectedComponentsStar(graphPairs)
             .filter(col("comp") =!= col("doc_id")).count(),
           connectedComponentsStar(globalPairs)
             .filter(col("comp") =!= col("doc_id")).count()))
-    val nExact = pairRow.getLong(0)
-    val nExtra = pairRow.getLong(1)
-    val nMissed = pairRow.getLong(2)
-    val recall =
-      if (nExact == 0) 1.0 else (nExact - nMissed).toDouble / nExact
+    val nHit = pairRow.getLong(1)
+    val nExact = pairRow.getLong(2)
     val graphSurvivors = nVec - graphNonRoot
     val globalSurvivors = nVec - globalNonRoot
     Seq((nVec, nExact,
-      if (nExtra == 0) 1 else 0,
-      if (recall >= recallFloor) 1 else 0,
+      if (pairRow.getLong(0) == nHit) 1 else 0,
+      Audit.recallOk(nHit, nExact, recallFloor),
       if (graphSurvivors >= globalSurvivors) 1 else 0))
       .toDF("n_vectors", "n_pairs_exact", "subset_ok", "recall_ok",
         "survivors_ok")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
+import graft.gates.Audit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,31 +27,6 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   import graft.functions.VectorExpressions.dot_native
-
-  /** Run two INDEPENDENT gate actions concurrently (guide §2.6):
-    * Spark's scheduler happily overlaps jobs — actions are only
-    * sequential because driver code calls them sequentially — and the
-    * episode gates' audit actions are tiny independent reads whose
-    * stage tails leave most cores idle. A fresh thread per call (not a
-    * pool): Spark's job group/description live in INHERITABLE
-    * thread-locals captured at thread creation, so a fresh thread
-    * carries THIS call's labels and stays cancellable by the bench's
-    * job-group watchdog, where a pooled thread would carry whatever
-    * query first created it. Only for order-independent read work —
-    * both sides must be pure actions over already-committed state. */
-  private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    val ra = new java.util.concurrent.atomic.AtomicReference[
-      Either[Throwable, A]]()
-    val t = new Thread(() => ra.set(
-      try Right(fa) catch { case e: Throwable => Left(e) }),
-      "graft-gate-parallel")
-    t.setDaemon(true)
-    t.start()
-    val rb = try Right(fb) catch { case e: Throwable => Left(e) }
-    t.join()
-    (ra.get.fold(e => throw e, identity),
-      rb.fold(e => throw e, identity))
-  }
 
   /** Exact cosine top-k neighbors for each query vector (broadcast).
     * Norms precomputed per side; per-pair dot is the codegen'd native
@@ -181,7 +157,7 @@ object Similarity {
   /** Default codebook shape is test-scale: 16 cells over a few-hundred-row
     * corpus needs half of them probed for recall parity with the LSH tier
     * (measured recall@5 0.82/0.90 at sf0.01/0.001 with 3 Lloyd
-    * iterations — graft.tools.IvfSweep). At 100 TB, cells grows ~√N so
+    * iterations, one-off sweep). At 100 TB, cells grows ~√N so
     * nprobe stays a small constant FRACTION of a much larger codebook and
     * the probe still reads only nprobe partitions. */
   /** Seeded-init + Lloyd-refined IVF codebook over a decoded (vec_id, v)
@@ -235,14 +211,11 @@ object Similarity {
     * bypass the cache: their per-iteration output IS the point. At
     * production scale the same artifact lives in a model store; this is
     * the in-session equivalent (the bpeCache precedent). */
-  private def corpusFp(df: DataFrame, cols: Seq[String]): (Long, String) = {
-    // sum in decimal: an int64 sum of n × xxhash64 values overflows
-    // (and ANSI mode makes that an error, not a wrap) — decimal(38,0)
-    // holds any realistic corpus count × 2^63 exactly
-    val r = df.agg(count(lit(1)),
-      sum(xxhash64(cols.map(col): _*).cast("decimal(20,0)"))).head()
-    (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-  }
+  private def corpusFp(df: DataFrame, cols: Seq[String]): (Long, String) =
+    // the decimal(20,0) cast (not Audit.fingerprint's 38) keys the
+    // registries: it is part of every cached model's identity
+    Audit.unpack(df.agg(count(lit(1)),
+      sum(xxhash64(cols.map(col): _*).cast("decimal(20,0)"))).head())
   private val ivfModelCache = new java.util.concurrent.ConcurrentHashMap[
     ((Long, String), Int, Int), Array[Array[Double]]]()
   private val pqModelCache = new java.util.concurrent.ConcurrentHashMap[
@@ -426,16 +399,12 @@ object Similarity {
     val bf = Checkpoints.scratch(
       knnBruteForce(emb, queries, k).select("query_id", "nn_id"))
     def gate(name: String, ann: DataFrame, floor: Double): DataFrame =
-      ann.select("query_id", "nn_id")
-        .join(bf.withColumn("hit", lit(1)), Seq("query_id", "nn_id"), "left")
-        .agg(count(lit(1)).as("n_results"),
-          count_distinct(col("query_id")).as("n_queries"),
-          // the outer coalesce handles the empty-query-set case: sum()
-          // over zero rows is NULL even with a coalesced argument
-          coalesce(sum(coalesce(col("hit"), lit(0))), lit(0L)).as("n_hits"))
-        .select(lit(name).as("method"), col("n_results"), col("n_queries"),
-          (col("n_results") === col("n_queries") * k).cast("int").as("full_k"),
-          (col("n_hits").cast("double") >=
+      Audit.hits(ann.select("query_id", "nn_id"), bf, Seq("query_id", "nn_id"),
+          count_distinct(col("query_id")).as("n_queries"))
+        .select(lit(name).as("method"), col("n").as("n_results"),
+          col("n_queries"),
+          (col("n") === col("n_queries") * k).cast("int").as("full_k"),
+          (col("hits").cast("double") >=
             lit(floor) * col("n_queries") * k).cast("int").as("recall_ok"))
     // shared-model path: train the IVF codebook and the PQ codebooks
     // ONCE, encode the corpus ONCE (the ivfpq index's codes ARE the pq
@@ -496,7 +465,7 @@ object Similarity {
     * expression — one primitive pass per vector, packed in a long, so a
     * band key is a shift-and-mask, not array slicing.
     *
-    * Defaults from a measured sweep (graft.tools.LshSweep, random-vector
+    * Defaults from a measured sweep (random-vector
     * corpus — LSH's worst case): r = nBits/bands sets per-band bucket
     * count 2^r (candidate selectivity), bands sets the OR-chances
     * (recall). r=4, 12 bands gives recall@5 0.82/0.92 at sf0.01/0.1 at
@@ -530,7 +499,7 @@ object Similarity {
     // index would, while the STORED index is untouched (the production
     // argument: recall tuning without re-banding 100 TB of signatures;
     // measured recall@5 0.80/0.82/0.92 → 1.0 at ALL of
-    // sf0.001/0.01/0.1, no measurable wall cost — tools/LshMpProbe).
+    // sf0.001/0.01/0.1, no measurable wall cost).
     // Query-side rows grow ×(1+r) — nq-bounded.
     val qBanded = banded(queries, "query_id", "vq", "nq")
     val q =
@@ -769,7 +738,7 @@ object Similarity {
     * per query — nq·rerank rows, driver-bounded — fetches its exact
     * vectors via a broadcast join and re-ranks by true cosine. ADC
     * distortion with a 16×16 codebook leaves shortlist-50 recall at
-    * 0.90 on the testdata (PqProbe) while raw ADC top-5 sat at ~0.3 —
+    * 0.90 on the testdata while raw ADC top-5 sat at ~0.3 —
     * re-rank is where PQ recall comes from, not a luxury. */
   def knnPq(emb: DataFrame, queries: DataFrame, k: Int,
             iters: Int = PqIters, rerank: Int = 50): DataFrame = {
@@ -947,7 +916,7 @@ object Similarity {
     // unit(q) − unit(v) = r_q − r exactly, so per-(query, cell) ADC
     // tables approximate the true unit-space L2). MEASURED on this
     // testdata it does NOT pay: recall@5 0.80 vs 0.90 raw at sf0.001,
-    // 0.72 vs 0.74 at sf0.01 (tools/IvfPqProbe) — with only 16 coarse
+    // 0.72 vs 0.74 at sf0.01 — with only 16 coarse
     // cells over near-uniform synthetic vectors the residuals carry
     // nearly the raw variance, so the finer-quantization argument
     // (Jégou et al. §IV) only bites at production cell counts
@@ -1040,14 +1009,9 @@ object Similarity {
       val fromFull = index.filter(col("nn_id") < 50)
         .select(col("nn_id"), col("cell").as("cell_f"),
           col("codes").as("codes_f"))
-      val j = appended.join(fromFull, Seq("nn_id"))
-        .agg(count(lit(1)).as("n_join"),
-          coalesce(sum((col("cell") === col("cell_f") &&
-            col("codes") === col("codes_f")).cast("long")), lit(0L))
-            .as("n_eq"))
-        .head()
-      (if (j.getLong(0) == nInc) 1 else 0,
-        if (j.getLong(1) == nInc) 1 else 0)
+      val Seq(nJoin, nEq) = Audit.counts(appended.join(fromFull, Seq("nn_id")),
+        col("cell") === col("cell_f") && col("codes") === col("codes_f"))
+      (if (nJoin == nInc) 1 else 0, if (nEq == nInc) 1 else 0)
     }
     val (countOk, rowsOk) = check(residual = false)
     val (resCountOk, resRowsOk) = check(residual = true)
@@ -1249,12 +1213,10 @@ object Similarity {
     val appended = ivfPqAppend(cents0, cb0, late)
     val staleIdx = Checkpoints.scratch(
       idx0.unionAll(appended.select("nn_id", "cell", "codes")))
-    val audit = staleIdx.agg(count(lit(1)).as("n_total"),
-      coalesce(sum((col("cell") >= 0 &&
-        col("cell") < staleCells).cast("long")), lit(0L)).as("n_in_range"))
-      .head()
-    val appendComplete = if (audit.getLong(0) == nNow) 1 else 0
-    val cellsInRange = if (audit.getLong(1) == nNow) 1 else 0
+    val Seq(nTotal, nInRange) = Audit.counts(staleIdx,
+      col("cell") >= 0 && col("cell") < staleCells)
+    val appendComplete = if (nTotal == nNow) 1 else 0
+    val cellsInRange = if (nInRange == nNow) 1 else 0
     // stage 3-4: the snapshot the policy deploys — rebuild when the
     // trigger trips, else keep serving the appended stale index
     val (cents, cb, index) =
@@ -1273,19 +1235,14 @@ object Similarity {
       residual = false).select("query_id", "nn_id")
     val bf = knnBruteForce(emb, queries, k).select("query_id", "nn_id")
     val nq = queries.count()
-    val kEff = math.min(k.toLong, math.max(nNow - 1, 0L))
+    val kEff = Audit.kEff(k, nNow)
     // one left-join aggregate decides full-k AND recall hits (bf pairs
     // unique per (query, nn) — the knnBruteForce uniqueness contract),
     // where the r19 form scratched the probe then ran a count plus a
     // semi-join count: 3 actions folded to 1 — guide §1.2
-    val annAudit = ann.join(bf.withColumn("__hit", lit(1L)),
-        Seq("query_id", "nn_id"), "left")
-      .agg(count(lit(1)), coalesce(sum("__hit"), lit(0L))).head()
+    val annAudit = Audit.hits(ann, bf, Seq("query_id", "nn_id")).head()
     val fullK = if (annAudit.getLong(0) == nq * kEff) 1 else 0
-    val nHits = annAudit.getLong(1)
-    val recallOk =
-      if (nq * kEff == 0L) 1
-      else if (nHits.toDouble / (nq * kEff) >= recallFloor) 1 else 0
+    val recallOk = Audit.recallOk(annAudit.getLong(1), nq * kEff, recallFloor)
     row(nBase, nNow - nBase, nNow, staleCells, freshCells, rebuild,
       appendComplete, cellsInRange, fullK, recallOk)
   }
@@ -1307,7 +1264,7 @@ object Similarity {
     *      rows, driver-bounded) fetches true vectors via broadcast
     *      join and re-ranks by exact cosine.
     *
-    * Recall vs exact top-5 on the testdata (tools/IvfPqProbe): 0.90 /
+    * Recall vs exact top-5 on the testdata: 0.90 /
     * 0.82 / 0.70 at sf0.001/0.01/0.1 with cells=16, nprobe=8,
     * rerank=100 — the IVF probe-miss and ADC distortion losses compose
     * (ivf alone 0.82/0.90, pq alone 0.90), and the shortlist depth is
@@ -1431,7 +1388,7 @@ object Similarity {
   /** Probe-width policy for [[knnIvfPq]]: probe enough cells that the
     * EXPECTED candidate mass covers the shortlist with margin —
     * nprobe = ⌈12·rerank·cells/N⌉ clamped to [8, cells]. The sweep
-    * behind it (tools/IvfPqProbe): at sf0.1 nprobe=8 caps recall@5 at
+    * behind it: at sf0.1 nprobe=8 caps recall@5 at
     * 0.74 regardless of rerank (probe loss, not ADC distortion, is
     * binding once cells hold N/cells=125 vectors), while the policy's
     * nprobe=12 with the ln-scaled rerank reaches 0.88 (raw) / 0.80
@@ -1527,7 +1484,7 @@ object Similarity {
     * the measured scaling policies ([[scaledRerank]] /
     * [[scaledNprobe]]) — the same configuration the gated IVFADC tier
     * ships, so the miner's recall doesn't silently erode as cells fill
-    * (IvfPqProbe: fixed nprobe=8 becomes probe-loss-bound as N/cells
+    * (a fixed nprobe=8 becomes probe-loss-bound as N/cells
     * grows). [[bitextAnnGate]] hash-checks pair recall vs the exact
     * tier. */
   def mineBitextAnn(s: SparkSession, dir: String, srcLang: String = "en",
@@ -1618,7 +1575,7 @@ object Similarity {
     import s.implicits._
     // the exact and ANN miners are independent chains — overlap their
     // materializations (guide §2.6): wall-clock becomes max, not sum
-    val (exact, ann) = inParallel(
+    val (exact, ann) = Audit.parallel(
       Checkpoints.scratch(
         mineBitext(s, dir, srcLang, tgtLang).select("src_id", "tgt_id")),
       Checkpoints.scratch(
@@ -1637,22 +1594,14 @@ object Similarity {
       .agg(
         coalesce(sum((col("lang") === srcLang).cast("long")), lit(0L)),
         coalesce(sum((col("lang") === tgtLang).cast("long")), lit(0L)))
-    val hitAggF = ann.withColumn("__a", lit(1)).join(
-        exact.withColumn("__hit", lit(1)),
-        Seq("src_id", "tgt_id"), "full")
-      .agg(coalesce(sum("__a"), lit(0L)),
-        coalesce(sum(when(col("__a") === 1, col("__hit"))), lit(0L)),
-        coalesce(sum("__hit"), lit(0L)))
+    val hitAggF = Audit.overlap(ann, exact, Seq("src_id", "tgt_id"))
     val (sides, hitAgg) =
-      inParallel(sidesAgg.head(), hitAggF.head())
+      Audit.parallel(sidesAgg.head(), hitAggF.head())
     val nSrc = sides.getLong(0)
     val nTgt = sides.getLong(1)
     val nAnn = hitAgg.getLong(0)
-    val nHit = hitAgg.getLong(1)
     val nExact = hitAgg.getLong(2)
-    val recallOk =
-      if (nExact == 0L) 1
-      else if (nHit.toDouble / nExact >= recallFloor) 1 else 0
+    val recallOk = Audit.recallOk(hitAgg.getLong(1), nExact, recallFloor)
     val boundedOk = if (nAnn <= nSrc) 1 else 0
     Seq((nSrc, nTgt, nExact, recallOk, boundedOk))
       .toDF("n_src", "n_tgt", "n_exact", "recall_ok", "bounded_ok")
@@ -2129,21 +2078,16 @@ object Similarity {
     val g = knnGraphAppend(emb.filter(col("vec_id") <= thr),
         emb.filter(col("vec_id") > thr), k)
       .select("query_id", "nn_id")
-    val kEff = math.min(k.toLong, math.max(nNow - 1, 0L))
-    val sample = emb.orderBy(xxhash64(col("vec_id"), lit(99)),
-      col("vec_id")).limit(sampleN)
-    val bf = knnBruteForce(emb, sample, k).select("query_id", "nn_id")
+    val kEff = Audit.kEff(k, nNow)
+    val bf = knnBruteForce(emb, Audit.recallSample(emb, sampleN), k)
+      .select("query_id", "nn_id")
     val nSample = math.min(sampleN.toLong, nNow)
     // one left-join aggregate decides edge count AND recall hits (bf
     // pairs unique per (query, nn) — multiplicity safe) — guide §1.2
-    val gAudit = g.join(bf.withColumn("__hit", lit(1L)),
-        Seq("query_id", "nn_id"), "left")
-      .agg(count(lit(1)), coalesce(sum("__hit"), lit(0L))).head()
+    val gAudit = Audit.hits(g, bf, Seq("query_id", "nn_id")).head()
     val fullK = if (gAudit.getLong(0) == nNow * kEff) 1 else 0
-    val nHits = gAudit.getLong(1)
     val recallOk =
-      if (nSample * kEff == 0L) 1
-      else if (nHits.toDouble / (nSample * kEff) >= recallFloor) 1 else 0
+      Audit.recallOk(gAudit.getLong(1), nSample * kEff, recallFloor)
     Seq((nBase, nInc, nNow * kEff, fullK, recallOk))
       .toDF("n_base", "n_inc", "n_edges", "full_k", "recall_ok")
   }
@@ -2164,21 +2108,16 @@ object Similarity {
     // round and the audit is the only consumer
     val g = knnGraphNnDescent(emb, k).select("query_id", "nn_id")
     val n = emb.count()
-    val kEff = math.min(k.toLong, math.max(n - 1, 0L))
-    val sample = emb.orderBy(xxhash64(col("vec_id"), lit(99)),
-        col("vec_id")).limit(sampleN)
-    val bf = knnBruteForce(emb, sample, k).select("query_id", "nn_id")
+    val kEff = Audit.kEff(k, n)
+    val bf = knnBruteForce(emb, Audit.recallSample(emb, sampleN), k)
+      .select("query_id", "nn_id")
     val nSample = math.min(sampleN.toLong, n)
     // one left-join aggregate for edge count + recall hits — guide §1.2
-    val gAudit = g.join(bf.withColumn("__hit", lit(1L)),
-        Seq("query_id", "nn_id"), "left")
-      .agg(count(lit(1)), coalesce(sum("__hit"), lit(0L))).head()
+    val gAudit = Audit.hits(g, bf, Seq("query_id", "nn_id")).head()
     val nEdges = gAudit.getLong(0)
     val fullK = if (nEdges == n * kEff) 1 else 0
-    val nHits = gAudit.getLong(1)
     val recallOk =
-      if (nSample * kEff == 0L) 1
-      else if (nHits.toDouble / (nSample * kEff) >= recallFloor) 1 else 0
+      Audit.recallOk(gAudit.getLong(1), nSample * kEff, recallFloor)
     Seq((n, nEdges, fullK, recallOk))
       .toDF("n_nodes", "n_edges", "full_k", "recall_ok")
   }
@@ -2218,7 +2157,7 @@ object Similarity {
     // only consumer
     val h = knnGraphHubness(emb, k)
     val n = emb.count()
-    val kEff = math.min(k.toLong, math.max(n - 1, 0L))
+    val kEff = Audit.kEff(k, n)
     val r = h.agg(
       coalesce(sum(col("in_degree") * col("n_nodes")), lit(0L)),
       coalesce(sum("n_nodes"), lit(0L)),
@@ -2232,6 +2171,9 @@ object Similarity {
       .toDF("n_nodes", "n_edges", "edge_mass_ok", "node_mass_ok",
         "bound_ok")
   }
+
+  /** The IVFADC code-row columns a store content fingerprint covers. */
+  private[graft] val CodeCols = Seq("nn_id", "cell", "codes")
 
   /** STORED-INDEX round-trip gate — §9's "the index is a table you
     * persist `partitionBy(cell)`" claim driven END-TO-END as a gated
@@ -2253,11 +2195,8 @@ object Similarity {
     import graft.sources.Tables
     val emb = Tables.embeddings(s, dir)
     // one scan for corpus + probe-query counts — guide §1.2
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") < 10).cast("long")), lit(0L))).head()
-    val n = a0.getLong(0)
+    val Seq(n, nq) = Audit.counts(emb, col("vec_id") < 10)
     val queries = emb.filter(col("vec_id") < 10)
-    val nq = a0.getLong(1)
     def row(f: (Int, Int, Int)) = Seq((n, nq, f._1, f._2, f._3))
       .toDF("n_emb", "n_queries", "store_complete", "store_match",
         "probe_match")
@@ -2274,32 +2213,18 @@ object Similarity {
     val stored = s.read.parquet(out)
       .select(col("nn_id"), col("cell").cast("int").as("cell"),
         col("codes"))
-    def fp(df: DataFrame): (Long, String) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
     // mem-vs-disk fingerprints are independent reads — overlap (§2.6)
-    val ((cntMem, hMem), (cntDisk, hDisk)) =
-      inParallel(fp(index), fp(stored))
+    val ((cntMem, hMem), (cntDisk, hDisk)) = Audit.parallel(
+      Audit.fingerprint(index, CodeCols), Audit.fingerprint(stored, CodeCols))
     val storeComplete = if (cntDisk == n) 1 else 0
     val storeMatch = if (cntMem == cntDisk && hMem == hDisk) 1 else 0
     val rr = scaledRerank(n)
     val np = scaledNprobe(n, cells, rr)
-    // one-action row-set fingerprints (count + order-free hash over
-    // (query, nn, rank)) instead of scratch + counts + semi-join — the
-    // probe plan runs once per side, not five times
-    def fpProbe(idx: DataFrame): (Long, String) = {
-      val r = knnIvfPqWith(emb, idx, cents, cb, queries, k, np, rr,
-          residual = false)
-        .agg(count(lit(1)),
-          sum(xxhash64(col("query_id"), col("nn_id"), col("rn"))
-            .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
-    val (fpProbeMem, fpProbeDisk) =
-      inParallel(fpProbe(index), fpProbe(stored))
+    def probe(idx: DataFrame) = knnIvfPqWith(emb, idx, cents, cb, queries,
+      k, np, rr, residual = false)
+    val (fpProbeMem, fpProbeDisk) = Audit.parallel(
+      Audit.probeFingerprint(probe(index)),
+      Audit.probeFingerprint(probe(stored)))
     val probeMatch = if (fpProbeMem == fpProbeDisk) 1 else 0
     row((storeComplete, storeMatch, probeMatch))
   }
@@ -2345,11 +2270,8 @@ object Similarity {
     import graft.sources.Tables
     val emb = Tables.embeddings(s, dir)
     // one scan for corpus + probe-query counts — guide §1.2
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") < 10).cast("long")), lit(0L))).head()
-    val n = a0.getLong(0)
+    val Seq(n, nq) = Audit.counts(emb, col("vec_id") < 10)
     val queries = emb.filter(col("vec_id") < 10)
-    val nq = a0.getLong(1)
     val slices = if (benchSized) 2 else 4
     // bench arm: ceil(√N/2), floored at 1, never above the policy
     // cell count (the oracle recomputes this arithmetic exactly)
@@ -2401,29 +2323,18 @@ object Similarity {
     // already, so a strict `<` would flag the healthy fixpoint
     val filesReduced =
       if (filesAfter <= occupied && filesAfter <= filesBefore) 1 else 0
-    def fp(df: DataFrame): (Long, String) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
     // mem-vs-compacted fingerprints are independent reads — overlap
-    val ((cntMem, hMem), (cntC, hC)) =
-      inParallel(fp(index), fp(readStore(compacted)))
+    val ((cntMem, hMem), (cntC, hC)) = Audit.parallel(
+      Audit.fingerprint(index, CodeCols),
+      Audit.fingerprint(readStore(compacted), CodeCols))
     val contentMatch = if (cntMem == cntC && hMem == hC) 1 else 0
     val rr = scaledRerank(n)
     val np = scaledNprobe(n, cells, rr)
-    // one-action row-set fingerprints — the ivfPqStoreGate rationale
-    def fpProbe(idx: DataFrame): (Long, String) = {
-      val r = knnIvfPqWith(emb, idx, cents, cb, queries, k, np, rr,
-          residual = false)
-        .agg(count(lit(1)),
-          sum(xxhash64(col("query_id"), col("nn_id"), col("rn"))
-            .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
-    val (fpProbeMem, fpProbeC) =
-      inParallel(fpProbe(index), fpProbe(readStore(compacted)))
+    def probe(idx: DataFrame) = knnIvfPqWith(emb, idx, cents, cb, queries,
+      k, np, rr, residual = false)
+    val (fpProbeMem, fpProbeC) = Audit.parallel(
+      Audit.probeFingerprint(probe(index)),
+      Audit.probeFingerprint(probe(readStore(compacted))))
     val probeMatch = if (fpProbeMem == fpProbeC) 1 else 0
     row((filesReduced, contentMatch, probeMatch))
   }
@@ -2553,12 +2464,8 @@ object Similarity {
     import graft.sources.Tables
     val emb = Tables.embeddings(s, dir)
     // one scan for both scalars (corpus + doomed counts) — guide §1.2
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") % 97 === 0).cast("long")), lit(0L)))
-      .head()
-    val nEmb = a0.getLong(0)
+    val Seq(nEmb, nDel) = Audit.counts(emb, col("vec_id") % 97 === 0)
     val del = emb.filter(col("vec_id") % 97 === 0).select("vec_id")
-    val nDel = a0.getLong(1)
     val nSurv = nEmb - nDel
     if (nEmb == 0L)
       return Seq((0L, 0L, 1, 1, 1, 1, 1))
@@ -2568,14 +2475,12 @@ object Similarity {
     // INDEX side and GRAPH side are independent pipelines over the
     // same corpus — overlap them (§2.6): each is a chain of small
     // jobs whose stage tails leave most cores idle
-    val ((degenerateIdx, idxAudit), gAudit) = inParallel({
+    val ((degenerateIdx, idxAudit), gAudit) = Audit.parallel({
       // INDEX side: deployed-shape build, then the forget anti-join
       val (cents, cb, index) = ivfPqIndex(emb, scaledCells(nEmb))
       val fIdx = Checkpoints.scratch(ivfPqForget(index, del))
       (cents.isEmpty || cb.isEmpty,
-        fIdx.agg(count(lit(1)).as("n"),
-          coalesce(sum((col("nn_id") % 97 === 0).cast("long")), lit(0L))
-            .as("n_del_left")).head())
+        Audit.counts(fIdx, col("nn_id") % 97 === 0))
     }, {
       // GRAPH side: tombstone + bounded repair; survivor recall = the
       // repaired graph vs exact top-k over the survivor corpus, on
@@ -2583,32 +2488,24 @@ object Similarity {
       // ends in a materialized round, single consumer below
       val g = knnGraphForget(emb, del, k).select("query_id", "nn_id")
       val survivors = emb.join(del, Seq("vec_id"), "left_anti")
-      val sample = survivors.orderBy(xxhash64(col("vec_id"), lit(99)),
-        col("vec_id")).limit(sampleN)
-      val bf = knnBruteForce(survivors, sample, k)
+      val bf = knnBruteForce(survivors,
+          Audit.recallSample(survivors, sampleN), k)
         .select("query_id", "nn_id")
-      // ONE pass over the scratched graph for edge count, doomed
-      // residue AND recall hits (bf pairs unique per (query, nn)) —
-      // guide §1.2
-      g.join(bf.withColumn("__hit", lit(1L)),
-          Seq("query_id", "nn_id"), "left")
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(((col("query_id") % 97 === 0) ||
-            (col("nn_id") % 97 === 0)).cast("long")), lit(0L))
-            .as("n_del_left"),
-          coalesce(sum("__hit"), lit(0L)).as("hits")).head()
+      // ONE pass over the scratched graph for edge count, recall hits
+      // AND doomed residue (bf pairs unique per (query, nn)) — guide §1.2
+      Audit.hits(g, bf, Seq("query_id", "nn_id"),
+        coalesce(sum(((col("query_id") % 97 === 0) ||
+          (col("nn_id") % 97 === 0)).cast("long")), lit(0L))).head()
     })
-    val indexClean = if (idxAudit.getLong(1) == 0L) 1 else 0
+    val indexClean = if (idxAudit(1) == 0L) 1 else 0
     val indexCountOk =
       if (degenerateIdx) 1 // degenerate: empty index
-      else if (idxAudit.getLong(0) == nSurv) 1 else 0
-    val graphClean = if (gAudit.getLong(1) == 0L) 1 else 0
-    val kEff = math.min(k.toLong, math.max(nSurv - 1, 0L))
+      else if (idxAudit(0) == nSurv) 1 else 0
+    val graphClean = if (gAudit.getLong(2) == 0L) 1 else 0
+    val kEff = Audit.kEff(k, nSurv)
     val graphFullK = if (gAudit.getLong(0) == nSurv * kEff) 1 else 0
-    val nHits = gAudit.getLong(2)
     val recallOk =
-      if (nSample * kEff == 0L) 1
-      else if (nHits.toDouble / (nSample * kEff) >= recallFloor) 1 else 0
+      Audit.recallOk(gAudit.getLong(1), nSample * kEff, recallFloor)
     Seq((nEmb, nDel, indexClean, indexCountOk, graphClean, graphFullK,
       recallOk))
       .toDF("n_emb", "n_del", "index_clean", "index_count_ok",
@@ -2638,23 +2535,10 @@ object Similarity {
                          sampleN: Int = 200): DataFrame = {
     import s.implicits._
     import graft.sources.Tables
-    // stage timing to stderr when GRAFT_GATE_TIMING is set — the
-    // indexManifestGate profiling aid, zero-cost otherwise
-    val dbg = sys.env.contains("GRAFT_GATE_TIMING")
-    var tPrev = System.nanoTime()
-    def mark(label: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(
-        f"[graphlc] $label%-16s ${(now - tPrev) / 1e9}%6.2f s")
-      tPrev = now
-    }
     val emb = Tables.embeddings(s, dir)
     // one scan for both prelude scalars (corpus count + doomed count)
     // instead of two count jobs — guide §1.2, fewer passes
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") % 97 === 0).cast("long")), lit(0L)))
-      .head()
-    val nNow = a0.getLong(0)
+    val Seq(nNow, nDel) = Audit.counts(emb, col("vec_id") % 97 === 0)
     val nInc = nNow / 8
     val nBase = nNow - nInc
     if (nNow == 0L)
@@ -2665,41 +2549,29 @@ object Similarity {
     val appended = knnGraphAppendWide(emb.filter(col("vec_id") <= thr),
       emb.filter(col("vec_id") > thr), k)
     val del = emb.filter(col("vec_id") % 97 === 0).select("vec_id")
-    val nDel = a0.getLong(1)
-    mark("prelude")
     // no scratch: the repair path ends in a materialized round and the
     // one-pass audit below is the frame's only consumer
     val g = knnGraphForgetOf(appended, emb, del, k)
       .select("query_id", "nn_id")
-    mark("append_forget")
     val survivors = emb.join(del, Seq("vec_id"), "left_anti")
     val nSurv = nNow - nDel
-    val sample = survivors.orderBy(xxhash64(col("vec_id"), lit(99)),
-      col("vec_id")).limit(sampleN)
-    val bf = knnBruteForce(survivors, sample, k)
+    val bf = knnBruteForce(survivors,
+        Audit.recallSample(survivors, sampleN), k)
       .select("query_id", "nn_id")
     val nSample = math.min(sampleN.toLong, nSurv)
     // ONE pass over the scratched graph decides all three audits —
-    // edge count, doomed residue, recall hits (bf pairs unique per
+    // edge count, recall hits, doomed residue (bf pairs unique per
     // (query, nn), so the left join preserves multiplicity) — where
     // the r18 form ran a g-aggregate plus a separate semi-join count
     // (guide §1.2)
-    val audit = g.join(bf.withColumn("__hit", lit(1L)),
-        Seq("query_id", "nn_id"), "left")
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(((col("query_id") % 97 === 0) ||
-          (col("nn_id") % 97 === 0)).cast("long")), lit(0L))
-          .as("doomed_left"),
-        coalesce(sum("__hit"), lit(0L)).as("hits")).head()
-    val kEff = math.min(k.toLong, math.max(nSurv - 1, 0L))
-    val clean = if (audit.getLong(1) == 0L) 1 else 0
+    val audit = Audit.hits(g, bf, Seq("query_id", "nn_id"),
+      coalesce(sum(((col("query_id") % 97 === 0) ||
+        (col("nn_id") % 97 === 0)).cast("long")), lit(0L))).head()
+    val kEff = Audit.kEff(k, nSurv)
+    val clean = if (audit.getLong(2) == 0L) 1 else 0
     val fullK = if (audit.getLong(0) == nSurv * kEff) 1 else 0
-    mark("audit")
-    val nHits = audit.getLong(2)
-    mark("recall")
     val recallOk =
-      if (nSample * kEff == 0L) 1
-      else if (nHits.toDouble / (nSample * kEff) >= recallFloor) 1 else 0
+      Audit.recallOk(audit.getLong(1), nSample * kEff, recallFloor)
     Seq((nBase, nInc, nDel, clean, fullK, recallOk))
       .toDF("n_base", "n_inc", "n_del", "graph_clean", "full_k",
         "recall_ok")
@@ -2962,9 +2834,7 @@ object Similarity {
     import graft.sources.{IndexStore, Tables}
     val emb = Tables.embeddings(s, dir)
     // one scan for corpus count + probe-query count — guide §1.2
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") < 10).cast("long")), lit(0L))).head()
-    val n = a0.getLong(0)
+    val Seq(n, nq) = Audit.counts(emb, col("vec_id") < 10)
     def row(f: (Int, Int, Int, Int, Int)) =
       Seq((n, n, f._1, f._2, f._3, f._4, f._5))
         .toDF("n_base", "n_now", "count_rebuild", "drift_rebuild",
@@ -2986,13 +2856,7 @@ object Similarity {
       transform(col("embedding"), x => abs(x)).as("embedding")))
     val v1 = IndexStore.build(s, root, emb, cellsOverride)
     if (v1.cents.isEmpty) return row((0, 1, 1, 1, 1))
-    def fp(df: DataFrame): (Long, String) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
-    val fp1 = fp(IndexStore.codes(s, root, v1))
+    val fp1 = Audit.fingerprint(IndexStore.codes(s, root, v1), CodeCols)
     // the morning decision: tomorrow's corpus through yesterday's lens
     val (countR, driftR, rebuild, _) = ivfPqReindexDecision(emb, shifted)
     val v2 =
@@ -3004,13 +2868,12 @@ object Similarity {
     // the pinned old reader, AFTER the generation swap
     val r1 = IndexStore.openVersion(s, root, 1L)
     val oldReaderOk =
-      if (fp(IndexStore.codes(s, root, r1)) == fp1 &&
+      if (Audit.fingerprint(IndexStore.codes(s, root, r1), CodeCols) == fp1 &&
           r1.cents.map(_.toSeq).toSeq == v1.cents.map(_.toSeq).toSeq &&
           r1.cb.map(_.map(_.toSeq).toSeq).toSeq ==
             v1.cb.map(_.map(_.toSeq).toSeq).toSeq) 1 else 0
     // the new generation serves the re-encoded corpus
     val queries = shifted.filter(col("vec_id") < 10)
-    val nq = a0.getLong(1)
     val rr = scaledRerank(n)
     val np = scaledNprobe(n, v2.cells, rr)
     // no scratch: the one-pass audit below is the probe's only consumer
@@ -3018,17 +2881,14 @@ object Similarity {
         v2.cents, v2.cb, queries, k, np, rr, residual = false)
       .select("query_id", "nn_id")
     val bf = knnBruteForce(shifted, queries, k).select("query_id", "nn_id")
-    val kEff = math.min(k.toLong, math.max(n - 1, 0L))
+    val kEff = Audit.kEff(k, n)
     // one left-join aggregate decides full-k AND recall (bf pairs are
     // unique per (query, nn), so multiplicity is safe) — guide §1.2
-    val annAudit = ann.join(bf.withColumn("__hit", lit(1L)),
-        Seq("query_id", "nn_id"), "left")
-      .agg(count(lit(1)), coalesce(sum("__hit"), lit(0L))).head()
+    val annAudit = Audit.hits(ann, bf, Seq("query_id", "nn_id")).head()
     val fullK = annAudit.getLong(0) == nq * kEff
-    val nHits = annAudit.getLong(1)
     val recallOk =
-      if (nq * kEff == 0L) 1
-      else if (fullK && nHits.toDouble / (nq * kEff) >= recallFloor) 1
+      if (fullK || nq * kEff == 0L)
+        Audit.recallOk(annAudit.getLong(1), nq * kEff, recallFloor)
       else 0
     row((countR, driftR, genAdvanced, oldReaderOk, recallOk))
   }
@@ -3133,43 +2993,34 @@ object Similarity {
       .join(emb.select("vec_id"), Seq("vec_id"), "left_semi"))
     val queries = emb.filter(col("vec_id") < 10)
     // one scan for corpus + probe-query counts — guide §1.2
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") < 10).cast("long")), lit(0L))).head()
-    val nEmb = a0.getLong(0)
+    val Seq(nEmb, nq) = Audit.counts(emb, col("vec_id") < 10)
     val nAllowed = allowed.count()
-    val nq = a0.getLong(1)
     val ann = knnIvfPqFiltered(emb, allowed, queries, k)
       .select("query_id", "nn_id")
     val fEmb = emb.join(allowed, Seq("vec_id"), "left_semi")
     val bf = knnBruteForce(fEmb, queries, k).select("query_id", "nn_id")
     // ONE full-join aggregate decides all four audit scalars — probe
-    // row count, in-filter membership, baseline size and recall hits —
+    // row count, recall hits, baseline size and in-filter membership —
     // where the r19 form scratched the probe then ran four separate
     // actions (2 counts + 2 semi-join counts). Multiplicity exact:
     // ann and bf are unique per (query_id, nn_id) (the knnBruteForce /
-    // probe ranking contract) and `allowed` per vec_id, so the full
-    // join holds matched + ann-only + bf-only rows exactly once each
-    val audit = ann.withColumn("__a", lit(1L))
-      .join(bf.withColumn("__hit", lit(1L)),
-        Seq("query_id", "nn_id"), "full")
-      .join(allowed.select(col("vec_id").as("nn_id"))
-        .withColumn("__in", lit(1L)), Seq("nn_id"), "left")
-      .agg(coalesce(sum("__a"), lit(0L)),
-        coalesce(sum(col("__a") * col("__in")), lit(0L)),
-        coalesce(sum(col("__a") * col("__hit")), lit(0L)),
-        coalesce(sum("__hit"), lit(0L))).head()
+    // probe ranking contract) and `allowed` per vec_id, so the left
+    // join keeps ann unique and the full join holds matched + ann-only
+    // + bf-only rows exactly once each
+    val audit = Audit.overlap(
+        ann.join(allowed.select(col("vec_id").as("nn_id"))
+          .withColumn("__in", lit(1L)), Seq("nn_id"), "left"),
+        bf, Seq("query_id", "nn_id"),
+        coalesce(sum("__in"), lit(0L))).head()
     val nAnn = audit.getLong(0)
-    val inFilter = audit.getLong(1)
-    val nHits = audit.getLong(2)
-    val nBf = audit.getLong(3)
+    val inFilter = audit.getLong(3)
     val subsetOk = if (nAnn == inFilter) 1 else 0
     // a query inside the filter can match n_allowed−1 others, one
     // outside can match n_allowed — the conservative bound holds both
-    val kEff = math.min(k.toLong, math.max(nAllowed - 1, 0L))
+    val kEff = Audit.kEff(k, nAllowed)
     val fullK = if (nAnn >= nq * kEff && nAnn <= nq * k) 1 else 0
     val recallOk =
-      if (nBf == 0L) 1
-      else if (nHits.toDouble / nBf >= recallFloor) 1 else 0
+      Audit.recallOk(audit.getLong(1), audit.getLong(2), recallFloor)
     Seq((nEmb, nAllowed, nq, subsetOk, fullK, recallOk))
       .toDF("n_emb", "n_allowed", "n_queries", "subset_ok", "full_k",
         "recall_ok")
@@ -3264,26 +3115,12 @@ object Similarity {
                         k: Int = 5, benchSized: Boolean = false): DataFrame = {
     import s.implicits._
     import graft.sources.{IndexStore, Tables}
-    // stage timing to stderr when GRAFT_GATE_TIMING is set — the
-    // streamedLifecycle profiling aid, zero-cost otherwise
-    val dbg = sys.env.contains("GRAFT_GATE_TIMING")
-    var tPrev = System.nanoTime()
-    def mark(label: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(
-        f"[manifest] $label%-16s ${(now - tPrev) / 1e9}%6.2f s")
-      tPrev = now
-    }
     val emb = Tables.embeddings(s, dir)
     // one scan for both prelude scalars — guide §1.2, fewer passes
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") % 97 === 0).cast("long")), lit(0L)))
-      .head()
-    val nNow = a0.getLong(0)
+    val Seq(nNow, nDoomed) = Audit.counts(emb, col("vec_id") % 97 === 0)
     val nBase = nNow - nNow / 8
     val nInc = nNow / 8
     val doomed = emb.filter(col("vec_id") % 97 === 0).select("vec_id")
-    val nDoomed = a0.getLong(1)
     def row(liveV: Long, f: Seq[Int]) =
       Seq((nNow, nBase, nInc, nDoomed, liveV, f(0), f(1), f(2), f(3),
         f(4), f(5), f(6), f(7)))
@@ -3297,31 +3134,21 @@ object Similarity {
       if (benchSized)
         benchSizedCells(nBase)
       else scaledCells(nBase)
-    mark("prelude")
     val v1 = IndexStore.build(s, root, base, Some(cells))
-    mark("build")
     // degenerate-model corpora (too small to train): the mutations
     // below would conserve nothing real — vacuous flags, the
     // ivfPqStoreGate convention
     if (v1.cents.isEmpty && nNow > 0) return row(4L, Seq.fill(8)(1))
-    def fp(df: DataFrame): (Long, String) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
-    val fp1 = fp(IndexStore.codes(s, root, v1))
-    mark("fp1")
+    def snapFp(v: IndexStore.Snapshot) =
+      Audit.fingerprint(IndexStore.codes(s, root, v), CodeCols)
+    val fp1 = snapFp(v1)
     val v2 = IndexStore.append(s, root, inc)
-    mark("append")
-    val fp2 = fp(IndexStore.codes(s, root, v2))
-    mark("fp2")
+    val fp2 = snapFp(v2)
     val appendShared =
       if (v1.files.toSet.subsetOf(v2.files.toSet)) 1 else 0
     val appendConserved =
       if (fp2._1 == nNow && v2.nRows == nNow) 1 else 0
     val v3 = IndexStore.compact(s, root)
-    mark("compact")
     // scratch each audited snapshot ONCE: three audits on a lazy read
     // would re-open every snapshot file per action
     val c3 = Checkpoints.scratch(IndexStore.codes(s, root, v3))
@@ -3329,52 +3156,38 @@ object Similarity {
     // occupied-cell count, and the doomed CELL footprint (what forget
     // may rewrite) — the erasure set is tiny and broadcasts, and the
     // left join preserves multiplicity (vec_ids are unique), so the
-    // count/hash agree exactly with the plain fp(); four separate
-    // actions here were four jobs over the same materialized rows
-    val a3 = c3.join(
-        doomed.select(col("vec_id").as("nn_id"))
-          .withColumn("__doomed", lit(1)),
-        Seq("nn_id"), "left")
-      .agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)")),
-        countDistinct(col("cell")),
-        collect_set(when(col("__doomed") === 1, col("cell")))).head()
-    val fp3 = (a3.getLong(0),
-      if (a3.isNullAt(1)) "0" else a3.getDecimal(1).toString)
+    // count/hash agree exactly with the plain fingerprint; four
+    // separate actions here were four jobs over the same rows
+    val a3 = Audit.fingerprintRow(
+      c3.join(doomed.select(col("vec_id").as("nn_id"))
+          .withColumn("__doomed", lit(1)), Seq("nn_id"), "left"),
+      CodeCols, countDistinct(col("cell")),
+      collect_set(when(col("__doomed") === 1, col("cell"))))
+    val fp3 = Audit.unpack(a3)
     val occupied = a3.getLong(2)
     val compactOk =
       if (fp3 == fp2 && v3.files.size <= occupied &&
           v3.files.toSet.intersect(v2.files.toSet).isEmpty) 1 else 0
-    mark("fp3_audit")
     val doomedCells = a3.getSeq[Int](3).toSet
     val expectKept = v3.files.zip(v3.fileCells)
       .collect { case (p, c) if !doomedCells(c) => p }.toSet
     val v4 = IndexStore.forget(s, root, doomed)
-    mark("forget")
     val c4 = Checkpoints.scratch(IndexStore.codes(s, root, v4))
     // ONE pass over c4: fingerprint + doomed-id residue (every nn_id
     // in the store came from `emb`, so `% 97 == 0` IS membership in
     // the erasure set — no join needed)
-    val a4 = c4.agg(count(lit(1)),
-      sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-        .cast("decimal(38,0)")),
+    val a4 = Audit.fingerprintRow(c4, CodeCols,
       coalesce(sum((col("nn_id") % 97 === 0).cast("long")), lit(0L)))
-      .head()
-    val fp4 = (a4.getLong(0),
-      if (a4.isNullAt(1)) "0" else a4.getDecimal(1).toString)
+    val fp4 = Audit.unpack(a4)
     val doomedLeft = a4.getLong(2)
     val forgetOk =
       if (doomedLeft == 0L && fp4._1 == nNow - nDoomed &&
           v4.nRows == nNow - nDoomed) 1 else 0
     val forgetBounded =
       if (v4.files.toSet.intersect(v3.files.toSet) == expectKept) 1 else 0
-    mark("fp4_audit")
     // snapshot isolation: the pinned v1 reader, after four commits
     val isoOk =
-      if (fp(IndexStore.codes(s, root,
-        IndexStore.openVersion(s, root, 1L))) == fp1) 1 else 0
-    mark("isolation")
+      if (snapFp(IndexStore.openVersion(s, root, 1L)) == fp1) 1 else 0
     // probe from the LIVE store (manifest files + round-tripped
     // models) vs the equivalent in-memory index
     val live = IndexStore.open(s, root)
@@ -3390,19 +3203,8 @@ object Similarity {
       idx0.unionAll(ivfPqAppend(cents0, cb0, inc))
         .join(doomed.select(col("vec_id").as("nn_id")), Seq("nn_id"),
           "left_anti")
-    // probe row-set fingerprint in ONE action (count + order-free hash
-    // over the full (query, nn, rank) triple): the r18 form scratched
-    // each probe then ran two counts + a semi-join — 5 jobs re-running
-    // the same window plans — to decide the set equality this pair of
-    // aggregates decides
-    def fpProbe(idx: DataFrame): (Long, String) = {
-      val r = knnIvfPqWith(emb, idx, live.cents, live.cb, queries, k,
-          np, rr, residual = false)
-        .agg(count(lit(1)),
-          sum(xxhash64(col("query_id"), col("nn_id"), col("rn"))
-            .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
+    def probe(idx: DataFrame) = knnIvfPqWith(emb, idx, live.cents,
+      live.cb, queries, k, np, rr, residual = false)
     val (probeEq, prunedOk) =
       if (live.cents.isEmpty) (1, 1)
       else {
@@ -3430,9 +3232,11 @@ object Similarity {
         // probe, pruned probe) are independent — overlap them (§2.6)
         val wanted = probeCellSet(live.cents, queries, np)
         val picked = live.fileCells.count(wanted)
-        val (memFp, (fS, fP)) = inParallel(fp(memIdx),
-          inParallel(fpProbe(c4),
-            fpProbe(IndexStore.codesForCells(s, root, live, wanted))))
+        val (memFp, (fS, fP)) = Audit.parallel(
+          Audit.fingerprint(memIdx, CodeCols),
+          Audit.parallel(Audit.probeFingerprint(probe(c4)),
+            Audit.probeFingerprint(probe(
+              IndexStore.codesForCells(s, root, live, wanted)))))
         val memEq = memFp == fp4
         val occupiedCells = live.fileCells.distinct.size
         val fewer =
@@ -3441,7 +3245,6 @@ object Similarity {
         ((if (modelsEq && memEq) 1 else 0),
           (if (fP == fS && fewer) 1 else 0))
       }
-    mark("probes")
     // vacuum to the live snapshot: disk == v4's manifest, live intact
     IndexStore.vacuum(s, root, retainLast = 1, minAgeMs = 0L)
     val diskFiles = {
@@ -3463,9 +3266,8 @@ object Similarity {
     }
     val vacuumOk =
       if (diskFiles == v4.files.toSet &&
-          fp(IndexStore.codes(s, root, IndexStore.open(s, root))) == fp4)
+          snapFp(IndexStore.open(s, root)) == fp4)
         1 else 0
-    mark("vacuum")
     val liveVersion = IndexStore.versions(s, root).last
     val opsOk =
       if ((1L to 4L).map(v =>
@@ -3540,12 +3342,6 @@ object Similarity {
     val mid = prefixThreshold(inc, nInc / 2)
     IndexStore.append(s, root, inc.filter(col("vec_id") <= mid))
     val v3 = IndexStore.append(s, root, inc.filter(col("vec_id") > mid))
-    def fp(df: DataFrame): (Long, String) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
     val c3 = Checkpoints.scratch(IndexStore.codes(s, root, v3))
     val (noop, fired1) = IndexStore.maybeCompact(s, root,
       filesPerCell = 1e9)
@@ -3561,24 +3357,17 @@ object Similarity {
     val queries = emb.filter(col("vec_id") < 10)
     val rr = scaledRerank(n)
     val np = scaledNprobe(n, v4.cells, rr)
-    // probe equality by one-action row-set fingerprints (count +
-    // order-free hash over (query, nn, rank)) — the indexManifestGate
-    // rationale: the scratch + counts + semi-join form re-ran the same
-    // probe plans across 5 jobs to decide what two aggregates decide
-    def fpProbe(idx: DataFrame): (Long, String) = {
-      val r = knnIvfPqWith(emb, idx, v4.cents, v4.cb, queries, k, np,
-          rr, residual = false)
-        .agg(count(lit(1)),
-          sum(xxhash64(col("query_id"), col("nn_id"), col("rn"))
-            .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
+    def probe(idx: DataFrame) = knnIvfPqWith(emb, idx, v4.cents, v4.cb,
+      queries, k, np, rr, residual = false)
     // all four audit reads are independent over the two pinned
-    // (scratched) snapshots — overlap them (guide §2.6); fp(c3) reads
-    // rows materialized BEFORE the compact, so ordering is immaterial
-    val ((fp3, fp4), (fpP3, fpP4)) = inParallel(
-      inParallel(fp(c3), fp(c4)),
-      inParallel(fpProbe(c3), fpProbe(c4)))
+    // (scratched) snapshots — overlap them (guide §2.6); c3's
+    // fingerprint reads rows materialized BEFORE the compact, so
+    // ordering is immaterial
+    val ((fp3, fp4), (fpP3, fpP4)) = Audit.parallel(
+      Audit.parallel(Audit.fingerprint(c3, CodeCols),
+        Audit.fingerprint(c4, CodeCols)),
+      Audit.parallel(Audit.probeFingerprint(probe(c3)),
+        Audit.probeFingerprint(probe(c4))))
     val contentOk = if (fp4 == fp3) 1 else 0
     val probeOk = if (fpP3 == fpP4) 1 else 0
     row((noopOk, fired, shapeOk, contentOk, probeOk))

@@ -249,16 +249,17 @@ object IndexStore {
     * key becomes a cell→task bin-packing; the shape is the same). */
   private def writeEpisode(s: SparkSession, root: String, v: Long,
                            rows: DataFrame): Seq[(String, Int)] =
-    writeEpisodeCounted(s, root, v, rows)._1
+    writeEpisodeCounted(s, root, v, rows)._2
 
-  /** [[writeEpisode]] that ALSO reports the episode's row count, read
-    * from the write job's own observed metrics (CollectMetrics) — the
-    * mutators' commit arithmetic (`Meta.nRows`) used to pay a separate
-    * count() job per build/append/rebuild for a number the write job
-    * already knows (guide §1.2: fewer actions). */
+  /** [[writeEpisode]] that ALSO reports the episode's relative dir and
+    * row count, the count read from the write job's own observed
+    * metrics (CollectMetrics) — the mutators' commit arithmetic
+    * (`Meta.nRows`) used to pay a separate count() job per
+    * build/append/rebuild for a number the write job already knows
+    * (guide §1.2: fewer actions). */
   private def writeEpisodeCounted(s: SparkSession, root: String, v: Long,
                                   rows: DataFrame)
-      : (Seq[(String, Int)], Long) = {
+      : (String, Seq[(String, Int)], Long) = {
     val rel = s"data/${vName(v)}-${java.util.UUID.randomUUID().toString
       .take(8)}"
     val obs = new org.apache.spark.sql.Observation()
@@ -279,7 +280,7 @@ object IndexStore {
       case None =>
         s.read.parquet(files.map(f => s"$root/${f._1}"): _*).count()
     }
-    (files, n)
+    (rel, files, n)
   }
 
   /** Recursively list one episode dir's part files as store-relative
@@ -720,7 +721,7 @@ object IndexStore {
     val cells = cellsOverride.getOrElse(Similarity.scaledCells(n0))
     val (cents, cb, index) = Similarity.ivfPqIndex(emb, cells)
     val mDir = writeModels(s, root, 1L, cents, cb)
-    val (files, nIdx) = writeEpisodeCounted(s, root, 1L, index)
+    val (_, files, nIdx) = writeEpisodeCounted(s, root, 1L, index)
     val n =
       if (cents.nonEmpty) nIdx
       else if (n0 >= 0L) n0
@@ -764,13 +765,13 @@ object IndexStore {
         // the increment's count rides the episode write's observed
         // metrics — the sinks previously paid a count() job per
         // micro-batch for the same number. An empty noopOnEmpty
-        // increment leaves one file-less episode dir behind (no
-        // part files, invisible to every manifest and to vacuumOk's
-        // disk audit) instead of the old pre-write escape — the
-        // commit-free contract itself is unchanged.
-        val (newFiles, nNew) = writeEpisodeCounted(s, root, v, rows)
-        if (noopOnEmpty && nNew == 0L) None
-        else {
+        // increment deletes its file-less episode dir (a filesystem
+        // call, no Spark job) so no orphan dir outlives the no-op.
+        val (rel, newFiles, nNew) = writeEpisodeCounted(s, root, v, rows)
+        if (noopOnEmpty && nNew == 0L) {
+          fs(s, root).delete(new Path(s"$root/$rel"), true)
+          None
+        } else {
           val m = Meta(v, "append", parent.modelGen, parent.modelDir,
             parent.nRows + nNew, parent.cells,
             truncate = false, Seq.empty, newFiles, txn)
@@ -876,7 +877,7 @@ object IndexStore {
       val v = parent.version + 1
       val gen = parent.modelGen + 1
       val mDir = writeModels(s, root, gen, cents, cb)
-      val (files, nIdx) = writeEpisodeCounted(s, root, v, index)
+      val (_, files, nIdx) = writeEpisodeCounted(s, root, v, index)
       val n =
         if (cents.nonEmpty) nIdx
         else if (n0 >= 0L) n0

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.gates.Audit
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.util.concurrent.atomic.AtomicInteger
@@ -329,12 +330,9 @@ object Streaming {
     val emb = Tables.embeddings(s, dir)
     // one scan for all three prelude scalars (corpus, doomed, probe
     // queries) instead of three count jobs — guide §1.2
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") % 97 === 0).cast("long")), lit(0L)),
-      coalesce(sum((col("vec_id") < 10).cast("long")), lit(0L))).head()
-    val n = a0.getLong(0)
+    val Seq(n, nDoomed, nq) =
+      Audit.counts(emb, col("vec_id") % 97 === 0, col("vec_id") < 10)
     val doomed = emb.filter(col("vec_id") % 97 === 0).select("vec_id")
-    val nDoomed = a0.getLong(1)
     val slices = math.min(3L, nDoomed)
     def row(versions: Long, exercised: Int, f: (Int, Int, Int, Int)) =
       Seq((n, nDoomed, versions, exercised, f._1, f._2, f._3, f._4))
@@ -358,59 +356,68 @@ object Streaming {
     // the same frame); partitionBy lands one file per __slice dir in
     // a single job, and the stream reads the leaves recursively
     val reqDir = s"$work/requests"
-    doomed.withColumn("__slice",
-        pmod(row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy("vec_id")) - 1, lit(slices.toInt)))
-      .coalesce(1).write.partitionBy("__slice")
-      .mode("append").parquet(reqDir)
-    def drain(): Unit = {
-      val q = s.readStream
-        .schema("vec_id LONG")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(reqDir)
-        .writeStream
-        .option("checkpointLocation", s"$work/ckpt")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // no isEmpty probe (one Spark job per micro-batch): the
-          // store's own footprint decision makes a touch-nothing
-          // batch commit-free
-          IndexStore.forget(s, root, b, noopOnEmpty = true); ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    writeSlices(doomed,
+      pmod(row_number().over(org.apache.spark.sql.expressions.Window
+        .orderBy("vec_id")) - 1, lit(slices.toInt)), slices, reqDir)
+    val (settledVersions, resumeSafe) = drainTwice(s, root, work,
+        _.schema("vec_id LONG").option("recursiveFileLookup", "true")
+          .parquet(reqDir)) { (b, _) =>
+      // no isEmpty probe (one Spark job per micro-batch): the store's
+      // own footprint decision makes a touch-nothing batch commit-free
+      IndexStore.forget(s, root, b, noopOnEmpty = true); ()
     }
-    drain()
-    val settledVersions = IndexStore.versions(s, root)
-    // restart on the same checkpoint: nothing unprocessed, nothing
-    // committed — the settled-state half of kill-resume
-    drain()
-    val resumeSafe =
-      if (IndexStore.versions(s, root) == settledVersions) 1 else 0
     val live = IndexStore.open(s, root)
     val codes = IndexStore.codes(s, root, live)
     val nLive = n - nDoomed
     val queries = emb.filter(col("vec_id") < 10)
-    val nq = a0.getLong(2)
     val rr = Similarity.scaledRerank(nLive)
     val np = Similarity.scaledNprobe(nLive, live.cells, rr)
     val ann = Similarity.knnIvfPqServe(emb, codes, live.cents, live.cb,
       queries, k, np, rr)
     // the two audit reads (store fingerprint+residue, probe count) are
     // independent — overlap them (guide §2.6)
-    val (a, nAnn) = Similarity.inParallel(
-      codes.agg(count(lit(1)),
-        coalesce(sum((col("nn_id") % 97 === 0).cast("long")), lit(0L)))
-        .head(),
-      ann.count())
-    val doomedGone = if (a.getLong(1) == 0L) 1 else 0
-    val conserved =
-      if (a.getLong(0) == nLive && live.nRows == nLive) 1 else 0
+    val (a, nAnn) = Audit.parallel(
+      Audit.counts(codes, col("nn_id") % 97 === 0), ann.count())
+    val doomedGone = if (a(1) == 0L) 1 else 0
+    val conserved = if (a(0) == nLive && live.nRows == nLive) 1 else 0
     // a surviving query can match nLive-1 others, an erased one nLive
-    val kEff = math.min(k.toLong, math.max(nLive - 1, 0L))
+    val kEff = Audit.kEff(k, nLive)
     val fullK = if (nAnn >= nq * kEff && nAnn <= nq * k) 1 else 0
     row(settledVersions.length.toLong, 1,
       (doomedGone, conserved, resumeSafe, fullK))
+  }
+
+  /** Land `df` as request files under `dir` in ONE job, one
+    * `__slice=<i>` directory per 0-based `slice` value of `slices`. The
+    * value is zero-padded to the width of `slices − 1` so the slice
+    * directories sort — and list — in slice order past 10 slices
+    * (unpadded, `__slice=10` sorts before `__slice=2`). */
+  private[graft] def writeSlices(df: DataFrame, slice: Column, slices: Long,
+                                 dir: String): Unit =
+    df.withColumn("__slice", lpad(slice.cast("string"),
+        math.max(slices - 1, 0L).toString.length, "0"))
+      .coalesce(1).write.partitionBy("__slice")
+      .mode("append").parquet(dir)
+
+  /** Drain the request files `requests` reads (one micro-batch per
+    * file) into `sink` through the checkpointed stream at `work/ckpt`,
+    * then restart on the SAME checkpoint: the re-drain must find
+    * nothing unprocessed and commit nothing — the settled-state half of
+    * kill-resume (the killed half lives in StreamingSpec). Returns the
+    * settled version log and the `resume_safe` flag. */
+  private def drainTwice(s: SparkSession, root: String, work: String,
+      requests: org.apache.spark.sql.streaming.DataStreamReader => DataFrame)
+      (sink: (DataFrame, Long) => Unit): (Seq[Long], Int) = {
+    import graft.sources.IndexStore
+    def drain(): Unit =
+      requests(s.readStream.option("maxFilesPerTrigger", 1))
+        .writeStream.option("checkpointLocation", s"$work/ckpt")
+        .foreachBatch(sink).trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    drain()
+    val settled = IndexStore.versions(s, root)
+    drain()
+    (settled, if (IndexStore.versions(s, root) == settled) 1 else 0)
   }
 
   /** STREAMED INGEST THROUGH THE MANIFEST — the other half of the
@@ -458,9 +465,7 @@ object Streaming {
     import graft.sources.{IndexStore, Tables}
     val emb = Tables.embeddings(s, dir)
     // one scan for corpus count + probe-query count — guide §1.2
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") < 10).cast("long")), lit(0L))).head()
-    val n = a0.getLong(0)
+    val Seq(n, nq) = Audit.counts(emb, col("vec_id") < 10)
     val nBase = n - n / 8
     val nInc = n / 8
     val slices = math.min(3L, nInc)
@@ -497,59 +502,37 @@ object Streaming {
         when(col("vec_id") > b.head && col("vec_id") <= b(1), lit(i))
           .otherwise(acc)
     }
-    inc.withColumn("__slice", sliceCol)
-      .coalesce(1).write.partitionBy("__slice")
-      .mode("append").parquet(reqDir)
-    def drain(): Unit = {
-      val q = s.readStream
-        .schema(s.read.parquet(s"$dir/embeddings.parquet").schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true").parquet(reqDir)
-        .writeStream
-        .option("checkpointLocation", s"$work/ckpt")
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          // no isEmpty probe: append's own count (already taken for
-          // the commit) makes an empty batch commit-free
-          IndexStore.append(s, root, b,
-            txn = Some(("graft_stream_append", id)),
-            noopOnEmpty = true)
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    writeSlices(inc, sliceCol, slices, reqDir)
+    val (settledVersions, resumeSafe) = drainTwice(s, root, work,
+        _.schema(s.read.parquet(s"$dir/embeddings.parquet").schema)
+          .option("recursiveFileLookup", "true").parquet(reqDir)) {
+      (b, id) =>
+        // no isEmpty probe: append's own count (already taken for the
+        // commit) makes an empty batch commit-free
+        IndexStore.append(s, root, b,
+          txn = Some(("graft_stream_append", id)), noopOnEmpty = true)
+        ()
     }
-    drain()
-    val settledVersions = IndexStore.versions(s, root)
-    drain()
-    val resumeSafe =
-      if (IndexStore.versions(s, root) == settledVersions) 1 else 0
     val live = IndexStore.open(s, root)
     val codes = IndexStore.codes(s, root, live)
-    def fp(df: DataFrame): (Long, String) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
     // the batch form is built at the SAME cells as the store (the
     // bench-sized arm included) — content equality is per-cell-exact
     val (cents0, cb0, idx0) = Similarity.ivfPqIndex(base, cells)
     val queries = emb.filter(col("vec_id") < 10)
-    val nq = a0.getLong(1)
     val rr = Similarity.scaledRerank(n)
     val np = Similarity.scaledNprobe(n, live.cells, rr)
     val ann = Similarity.knnIvfPqServe(emb, codes, live.cents, live.cb,
       queries, k, np, rr)
     // the three audit reads (live fingerprint, batch-form fingerprint,
     // probe count) are independent — overlap them (guide §2.6)
-    val ((fpLive, fpBatch), nAnn) = Similarity.inParallel(
-      Similarity.inParallel(fp(codes),
-        fp(idx0.select("nn_id", "cell", "codes").unionAll(
-          Similarity.ivfPqAppend(cents0, cb0, inc)))),
+    val ((fpLive, fpBatch), nAnn) = Audit.parallel(
+      Audit.parallel(Audit.fingerprint(codes, Similarity.CodeCols),
+        Audit.fingerprint(idx0.select("nn_id", "cell", "codes").unionAll(
+          Similarity.ivfPqAppend(cents0, cb0, inc)), Similarity.CodeCols)),
       ann.count())
     val contentMatch = if (fpLive == fpBatch) 1 else 0
     val conserved = if (fpLive._1 == n && live.nRows == n) 1 else 0
-    val kEff = math.min(k.toLong, math.max(n - 1, 0L))
+    val kEff = Audit.kEff(k, n)
     val fullK = if (nAnn == nq * kEff) 1 else 0
     row(settledVersions.length.toLong, 1,
       (contentMatch, conserved, resumeSafe, fullK))
@@ -621,21 +604,9 @@ object Streaming {
     import s.implicits._
     import graft.operators.Similarity
     import graft.sources.{IndexStore, Tables}
-    // stage timing to stderr when GRAFT_GATE_TIMING is set — profiling
-    // aid for bench-sizing, zero-cost otherwise
-    val dbg = sys.env.contains("GRAFT_GATE_TIMING")
-    var tPrev = System.nanoTime()
-    def mark(label: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(
-        f"[lifecycle] $label%-16s ${(now - tPrev) / 1e9}%6.2f s")
-      tPrev = now
-    }
     val emb = Tables.embeddings(s, dir)
     // one scan for corpus count + probe-query count — guide §1.2
-    val a0 = emb.agg(count(lit(1)),
-      coalesce(sum((col("vec_id") < 10).cast("long")), lit(0L))).head()
-    val n = a0.getLong(0)
+    val Seq(n, nq) = Audit.counts(emb, col("vec_id") < 10)
     val nBase = n - n / 8
     val nInc = n / 8
     def row(nDoomed: Long, versions: Long, exercised: Int,
@@ -657,12 +628,8 @@ object Streaming {
     val f2 = base.filter(
         col("vec_id") % 61 === 0 && col("vec_id") % 122 =!= 0)
       .select("vec_id")
-    val cnts = base.agg(
-      coalesce(sum((col("vec_id") % 122 === 0).cast("long")), lit(0L)),
-      coalesce(sum((col("vec_id") % 61 === 0 &&
-        col("vec_id") % 122 =!= 0).cast("long")), lit(0L))).head()
-    val nF1 = cnts.getLong(0)
-    val nF2 = cnts.getLong(1)
+    val Seq(_, nF1, nF2) = Audit.counts(base, col("vec_id") % 122 === 0,
+      col("vec_id") % 61 === 0 && col("vec_id") % 122 =!= 0)
     val nDoomed = nF1 + nF2
     val nA1 = nInc / 2
     // bench arm: ceil(√N_base/2) cells, floored at 1, never above the
@@ -671,7 +638,6 @@ object Streaming {
       if (benchSized)
         Similarity.benchSizedCells(nBase)
       else Similarity.scaledCells(nBase)
-    mark("prelude")
     val v1 = IndexStore.build(s, root, base, Some(cells))
     if (v1.cents.isEmpty || (nInc == 0L && nDoomed == 0L))
       return row(nDoomed, IndexStore.versions(s, root).length.toLong,
@@ -692,7 +658,6 @@ object Streaming {
         ids.select(col("vec_id"), lit(null).cast(embT).as("embedding"),
             lit("forget").as("kind"))
           .coalesce(1).write.mode("append").parquet(reqDir)
-    mark("build")
     if (benchSized) {
       // minimal interleave that still exercises BOTH replay
       // disciplines through one checkpoint: one txn-stamped append
@@ -712,57 +677,27 @@ object Streaming {
       sendAppend(inc.filter(col("vec_id") > cut), nInc - nA1 > 0L)
       sendForget(f2, nF2 > 0L)
     }
-    mark("tape")
-    def drain(): Unit = {
-      val q = s.readStream
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>, kind STRING")
-        .option("maxFilesPerTrigger", 1).parquet(reqDir)
-        .writeStream
-        .option("checkpointLocation", s"$work/ckpt")
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val tb = System.nanoTime()
-          // one kind per request file by construction; dispatch
-          // handles a mixed batch anyway — arrivals before erasures.
-          // An empty batch yields ZERO kinds right here, so the old
-          // separate isEmpty probe was a redundant Spark job per
-          // micro-batch; noopOnEmpty keeps even a spurious empty
-          // sub-frame commit-free
-          val kinds = b.select("kind").distinct()
-            .collect().map(_.getString(0)).sorted
-          kinds.foreach {
-            case "append" => IndexStore.append(s, root,
-              b.filter(col("kind") === "append")
-                .select("vec_id", "embedding"),
-              txn = Some(("graft_stream_lifecycle", id)),
-              noopOnEmpty = true)
-            case _ => IndexStore.forget(s, root,
-              b.filter(col("kind") === "forget").select("vec_id"),
-              noopOnEmpty = true)
-          }
-          if (dbg) System.err.println(
-            f"[lifecycle]   batch $id ${(System.nanoTime() - tb) / 1e9}%6.2f s")
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    val (settledVersions, resumeSafe) = drainTwice(s, root, work,
+        _.schema("vec_id LONG, embedding ARRAY<FLOAT>, kind STRING")
+          .parquet(reqDir)) { (b, id) =>
+      // one kind per request file by construction; dispatch handles a
+      // mixed batch anyway — arrivals before erasures. An empty batch
+      // yields ZERO kinds right here, so the old separate isEmpty probe
+      // was a redundant Spark job per micro-batch; noopOnEmpty keeps
+      // even a spurious empty sub-frame commit-free
+      val kinds = b.select("kind").distinct()
+        .collect().map(_.getString(0)).sorted
+      kinds.foreach {
+        case "append" => IndexStore.append(s, root,
+          b.filter(col("kind") === "append").select("vec_id", "embedding"),
+          txn = Some(("graft_stream_lifecycle", id)), noopOnEmpty = true)
+        case _ => IndexStore.forget(s, root,
+          b.filter(col("kind") === "forget").select("vec_id"),
+          noopOnEmpty = true)
+      }
     }
-    drain()
-    mark("drain1")
-    val settledVersions = IndexStore.versions(s, root)
-    // restart on the same checkpoint: nothing unprocessed, nothing
-    // committed — the settled-state half of kill-resume (the killed
-    // half lives in StreamingSpec)
-    drain()
-    mark("drain2")
-    val resumeSafe =
-      if (IndexStore.versions(s, root) == settledVersions) 1 else 0
     val live = IndexStore.open(s, root)
     val codes = IndexStore.codes(s, root, live)
-    def fp(df: DataFrame): (Long, String) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
     val doomedDf = f1.unionAll(f2)
     val (cents0, cb0, idx0) = Similarity.ivfPqIndex(base, cells)
     val batchForm = Similarity.ivfPqForget(
@@ -771,23 +706,21 @@ object Streaming {
       doomedDf)
     val nLive = n - nDoomed
     val queries = emb.filter(col("vec_id") < 10)
-    val nq = a0.getLong(1)
     val rr = Similarity.scaledRerank(nLive)
     val np = Similarity.scaledNprobe(nLive, live.cells, rr)
     val ann = Similarity.knnIvfPqServe(emb, codes, live.cents, live.cb,
       queries, k, np, rr)
     // the three audit reads (live fingerprint, batch-form fingerprint,
     // probe count) are independent — overlap them (guide §2.6)
-    val ((fpLive, fpBatch), nAnn) = Similarity.inParallel(
-      Similarity.inParallel(fp(codes), fp(batchForm)), ann.count())
+    val ((fpLive, fpBatch), nAnn) = Audit.parallel(
+      Audit.parallel(Audit.fingerprint(codes, Similarity.CodeCols),
+        Audit.fingerprint(batchForm, Similarity.CodeCols)), ann.count())
     val contentMatch = if (fpLive == fpBatch) 1 else 0
-    mark("batch_audit")
     val conserved =
       if (fpLive._1 == nLive && live.nRows == nLive) 1 else 0
     // a surviving query can match nLive-1 others, an erased one nLive
-    val kEff = math.min(k.toLong, math.max(nLive - 1, 0L))
+    val kEff = Audit.kEff(k, nLive)
     val fullK = if (nAnn >= nq * kEff && nAnn <= nq * k) 1 else 0
-    mark("probe")
     row(nDoomed, settledVersions.length.toLong, 1,
       (contentMatch, conserved, resumeSafe, fullK))
   }

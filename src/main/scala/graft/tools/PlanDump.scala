@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Driver-side only for declarative queries; episode gates (whose
   * DataFrame construction runs jobs eagerly) still dump the plan of the
-  * RETURNED frame, so for those the stage-timing env knobs
-  * (GRAFT_GATE_TIMING) are the profiling tool, not this one.
+  * RETURNED frame only, so for those TimeQuery's per-job log
+  * (SPARK_GRAFT_TQ_JOBLOG) is the profiling tool, not this one.
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_PLAN_DIR (default /root/repo/plans/r19),

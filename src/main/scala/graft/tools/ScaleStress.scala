@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
+import graft.gates.Audit
 import graft.operators.{CorpusAssembly, Curation, Dedup, QualityClassifier, Retrieval, Sampling, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -104,6 +105,9 @@ object ScaleStress {
       }
     }.reduce(_ unionByName _)
   }
+
+  private def codesFp(df: DataFrame) =
+    Audit.fingerprint(df, Similarity.CodeCols)
 
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
@@ -565,20 +569,13 @@ object ScaleStress {
               s"expected versions 1..6, got $vs")
             val live = IndexStore.open(spark, root.toString)
             val codes = IndexStore.codes(spark, root.toString, live)
-            def fp(df: DataFrame): (Long, String) = {
-              val r = df.agg(count(lit(1)),
-                sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-                  .cast("decimal(38,0)"))).head()
-              (r.getLong(0),
-                if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-            }
             val (cents0, cb0, idx0) =
               Similarity.ivfPqIndex(base, Similarity.scaledCells(nBase))
             val serial = Similarity.ivfPqForget(
               idx0.select("nn_id", "cell", "codes").unionAll(
                 Similarity.ivfPqAppend(cents0, cb0, inc)), doomed)
-            val fpLive = fp(codes)
-            require(fpLive == fp(serial),
+            val fpLive = codesFp(codes)
+            require(fpLive == codesFp(serial),
               "settled state diverged from the serial schedule")
             require(fpLive._1 == n - nDoomed && live.nRows == n - nDoomed,
               s"row conservation broke: ${fpLive._1} vs ${n - nDoomed}")
@@ -642,20 +639,13 @@ object ScaleStress {
                 s"N=$nw expected versions 1..${nw + 1}, got $vs")
               val live = IndexStore.open(spark, root.toString)
               val codes = IndexStore.codes(spark, root.toString, live)
-              def fp(df: DataFrame): (Long, String) = {
-                val r = df.agg(count(lit(1)),
-                  sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-                    .cast("decimal(38,0)"))).head()
-                (r.getLong(0),
-                  if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-              }
               // the slices partition `inc` (disjoint by mod class), so
               // the settled content must equal the serial batch append
               val (cents0, cb0, idx0) =
                 Similarity.ivfPqIndex(base, Similarity.scaledCells(nBase))
               val serial = idx0.select("nn_id", "cell", "codes").unionAll(
                 Similarity.ivfPqAppend(cents0, cb0, inc))
-              require(fp(codes) == fp(serial),
+              require(codesFp(codes) == codesFp(serial),
                 s"N=$nw settled state diverged from the serial schedule")
               val dist = {
                 val it = tries.iterator()
@@ -840,14 +830,7 @@ object ScaleStress {
         require(ckpts.size == 100 && ckpts.last == 1000L,
           s"checkpoint cadence broke: ${ckpts.size} ckpts, " +
             s"last ${ckpts.lastOption}")
-        def fp(df: DataFrame): (Long, String) = {
-          val r = df.agg(count(lit(1)),
-            sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-              .cast("decimal(38,0)"))).head()
-          (r.getLong(0),
-            if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-        }
-        val fpLive = fp(IndexStore.codes(spark, root.toString, live))
+        val fpLive = codesFp(IndexStore.codes(spark, root.toString, live))
         // horizon guard at depth: vacuum reaps data outside retention
         // but never touches the log; the live snapshot is unperturbed
         IndexStore.vacuum(spark, root.toString, retainLast = 2,
@@ -856,7 +839,7 @@ object ScaleStress {
           "vacuum deleted log history")
         val live2 = IndexStore.open(spark, root.toString)
         require(live2.version == 1001L &&
-            fp(IndexStore.codes(spark, root.toString, live2)) == fpLive,
+            codesFp(IndexStore.codes(spark, root.toString, live2)) == fpLive,
           "live snapshot perturbed by vacuum at depth 1001")
         slice.unpersist()
         System.err.println(
@@ -918,13 +901,8 @@ object ScaleStress {
         require(v20.version == 20L, s"setup expected v20, got ${v20.version}")
         require(IndexStore.checkpoints(spark, root.toString).last == 20L,
           "v20 checkpoint missing")
-        val fp20 = {
-          val r = IndexStore.codes(spark, root.toString, v20)
-            .agg(count(lit(1)),
-              sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-                .cast("decimal(38,0)"))).head()
-          (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-        }
+        val fp20 = Audit.fingerprint(
+          IndexStore.codes(spark, root.toString, v20), Similarity.CodeCols)
         val logDir = s"${root.toString}/log"
         val template = new String(Files.readAllBytes(
           Paths.get(s"$logDir/v%09d.checkpoint".format(20L))), "UTF-8")
@@ -968,20 +946,6 @@ object ScaleStress {
         val (openPtr, snapPtr) = timeOpen()
         require(snapPtr.version == 10001L,
           s"pointer open read depth ${snapPtr.version}, want 10001")
-        if (sys.env.contains("GRAFT_GATE_TIMING")) {
-          // decompose: versions() pays the full listing; openVersion
-          // re-reads the checkpoint + models via the listing path
-          def t(label: String)(body: => Any): Unit = {
-            val t0 = System.nanoTime()
-            body
-            System.err.println(f"[stress]   $label%-24s ${(System.nanoTime() - t0) / 1e9}%.4f s")
-          }
-          t("versions_listing")(IndexStore.versions(spark, root.toString))
-          t("versions_listing2")(IndexStore.versions(spark, root.toString))
-          t("open_again")(IndexStore.open(spark, root.toString))
-          t("lastTxn")(IndexStore.lastTxnVersion(spark, root.toString, "x"))
-          ()
-        }
         // fallback contrast: delete the pointer — open pays the full
         // 11,019-file NAME listing (the pre-r19 cost) and must agree
         Files.delete(Paths.get(s"$logDir/_last_checkpoint"))
@@ -990,13 +954,8 @@ object ScaleStress {
             snapList.files == snapPtr.files &&
             snapList.modelDir == snapPtr.modelDir,
           "listing fallback disagrees with pointer open at depth 10001")
-        val fpDeep = {
-          val r = IndexStore.codes(spark, root.toString, snapPtr)
-            .agg(count(lit(1)),
-              sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-                .cast("decimal(38,0)"))).head()
-          (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-        }
+        val fpDeep = Audit.fingerprint(
+          IndexStore.codes(spark, root.toString, snapPtr), Similarity.CodeCols)
         require(fpDeep == fp20,
           "empty-delta history perturbed the snapshot content")
         System.err.println(

@@ -74,6 +74,24 @@ class CheckpointSpec extends AnyFunSuite {
     } finally spark.conf.unset(Checkpoints.DirKey)
   }
 
+  private def chain(from: Long, to: Long) =
+    (from until to).map(i => (i, i + 1)).toDF("id_a", "id_b")
+
+  private def star(pairs: org.apache.spark.sql.DataFrame, maxIter: Int = 50) =
+    Dedup.connectedComponentsStar(pairs, maxIter).as[(Long, Long)]
+      .collect().sorted
+
+  /** Fewest rounds a cold (store-less) star closure needs on `pairs`:
+    * a resumed run that converges on FEWER rounds than this can only
+    * have seeded from a snapshot. */
+  private def coldRounds(pairs: org.apache.spark.sql.DataFrame): Int =
+    (1 to 50).find(m => scala.util.Try(star(pairs, m)).isSuccess).get
+
+  /** The store's per-graph components_star namespaces under `dir`. */
+  private def starStores(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten
+      .filter(_.startsWith("components_star")).sorted
+
   test("kill-resume: a restarted componentsStar run resumes from round files") {
     // The driver-restart story (VERDICT r9 #5): under
     // spark.graft.resumeDir every round snapshots to parquet; a run
@@ -82,30 +100,71 @@ class CheckpointSpec extends AnyFunSuite {
     // A 16-node chain needs several star rounds, so maxIter=1 aborts
     // mid-run — the require throw stands in for the kill (same effect:
     // the loop dies after round 1 with round files on disk).
-    val chain = (1L until 16L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val expected = Dedup.connectedComponentsStar(chain)
-      .as[(Long, Long)].collect().sorted
+    val g = chain(1L, 16L)
+    val expected = star(g)
+    val cold = coldRounds(g)
+    assert(cold > 2, s"the chain must need several rounds, took $cold")
     val dir = java.nio.file.Files.createTempDirectory("graft-resume").toString
     spark.conf.set(Checkpoints.ResumeKey, dir)
     try {
-      intercept[IllegalArgumentException] {
-        Dedup.connectedComponentsStar(chain, maxIter = 1).collect()
-      }
-      val root = java.nio.file.Paths.get(dir, "components_star")
-      assert(java.nio.file.Files.exists(root),
+      intercept[IllegalArgumentException] { star(g, maxIter = 1) }
+      assert(starStores(dir).size === 1,
         "the killed run left no round snapshots")
-      // The resumed call gets an EMPTY pair set: if it cold-recomputed
-      // from its input the result would be empty, so reproducing the
-      // chain's fixpoint PROVES the round-1 files seeded the run.
-      val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-      val resumed = Dedup.connectedComponentsStar(empty)
-        .as[(Long, Long)].collect().sorted
-      assert(resumed === expected,
+      // one round is already on disk, so the resumed run converges on a
+      // budget a cold run cannot: the round-1 files seeded it
+      assert(star(g, maxIter = cold - 1) === expected,
         "resumed run did not reach the killed run's fixpoint")
       // success clears the store — a stale fixpoint must never seed a
       // later run over different input
-      assert(!java.nio.file.Files.exists(root),
+      assert(starStores(dir).isEmpty,
         "resume store not cleared after successful convergence")
+    } finally spark.conf.unset(Checkpoints.ResumeKey)
+  }
+
+  test("kill-resume: concurrent componentsStar closures keep separate stores") {
+    // two closures over different graphs inside Audit.parallel (the
+    // semantic-dedup gates' shape), both killed after round 1: each
+    // must leave its OWN snapshots, and each must resume from its own
+    val (ga, gb) = (chain(1L, 16L), chain(101L, 121L))
+    val (expA, expB) = (star(ga), star(gb))
+    val (coldA, coldB) = (coldRounds(ga), coldRounds(gb))
+    val dir = java.nio.file.Files.createTempDirectory("graft-resumePar").toString
+    spark.conf.set(Checkpoints.ResumeKey, dir)
+    try {
+      val (ka, kb) = graft.gates.Audit.parallel(
+        scala.util.Try(star(ga, maxIter = 1)),
+        scala.util.Try(star(gb, maxIter = 1)))
+      assert(ka.isFailure && kb.isFailure, "both closures must be killed")
+      assert(starStores(dir).size === 2,
+        s"concurrent closures shared a store: ${starStores(dir)}")
+      val (ra, rb) = graft.gates.Audit.parallel(
+        star(ga, maxIter = coldA - 1), star(gb, maxIter = coldB - 1))
+      assert(ra === expA && rb === expB)
+      assert(starStores(dir).isEmpty)
+      // the SAME graph twice at once (the dedup gates' tiers at full
+      // recall): one closure owns the store, the other runs store-less
+      val (sa, sb) = graft.gates.Audit.parallel(star(ga), star(ga))
+      assert(sa === expA && sb === expA)
+      assert(starStores(dir).isEmpty)
+    } finally spark.conf.unset(Checkpoints.ResumeKey)
+  }
+
+  test("kill-resume: a foreign graph's componentsStar round is NOT resumed") {
+    // a restart that runs a DIFFERENT graph first must compute that
+    // graph's own components, never seed from the killed graph's round
+    val (ga, gb) = (chain(1L, 16L), chain(101L, 121L))
+    val expB = star(gb)
+    val dir = java.nio.file.Files.createTempDirectory("graft-resumeFor").toString
+    spark.conf.set(Checkpoints.ResumeKey, dir)
+    try {
+      intercept[IllegalArgumentException] { star(ga, maxIter = 1) }
+      val killed = starStores(dir)
+      assert(killed.size === 1)
+      assert(star(gb) === expB,
+        "the foreign graph's snapshot seeded this closure")
+      // the killed graph's rounds are untouched (its own restart may
+      // still need them)
+      assert(starStores(dir) === killed, "another graph's store was cleared")
     } finally spark.conf.unset(Checkpoints.ResumeKey)
   }
 

@@ -143,15 +143,6 @@ class DedupSpec extends AnyFunSuite {
     assert(verified === naive)
   }
 
-  test("prefix-filtered jaccard equals the naive postings join exactly") {
-    val corpus = Dedup.withNearDups(docs)
-    val naive = Dedup.jaccardPairs(corpus, 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    val prefix = Dedup.jaccardPairsPrefix(corpus, 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(prefix === naive)
-  }
-
   test("bitmap jaccard equals the naive postings join exactly") {
     val corpus = Dedup.withNearDups(docs)
     val naive = Dedup.jaccardPairs(corpus, 0.5)
@@ -205,7 +196,7 @@ class DedupSpec extends AnyFunSuite {
     assert(ivf.size === 50)
     val recall = bf.intersect(ivf).size.toDouble / bf.size
     info(f"IVF recall@5 = $recall%.2f (16 cells, 8 probes, 3 Lloyd iters)")
-    // measured 0.90 here with the spherical Lloyd update (IvfSweep);
+    // measured 0.90 here with the spherical Lloyd update;
     // 0.6 matches the driver gate's floor with real margin
     assert(recall >= 0.6)
   }
@@ -387,7 +378,7 @@ class DedupSpec extends AnyFunSuite {
     assert(lsh.size === 50) // k found for every query
     val recall = bf.intersect(lsh).size.toDouble / bf.size
     info(f"LSH recall@5 = $recall%.2f")
-    // 48-bit/12-band default measured 0.82 here (LshSweep); 0.6 leaves
+    // 48-bit/12-band default measured 0.82 here; 0.6 leaves
     // margin without tolerating a real regression
     assert(recall >= 0.6)
   }

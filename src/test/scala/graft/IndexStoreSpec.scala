@@ -20,12 +20,8 @@ class IndexStoreSpec extends AnyFunSuite {
     p.toString
   }
 
-  private def fp(df: org.apache.spark.sql.DataFrame): (Long, String) = {
-    val r = df.agg(count(lit(1)),
-      sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-        .cast("decimal(38,0)"))).head()
-    (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-  }
+  private def fp(df: org.apache.spark.sql.DataFrame) =
+    graft.gates.Audit.fingerprint(df, graft.operators.Similarity.CodeCols)
 
   test("build + open round-trips models and codes; version log is v1") {
     val root = freshRoot()
@@ -139,6 +135,14 @@ class IndexStoreSpec extends AnyFunSuite {
       noopOnEmpty = true)
     assert(f.version === v1.version)
     assert(IndexStore.versions(spark, root) === Seq(1L))
+    // ...and no file-less episode dir outlives the no-op append
+    val dataDir = new java.io.File(s"$root/data")
+    def hasPart(d: java.io.File): Boolean =
+      d.listFiles().exists(f =>
+        if (f.isDirectory) hasPart(f) else f.getName.startsWith("part-"))
+    val fileless = dataDir.listFiles().filter(d => d.isDirectory && !hasPart(d))
+    assert(fileless.isEmpty,
+      s"orphan episode dirs: ${fileless.map(_.getName).toSeq}")
     // default form: the explicit batch mutation commits (DegenerateSpec
     // pins the same at the gate level on empty corpora)
     val a2 = IndexStore.append(spark, root,

@@ -30,6 +30,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.map(_._2) === Set(1L, -1L))
   }
 
+  test("request slices list in slice order past 10 slices") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_slices_")
+      .resolve("req").toString
+    val slices = 12L
+    Streaming.writeSlices((0L until slices).toDF("vec_id"), col("vec_id"),
+      slices, dir)
+    // lexical directory order (what an object-store or HDFS listing
+    // returns) must be slice order: each dir holds exactly its slice
+    val dirs = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("__slice=")).map(_.getName).sorted
+    assert(dirs.length === slices)
+    val ids = dirs.map(d => spark.read.parquet(s"$dir/$d")
+      .as[Long].collect().toSeq)
+    assert(ids.toSeq === (0L until slices).map(Seq(_)))
+  }
+
   test("streaming word count updates incrementally over micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -340,12 +357,8 @@ class StreamingSpec extends AnyFunSuite {
     // the settled live snapshot equals the BATCH forget of the same
     // ids: zero doomed rows, exact survivor count, content equal to
     // the anti-joined in-memory index under the same frozen models
-    def fp(df: org.apache.spark.sql.DataFrame): (Long, String) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
+    def fp(df: org.apache.spark.sql.DataFrame) =
+      graft.gates.Audit.fingerprint(df, graft.operators.Similarity.CodeCols)
     val live = IndexStore.open(spark, root)
     val codes = IndexStore.codes(spark, root, live)
     assert(codes.filter(col("nn_id") % 97 === 0).count() === 0L)
@@ -534,12 +547,8 @@ class StreamingSpec extends AnyFunSuite {
     // settled content == the BATCH sequence: index(base) ∪
     // append(inc) under the same frozen models, minus both erasure
     // sets — including the A1-sourced ids erased AFTER they arrived
-    def fp(df: org.apache.spark.sql.DataFrame): (Long, String) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("nn_id"), col("cell"), col("codes"))
-          .cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
-    }
+    def fp(df: org.apache.spark.sql.DataFrame) =
+      graft.gates.Audit.fingerprint(df, graft.operators.Similarity.CodeCols)
     val live = IndexStore.open(spark, root)
     val codes = IndexStore.codes(spark, root, live)
     val doomed = (f1Ids ++ f2Ids).toSeq.toDF("vec_id")
