@@ -63,26 +63,15 @@ object Similarity {
     * around centroids, search only the `nprobe` cells nearest each query.
     *
     * Centroids: `cells` corpus vectors picked by deterministic hash of
-    * vec_id (reproducible), refined with one Lloyd step (per-cell mean),
-    * then collected to the driver — C × dim doubles of model metadata,
-    * the IVF codebook. Cell assignment is a per-row argmax over dot
-    * products with the unit-normalized codebook as literal arrays: a pure
-    * map fused into the scan — no explode, no window, no shuffle, any
-    * embedding dim. Probe selection sorts a C-element struct array per
-    * query row — again pure column math. The only shuffles left are the
-    * Lloyd mean (map-side combined to ≤ C×dim partials per task) and the
-    * final per-query top-k window on the bounded candidate set. */
-  /** Unit-normalize (zero vectors pass through). */
-  private def unitize(a: Array[Double]): Array[Double] = {
-    val n = math.sqrt(a.map(x => x * x).sum)
-    if (n == 0) a else a.map(_ / n)
-  }
-
-  /** Seeded centroid init — a TakeOrdered of C rows, not a corpus sort. */
-  private def seedCentroids(e: DataFrame, cells: Int): Array[Array[Double]] =
-    e.orderBy(xxhash64(col("vec_id"), lit(7)), col("vec_id"))
-      .limit(cells).select("v").collect()
-      .map(_.getSeq[Double](0).toArray)
+    * vec_id (reproducible), refined with Lloyd rounds (per-cell mean
+    * direction) — C × dim doubles of model metadata, the IVF codebook,
+    * trained on the driver by [[Lloyd]] over ONE fetch of the corpus.
+    * Cell assignment is a per-row argmax over dot products with the
+    * unit-normalized codebook as literal arrays: a pure map fused into
+    * the scan — no explode, no window, no shuffle, any embedding dim.
+    * Probe selection sorts a C-element struct array per query row —
+    * again pure column math. The only shuffle left is the final
+    * per-query top-k window on the bounded candidate set. */
 
   /** Above this cell count, centroid-distance math switches from the
     * per-centroid expression expansion (C separate codegen'd dot_native
@@ -134,79 +123,32 @@ object Similarity {
       .drop("__d")
   }
 
-  /** One Lloyd refinement: per-cell mean DIRECTION (sum of the cell's
-    * UNIT vectors, re-unitized — summing raw vectors would maximize
-    * Σ dot, not the Σ cosine objective the trainer tracks, making
-    * `improved` corpus-dependent; the spherical-k-means update is the
-    * mean of normalized members). Scale is irrelevant under the final
-    * unitize, so sum ≡ avg; zero vectors contribute nothing; empty cells
-    * simply drop out. The collect is C×dim codebook METADATA (the
-    * trained model), not data — the legitimate collect class. */
-  private def lloydStep(e: DataFrame, cents: Array[Array[Double]],
-                        dim: Int): Array[Array[Double]] = {
-    val n = sqrt(dot_native(col("v"), col("v")))
-    assignCells(e, cents)
-      .groupBy("cell")
-      .agg(array((0 until dim).map(i =>
-        sum(when(n > 0, element_at(col("v"), i + 1) / n)
-          .otherwise(lit(0.0)))): _*).as("cv"))
-      .orderBy("cell").collect()
-      .map(r => unitize(r.getSeq[Double](1).toArray))
-  }
-
   /** Default codebook shape is test-scale: 16 cells over a few-hundred-row
     * corpus needs half of them probed for recall parity with the LSH tier
     * (measured recall@5 0.82/0.90 at sf0.01/0.001 with 3 Lloyd
     * iterations, one-off sweep). At 100 TB, cells grows ~√N so
     * nprobe stays a small constant FRACTION of a much larger codebook and
     * the probe still reads only nprobe partitions. */
-  /** Seeded-init + Lloyd-refined IVF codebook over a decoded (vec_id, v)
-    * frame — the shared trainer behind [[knnIvf]], [[cellAssignments]]
-    * and [[ivfPqIndex]]. Empty corpus → empty codebook.
-    *
-    * Each Lloyd pass rescans its input, so the decoded training frame
-    * is cached for the duration of training (unpersisted before any
-    * probe query — the final assignment is one fresh scan either way).
-    * At 100 TB the codebook trains on a deterministic hash-SAMPLE of
-    * the corpus that fits the cache, not the full table — the
-    * assignment pass is the only stage that must see every row. */
-  private def trainIvf(e: DataFrame, cells: Int,
+  /** Seeded-init + Lloyd-refined IVF codebook of a corpus — the shared
+    * trainer behind [[knnIvf]], [[cellAssignments]] and [[ivfPqIndex]].
+    * Empty corpus → empty codebook. The rounds run on the driver
+    * ([[Lloyd.ivf]]) over the corpus's training rows: every row up to
+    * 2·target rows, past that a deterministic hash-sample of ~target
+    * (target = max(50 000, 40·cells)), so the driver holds at most
+    * 2·max(50 000, 40·cells) rows × dim doubles while it trains. */
+  private def trainIvf(c: Corpus, cells: Int,
                        lloydIters: Int): Array[Array[Double]] =
-    ivfModelCache.computeIfAbsent(
-      (corpusFp(e, Seq("vec_id", "v")), cells, lloydIters),
-      _ => trainIvfUncached(e, cells, lloydIters))
-
-  private def trainIvfUncached(e0: DataFrame, cells: Int,
-                               lloydIters: Int): Array[Array[Double]] = {
-    // the production trainer discipline the scaladoc above promises:
-    // past 2× the statistical need (≥40 training vectors per cell,
-    // floor 50k rows) the codebook trains on a deterministic
-    // hash-sample — Lloyd means converge on the sample; the assignment
-    // pass is the only stage that must see every row
-    val target = math.max(50000L, 40L * cells)
-    val n = e0.count()
-    val e =
-      if (n <= 2 * target) e0
-      else e0.filter(pmod(xxhash64(col("vec_id"), lit(41)), lit(1000000L))
-        < lit(1000000L * target / n))
-    val seeds = seedCentroids(e, cells)
-    if (seeds.isEmpty) return Array.empty
-    val dim = seeds.head.length // derived from the data, no fixed 64
-    var refined = seeds.map(unitize)
-    if (lloydIters > 1) e.persist()
-    for (_ <- 0 until lloydIters) refined = lloydStep(e, refined, dim)
-    if (lloydIters > 1) e.unpersist(false)
-    refined
-  }
+    ivfModelCache.computeIfAbsent((c.ivfKey, cells, lloydIters),
+      _ => Lloyd.ivf(c.rows(Lloyd.target(cells)), cells, lloydIters))
 
   /** Per-JVM trained-model registry — a codebook is a PURE FUNCTION of
     * (corpus content, hyperparameters), so retraining it in every query
     * of a session is pure job-count waste (the ANN corpora are small;
     * the cost is Spark job orchestration, not data). Keyed by a content
     * fingerprint — row count + order-independent sum of per-row
-    * xxhash64 — which is ONE cheap scalar job versus ~6 training jobs,
-    * and (unlike plan-identity keys) cannot confuse two in-memory test
-    * frames that share a schema but differ in rows. The training-
+    * xxhash64 — which (unlike plan-identity keys) cannot confuse two
+    * in-memory test frames that share a schema but differ in rows; a
+    * [[Corpus]] takes both of its keys in one aggregate. The training-
     * CONTRACT queries (kmeansTrainStats / pqTrainStats) deliberately
     * bypass the cache: their per-iteration output IS the point. At
     * production scale the same artifact lives in a model store; this is
@@ -226,10 +168,41 @@ object Similarity {
     ((Long, String), Int, Int, Int, Boolean),
     (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame)]()
 
+  /** A corpus as the trainers see it: its row count and both registry
+    * keys from ONE aggregate — `ivfKey` fingerprints (vec_id, decoded
+    * vector), `pqKey` (vec_id, embedding), each byte-identical to its
+    * [[corpusFp]] — and its training rows, fetched at most once and
+    * shared by every trainer of the call (fetched again only when a
+    * later trainer's sample bound keeps rows an earlier fetch dropped). */
+  private final class Corpus(emb: DataFrame) {
+    private val r = emb.agg(count(lit(1)),
+      sum(xxhash64(col("vec_id"), toDoubleVec(col("embedding")))
+        .cast("decimal(20,0)")),
+      sum(xxhash64(col("vec_id"), col("embedding")).cast("decimal(20,0)")))
+      .head()
+    val n: Long = r.getLong(0)
+    private def key(i: Int): (Long, String) =
+      (n, if (r.isNullAt(i)) "0" else r.getDecimal(i).toString)
+    val ivfKey: (Long, String) = key(1)
+    val pqKey: (Long, String) = key(2)
+
+    private var fetched: Option[(Long, Lloyd.Parts)] = None
+    def rows(target: Long): Lloyd.Parts = synchronized {
+      fetched match {
+        case Some((t, rs)) if t >= target || n <= 2 * t =>
+          Lloyd.sample(rs, n, target)
+        case _ =>
+          val rs = Lloyd.fetch(emb, n, target)
+          fetched = Some((target, rs))
+          rs
+      }
+    }
+  }
+
   def knnIvf(emb: DataFrame, queries: DataFrame, k: Int,
              cells: Int = 16, nprobe: Int = 8, lloydIters: Int = 3): DataFrame = {
     val e = emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-    val refined = trainIvf(e, cells, lloydIters)
+    val refined = trainIvf(new Corpus(emb), cells, lloydIters)
     if (refined.isEmpty) {
       // degenerate empty corpus: no centroids to train — empty result
       // with the contract schema instead of a driver crash
@@ -280,7 +253,7 @@ object Similarity {
   }
 
   /** Multi-probe cell assignment backing semantic dedup: trains the
-    * seeded spherical codebook ([[seedCentroids]] + Lloyd refinement) and
+    * seeded spherical codebook ([[trainIvf]]) and
     * assigns every vector to its `probes` nearest cells. Multi-probe
     * trades duplicate candidate work (×probes) for boundary recall — a
     * τ-pair split across two cells is still co-bucketed when either
@@ -291,7 +264,7 @@ object Similarity {
   private[operators] def cellAssignments(emb: DataFrame, cells: Int,
       lloydIters: Int, probes: Int): DataFrame = {
     val e = emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-    val refined = trainIvf(e, cells, lloydIters)
+    val refined = trainIvf(new Corpus(emb), cells, lloydIters)
     if (refined.isEmpty)
       return e.withColumn("norm", lit(0.0))
         .withColumn("cell", lit(0)).limit(0)
@@ -312,39 +285,25 @@ object Similarity {
     * objective (Σ cos to assigned centroid) non-decreasing — Lloyd's
     * guarantees monotonicity exactly (assignment maximizes per row,
     * mean-direction update maximizes per cell), so `improved` is a real
-    * invariant, not a hope. Each iteration is one scan-fused assignment
-    * pass + a C×dim codebook collect; float-only outputs stay OUT of the
-    * hashed columns (flags + exact counts only). */
+    * invariant, not a hope. It trains on EVERY row (the oracle counts
+    * all embeddings): one seed job, then one `mapPartitions` job per
+    * iteration running [[Lloyd]]'s per-partition partial, whose merge
+    * gives both the iteration's stats and the next codebook. Float-only
+    * outputs stay OUT of the hashed columns (flags + exact counts
+    * only). */
   def kmeansTrainStats(emb: DataFrame, cells: Int = 8,
                        iters: Int = 3): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    val e = emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("vn", sqrt(dot_native(col("v"), col("v"))))
-    val seeds = seedCentroids(e, cells)
-    if (seeds.isEmpty)
-      return Seq.empty[(Int, Long, Int, Int)]
-        .toDF("iter", "n_assigned", "cells_ok", "improved")
-    val dim = seeds.head.length
-    var cents = seeds.map(unitize)
     var prevObj = Double.NegativeInfinity
-    e.persist() // every iteration scans e twice (stats agg + Lloyd update)
-    val out = (0 until iters).map { it =>
-      val r = assignCells(e, cents).agg(
-        count(lit(1)),
-        sum(when(col("vn") > 0, col("best_dot") / col("vn"))
-          .otherwise(lit(0.0))),
-        count_distinct(col("cell"))).head()
-      val (n, obj, used) = (r.getLong(0), r.getDouble(1), r.getLong(2))
-      val row = (it, n,
-        if (used >= 1 && used <= cells) 1 else 0,
-        if (obj >= prevObj - 1e-6) 1 else 0)
-      prevObj = obj
-      if (it < iters - 1) cents = lloydStep(e, cents, dim)
-      row
-    }
-    e.unpersist(false)
-    out.toDF("iter", "n_assigned", "cells_ok", "improved")
+    Lloyd.kmeansStats(emb, cells, iters).zipWithIndex.map {
+      case ((n, obj, used), it) =>
+        val row = (it, n,
+          if (used >= 1 && used <= cells) 1 else 0,
+          if (obj >= prevObj - 1e-6) 1 else 0)
+        prevObj = obj
+        row
+    }.toDF("iter", "n_assigned", "cells_ok", "improved")
   }
 
   /** L2-normalize + symmetric int8 quantization of the embedding column —
@@ -413,16 +372,19 @@ object Similarity {
     // tiers (same deterministic trainers, same parameters), at one
     // training cost instead of two of each. Degenerate corpora fall
     // back to the standalone entries, which handle empties.
+    // one Corpus: one key aggregate (which also gives nCorpus) and one
+    // training fetch serve every trainer below
+    val corpus = new Corpus(emb)
     val e = emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-    val cents = trainIvf(e, 16, 3)
+    val cents = trainIvf(corpus, 16, 3)
     val cb = if (cents.isEmpty) Array.empty[Array[Array[Double]]]
-             else pqTrain(emb)
+             else pqTrain(corpus, PqIters)
     // both composed tiers run the SHIPPED scaling policies (cells
     // ~4√N, ln-scaled rerank, candidate-mass nprobe) — the gate
     // measures the exact configuration the gated queries deploy, not a
     // fixed test point. The plain-ivf tier keeps its own 16-cell
     // codebook (knnIvf's gated defaults).
-    val nCorpus = emb.count()
+    val nCorpus = corpus.n
     val cellsAuto = scaledCells(nCorpus)
     val rr = scaledRerank(nCorpus)
     val np = scaledNprobe(nCorpus, cellsAuto, rr)
@@ -435,9 +397,9 @@ object Similarity {
         // the ivfpq_res tier's RESIDUAL codes are a different encoding
         // from the raw unit-sphere codes, so each tier reads its own
         // cache-backed artifact (each encodes exactly once per JVM)
-        val (centsIdx, cbIdx, index) = ivfPqIndex(emb, cellsAuto)
+        val (centsIdx, cbIdx, index) = ivfPqIndexOf(corpus, emb, cellsAuto)
         val (_, cbRes, indexRes) =
-          ivfPqIndex(emb, cellsAuto, residual = true)
+          ivfPqIndexOf(corpus, emb, cellsAuto, residual = true)
         (knnIvfWith(e, cents, queries, k, 8),
           if (cbIdx.isEmpty) knnIvfPq(emb, queries, k)
           else knnIvfPqWith(emb, index, centsIdx, cbIdx, queries, k, np,
@@ -446,7 +408,7 @@ object Similarity {
           else knnIvfPqWith(emb, indexRes, centsIdx, cbRes, queries, k,
             np, rr, residual = true),
           knnLsh(emb, queries, k),
-          knnPq(emb, queries, k))
+          knnPqOf(corpus, emb, queries, k))
       }
     gate("ivf", ivf, ivfFloor)
       .unionAll(gate("ivfpq", ivfpq, ivfpqFloor))
@@ -553,158 +515,45 @@ object Similarity {
       }
     }
 
-  /** (vec_id, sub, sv): each vector exploded into its M sub-vectors —
-    * the training frame. One scan, M bounded rows per vector. */
-  private def pqSubVectors(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"),
-        unitVec(toDoubleVec(col("embedding"))).as("v"))
-      .select(col("vec_id"),
-        posexplode(transform(sequence(lit(0), lit(PqM - 1)),
-          s => slice(col("v"), s * PqSubDim + 1, lit(PqSubDim))))
-          .as(Seq("sub", "sv")))
-
-  /** Squared-L2 distances of a sub-vector to every centroid of ITS
-    * subspace (codebook as a nested literal, indexed by the row's own
-    * `sub`); `cell` = argmin with first-index tie-break. */
-  private def pqAssign(df: DataFrame,
-                       cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val cbl = typedlit(cb)
-    df.withColumn("__ds",
-        transform(sequence(lit(1), lit(PqK)), kk =>
-          aggregate(
-            zip_with(col("sv"),
-              element_at(element_at(cbl, col("sub") + 1), kk),
-              (a, b) => (a - b) * (a - b)),
-            lit(0.0d), (acc, x) => acc + x)))
-      .withColumn("cell",
-        (array_position(col("__ds"), array_min(col("__ds"))) - 1)
-          .cast("int"))
-      .withColumn("best_d", array_min(col("__ds")))
-      .drop("__ds")
-  }
-
-  /** Seeded PQ init: the first PqK vectors in hash order seed every
-    * subspace with their slices. Empty corpus → empty codebook. */
-  private def pqSeed(emb: DataFrame): Array[Array[Array[Double]]] = {
-    val seeds = emb
-      .orderBy(xxhash64(col("vec_id"), lit(7)), col("vec_id"))
-      .limit(PqK)
-      .select(toDoubleVec(col("embedding")).as("v")).collect()
-      .map(r => unitize(r.getSeq[Double](0).toArray))
-    // degenerate guard: PQ's fixed shape needs dim = M·subDim lanes —
-    // an empty corpus OR a wrong-dim corpus yields the empty model (all
-    // PQ entry points then return empty results instead of slicing past
-    // the vector)
-    if (seeds.isEmpty || seeds.head.length < PqM * PqSubDim) Array.empty
-    else Array.tabulate(PqM, PqK) { (s, kk) =>
-      seeds(kk % seeds.length)
-        .slice(s * PqSubDim, (s + 1) * PqSubDim)
-    }
-  }
-
-  /** One plain-L2 Lloyd step over ALL subspaces at once: ONE aggregation
-    * of the exploded frame grouped by (sub, cell), mean per lane,
-    * collected as M·K·subDim driver metadata. Empty cells keep their
-    * previous centroid. */
-  private def pqLloydStep(sv: DataFrame, cb: Array[Array[Array[Double]]])
-      : Array[Array[Array[Double]]] = {
-    val means = pqAssign(sv, cb.map(_.toSeq.map(_.toSeq)).toSeq)
-      .groupBy("sub", "cell")
-      .agg(array((0 until PqSubDim).map(i =>
-        avg(element_at(col("sv"), i + 1))): _*).as("mv"))
-      .collect()
-    val next = cb.map(_.clone())
-    means.foreach { r =>
-      next(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
-    }
-    next
-  }
-
-  /** PQ seeding/training over an arbitrary pre-decoded (vec_id, v)
-    * frame — the residual path's trainer: seeds are the first PqK rows
-    * in hash order taken AS-IS (cell residuals are not unit vectors;
-    * re-normalizing them would distort exactly the geometry ADC must
-    * approximate), Lloyd steps are the same single-aggregation
-    * updates as the unit-sphere path. */
-  private def pqSeedOf(vf: DataFrame): Array[Array[Array[Double]]] = {
-    val seeds = vf.orderBy(xxhash64(col("vec_id"), lit(7)), col("vec_id"))
-      .limit(PqK).select("v").collect()
-      .map(_.getSeq[Double](0).toArray)
-    if (seeds.isEmpty || seeds.head.length < PqM * PqSubDim) Array.empty
-    else Array.tabulate(PqM, PqK) { (s, kk) =>
-      seeds(kk % seeds.length).slice(s * PqSubDim, (s + 1) * PqSubDim)
-    }
-  }
-
-  private def pqSubVectorsOf(vf: DataFrame): DataFrame =
-    vf.select(col("vec_id"),
-      posexplode(transform(sequence(lit(0), lit(PqM - 1)),
-        s => slice(col("v"), s * PqSubDim + 1, lit(PqSubDim))))
-        .as(Seq("sub", "sv")))
-
-  private def pqTrainOn(vf: DataFrame, iters: Int)
-      : Array[Array[Array[Double]]] = {
-    var cb = pqSeedOf(vf)
-    if (cb.isEmpty) return cb
-    val sv = pqSubVectorsOf(vf).persist()
-    for (_ <- 1 to iters) cb = pqLloydStep(sv, cb)
-    sv.unpersist(false)
-    cb
-  }
-
-  /** Train the M per-subspace codebooks: seeded init + `iters` Lloyd
-    * steps — assignment is scan-fused per-row math against the literal
-    * codebook. Plain L2 (not spherical): PQ quantizes residual
-    * geometry, not direction. */
+  /** Train the M per-subspace codebooks: seeded init (the first PqK
+    * vectors in hash order, unitized, seed every subspace with their
+    * slices) + `iters` Lloyd steps over the unit vectors, run on the
+    * driver by [[Lloyd.pqUnit]]. Plain L2 (not spherical): PQ
+    * quantizes residual geometry, not direction. It trains on the same
+    * sample bound as the IVF codebook at PqK centroids: every row up to
+    * 100 000, past that a deterministic hash-sample of ~50 000. Empty or
+    * wrong-dim (fewer than PqM·PqSubDim lanes) corpus → empty model. */
   def pqTrain(emb: DataFrame, iters: Int = PqIters)
       : Array[Array[Array[Double]]] =
-    pqModelCache.computeIfAbsent(
-      (corpusFp(emb, Seq("vec_id", "embedding")), iters),
-      _ => pqTrainUncached(emb, iters))
+    pqTrain(new Corpus(emb), iters)
 
-  private def pqTrainUncached(emb: DataFrame, iters: Int)
-      : Array[Array[Array[Double]]] = {
-    var cb = pqSeed(emb)
-    if (cb.isEmpty) return cb
-    val sv = pqSubVectors(emb).persist()
-    for (_ <- 1 to iters) cb = pqLloydStep(sv, cb)
-    sv.unpersist(false)
-    cb
-  }
+  private def pqTrain(c: Corpus, iters: Int): Array[Array[Array[Double]]] =
+    pqModelCache.computeIfAbsent((c.pqKey, iters),
+      _ => Lloyd.pqUnit(c.rows(Lloyd.target(PqK)), iters))
 
   /** Per-iteration PQ training contract (the kmeansTrainStats pattern):
     * every sub-vector assigned (exact count), cells within bounds, and
     * the total quantization error non-increasing — Lloyd's monotonicity
-    * in plain L2. Float error stays out of the hashed columns. */
+    * in plain L2. Trains on every row, one seed job then one
+    * `mapPartitions` job per iteration. Float error stays out of the
+    * hashed columns. */
   def pqTrainStats(emb: DataFrame, iters: Int = PqIters): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    var cb = pqSeed(emb)
-    if (cb.isEmpty)
-      return Seq.empty[(Int, Long, Int, Int)]
-        .toDF("iter", "n_assigned", "cells_ok", "improved")
-    // (cb nonempty ⇒ dim matched, so the exploded slices are full)
-    val sv = pqSubVectors(emb).persist()
     var prevErr = Double.MaxValue
-    val out = (0 until iters).map { it =>
-      val r = pqAssign(sv, cb.map(_.toSeq.map(_.toSeq)).toSeq)
-        .agg(count(lit(1)), sum(col("best_d")),
-          count_distinct(col("sub"), col("cell"))).head()
-      val (n, err, used) = (r.getLong(0), r.getDouble(1), r.getLong(2))
-      // relative tolerance: the summed squared-L2 error GROWS with the
-      // corpus, so a fixed 1e-6 slack would be swamped by float
-      // accumulation noise at larger SFs and flip the hashed flag with
-      // no training bug (ADVICE r10); 1e-9 relative tracks the error's
-      // own scale, the absolute term covers prevErr ≈ 0
-      val row = (it, n,
-        if (used >= 1 && used <= PqM.toLong * PqK) 1 else 0,
-        if (err <= prevErr * (1 + 1e-9) + 1e-6) 1 else 0)
-      prevErr = err
-      if (it < iters - 1) cb = pqLloydStep(sv, cb)
-      row
-    }
-    sv.unpersist(false)
-    out.toDF("iter", "n_assigned", "cells_ok", "improved")
+    Lloyd.pqStats(emb, iters).zipWithIndex.map {
+      case ((n, err, used), it) =>
+        // relative tolerance: the summed squared-L2 error GROWS with the
+        // corpus, so a fixed 1e-6 slack would be swamped by float
+        // accumulation noise at larger SFs and flip the hashed flag with
+        // no training bug (ADVICE r10); 1e-9 relative tracks the error's
+        // own scale, the absolute term covers prevErr ≈ 0
+        val row = (it, n,
+          if (used >= 1 && used <= PqM.toLong * PqK) 1 else 0,
+          if (err <= prevErr * (1 + 1e-9) + 1e-6) 1 else 0)
+        prevErr = err
+        row
+    }.toDF("iter", "n_assigned", "cells_ok", "improved")
   }
 
   /** PQ codes of one vector: M argmins against the literal codebook —
@@ -741,8 +590,12 @@ object Similarity {
     * 0.90 on the testdata while raw ADC top-5 sat at ~0.3 —
     * re-rank is where PQ recall comes from, not a luxury. */
   def knnPq(emb: DataFrame, queries: DataFrame, k: Int,
-            iters: Int = PqIters, rerank: Int = 50): DataFrame = {
-    val cb = pqTrain(emb, iters)
+            iters: Int = PqIters, rerank: Int = 50): DataFrame =
+    knnPqOf(new Corpus(emb), emb, queries, k, iters, rerank)
+
+  private def knnPqOf(c: Corpus, emb: DataFrame, queries: DataFrame, k: Int,
+                      iters: Int = PqIters, rerank: Int = 50): DataFrame = {
+    val cb = pqTrain(c, iters)
     if (cb.isEmpty) {
       val s = emb.sparkSession
       import s.implicits._
@@ -756,13 +609,12 @@ object Similarity {
     // ~2 s materialized (the winnowing inlining lesson). At scale codes
     // ARE a stored column — encode once is the PQ contract, not a hack
     // (hence the per-JVM cache: the codes are model output, like cb).
-    val corpus = pqCodesCache.computeIfAbsent(
-      (corpusFp(emb, Seq("vec_id", "embedding")), iters),
+    val codes = pqCodesCache.computeIfAbsent((c.pqKey, iters),
       _ => Checkpoints.scratch(
         emb.select(col("vec_id").as("nn_id"),
           pqCodes(unitVec(toDoubleVec(col("embedding"))), cbSeq)
             .as("codes"))))
-    knnPqWith(emb, corpus, cb, queries, k, rerank)
+    knnPqWith(emb, codes, cb, queries, k, rerank)
   }
 
   /** ADC scan + exact re-rank of [[knnPq]] against already-encoded
@@ -895,9 +747,19 @@ object Similarity {
     * directories on re-scan. */
   def ivfPqIndex(emb: DataFrame, cells: Int = 16, lloydIters: Int = 3,
                  iters: Int = PqIters, residual: Boolean = false)
+      : (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) =
+    ivfPqIndexOf(new Corpus(emb), emb, cells, lloydIters, iters, residual)
+
+  /** [[ivfPqIndex]] over a [[Corpus]] the caller already keyed: on a
+    * fresh corpus one key aggregate, ONE training fetch for both
+    * codebooks and the index scratch; on a registry hit only the key
+    * aggregate. */
+  private def ivfPqIndexOf(c: Corpus, emb: DataFrame, cells: Int,
+                           lloydIters: Int = 3, iters: Int = PqIters,
+                           residual: Boolean = false)
       : (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = {
     val e = emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-    val cents = trainIvf(e, cells, lloydIters)
+    val cents = trainIvf(c, cells, lloydIters)
     def emptyTriple = {
       val empty = e.select(col("vec_id").as("nn_id"))
         .withColumn("cell", lit(0))
@@ -911,8 +773,9 @@ object Similarity {
     // the ADC probe and a partitioned write would otherwise re-encode),
     // and the per-JVM cache keeps the whole (centroids, codebook,
     // index) artifact across queries — encode-once is the index
-    // contract. `residual = true` is textbook IVFADC: PQ trains on and
-    // encodes r = unit(v) − centroid(cell) (valid because
+    // contract. `residual = true` is textbook IVFADC: PQ trains on
+    // (driver-side, from the same training rows) and encodes
+    // r = unit(v) − centroid(cell) (valid because
     // unit(q) − unit(v) = r_q − r exactly, so per-(query, cell) ADC
     // tables approximate the true unit-space L2). MEASURED on this
     // testdata it does NOT pay: recall@5 0.80 vs 0.90 raw at sf0.001,
@@ -921,24 +784,25 @@ object Similarity {
     // nearly the raw variance, so the finer-quantization argument
     // (Jégou et al. §IV) only bites at production cell counts
     // (√N cells shrink residual norms; revisit the default there).
-    // Hence the measurement-driven default: residual = false. */
+    // Hence the measurement-driven default: residual = false.
     val (_, cb, index) = ivfPqIndexCache.computeIfAbsent(
-      (corpusFp(emb, Seq("vec_id", "embedding")), cells, lloydIters,
-        iters, residual),
+      (c.pqKey, cells, lloydIters, iters, residual),
       _ => {
         val assigned = assignCells(e, cents).drop("best_dot")
         val centsLit = typedlit(cents.map(_.toSeq).toSeq)
         val enc =
           if (residual)
-            Checkpoints.scratch(assigned.select(col("vec_id"), col("cell"),
+            assigned.select(col("vec_id"), col("cell"),
               zip_with(unitVec(col("v")),
                 element_at(centsLit, col("cell") + 1),
-                (a, b) => a - b).as("v")))
+                (a, b) => a - b).as("v"))
           else
             assigned.select(col("vec_id"), col("cell"),
               unitVec(col("v")).as("v"))
-        val cb2 = if (residual) pqTrainOn(enc.select("vec_id", "v"), iters)
-                  else pqTrain(emb, iters)
+        val cb2 =
+          if (residual)
+            Lloyd.pqResidual(c.rows(Lloyd.target(PqK)), cents, iters)
+          else pqTrain(c, iters)
         if (cb2.isEmpty) (cents, cb2, emptyTriple._3)
         else {
           val cbSeq = cb2.map(_.toSeq.map(_.toSeq)).toSeq
@@ -1802,6 +1666,14 @@ object Similarity {
     * production, and exactly what a determinism test must bypass). */
   private[graft] def clearNnGraphCacheForTest(): Unit = nnGraphCache.clear()
 
+  /** Empty the trained-model registries, so a spec can train cold. */
+  private[graft] def clearModelCachesForTest(): Unit = {
+    ivfModelCache.clear()
+    pqModelCache.clear()
+    pqCodesCache.clear()
+    ivfPqIndexCache.clear()
+  }
+
   private def knnGraphNnDescentBuild(emb: DataFrame, k: Int, iters: Int,
                                      initRounds: Int, bucketSize: Int,
                                      buildK: Int, seed: Long,
@@ -2626,7 +2498,7 @@ object Similarity {
     def e(df: DataFrame) =
       df.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
     val eBase = e(base)
-    val cents = trainIvf(eBase, scaledCells(nBase), 3)
+    val cents = trainIvf(new Corpus(base), scaledCells(nBase), 3)
     if (cents.isEmpty) return None
     def occ(df: DataFrame, as: String) =
       assignCells(df, cents).groupBy("cell")

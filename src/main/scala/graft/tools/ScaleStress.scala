@@ -326,8 +326,8 @@ object ScaleStress {
         TextAnalysis.unigramEncodeStats(spark, outDir) },
       // r13: the ingest path (batch core of the streaming ANN-index
       // ingest): frozen-model build on the corpus's first half
-      // (sampled Lloyd + per-iteration PQ aggregation + one assignment
-      // scan — all linear or bounded) then the second half encoded in
+      // (one sampled training fetch, driver-side Lloyd rounds, one
+      // assignment scan — all linear or bounded) then the second half encoded in
       // one scan of pure per-row math against driver-held literals.
       // Every stage is linear, so the slope should be ~1× per decade —
       // the daily-ingest cost a 100 TB deployment pays per arrival

@@ -8,7 +8,13 @@ package graft.tools
   * AFTER deltas on the same query under the same process shape, not for
   * anchor numbers.
   *
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_TQ_REPS.
+  * With SPARK_GRAFT_TQ_JOBLOG set, every job is printed to stderr with
+  * its wall and call site (`[tqjob]`), and after each rep the query's
+  * jobs are counted per call site (`[tqsite]`, stdout) — the sub-100 ms
+  * jobs of an iterative loop are exactly the ones a wall filter hides.
+  *
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_TQ_REPS,
+  * SPARK_GRAFT_TQ_JOBLOG.
   * Args: query names.
   */
 object TimeQuery {
@@ -31,16 +37,33 @@ object TimeQuery {
     val tasks = new java.util.concurrent.atomic.AtomicLong()
     val jobStarts =
       new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    // an AQE stage job is submitted from a pool thread, so its own call
+    // site names the pool; its SQL execution's call site names the caller
+    val execSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    // jobs per call site since the last drain, in first-seen order
+    val sites = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val logJobs = sys.env.contains("SPARK_GRAFT_TQ_JOBLOG")
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
             j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           jobs.incrementAndGet()
-          if (logJobs)
-            jobStarts.put(j.jobId, (System.nanoTime(),
-              j.stageInfos.lastOption.map(_.name).getOrElse("?")))
+          if (logJobs) {
+            val site = Option(j.properties)
+              .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+              .flatMap(id => Option(execSites.get(id)))
+              .getOrElse(j.stageInfos.lastOption.map(_.name).getOrElse("?"))
+            jobStarts.put(j.jobId, (System.nanoTime(), site))
+          }
           ()
+        }
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if logJobs =>
+            execSites.put(x.executionId.toString, x.description)
+            ()
+          case _ => ()
         }
         override def onJobEnd(
             j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
@@ -48,9 +71,11 @@ object TimeQuery {
             val st = jobStarts.remove(j.jobId)
             if (st != null) {
               val ms = (System.nanoTime() - st._1) / 1e6
-              if (ms >= 50)
-                System.err.println(
-                  f"[tqjob] job ${j.jobId}%4d ${ms / 1000}%6.2f s  ${st._2}")
+              System.err.println(
+                f"[tqjob] job ${j.jobId}%4d ${ms / 1000}%6.2f s  ${st._2}")
+              sites.synchronized {
+                sites(st._2) = sites.getOrElse(st._2, 0) + 1
+              }
             }
           }
           ()
@@ -72,6 +97,10 @@ object TimeQuery {
       // listener delivery is async; a short sleep drains the bus well
       // enough for tool-grade accounting
       Thread.sleep(300)
+      if (logJobs) sites.synchronized {
+        for ((site, k) <- sites) println(f"[tqsite] $n%-28s $k%4d  $site")
+        sites.clear()
+      }
       (dt, jobs.get() - j0, taskMs.get() - t0, tasks.get() - k0)
     }
     force("pricing_summary")

@@ -1,0 +1,71 @@
+package graft
+
+import graft.operators.Similarity
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Job budgets of the codebook trainers, counted by a SparkListener.
+  * Training runs on the driver over one fetch of the corpus, so a
+  * fresh `ivfPqIndex` is the key aggregate (2 jobs under AQE), the
+  * training fetch and the index scratch; a registry hit is the key
+  * aggregate alone; the training-contract queries are one seed job
+  * plus one job per iteration. A Lloyd round that goes back to being a
+  * Spark aggregation breaks these. */
+class TrainerJobBudgetSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        n.incrementAndGet()
+        ()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      ListenerBusDrain(sc)
+      (a, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** A 300×64 corpus in 3 materialized partitions (the materializing
+    * job runs before any count starts). */
+  private def corpus(seed: Long): DataFrame = {
+    val rnd = new java.util.Random(seed)
+    val df = (0 until 300).map(i =>
+      (i.toLong, Array.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").repartition(3).localCheckpoint(true)
+    df.count()
+    df
+  }
+
+  test("ivfPqIndex: a fresh corpus in <= 4 jobs, a registry hit in <= 2") {
+    Similarity.clearModelCachesForTest()
+    val emb = corpus(11)
+    for (residual <- Seq(false, true)) {
+      val (fresh, nFresh) =
+        jobsOf(Similarity.ivfPqIndex(emb, 9, residual = residual))
+      assert(fresh._1.nonEmpty && fresh._2.nonEmpty)
+      assert(nFresh <= 4, s"fresh build (residual = $residual) ran $nFresh jobs")
+      val (_, nHit) = jobsOf(Similarity.ivfPqIndex(emb, 9, residual = residual))
+      assert(nHit <= 2, s"registry hit (residual = $residual) ran $nHit jobs")
+    }
+  }
+
+  test("training-stats queries run <= iters + 1 jobs") {
+    val emb = corpus(12)
+    val (km, nKm) = jobsOf(Similarity.kmeansTrainStats(emb, 8, iters = 3))
+    assert(km.count() === 3)
+    assert(nKm <= 4, s"kmeansTrainStats(iters = 3) ran $nKm jobs")
+    val (pq, nPq) = jobsOf(Similarity.pqTrainStats(emb))
+    assert(pq.count() === Similarity.PqIters)
+    assert(nPq <= Similarity.PqIters + 1, s"pqTrainStats ran $nPq jobs")
+  }
+}
