@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * bitmaps turn exact pairwise Jaccard from a postings self-join — join
   * volume Σ_f df_f², catastrophic on dense features — into popcount(A&B)
   * per candidate pair: a few dozen fused ALU ops inside whole-stage
-  * codegen. See Dedup.jaccardPairsBitmap for the operator built on this.
+  * codegen. See the bitmap pair scan of Dedup.overlapPairs for the operator
+  * built on this.
   */
 object BitmapExpressions {
 

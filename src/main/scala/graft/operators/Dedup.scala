@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * hash, exact n-gram Jaccard, MinHash+LSH, SimHash, and embedding-cosine
   * near-dup.
   *
-  * Scale stance (100 TB): the exact pairwise operators (`jaccardPairs`,
-  * `embeddingNearDupPairs`) are the *verification* tier — quadratic in
-  * candidates, so they run AFTER a candidate generator bounds the pair
-  * space. The generators are the LSH tiers (`minhashLshPairs`,
+  * Scale stance (100 TB): the exact pairwise operators (the
+  * exact-overlap core `overlapPairs` behind `jaccardPairsAuto`/
+  * `containmentPairsAuto`, and `embeddingNearDupPairs`) are the
+  * *verification* tier — quadratic in candidates, so they run AFTER a
+  * candidate generator bounds the pair space. The generators are the LSH tiers (`minhashLshPairs`,
   * `simhashPairs`): shuffle cost is O(rows × bands), candidates only
   * within equal-signature buckets, no cross join anywhere. Exact dedup is
   * one hash-partitioned aggregation on a 128-bit key.
@@ -208,131 +209,215 @@ object Dedup {
       exactGroups(docs).select(col("keep_doc_id").as("doc_id")),
       Seq("doc_id"), "left_semi")
 
-  /** Per-doc distinct word-bigram sets, exploded to a posting list.
-    * Features are carried as 64-bit hashes, not strings — the posting
-    * join shuffles tens of millions of rows at sf0.1 and fixed-width
-    * keys roughly halve the shuffle bytes (collision odds over ~10^3
+  /** Distinct word bigrams of `text` — the feature set of every exact
+    * overlap tier. Docs under 2 tokens have none, so they never pair. */
+  private def bigrams(text: Column): Column =
+    array_distinct(wordNgrams(tokenize(text), 2))
+
+  /** Per-doc hashed-bigram feature array: the candidate verifier's
+    * per-doc payload, shared with the streaming ingest verify. Features
+    * are carried as 64-bit hashes, not strings — the posting join
+    * shuffles tens of millions of rows at sf0.1 and fixed-width keys
+    * roughly halve the shuffle bytes (collision odds over ~10^3
     * distinct bigrams are ~10^-13, far below any oracle tolerance). */
+  private[graft] def bigramFeatures(text: Column): Column =
+    transform(bigrams(text), f => xxhash64(f))
+
+  /** The same features exploded to a (doc_id, feat) posting list; the
+    * hash runs after the explode, codegen'd, not in a lambda. */
   private def bigramPostings(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-        explode(array_distinct(wordNgrams(tokenize(col("text")), 2)))
-          .as("feat_s"))
+    docs.select(col("doc_id"), explode(bigrams(col("text"))).as("feat_s"))
       .select(col("doc_id"), xxhash64(col("feat_s")).as("feat"))
 
-  /** Exact n-gram (word-bigram) Jaccard similarity pairs ≥ tau.
-    * Postings-list self-join: |A∩B| from the join, |A∪B| = |A|+|B|−|A∩B|.
-    * Join volume is Σ_f df_f² over feature doc-frequencies.
+  /** Exact-rational threshold compare shared by every pair-pass bound.
     *
-    * Two exact implementations ship, selected per corpus statistics by
-    * `jaccardPairsAuto`: this postings join (sparse vocab → short posting
-    * lists) and `jaccardPairsBitmap` (dense small vocab, where posting
-    * lists are all long and the join volume explodes — this synthetic
-    * corpus' 961-bigram vocab is exactly that case). The LSH
-    * tier (minhashLshPairs) is the 100 TB candidate generator either
-    * way; the exact tiers verify candidates. */
-  def jaccardPairs(docs: DataFrame, tau: Double): DataFrame =
-    jaccardPairsFromPostings(bigramPostings(docs), tau)
-
-  /** Exact-rational candidate bound shared by the prefix/bitmap tiers
-    * (the prefix tier is [[containmentPairsPrefix]]).
-    *
-    * Every exact tier's EMIT filter accepts `round(ratio, 6) >= tau`,
-    * i.e. the exact rational ratio ≥ tau − 5e-7 (half-up at 6 dp). A
-    * candidate-tier prefilter that compares the exact rational against
-    * tau itself is therefore STRICTER than the emit filter: a pair
-    * within 5e-7 below tau would be emitted by the unfiltered postings
-    * tier but pruned by prefix/bitmap — unreachable at test scale
-    * (bigram counts are far too small for a ratio to land in that
-    * band) but a latent tier-equality divergence at production feature
-    * counts (ADVICE r10). All prefilter bounds therefore compare the
-    * SAME rational boundary in int64: n·2e6 ≥ (2·τµ − 1)·size with
-    * τµ = round(tau·1e6) — exact while (2τµ−1)·size < 2^63, i.e. any
+    * Every emit filter accepts `round(ratio, 6) >= tau`, i.e. the exact
+    * rational ratio ≥ tau − 5e-7 (half-up at 6 dp). A pass bound that
+    * compared the exact rational against tau itself would be STRICTER
+    * than the emit filter: a pair within 5e-7 below tau would be emitted
+    * by the postings tier but pruned by the bitmap tier — unreachable at
+    * test scale but a latent tier-equality divergence at production
+    * feature counts (ADVICE r10). So the bounds compare the SAME
+    * rational boundary in int64: num·2e6 ≥ (2·τµ − 1)·den with
+    * τµ = round(tau·1e6) — exact while (2τµ−1)·den < 2^63, i.e. any
     * realistic per-doc feature count. */
-  private def tauNum(tau: Double): Long = 2L * math.round(tau * 1e6) - 1
-  private val TauDen = 2000000L
+  private def atLeastTau(num: Column, den: Column, tau: Double): Column =
+    num * lit(2000000L) >= lit(2L * math.round(tau * 1e6) - 1) * den
 
-  /** Least overlap n with n/size ≥ tau − 5e-7, as an int64 Column
-    * (ceil division; the numerator stays < 2^53 for set sizes < 4e9,
-    * so the double division floor is exact). */
-  private def requiredOverlap(tau: Double, size: Column): Column =
-    floor((lit(tauNum(tau)) * size + lit(TauDen - 1)) / lit(TauDen))
-      .cast("long")
+  /** A ratio rounded to 6 dp — the one rounding every exact tier emits. */
+  private def ratio(n: Column, den: Column): Column =
+    round(n.cast("double") / den, 6)
 
-  private def jaccardPairsFromPostings(posts: DataFrame, tau: Double): DataFrame = {
-    val sizes = posts.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
-    val inter = posts.as("a")
-      .join(posts.as("b"),
-        col("a.feat") === col("b.feat") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    finishJaccard(inter, sizes, tau)
+  /** The measure of the exact-overlap join core: everything that differs
+    * between Jaccard and containment. Both score the same unordered pair
+    * rows (id_a, id_b, sa, sb, n_inter) — set sizes and |A∩B| — and
+    * only the denominator differs, the set-similarity-join shape of
+    * *MapReduce Algorithms for Big Data Analysis* (VLDB 2012). */
+  private[graft] sealed trait Overlap {
+    /** Output columns: two ids, then the rounded ratio. */
+    def columns: Seq[String]
+
+    /** Int64 bound a pair must pass inside the bitmap join condition; it
+      * is never stricter than [[emit]]'s filter (see [[atLeastTau]]). */
+    def passes(tau: Double, sa: Column, sb: Column, n: Column): Column
+
+    /** Scored pair rows → output rows with ratio ≥ tau. */
+    def emit(pairs: DataFrame, tau: Double): DataFrame
+
+    /** The result on a featureless corpus. */
+    def empty(spark: SparkSession): DataFrame =
+      spark.range(0).select(col("id").as(columns(0)), col("id").as(columns(1)),
+        col("id").cast("double").as(columns(2)))
   }
 
-  /** Exact Jaccard pairs via per-doc feature *bitmaps* — the dense-
-    * vocabulary fast path (identical output to `jaccardPairs`, asserted
-    * in DedupSpec).
+  /** J(A,B) = |A∩B| / |A∪B|, one row per unordered pair (id_a < id_b). */
+  private[graft] case object Jaccard extends Overlap {
+    val columns = Seq("id_a", "id_b", "jaccard")
+
+    /** J ≤ min/max, so the cheap size-ratio test runs ahead of the
+      * overlap test (And short-circuits before the popcount). */
+    def passes(tau: Double, sa: Column, sb: Column, n: Column): Column =
+      atLeastTau(least(sa, sb), greatest(sa, sb), tau) &&
+        atLeastTau(n, sa + sb - n, tau)
+
+    def emit(pairs: DataFrame, tau: Double): DataFrame =
+      pairs
+        .withColumn("jaccard",
+          ratio(col("n_inter"), col("sa") + col("sb") - col("n_inter")))
+        .filter(col("jaccard") >= tau)
+        .select(columns.map(col): _*)
+  }
+
+  /** Asymmetric containment C(A→B) = |A∩B| / |A|, one row per passing
+    * direction (contained_id, container_id) — the quote/subset detector
+    * that symmetric Jaccard structurally misses: a short document wholly
+    * embedded in a much larger one has J ≈ |A|/|B| but containment 1.0.
+    * The unordered pair join runs ONCE and each pair fans out into its
+    * two directional tests via a 2-element explode — never a doubled
+    * join. Exact dups emit both directions at 1.0. */
+  private[graft] case object Containment extends Overlap {
+    val columns = Seq("contained_id", "container_id", "containment")
+
+    /** Some direction passes iff n ≥ tau·min(|A|,|B|); there is no
+      * size-ratio test (a tiny doc inside a huge one is the target). */
+    def passes(tau: Double, sa: Column, sb: Column, n: Column): Column =
+      atLeastTau(n, least(sa, sb), tau)
+
+    def emit(pairs: DataFrame, tau: Double): DataFrame = {
+      def direction(from: String, to: String, size: String) =
+        struct(col(from).as(columns(0)), col(to).as(columns(1)),
+          ratio(col("n_inter"), col(size)).as(columns(2)))
+      pairs
+        .select(explode(array(direction("id_a", "id_b", "sa"),
+          direction("id_b", "id_a", "sb"))).as("d"))
+        .select(columns.map(c => col(s"d.$c")): _*)
+        .filter(col(columns(2)) >= tau)
+    }
+  }
+
+  /** The all-pairs producer of [[overlapPairs]]; specs force one. */
+  private[graft] sealed trait Tier
+  private[graft] case object Auto extends Tier
+  private[graft] case object Postings extends Tier
+  private[graft] case object Bitmap extends Tier
+
+  /** Exact n-gram (word-bigram) Jaccard similarity pairs ≥ tau
+    * ([[overlapPairs]] under [[Jaccard]]). */
+  def jaccardPairsAuto(docs: DataFrame, tau: Double): DataFrame =
+    overlapPairs(docs, Jaccard, tau)
+
+  /** Asymmetric containment pairs (contained, container) with
+    * C ≥ tau ([[overlapPairs]] under [[Containment]]). */
+  def containmentPairsAuto(docs: DataFrame, tau: Double): DataFrame =
+    overlapPairs(docs, Containment, tau)
+
+  /** Exact bigram-Jaccard verification of an EXPLICIT candidate pair set
+    * ([[verifyPairs]] under [[Jaccard]]). */
+  def jaccardVerifyPairs(docs: DataFrame, cand: DataFrame,
+                         tau: Double): DataFrame =
+    verifyPairs(docs, cand, Jaccard, tau)
+
+  /** The exact-overlap join core: all pairs of `docs` whose bigram
+    * overlap ratio under `m` is ≥ tau. The core has three producers,
+    * each yielding scored pairs (id_a, id_b, sa, sb, n_inter) for the
+    * measure to emit; this method runs one of the two all-pairs ones:
     *
-    * When the bigram vocabulary is small relative to the corpus (the
-    * postings join's worst case: every posting list is long, join volume
-    * Σ_f df_f² explodes — 286 s at sf0.1 on this synthetic corpus), each
-    * doc's feature set packs into ⌈vocab/64⌉ longs. |A∩B| then is
-    * popcount(A&B) — a codegen'd loop over a few dozen words per pair
-    * (BitmapExpressions.BitmapAndCount) under a broadcast pair join. The
-    * bitmap side is vocab/8 bytes per doc, so the broadcast stays small
-    * exactly when this path is selected.
+    * | measure | producer | work | selected when |
+    * |---------|----------|------|---------------|
+    * | Jaccard, Containment | postings self-join | Σ_f df_f² join rows | every corpus the bitmap rule rejects |
+    * | Jaccard, Containment | bitmap pair scan | n²/2 popcounts, broadcast | vocab ≤ [[BitmapVocabLimit]] (4096) and the bitmaps fit the broadcast cap |
+    * | Jaccard ([[jaccardVerifyPairs]]), Containment (specs) | candidate verifier ([[verifyPairs]]) | O(\|cand\| · set size) | the caller holds candidate pairs (LSH, winnowing) |
     *
-    * One driver-side `count()` sizes the dictionary — an adaptive plan
-    * choice, not a data collect. */
-  def jaccardPairsBitmap(docs: DataFrame, tau: Double): DataFrame = {
+    * Dense small vocabularies — this synthetic corpus' 961 bigrams — make
+    * every posting list long, so the self-join's Σ df² explodes (286 s vs
+    * the bitmap's seconds at sf0.1); sparse/Zipfian vocabularies keep the
+    * posting lists short. The all-pairs tiers are the verification
+    * tier: at 100 TB they run after a candidate generator bounds the
+    * pair space.
+    *
+    * The postings are checkpointed once: they feed the ONE plan-choice
+    * aggregation (vocabulary size and doc count — scalar stats, not a
+    * data collect) and 2-3 branches of the chosen pair plan, which would
+    * otherwise each re-tokenize the corpus. */
+  private[graft] def overlapPairs(docs: DataFrame, m: Overlap, tau: Double,
+                                  tier: Tier = Auto): DataFrame = {
     val posts = bigramPostings(docs).localCheckpoint(true)
     val (vocab, nDocs) = postingStats(posts)
-    if (vocab == 0) emptyPairs(docs.sparkSession, "jaccard")
-    else if (!bitmapBroadcastFits(vocab, nDocs)) jaccardPairsFromPostings(posts, tau)
-    else jaccardPairsBitmapFrom(posts, vocab.toInt, tau)
+    val bitmap = tier == Bitmap || tier == Auto &&
+      vocab <= BitmapVocabLimit && bitmapBroadcastFits(vocab, nDocs)
+    if (vocab == 0) m.empty(docs.sparkSession)
+    else if (bitmap) m.emit(bitmapPairs(posts, vocab.toInt, m, tau), tau)
+    else m.emit(postingsPairs(posts), tau)
   }
 
+  private val BitmapVocabLimit = 4096
+
   /** One aggregation job for both plan-choice statistics (vocabulary size
-    * and posting-bearing doc count) — scalar stats, not a data collect. */
+    * and posting-bearing doc count). */
   private def postingStats(posts: DataFrame): (Long, Long) = {
     val r = posts.agg(count_distinct(col("feat")),
       count_distinct(col("doc_id"))).head()
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Degenerate-corpus result: no bigram features → no candidate pairs. */
-  private def emptyPairs(spark: SparkSession, simCol: String): DataFrame =
-    spark.range(0).select(col("id").as("id_a"), col("id").as("id_b"),
-      col("id").cast("double").as(simCol))
-
-  /** The bitmap pair join broadcasts every doc's bitmap: that only fits
-    * when nDocs × vocab/8 is genuinely small — which is exactly when the
-    * dense-vocab path gets selected. Callers on a corpus that exceeds the
-    * cap fall back to the shuffle-based postings join instead of OOMing
-    * the driver (these exact tiers are meant to run on LSH-bounded
-    * candidate sets anyway — see the scale stance above). */
+  /** The bitmap pair scan broadcasts every doc's bitmap: that only fits
+    * when nDocs × vocab/8 is genuinely small. A corpus over the cap takes
+    * the shuffle-based postings join instead of running out of heap. */
   private val MaxBroadcastBytes = 512L << 20
   private def bitmapBroadcastFits(vocab: Long, nDocs: Long): Boolean =
     nDocs * (((vocab + 63) / 64) * 8 + 48) <= MaxBroadcastBytes
 
-  /** Per-doc packed feature bitmaps (doc_id, set_size, bm) over a dense
-    * dictionary of `vocab` features — shared by the Jaccard and
-    * containment bitmap tiers. */
-  private def docBitmaps(posts: DataFrame, vocab: Int): DataFrame = {
+  /** Postings self-join producer: |A∩B| from the join on shared
+    * features, set sizes from one aggregation. */
+  private def postingsPairs(posts: DataFrame): DataFrame = {
+    val sizes = posts.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
+    posts.as("a")
+      .join(posts.as("b"),
+        col("a.feat") === col("b.feat") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .agg(count(lit(1)).as("n_inter"))
+      .join(sizes.select(col("doc_id").as("id_a"), col("set_size").as("sa")), "id_a")
+      .join(sizes.select(col("doc_id").as("id_b"), col("set_size").as("sb")), "id_b")
+  }
+
+  /** Bitmap pair-scan producer: each doc's feature set packs into
+    * ⌈vocab/64⌉ longs over a dense dictionary, and |A∩B| is
+    * popcount(A&B) — a codegen'd loop over a few dozen words per pair
+    * (BitmapExpressions.BitmapAndCount) under a broadcast pair join.
+    * The measure's bound goes INTO the join condition: the nested-loop
+    * join then only materializes output rows for passing pairs (a
+    * handful) instead of copying all O(n²) candidate rows downstream. */
+  private def bitmapPairs(posts: DataFrame, vocab: Int, m: Overlap,
+                          tau: Double): DataFrame = {
     val dict = posts.select("feat").distinct()
       .withColumn("fid",
         (row_number().over(Window.orderBy("feat")) - 1).cast("int"))
-    val nWords = (vocab + 63) / 64
-    posts.join(broadcast(dict), "feat")
+    val bitmaps = posts.join(broadcast(dict), "feat")
       .groupBy("doc_id").agg(collect_set(col("fid")).as("fids"))
       .select(col("doc_id"), size(col("fids")).as("set_size"),
         graft.functions.BitmapExpressions.bitmap_from_bits(
-          col("fids"), nWords).as("bm"))
-  }
-
-  private def jaccardPairsBitmapFrom(posts: DataFrame, vocab: Int,
-                                     tau: Double): DataFrame = {
-    val bitmaps = docBitmaps(posts, vocab)
+          col("fids"), (vocab + 63) / 64).as("bm"))
     // the probe side must stay spread across cores: rows are few but each
     // drives |corpus| comparisons, and AQE would coalesce the tiny
     // aggregation output to one partition, serializing the whole pair scan
@@ -341,254 +426,69 @@ object Dedup {
       col("set_size").as("sa"), col("bm").as("ba"))
     val b = bitmaps.select(col("doc_id").as("id_b"),
       col("set_size").as("sb"), col("bm").as("bb"))
-    // The threshold goes INTO the join condition: the nested-loop join
-    // then only materializes output rows for passing pairs (a handful)
-    // instead of copying all O(n²) candidate rows downstream — the
-    // popcount runs twice per surviving pair, which is nothing next to
-    // 12M UnsafeRow materializations it avoids.
-    val nInter = graft.functions.BitmapExpressions.bitmap_and_count(
+    val n = graft.functions.BitmapExpressions.bitmap_and_count(
       col("ba"), col("bb"))
-    val jac = round(nInter.cast("double") /
-      (col("sa") + col("sb") - nInter), 6)
-    // cheap sound prefilter ahead of the popcount: J ≤ min/max, so
-    // acceptance (J ≥ τ − 5e-7 after 6-dp rounding) requires
-    // min·2e6 ≥ (2τµ−1)·max — the exact-rational boundary in int64,
-    // matching the emit filter (see requiredOverlap's scaladoc)
-    val sizeOk =
-      least(col("sa"), col("sb")) * lit(TauDen) >=
-        lit(tauNum(tau)) * greatest(col("sa"), col("sb"))
-    a.join(broadcast(b), col("id_a") < col("id_b") && sizeOk && jac >= tau)
-      .select(col("id_a"), col("id_b"), jac.as("jaccard"))
+    a.join(broadcast(b),
+        col("id_a") < col("id_b") && m.passes(tau, col("sa"), col("sb"), n))
+      .select(col("id_a"), col("id_b"), col("sa"), col("sb"),
+        n.as("n_inter"))
   }
 
-  /** Pick the exact-Jaccard implementation from corpus statistics: dense
-    * small vocabulary → bitmap path; sparse/Zipfian vocabulary → postings
-    * join (whose posting lists are then short). ONE aggregation job
-    * yields both plan-choice stats (vocab size, doc count) and they flow
-    * into the chosen path — the postings are not re-counted there. */
-  def jaccardPairsAuto(docs: DataFrame, tau: Double,
-                       vocabLimit: Int = 4096): DataFrame = {
-    // eager checkpoint: the postings feed the stats job AND 2-3 branches
-    // of the chosen pair plan (dict/bitmaps or sizes/self-join) — without
-    // it each branch re-tokenizes and re-shingles the corpus. Building
-    // the feature index once is also the right 100 TB shape: the exact
-    // tier runs on LSH-bounded candidates, so the index it checkpoints
-    // is candidate-sized, not corpus-sized.
-    val posts = bigramPostings(docs).localCheckpoint(true)
-    val (vocab, nDocs) = postingStats(posts)
-    if (vocab == 0) emptyPairs(docs.sparkSession, "jaccard")
-    else if (vocab <= vocabLimit && bitmapBroadcastFits(vocab, nDocs))
-      jaccardPairsBitmapFrom(posts, vocab.toInt, tau)
-    else jaccardPairsFromPostings(posts, tau)
-  }
-
-  /** Asymmetric CONTAINMENT near-dup pairs: (contained, container) with
-    * C(A→B) = |F(A) ∩ F(B)| / |F(A)| ≥ tau — the quote/subset detector
-    * that symmetric Jaccard structurally misses: a short document
-    * wholly embedded in a much larger one has J ≈ |A|/|B| (arbitrarily
-    * small) but containment 1.0. Corpus practice uses this to strip
-    * wholesale-quoted articles and nested boilerplate that
-    * document-level Jaccard dedup leaves behind.
-    *
-    * Same hashed-bigram feature space and postings self-join as
-    * [[jaccardPairs]] (join volume Σ df² — identical bound; one
-    * featurization pass); the asymmetry is only in the denominator, so
-    * the unordered pair join (`<`) runs ONCE and each pair then fans
-    * out into its two directional tests via a 2-element explode —
-    * never a doubled join. Exact dups emit both directions at 1.0.
-    * Featureless docs (< 2 tokens) never enter the postings, so the
-    * denominator is always ≥ 1.
-    *
-    * Three exact implementations ship behind [[containmentPairsAuto]]:
-    * this postings self-join (sparse vocab),
-    * [[containmentPairsPrefix]] (Zipfian vocab), and a bitmap tier
-    * (dense small vocab — where this join's Σ df² volume explodes,
-    * 17 s vs 1.5 s at sf0.1 on the synthetic corpus). */
-  def containmentPairs(docs: DataFrame, tau: Double): DataFrame = {
-    // two consumers of the postings (sizes, self-join) — materialize once
-    val posts = bigramPostings(docs).localCheckpoint(true)
-    containmentFromPostings(posts, tau)
-  }
-
-  private def containmentFromPostings(posts: DataFrame,
-                                      tau: Double): DataFrame = {
-    val sizes = posts.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
-    val inter = posts.as("a")
-      .join(posts.as("b"),
-        col("a.feat") === col("b.feat") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    finishContainment(inter, sizes, tau)
-  }
-
-  /** Prefix-filtered exact containment (identical output to
-    * [[containmentPairs]] — asserted in DedupSpec).
-    *
-    * An unordered pair can pass SOME direction iff
-    * |A∩B| ≥ ⌈tau·min(|A|,|B|)⌉ (the larger directional ratio is
-    * n/min). For the smaller side X that means overlap ≥ ⌈tau·|X|⌉, so
-    * under a global feature order X's first |X| − ⌈tau·|X|⌉ + 1
-    * features must hit the OTHER doc's full set. Unlike AllPairs
-    * Jaccard prefix filtering, prefix-vs-prefix is NOT sound here — the larger side's
-    * required overlap (⌈tau·min⌉) is below its own ⌈tau·|X|⌉ prefix
-    * guarantee — so candidates come from a prefix-vs-FULL-postings
-    * join: Σ_f df_prefix(f)·df(f), and with the order ascending in
-    * document frequency the prefix features are precisely the rare
-    * ones, keeping that product small on Zipfian vocabularies. */
-  def containmentPairsPrefix(docs: DataFrame, tau: Double): DataFrame = {
-    val posts = bigramPostings(docs).localCheckpoint(true)
-    containmentPrefixFrom(posts, tau)
-  }
-
-  private def containmentPrefixFrom(posts: DataFrame,
-                                    tau: Double): DataFrame = {
-    val sizes = posts.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
-    val dfreq = posts.groupBy("feat").agg(count(lit(1)).as("df"))
-    val rankW = Window.partitionBy("doc_id").orderBy("df", "feat")
-    val prefix = posts.join(dfreq, "feat")
-      .join(sizes, "doc_id")
-      .withColumn("pos", row_number().over(rankW))
-      // prefix length from the emit-boundary overlap bound (n such that
-      // n/|X| ≥ tau − 5e-7), not ⌈tau·|X|⌉ — see [[requiredOverlap]]
-      .filter(col("pos") <=
-        col("set_size") - requiredOverlap(tau, col("set_size")) + 1)
-      .select("doc_id", "feat")
-    // both orientations run in ONE join (either endpoint may be the
-    // smaller side); least/greatest normalizes to unordered pairs
-    val cand = prefix.as("a")
-      .join(posts.as("b"),
-        col("a.feat") === col("b.feat") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
-      .distinct()
-    val pa = posts.select(col("doc_id").as("id_a"), col("feat"))
-    val pb = posts.select(col("doc_id").as("id_b"), col("feat"))
-    val inter = cand.join(pa, "id_a").join(pb, Seq("id_b", "feat"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_inter"))
-    finishContainment(inter, sizes, tau)
-  }
-
-  /** Pick the exact-containment implementation from the same corpus
-    * statistics (and with the same one-aggregation plan-choice job) as
-    * [[jaccardPairsAuto]]: dense small vocabulary → bitmap pair scan;
-    * sparse/Zipfian → prefix-filtered postings join. */
-  def containmentPairsAuto(docs: DataFrame, tau: Double,
-                           vocabLimit: Int = 4096): DataFrame = {
-    val posts = bigramPostings(docs).localCheckpoint(true)
-    val (vocab, nDocs) = postingStats(posts)
-    if (vocab == 0) emptyContainmentPairs(docs.sparkSession)
-    else if (vocab <= vocabLimit && bitmapBroadcastFits(vocab, nDocs))
-      containmentPairsBitmapFrom(posts, vocab.toInt, tau)
-    else containmentPrefixFrom(posts, tau)
-  }
-
-  private def emptyContainmentPairs(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").as("contained_id"),
-      col("id").as("container_id"),
-      col("id").cast("double").as("containment"))
-
-  /** Bitmap pair-scan containment — the dense-vocab fast path, same
-    * packed-bitmap machinery as the Jaccard tier ([[docBitmaps]]). The
-    * pass-some-direction bound n_inter ≥ tau·min(|A|,|B|) goes INTO the
-    * broadcast join condition so only surviving pairs materialize;
-    * containment has no size-ratio prefilter (a tiny doc inside a huge
-    * one is exactly the target), so the popcount IS the filter. */
-  private def containmentPairsBitmapFrom(posts: DataFrame, vocab: Int,
-                                         tau: Double): DataFrame = {
-    val bitmaps = docBitmaps(posts, vocab)
-    // keep the probe side spread across cores (see the Jaccard tier)
-    val par = posts.sparkSession.sparkContext.defaultParallelism
-    val a = bitmaps.repartition(par).select(col("doc_id").as("id_a"),
-      col("set_size").as("sa"), col("bm").as("ba"))
-    val b = bitmaps.select(col("doc_id").as("id_b"),
-      col("set_size").as("sb"), col("bm").as("bb"))
-    val nInter = graft.functions.BitmapExpressions.bitmap_and_count(
-      col("ba"), col("bb"))
-    // pass-some-direction at the emit boundary (ratio ≥ tau − 5e-7),
-    // exact-rational int64 compare — see requiredOverlap's scaladoc
-    val passes =
-      nInter * lit(TauDen) >= lit(tauNum(tau)) * least(col("sa"), col("sb"))
-    explodeContainmentDirections(
-      a.join(broadcast(b), col("id_a") < col("id_b") && passes)
-        .select(col("id_a"), col("id_b"), col("sa"), col("sb"),
-          nInter.as("n_inter")),
-      tau)
-  }
-
-  private def finishContainment(inter: DataFrame, sizes: DataFrame,
-                                tau: Double): DataFrame =
-    explodeContainmentDirections(
-      inter
-        .join(sizes.select(col("doc_id").as("id_a"),
-          col("set_size").as("sa")), "id_a")
-        .join(sizes.select(col("doc_id").as("id_b"),
-          col("set_size").as("sb")), "id_b"),
-      tau)
-
-  /** Fan each unordered (id_a, id_b, sa, sb, n_inter) pair out into its
-    * two directional containment tests — the single place the asymmetry
-    * enters, shared by every exact tier. */
-  private def explodeContainmentDirections(pairs: DataFrame,
-                                           tau: Double): DataFrame =
-    pairs
-      .select(explode(array(
-        struct(col("id_a").as("contained_id"), col("id_b").as("container_id"),
-          round(col("n_inter").cast("double") / col("sa"), 6)
-            .as("containment")),
-        struct(col("id_b").as("contained_id"), col("id_a").as("container_id"),
-          round(col("n_inter").cast("double") / col("sb"), 6)
-            .as("containment")))).as("d"))
-      .select("d.contained_id", "d.container_id", "d.containment")
-      .filter(col("containment") >= tau)
-
-  /** Candidate-bounded containment verification — the 100 TB
-    * production tier of [[containmentPairs]], exactly as
-    * [[jaccardVerifyPairs]] is for the symmetric tier: evaluate the
-    * two directional containment ratios for EXPLICIT candidate pairs
-    * only (per-doc hashed-bigram arrays joined onto the pair list,
-    * codegen'd array_intersect), so work is O(|cand|·set size) with no
-    * Σ df² postings self-join. Any candidate tier feeds it — MinHash
-    * LSH at a low estimate threshold over-generates symmetric
-    * candidates cheaply (a contained doc's J against its container is
-    * ≥ |A|/|B|, so banding at estTau ≈ 0.3-0.4 recalls moderate size
-    * ratios; extreme ratios at corpus scale use prefix-postings of the
-    * SMALL side only). Emits the same (contained, container,
-    * containment) rows the all-pairs tier would for those pairs
-    * (asserted in DedupSpec). */
-  def containmentVerifyPairs(docs: DataFrame, cand: DataFrame,
-                             tau: Double): DataFrame = {
+  /** Candidate-verifier producer: the measure's rows for an EXPLICIT
+    * candidate pair set (id_a, id_b) — the 100 TB production tier. Per-doc
+    * feature arrays join onto the pairs (two doc_id hash joins) and
+    * |A∩B| is a codegen'd `array_intersect`, so work is
+    * O(|cand| · set size) with NO postings self-join: the Σ df² term that
+    * makes the all-pairs tiers grow super-linearly on clustered corpora
+    * never appears. Same features and ratio as [[overlapPairs]], so for
+    * any candidate pair the emitted row is identical. */
+  private[graft] def verifyPairs(docs: DataFrame, cand: DataFrame,
+                                 m: Overlap, tau: Double): DataFrame = {
+    // the candidate tier (typically a corpus-wide LSH bucket join) is
+    // the expensive input — checkpoint the 2-column pair list once so
+    // the semi-join below AND the returned join plan both read the
+    // materialized rows instead of re-running LSH per consumer.
+    // localCheckpoint, NOT Checkpoints.materialize: these are
+    // transient intra-query materializations the returned plan reads
+    // (no caller could ever dropRound them), so a reliable round here
+    // would be an unreclaimable DFS file per invocation — and the
+    // iteration-resume durability argument doesn't apply to a
+    // single-query scratch frame
     val pairs = cand.select("id_a", "id_b").localCheckpoint(true)
+    // featurize ONLY the docs the candidate tier implicated (at corpus
+    // scale candidates touch a small fraction of docs — without the
+    // semi-join the tokenize scan still runs corpus-wide), and
+    // materialize once: the two join branches below would otherwise
+    // re-expand the featurization subtree twice
     val candDocs = docs.join(
       pairs.select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
         .distinct(),
       Seq("doc_id"), "left_semi")
     val feats = candDocs.select(col("doc_id"),
-      transform(array_distinct(wordNgrams(tokenize(col("text")), 2)),
-        f => xxhash64(f)).as("fs")).localCheckpoint(true)
-    pairs
+      bigramFeatures(col("text")).as("fs")).localCheckpoint(true)
+    scoreFeaturePairs(pairs
       .join(feats.select(col("doc_id").as("id_a"), col("fs").as("fa")), "id_a")
-      .join(feats.select(col("doc_id").as("id_b"), col("fs").as("fb")), "id_b")
-      .withColumn("n_inter", size(array_intersect(col("fa"), col("fb"))))
-      .filter(size(col("fa")) > 0 && size(col("fb")) > 0)
-      .select(explode(array(
-        struct(col("id_a").as("contained_id"), col("id_b").as("container_id"),
-          round(col("n_inter").cast("double") / size(col("fa")), 6)
-            .as("containment")),
-        struct(col("id_b").as("contained_id"), col("id_a").as("container_id"),
-          round(col("n_inter").cast("double") / size(col("fb")), 6)
-            .as("containment")))).as("d"))
-      .select("d.contained_id", "d.container_id", "d.containment")
-      .filter(col("containment") >= tau)
+      .join(feats.select(col("doc_id").as("id_b"), col("fs").as("fb")), "id_b"),
+      m, tau)
   }
+
+  /** Per-pair scoring of (id_a, id_b, fa, fb) rows carrying both docs'
+    * [[bigramFeatures]] arrays. A pair with a featureless side drops
+    * first: the postings tiers never materialize it, and ANSI mode makes
+    * its 0/0 an error rather than a NULL. */
+  private[graft] def scoreFeaturePairs(pairs: DataFrame, m: Overlap,
+                                       tau: Double): DataFrame =
+    m.emit(pairs
+      .filter(size(col("fa")) > 0 && size(col("fb")) > 0)
+      .select(col("id_a"), col("id_b"), size(col("fa")).as("sa"),
+        size(col("fb")).as("sb"),
+        size(array_intersect(col("fa"), col("fb"))).as("n_inter")), tau)
 
   /** documents ∪ the FIRST HALF (by characters) of doc_id < 20 as new
     * ids — the containment plant: a truncated copy is near-fully
     * contained in its original (its only novel bigram is the one that
     * may straddle the cut) while its symmetric Jaccard is only ~0.5,
-    * exactly the regime [[containmentPairs]] exists for. Oracle
+    * exactly the regime [[Containment]] exists for. Oracle
     * recomputes the same plant with substr/len (both engines count
     * characters). */
   def withContainedDups(docs: DataFrame): DataFrame = {
@@ -600,23 +500,38 @@ object Dedup {
           .as("text")))
   }
 
-  private def finishJaccard(inter: DataFrame, sizes: DataFrame,
-                            tau: Double): DataFrame =
-    inter
-      .join(sizes.select(col("doc_id").as("id_a"), col("set_size").as("sa")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("set_size").as("sb")), "id_b")
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") /
-          (col("sa") + col("sb") - col("n_inter")), 6))
-      .filter(col("jaccard") >= tau)
-      .select("id_a", "id_b", "jaccard")
-
   /** MinHash signature: k min-hashes over 5-byte sliding-window shingles,
     * fused into one codegen'd expression (see MinHashTextSignature — the
     * composed transform/array_min/xxhash64 form is interpreted and was
     * ~20× slower at sf0.1). */
   def minhashSignature(text: Column, k: Int): Column =
     graft.functions.MinHashExpression.minhash_signature(text, 5, k)
+
+  /** Signature width, band count and estimate cut of the verified
+    * near-dup tiers ([[incrementalNearDup]] and the streaming ingest,
+    * whose settled answers must stay equal). At r = k/bands = 4 a
+    * J = 0.9 pair misses all 8 bands with probability ≈ 2e-4. */
+  private[graft] val LshK = 32
+  private[graft] val LshBands = 8
+  private[graft] val LshEstTau = 0.4
+
+  /** `df` with one row per band: `band` in [0, bands) and its
+    * `band_key`, the hash of that band's k/bands signature entries. */
+  private[graft] def withBandKeys(df: DataFrame, sig: String, k: Int,
+                                  bands: Int): DataFrame = {
+    require(k % bands == 0, "bands must divide k")
+    val r = k / bands
+    df.withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
+      .withColumn("band_key", xxhash64(col("band"),
+        slice(col(sig), col("band") * r + 1, lit(r))))
+  }
+
+  /** Jaccard estimate of two k-wide signatures: their agreeing-entry
+    * fraction, rounded to 6 dp (the native agree-count — the per-pair
+    * interpreted zip_with+filter was the last HOF in a pairwise path). */
+  private[graft] def minhashEstimate(sa: Column, sb: Column, k: Int): Column =
+    round(graft.functions.MinHashExpression.sig_agree_count(sa, sb)
+      .cast("double") / k, 6)
 
   /** Shared LSH banding tier for the self-join dedup path and the
     * asymmetric cross-split audit path.
@@ -635,18 +550,12 @@ object Dedup {
     * exchange. `extraCols` ride through both frames. */
   private def minhashKeyed(docs: DataFrame, k: Int, bands: Int,
                            extraCols: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
     val sigs = docs.select(col("doc_id") +:
         minhashSignature(col("text"), k).as("sig") +: extraCols.map(col): _*)
       .repartition(col("doc_id"))
     val spread = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val keys = sigs.select(Seq(col("doc_id"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"), col("sig")) ++
-        extraCols.map(col): _*)
-      .select(Seq(col("doc_id"), col("band"),
-        xxhash64(col("band"), expr(s"slice(sig, band * $r + 1, $r)"))
-          .as("band_key")) ++ extraCols.map(col): _*)
+    val keys = withBandKeys(sigs, "sig", k, bands)
+      .select(("doc_id" +: "band" +: "band_key" +: extraCols).map(col): _*)
       .repartition(spread, col("band"), col("band_key"))
     (sigs, keys)
   }
@@ -674,10 +583,7 @@ object Dedup {
         "test_id")
       .join(sigs.select(col("doc_id").as("train_id"), col("sig").as("sig_b")),
         "train_id")
-      .withColumn("est_jaccard",
-        round(graft.functions.MinHashExpression
-          .sig_agree_count(col("sig_a"), col("sig_b"))
-          .cast("double") / k, 6))
+      .withColumn("est_jaccard", minhashEstimate(col("sig_a"), col("sig_b"), k))
       .filter(col("est_jaccard") >= estTau)
       .select("test_id", "train_id", "est_jaccard")
   }
@@ -701,12 +607,7 @@ object Dedup {
     cand
       .join(sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      // native agree-count: the per-pair interpreted zip_with+filter was
-      // the last HOF in a pairwise path (runs once per LSH candidate)
-      .withColumn("est_jaccard",
-        round(graft.functions.MinHashExpression
-          .sig_agree_count(col("sig_a"), col("sig_b"))
-          .cast("double") / k, 6))
+      .withColumn("est_jaccard", minhashEstimate(col("sig_a"), col("sig_b"), k))
       .filter(col("est_jaccard") >= tau)
       .select("id_a", "id_b", "est_jaccard")
   }
@@ -1460,57 +1361,6 @@ object Dedup {
         "survivors_ok")
   }
 
-  /** Exact bigram-Jaccard verification of an EXPLICIT candidate pair
-    * set: per-doc distinct hashed-bigram feature arrays join onto the
-    * pairs (two doc_id hash joins), intersection size via codegen'd
-    * `array_intersect`. Work is O(|cand| · avg set size) — bounded by
-    * the candidate tier that produced `cand`, with NO postings
-    * self-join: the Σ df² term that makes the all-pairs tiers grow
-    * super-linearly on clustered corpora never appears. Same feature
-    * space, intersection count, and rounded formula as
-    * [[jaccardPairs]], so for any pair the emitted jaccard is
-    * identical. */
-  def jaccardVerifyPairs(docs: DataFrame, cand: DataFrame,
-                         tau: Double): DataFrame = {
-    // the candidate tier (typically a corpus-wide LSH bucket join) is
-    // the expensive input — checkpoint the 2-column pair list once so
-    // the semi-join below AND the returned join plan both read the
-    // materialized rows instead of re-running LSH per consumer.
-    // localCheckpoint, NOT Checkpoints.materialize: these are
-    // transient intra-query materializations the returned plan reads
-    // (no caller could ever dropRound them), so a reliable round here
-    // would be an unreclaimable DFS file per invocation — and the
-    // iteration-resume durability argument doesn't apply to a
-    // single-query scratch frame
-    val pairs = cand.select("id_a", "id_b").localCheckpoint(true)
-    // featurize ONLY the docs the candidate tier implicated (at corpus
-    // scale candidates touch a small fraction of docs — without the
-    // semi-join the tokenize scan still runs corpus-wide), and
-    // materialize once: the two join branches below would otherwise
-    // re-expand the featurization subtree twice
-    val candDocs = docs.join(
-      pairs.select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-        .distinct(),
-      Seq("doc_id"), "left_semi")
-    val feats = candDocs.select(col("doc_id"),
-      transform(array_distinct(wordNgrams(tokenize(col("text")), 2)),
-        f => xxhash64(f)).as("fs")).localCheckpoint(true)
-    pairs
-      .join(feats.select(col("doc_id").as("id_a"), col("fs").as("fa")), "id_a")
-      .join(feats.select(col("doc_id").as("id_b"), col("fs").as("fb")), "id_b")
-      .withColumn("n_inter", size(array_intersect(col("fa"), col("fb"))))
-      .withColumn("denom",
-        size(col("fa")) + size(col("fb")) - col("n_inter"))
-      // a candidate pair of two featureless docs ((<2 tokens each) has
-      // J undefined — the postings tiers never materialize it, and ANSI
-      // mode makes the 0/0 an error rather than a NULL, so drop first
-      .filter(col("denom") > 0)
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") / col("denom"), 6))
-      .filter(col("jaccard") >= tau)
-      .select("id_a", "id_b", "jaccard")
-  }
-
   /** Frequent-fingerprint cap for the winnowing candidate tier —
     * boilerplate fingerprints shared by more than this many docs are
     * dropped from candidate generation (they pair quadratically; the
@@ -1610,14 +1460,13 @@ object Dedup {
     * matching base id, jaccard = that pair's exact J); survivors are
     * `fresh anti-join this`. */
   def incrementalNearDup(base: DataFrame, fresh: DataFrame,
-                         tau: Double = IncrementalTau, k: Int = 32,
-                         bands: Int = 8,
-                         estTau: Double = 0.4): DataFrame = {
+                         tau: Double = IncrementalTau): DataFrame = {
     val flagged = base.select(col("doc_id"), col("text"))
       .withColumn("__fresh", lit(false))
       .unionByName(fresh.select(col("doc_id"), col("text"))
         .withColumn("__fresh", lit(true)))
-    val cand = minhashLshPairsAcross(flagged, "__fresh", k, bands, estTau)
+    val cand = minhashLshPairsAcross(flagged, "__fresh", LshK, LshBands,
+      LshEstTau)
       .select(col("test_id").as("id_a"), col("train_id").as("id_b"))
     val verified = jaccardVerifyPairs(flagged, cand, tau)
       .select(col("id_a").as("doc_id"), col("id_b").as("base_id"),

@@ -832,14 +832,14 @@ object Streaming {
     * .minhashLshPairsAcross]]), so the stream NEVER shuffles and needs
     * NO state store: like streamedQualityFilter, the static index IS
     * the state. Candidates pass the signature-agreement estimate and
-    * then the exact bigram-Jaccard verify (identical formula to
-    * [[graft.operators.Dedup.jaccardVerifyPairs]] — same feature
-    * space, same 6-dp rounding), all as stateless per-row math against
-    * the broadcast tables. The settled match set therefore EQUALS the
-    * batch [[graft.operators.Dedup.incrementalNearDup]] answer on the
-    * same replay — same candidates, same estimate cut, same exact J —
-    * which is what the oracle recomputes in SQL and StreamingSpec
-    * cross-checks against the batch operator.
+    * then the exact bigram-Jaccard verify (the batch verifier's own
+    * per-pair scoring, [[graft.operators.Dedup.scoreFeaturePairs]],
+    * over the same feature arrays), all as stateless per-row math
+    * against the broadcast tables. The settled match set therefore
+    * EQUALS the batch [[graft.operators.Dedup.incrementalNearDup]]
+    * answer on the same replay — same candidates, same estimate cut,
+    * same exact J — which is what the oracle recomputes in SQL and
+    * StreamingSpec cross-checks against the batch operator.
     *
     * At 100 TB the band index (ids + keys) broadcasts or bucket-joins;
     * the per-candidate verify payload (signatures + feature arrays)
@@ -879,44 +879,31 @@ object Streaming {
   private[graft] def nearDupIngestMatches(base: DataFrame,
                                           fresh0: DataFrame): DataFrame = {
     import graft.operators.{Checkpoints, Dedup}
-    import graft.functions.MinHashExpression.sig_agree_count
-    val k = 32; val bands = 8; val r = k / bands
-    val estTau = 0.4
+    val k = Dedup.LshK
     // base model tables, built once: signatures + distinct-bigram
     // feature arrays (the verify tier's payload), and the band index
     val baseSigs = Checkpoints.scratch(
       base.select(col("doc_id").as("base_id"),
         Dedup.minhashSignature(col("text"), k).as("sig_b"),
-        transform(array_distinct(wordNgrams(tokenize(col("text")), 2)),
-          f => xxhash64(f)).as("fb")))
-    val baseBandIdx = baseSigs
-      .select(col("base_id"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"), col("sig_b"))
-      .select(col("base_id"), col("band"),
-        xxhash64(col("band"), expr(s"slice(sig_b, band * $r + 1, $r)"))
-          .as("band_key"))
+        Dedup.bigramFeatures(col("text")).as("fb")))
+    val baseBandIdx = Dedup.withBandKeys(
+        baseSigs.select("base_id", "sig_b"), "sig_b", k, Dedup.LshBands)
+      .select("base_id", "band", "band_key")
     // signature, band keys and features are scan-fused on the fresh side
-    val fresh = fresh0
-      .withColumn("sig", Dedup.minhashSignature(col("text"), k))
-      .withColumn("fa",
-        transform(array_distinct(wordNgrams(tokenize(col("text")), 2)),
-          f => xxhash64(f)))
-      .withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("band_key",
-        xxhash64(col("band"), expr(s"slice(sig, band * $r + 1, $r)")))
-    fresh
+    val fresh = Dedup.withBandKeys(fresh0
+        .withColumn("sig", Dedup.minhashSignature(col("text"), k))
+        .withColumn("fa", Dedup.bigramFeatures(col("text"))),
+      "sig", k, Dedup.LshBands)
+    val cand = fresh
       .join(broadcast(baseBandIdx), Seq("band", "band_key"))
       .join(broadcast(baseSigs), Seq("base_id"))
-      .filter(round(sig_agree_count(col("sig"), col("sig_b"))
-        .cast("double") / k, 6) >= estTau)
-      .withColumn("n_inter", size(array_intersect(col("fa"), col("fb"))))
-      .withColumn("denom",
-        size(col("fa")) + size(col("fb")) - col("n_inter"))
-      .filter(col("denom") > 0)
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") / col("denom"), 6))
-      .filter(col("jaccard") >= Dedup.IncrementalTau)
-      .select(col("doc_id"), col("base_id"), col("jaccard"))
+      .filter(Dedup.minhashEstimate(col("sig"), col("sig_b"), k) >=
+        Dedup.LshEstTau)
+      .select(col("doc_id").as("id_a"), col("base_id").as("id_b"),
+        col("fa"), col("fb"))
+    Dedup.scoreFeaturePairs(cand, Dedup.Jaccard, Dedup.IncrementalTau)
+      .select(col("id_a").as("doc_id"), col("id_b").as("base_id"),
+        col("jaccard"))
   }
 
   /** Batch-side settle aggregation of [[streamedNearDupIngest]]: keep

@@ -13,6 +13,11 @@ class DedupSpec extends AnyFunSuite {
   private def docs = Tables.documents(spark, dir)
   private val planted: Set[(Long, Long)] =
     (0L until 20L).map(i => (i, i + Dedup.DupIdOffset)).toSet
+  /** The postings tier of the exact-overlap core — the reference every
+    * other tier is compared against. */
+  private def postings(corpus: org.apache.spark.sql.DataFrame,
+                       m: Dedup.Overlap, tau: Double) =
+    Dedup.overlapPairs(corpus, m, tau, Dedup.Postings)
 
   test("exact dedup removes planted exact copies, keeps originals") {
     val corpus = Dedup.withExactDups(docs)
@@ -24,7 +29,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("exact jaccard pairs recover the planted near-dups, with J >= 0.9") {
-    val rows = Dedup.jaccardPairs(Dedup.withNearDups(docs), 0.5)
+    val rows = postings(Dedup.withNearDups(docs), Dedup.Jaccard, 0.5)
       .as[(Long, Long, Double)].collect()
     val pairs = rows.map(r => (r._1, r._2)).toSet
     // the corpus itself contains genuine near-dups (e.g. 0/50/82 cluster),
@@ -35,7 +40,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("containment finds planted half-copies that Jaccard misses") {
     val corpus = Dedup.withContainedDups(docs)
-    val rows = Dedup.containmentPairs(corpus, 0.9)
+    val rows = postings(corpus, Dedup.Containment, 0.9)
       .as[(Long, Long, Double)].collect()
     // every planted half-doc is ≥0.9-contained in its original (its
     // only possible novel bigram straddles the cut), direction
@@ -45,7 +50,7 @@ class DedupSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"missing containments: ${missing.take(5)}")
     // the SYMMETRIC tier at the same tau misses the plants wholesale —
     // the regime this operator exists for (J of a half-copy ≈ 0.5)
-    val jac = Dedup.jaccardPairs(corpus, 0.9)
+    val jac = postings(corpus, Dedup.Jaccard, 0.9)
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2)).toSet
     assert(planted.intersect(jac).size < planted.size / 2,
@@ -55,16 +60,16 @@ class DedupSpec extends AnyFunSuite {
     assert(rows.forall(r => r._3 >= 0.9 && r._3 <= 1.0))
   }
 
-  test("containment prefix, bitmap, and auto tiers equal the all-pairs tier") {
+  test("containment bitmap and auto tiers equal the postings tier") {
     val corpus = Dedup.withContainedDups(docs)
     // tau low enough that organic partial overlaps join the plants, so
     // the equality is exercised beyond the easy containment-1.0 rows
-    val all = Dedup.containmentPairs(corpus, 0.6)
+    val all = postings(corpus, Dedup.Containment, 0.6)
       .as[(Long, Long, Double)].collect().toSet
     assert(all.nonEmpty)
-    val prefix = Dedup.containmentPairsPrefix(corpus, 0.6)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(prefix === all)
+    val bitmap = Dedup.overlapPairs(corpus, Dedup.Containment, 0.6,
+      Dedup.Bitmap).as[(Long, Long, Double)].collect().toSet
+    assert(bitmap === all)
     // this corpus' dense bigram vocab selects the bitmap tier
     val auto = Dedup.containmentPairsAuto(corpus, 0.6)
       .as[(Long, Long, Double)].collect().toSet
@@ -76,14 +81,14 @@ class DedupSpec extends AnyFunSuite {
 
   test("candidate-bounded containment equals the all-pairs tier on its pairs") {
     val corpus = Dedup.withContainedDups(docs)
-    val all = Dedup.containmentPairs(corpus, 0.9)
+    val all = postings(corpus, Dedup.Containment, 0.9)
       .as[(Long, Long, Double)].collect().toSet
     // feed the verifier exactly the unordered pairs the all-pairs tier
     // passed — it must reproduce the identical directional rows
     val cand = all.map { case (c, k, _) =>
       (math.min(c, k), math.max(c, k)) }.toSeq
       .toDF("id_a", "id_b").distinct()
-    val verified = Dedup.containmentVerifyPairs(corpus, cand, 0.9)
+    val verified = Dedup.verifyPairs(corpus, cand, Dedup.Containment, 0.9)
       .as[(Long, Long, Double)].collect().toSet
     assert(verified === all)
   }
@@ -138,16 +143,16 @@ class DedupSpec extends AnyFunSuite {
     } yield (ids(i), ids(j))).toDF("id_a", "id_b")
     val verified = Dedup.jaccardVerifyPairs(corpus, allPairs, 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    val naive = Dedup.jaccardPairs(corpus, 0.5)
+    val naive = postings(corpus, Dedup.Jaccard, 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(verified === naive)
   }
 
   test("bitmap jaccard equals the naive postings join exactly") {
     val corpus = Dedup.withNearDups(docs)
-    val naive = Dedup.jaccardPairs(corpus, 0.5)
+    val naive = postings(corpus, Dedup.Jaccard, 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    val bitmap = Dedup.jaccardPairsBitmap(corpus, 0.5)
+    val bitmap = Dedup.overlapPairs(corpus, Dedup.Jaccard, 0.5, Dedup.Bitmap)
       .as[(Long, Long, Double)].collect().toSet
     assert(bitmap === naive)
     // the auto selector must land on a correct implementation either way
@@ -653,7 +658,7 @@ class DedupSpec extends AnyFunSuite {
     assert(planted.subsetOf(pairs),
       s"guarantee violated: ${planted.diff(pairs).take(5)}")
     // verified pairs carry the exact postings-tier Jaccard
-    val exact = Dedup.jaccardPairs(corpus, 0.5)
+    val exact = postings(corpus, Dedup.Jaccard, 0.5)
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(rows.forall(r => exact.get((r._1, r._2)).contains(r._3)))

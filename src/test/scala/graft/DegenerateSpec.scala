@@ -66,7 +66,7 @@ class DegenerateSpec extends AnyFunSuite {
     assert(Dedup.exactGroups(emptyDocs).count() === 0)
     // containment: featureless docs never enter the postings
     for (docs <- Seq(emptyDocs, oneDoc))
-      assert(Dedup.containmentPairs(docs, 0.5).count() === 0)
+      assert(Dedup.containmentPairsAuto(docs, 0.5).count() === 0)
   }
 
   test("clustering and round-4 text ops survive empty/1-row corpora") {

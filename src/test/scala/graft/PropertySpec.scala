@@ -267,27 +267,31 @@ class PropertySpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  test("containment tiers agree on arbitrary corpora and thresholds") {
+  test("exact overlap tiers agree on arbitrary corpora and thresholds") {
     import graft.operators.Dedup
     // a tiny token pool forces dense shared-bigram structure, so the
-    // prefix filter's candidate pruning and the ceil boundaries in its
-    // soundness argument (alpha = ceil(tau*min)) get real exercise —
-    // including taus where tau*size lands exactly on an integer
-    val docGen = Gen.chooseNum(2, 10).flatMap(n =>
+    // int64 pass bounds of the bitmap tier get real exercise — including
+    // taus where tau*size lands exactly on an integer; docs of 0-1
+    // tokens are featureless, and some corpora are featureless entirely
+    val docGen = Gen.chooseNum(0, 10).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf("a", "b", "c", "d", "e")))
     val corpusGen = Gen.chooseNum(2, 8).flatMap(m => Gen.listOfN(m, docGen))
     val tauGen = Gen.oneOf(0.25, 0.5, 2.0 / 3.0, 0.75, 0.9)
-    check("containment-tiers")(forAll(corpusGen, tauGen) { (ds, tau) =>
-      val df = ds.zipWithIndex
-        .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
-        .toDF("doc_id", "text")
-      val all = graft.operators.Dedup.containmentPairs(df, tau)
-        .collect().map(_.toSeq).toSet
-      val pre = Dedup.containmentPairsPrefix(df, tau)
-        .collect().map(_.toSeq).toSet
-      val auto = Dedup.containmentPairsAuto(df, tau)
-        .collect().map(_.toSeq).toSet
-      all == pre && all == auto
+    val measureGen = Gen.oneOf[Dedup.Overlap](Dedup.Jaccard, Dedup.Containment)
+    check("overlap-tiers")(forAll(corpusGen, tauGen, measureGen) {
+      (ds, tau, m) =>
+        val df = ds.zipWithIndex
+          .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
+          .toDF("doc_id", "text")
+        def rows(out: org.apache.spark.sql.DataFrame) =
+          out.collect().map(_.toSeq).toSet
+        val all = rows(Dedup.overlapPairs(df, m, tau, Dedup.Postings))
+        val everyPair = (for {
+          i <- ds.indices; j <- (i + 1) until ds.length
+        } yield (i.toLong, j.toLong)).toDF("id_a", "id_b")
+        Seq(Dedup.overlapPairs(df, m, tau, Dedup.Bitmap),
+          Dedup.overlapPairs(df, m, tau),
+          Dedup.verifyPairs(df, everyPair, m, tau)).forall(rows(_) == all)
     })
   }
 

@@ -1,8 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,23 +15,7 @@ class TrainerJobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        n.incrementAndGet()
-        ()
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      val a = body
-      ListenerBusDrain(sc)
-      (a, n.get)
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsOf[A](body: => A): (A, Int) = JobBudget.jobsOf(spark)(body)
 
   /** A 300×64 corpus in 3 materialized partitions (the materializing
     * job runs before any count starts). */
