@@ -350,8 +350,8 @@ object SparkEntry {
     "scrub_dup_spans" -> ((s, dir) =>
       Dedup.scrubDuplicateSpans(
         Dedup.withNearDups(Tables.documents(s, dir)), windowLen = 40)),
-    // same clustering computed by the diameter-independent
-    // large-star/small-star tier — one oracle hash-checks BOTH algorithms
+    // the same star closure under its own query name (one closure
+    // engine; the oracle SQL is dedup_components')
     "dedup_components_star" -> ((s, dir) =>
       Dedup.dedupComponentsStar(
         Dedup.withNearDups(Tables.documents(s, dir)), tau = 0.5)),
@@ -3073,7 +3073,7 @@ object SparkEntry {
          |ORDER BY c.doc_id""".stripMargin,
     // recursive transitive closure over the SQL-recomputed pair set:
     // comp(v) = min id reachable from v — the same fixpoint the Spark
-    // side reaches by iterative min-label propagation
+    // side's large-star/small-star closure reaches
     "dedup_components" ->
       s"""WITH RECURSIVE pairs AS (
          |  ${ExactJaccardTierSql.replace("\n", "\n  ")}),
@@ -3150,8 +3150,8 @@ object SparkEntry {
          |          FROM comp GROUP BY 1)
          |SELECT cluster_size, count(*) AS n_clusters
          |FROM sizes GROUP BY 1 ORDER BY cluster_size""".stripMargin,
-    // the closure oracle is algorithm-agnostic: the star tier must reach
-    // the identical fixpoint as min-label propagation
+    // the closure oracle is algorithm-agnostic: it checks the star
+    // closure's labels, whatever query name runs it
     "dedup_components_star" ->
       s"""WITH RECURSIVE pairs AS (
          |  ${ExactJaccardTierSql.replace("\n", "\n  ")}),

@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 
 /** Checkpoint policy for the iterative operators (connected components,
   * PageRank, BPE training): every round must materialize AND truncate
-  * its logical plan (see connectedComponents' scaladoc for the measured
-  * exponential-analysis blowup without it), but WHERE the round lands is
-  * an operability knob:
+  * its logical plan (see Dedup.connectedComponentsStar's scaladoc for
+  * the measured exponential-analysis blowup without it), but WHERE the
+  * round lands is an operability knob:
   *
   *   - default: `localCheckpoint(eager)` — executor-local blocks, zero
   *     extra I/O. The right choice single-node and for short jobs; an

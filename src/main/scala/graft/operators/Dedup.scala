@@ -869,110 +869,23 @@ object Dedup {
       .select(col("id_a"), col("id_b"), sim.as("sim"))
   }
 
-  /** Connected components over an undirected pair graph — the step that
-    * turns near-dup PAIRS into duplicate CLUSTERS so a pipeline can keep
-    * one representative per cluster (pairs alone can't: {a,b},{b,c} must
-    * collapse to ONE survivor, not two).
-    *
-    * Iterative min-label propagation: every node starts labeled with its
-    * own id; each round it takes the min of its label and its neighbors'
-    * labels; fixpoint = each node carries the min id of its component.
-    * Rounds needed = graph diameter — near-dup graphs are overwhelmingly
-    * tiny cliques (diameter 1–2), so this converges in 2–3 rounds; the
-    * iteration cap bounds adversarial chains. Each round is one
-    * edge⋈label hash join + a min-aggregate — all shuffles keyed on node
-    * id, nothing quadratic — and labels are persisted + materialized per
-    * round so the lineage stays one round deep (the standard Spark
-    * iteration pattern; at 100 TB swap persist for checkpoint every few
-    * rounds). The classic refinement for skewed giant components is
-    * large-star/small-star [Kiveris et al., 2014]; min-propagation keeps
-    * the same join shape and is the right default for dedup graphs. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 15): DataFrame = {
-    // EAGER localCheckpoint, not persist: an iterative self-join doubles
-    // the LOGICAL plan every round (the previous round's plan lands on
-    // both sides of the join), so analysis cost grows exponentially with
-    // rounds and with the upstream pair query's plan size — measured
-    // 47 s → 121 s across repeated invocations of neardup_pipeline with
-    // persist-only lineage. Checkpointing materializes the round AND
-    // truncates its plan to a flat scan, keeping every round's plan
-    // constant-size; blocks are reclaimed by the ContextCleaner once
-    // unreferenced. It also makes the edge union read the (possibly
-    // expensive) pair query once, not once per branch. A cluster
-    // deployment sets spark.graft.checkpointDir to make every round a
-    // RELIABLE checkpoint for executor-loss tolerance (Checkpoints).
-    val p = Checkpoints.materialize(pairs.select(col("id_a"), col("id_b")))
-    val edges = Checkpoints.materialize(p
-      .union(p.select(col("id_b").as("id_a"), col("id_a").as("id_b"))))
-    // p is fully folded into the (eager) edges round; its files are dead
-    Checkpoints.dropRound(p)
-    // Resume store (spark.graft.resumeDir): label snapshots are valid
-    // restart points — propagation only ever LOWERS a label toward its
-    // component minimum, so continuing from round-k labels (edges
-    // rebuilt deterministically from the input) reaches the identical
-    // fixpoint.
-    val session = pairs.sparkSession
-    val resumed = Checkpoints.latestRound(session, "components_labelprop")
-    var roundNo = resumed.map(_._1).getOrElse(0)
-    var labels = Checkpoints.materialize(resumed.map(_._2).getOrElse(
-      edges.select(col("id_a").as("id")).distinct()
-        .withColumn("comp", col("id"))))
-    if (resumed.isEmpty)
-      Checkpoints.saveRound(labels, "components_labelprop", 0)
-    // the reliable round that `labels` currently reads from (labels
-    // becomes a projection over each round's frame after iteration 1)
-    var round = labels
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("id_b"), col("comp").as("nc")),
-          "id_b")
-        .groupBy(col("id_a").as("id"))
-        .agg(min("nc").as("nbr_comp"))
-      val next = Checkpoints.materialize(
-        labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"), col("comp"),
-            least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
-              .as("new_comp")))
-      changed = next.filter(col("new_comp") =!= col("comp")).count()
-      roundNo += 1
-      Checkpoints.saveRound(
-        next.select(col("id"), col("new_comp").as("comp")),
-        "components_labelprop", roundNo)
-      // the previous round is fully consumed (next is materialized and
-      // the changed count only read next) — reclaim its files
-      Checkpoints.dropRound(round)
-      round = next
-      labels = next.select(col("id"), col("new_comp").as("comp"))
-      iter += 1
-    }
-    // the result only reads the final round's files; edges are done
-    Checkpoints.dropRound(edges)
-    // a non-converged result is silently WRONG labels (a keep-one pass
-    // downstream would then keep/drop the wrong documents), so failing
-    // loud beats returning: chains longer than maxIter must raise
-    require(changed == 0,
-      s"connectedComponents did not converge in $maxIter rounds " +
-        s"($changed labels still changing); the pair graph has a chain " +
-        s"longer than maxIter — raise maxIter or pre-cluster with " +
-        s"large-star/small-star")
-    Checkpoints.clearRounds(session, "components_labelprop")
-    labels.select(col("id").as("doc_id"), col("comp"))
-  }
-
   /** Resume-store namespaces of the star closures running in this JVM. */
   private val liveStarStores =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Connected components via alternating large-star/small-star
-    * [Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014] — the diameter-INDEPENDENT tier. Min-label propagation
-    * ([[connectedComponents]]) needs `diameter` rounds, which is ideal
-    * for near-dup graphs (tiny cliques, diameter 1–2) but fails loud on
-    * adversarial chains; this converges in O(log² n) rounds regardless
-    * of topology, so it is the escalation path when the pair graph's
-    * shape is unknown — boilerplate-plate chains, template families, or
-    * giant skewed components at 100 TB.
+  /** Connected components over an undirected pair graph — the step that
+    * turns near-dup PAIRS into duplicate CLUSTERS so a pipeline can keep
+    * one representative per cluster (pairs alone can't: {a,b},{b,c} must
+    * collapse to ONE survivor, not two). Every node is labeled with its
+    * component's minimum id: (doc_id, comp), one row per node of a
+    * non-self-loop pair.
+    *
+    * Alternating large-star/small-star [Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014] — diameter-
+    * INDEPENDENT: it converges in O(log² n) rounds on any topology,
+    * where min-label propagation pays one round per hop of the longest
+    * chain (near-dup clusters are copy chains: ~9 rounds on the 10-copy
+    * stress clusters), and it needs no diameter cap.
     *
     *   large-star(u): connect every neighbor v > u to
     *                  m = min(Γ(u) ∪ {u});
@@ -980,13 +893,25 @@ object Dedup {
     *                  connect u and its smaller neighbors to their min.
     *
     * Both steps are one groupBy-min + one re-join keyed on node id —
-    * the same shuffle shape as a round of propagation, never quadratic,
-    * and skew-safe: large-star splits a high-degree hub's neighborhood
-    * across ITS OWN neighbors' keys instead of funnelling the whole
-    * component through one reducer. Fixpoint = the edge set is a star
-    * forest (every node points at its component min). Per-round eager
-    * `localCheckpoint` keeps plans constant-size (see
-    * [[connectedComponents]] for the rationale). */
+    * never quadratic, and skew-safe: large-star splits a high-degree
+    * hub's neighborhood across ITS OWN neighbors' keys instead of
+    * funnelling the whole component through one reducer. Fixpoint = the
+    * edge set is a star forest (every node points at its component
+    * min).
+    *
+    * Each round is an EAGER localCheckpoint ([[Checkpoints.materialize]]),
+    * not a persist: an iterative self-join doubles the LOGICAL plan
+    * every round (the previous round's plan lands on both sides of the
+    * join), so analysis cost grows exponentially with rounds and with
+    * the upstream pair query's plan size — measured 47 s → 121 s across
+    * repeated invocations of neardup_pipeline with persist-only lineage.
+    * Checkpointing materializes the round AND truncates its plan to a
+    * flat scan, keeping every round's plan constant-size; blocks are
+    * reclaimed by the ContextCleaner once unreferenced. It also makes
+    * the star steps read the (possibly expensive) pair query once, not
+    * once per branch. A cluster deployment sets spark.graft.checkpointDir
+    * to make every round a RELIABLE checkpoint for executor-loss
+    * tolerance ([[Checkpoints]]). */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50)
       : DataFrame = {
     val init = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
@@ -1098,12 +1023,13 @@ object Dedup {
   }
 
   /** Driver-gated clustering of the exact-Jaccard near-dup graph:
-    * components over [[jaccardPairsAuto]] pairs, labeled by min member
-    * id. The oracle recomputes the identical components with a recursive
-    * transitive-closure CTE over the same SQL-recomputed pair set, so
-    * the iterative propagation loop is hash-checked end to end. */
+    * [[connectedComponentsStar]] over [[jaccardPairsAuto]] pairs,
+    * labeled by min member id. The oracle recomputes the identical
+    * components with a recursive transitive-closure CTE over the same
+    * SQL-recomputed pair set, so the star closure is hash-checked end
+    * to end. */
   def dedupComponents(docs: DataFrame, tau: Double): DataFrame =
-    connectedComponents(jaccardPairsAuto(docs, tau))
+    connectedComponentsStar(jaccardPairsAuto(docs, tau))
 
   /** Cluster-size histogram over the dedup components — the curation
     * observability view that answers "how duplicated is this corpus"
@@ -1118,12 +1044,11 @@ object Dedup {
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
       .orderBy("cluster_size")
 
-  /** [[dedupComponents]] computed by the star tier instead of min-label
-    * propagation — same contract, same oracle (the recursive-CTE closure
-    * is algorithm-agnostic), so the driver hash-checks that both
-    * algorithms produce the identical clustering. */
+  /** [[dedupComponents]] under the name of its `dedup_components_star`
+    * query: the star closure is the only closure engine, so both names
+    * run the same plan against the same recursive-CTE oracle. */
   def dedupComponentsStar(docs: DataFrame, tau: Double): DataFrame =
-    connectedComponentsStar(jaccardPairsAuto(docs, tau))
+    dedupComponents(docs, tau)
 
   /** Quality-aware keep-one dedup: cluster the near-dup graph, then
     * keep the HIGHEST-QUALITY member of each cluster (ties → min
@@ -1427,10 +1352,9 @@ object Dedup {
                       estTau: Double): DataFrame = {
     val cand = minhashLshPairs(docs, k, bands, estTau)
     val verified = jaccardVerifyPairs(docs, cand, tau)
-    // star variant, not label-prop: near-dup clusters are copy CHAINS
-    // (copy k matches k±1), and label-prop pays one round per chain hop
-    // (~9 rounds on the 10-copy stress clusters) while large/small-star
-    // converges in O(log) rounds on the same graph — identical labels
+    // near-dup clusters are copy CHAINS (copy k matches k±1): the star
+    // closure collapses them in O(log) rounds, where one round per
+    // chain hop would be ~9 rounds on the 10-copy stress clusters
     val dropped = connectedComponentsStar(verified.select("id_a", "id_b"))
       .filter(col("comp") =!= col("doc_id"))
       .select(col("doc_id"))

@@ -95,17 +95,24 @@ object Similarity {
     else
       transform(typedlit(cents.map(_.toSeq).toSeq), c => dot_native(v, c))
 
-  /** (dot, cell-id) struct array for probe selection — the sortable
-    * form of [[centDots]], same hybrid tier. */
-  private def centDotStructs(v: Column,
-                             cents: Array[Array[Double]]): Column =
-    if (cents.length <= HofCellThreshold)
-      array(cents.indices.map(i =>
-        struct(dot_native(v, typedlit(cents(i).toSeq)).as("d"),
-          lit(i).as("cell"))): _*)
-    else
-      transform(typedlit(cents.map(_.toSeq).toSeq), (c, i) =>
-        struct(dot_native(v, c).as("d"), i.as("cell")))
+  /** One row per probed cell of `v`: its `n` nearest cells by dot with
+    * the codebook — the (d, cell) struct array ([[centDots]]' sortable
+    * form, same hybrid tier) sorted descending, sliced and exploded;
+    * per-row math, no window. The one probe-selection expression:
+    * every probe plan and [[probeCellSet]] use it, so they pick the
+    * same cells under the same tie-breaks. */
+  private def probeCells(v: Column, cents: Array[Array[Double]],
+                         n: Int): Column = {
+    val structs =
+      if (cents.length <= HofCellThreshold)
+        array(cents.indices.map(i =>
+          struct(dot_native(v, typedlit(cents(i).toSeq)).as("d"),
+            lit(i).as("cell"))): _*)
+      else
+        transform(typedlit(cents.map(_.toSeq).toSeq), (c, i) =>
+          struct(dot_native(v, c).as("d"), i.as("cell")))
+    explode(slice(reverse(array_sort(structs)), 1, n))
+  }
 
   /** Nearest cell by cosine = argmax of dot with UNIT-norm centroids (the
     * row's own norm is constant across cells); ties resolve to the first
@@ -162,8 +169,6 @@ object Similarity {
     ((Long, String), Int, Int), Array[Array[Double]]]()
   private val pqModelCache = new java.util.concurrent.ConcurrentHashMap[
     ((Long, String), Int), Array[Array[Array[Double]]]]()
-  private val pqCodesCache = new java.util.concurrent.ConcurrentHashMap[
-    ((Long, String), Int), DataFrame]()
   private val ivfPqIndexCache = new java.util.concurrent.ConcurrentHashMap[
     ((Long, String), Int, Int, Int, Boolean),
     (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame)]()
@@ -226,13 +231,9 @@ object Similarity {
       .withColumn("norm",
         greatest(sqrt(dot_native(col("v"), col("v"))), lit(1e-9)))
 
-    // top-nprobe cells per query: sort a C-element (dot, cell) struct
-    // array descending, slice, explode — per-row math, no window
     val q = queries.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-    val probeStructs = centDotStructs(col("v"), refined)
     val probes = q
-      .withColumn("probe",
-        explode(slice(reverse(array_sort(probeStructs)), 1, nprobe)))
+      .withColumn("probe", probeCells(col("v"), refined, nprobe))
       .select(col("vec_id").as("query_id"), col("v").as("vq"),
         greatest(sqrt(dot_native(col("v"), col("v"))), lit(1e-9)).as("nq"),
         col("probe.cell").as("cell"))
@@ -268,11 +269,9 @@ object Similarity {
     if (refined.isEmpty)
       return e.withColumn("norm", lit(0.0))
         .withColumn("cell", lit(0)).limit(0)
-    val probeStructs = centDotStructs(col("v"), refined)
     e.withColumn("norm",
         greatest(sqrt(dot_native(col("v"), col("v"))), lit(1e-9)))
-      .withColumn("probe",
-        explode(slice(reverse(array_sort(probeStructs)), 1, probes)))
+      .withColumn("probe", probeCells(col("v"), refined, probes))
       .select(col("vec_id"), col("v"), col("norm"),
         col("probe.cell").as("cell"))
   }
@@ -366,12 +365,13 @@ object Similarity {
           (col("hits").cast("double") >=
             lit(floor) * col("n_queries") * k).cast("int").as("recall_ok"))
     // shared-model path: train the IVF codebook and the PQ codebooks
-    // ONCE, encode the corpus ONCE (the ivfpq index's codes ARE the pq
-    // tier's codes, plus the cell id), and run all four probe queries
-    // against the shared models — identical outputs to the standalone
-    // tiers (same deterministic trainers, same parameters), at one
-    // training cost instead of two of each. Degenerate corpora fall
-    // back to the standalone entries, which handle empties.
+    // ONCE, encode the corpus ONCE per encoding, and run every probe
+    // query against the shared models — identical outputs to the
+    // standalone tiers (same deterministic trainers, same parameters),
+    // at one training cost instead of two of each. The pq and ivfpq
+    // tiers read the SAME raw index: pq is its every-cell probe.
+    // Degenerate corpora fall back to the standalone entries, which
+    // handle empties.
     // one Corpus: one key aggregate (which also gives nCorpus) and one
     // training fetch serve every trainer below
     val corpus = new Corpus(emb)
@@ -408,7 +408,8 @@ object Similarity {
           else knnIvfPqWith(emb, indexRes, centsIdx, cbRes, queries, k,
             np, rr, residual = true),
           knnLsh(emb, queries, k),
-          knnPqOf(corpus, emb, queries, k))
+          knnIvfPqWith(emb, index, centsIdx, cbIdx, queries, k,
+            centsIdx.length, PqRerank, residual = false))
       }
     gate("ivf", ivf, ivfFloor)
       .unionAll(gate("ivfpq", ivfpq, ivfpqFloor))
@@ -498,6 +499,8 @@ object Similarity {
   val PqSubDim = 4
   val PqK = 16
   val PqIters = 3
+  /** [[knnPq]]'s ADC shortlist depth, which its recall-gate row replays. */
+  private val PqRerank = 50
 
   import graft.functions.TextFunctions.letCol
 
@@ -579,87 +582,25 @@ object Similarity {
     }
   }
 
-  /** ANN top-k via PQ codes + exact re-rank — the IVFADC production
-    * shape: (1) the corpus is scanned as CODES ONLY, approx distance =
-    * Σ over subspaces of the query's precomputed [M][K] table entry at
-    * that subspace's code (queries broadcast; the corpus never shuffles
-    * and never touches its floats); (2) the ADC top-`rerank` shortlist
-    * per query — nq·rerank rows, driver-bounded — fetches its exact
-    * vectors via a broadcast join and re-ranks by true cosine. ADC
-    * distortion with a 16×16 codebook leaves shortlist-50 recall at
-    * 0.90 on the testdata while raw ADC top-5 sat at ~0.3 —
+  /** ANN top-k via PQ codes + exact re-rank: the IVFADC probe
+    * ([[knnIvfPq]]) with every cell probed — ADC is IVFADC at
+    * nprobe = cells (Jégou et al. 2011). It reads the raw 16-cell
+    * [[ivfPqIndex]]: (1) the corpus is scanned as CODES
+    * ONLY, approx distance = Σ over subspaces of the query's
+    * precomputed [M][K] table entry at that subspace's code (queries
+    * broadcast; the corpus never shuffles and never touches its
+    * floats) — each corpus row lives in exactly one cell, so probing
+    * every cell scores every row once; (2) the ADC top-`rerank`
+    * shortlist per query — nq·rerank rows, driver-bounded — fetches
+    * its exact vectors via a broadcast join and re-ranks by true
+    * cosine. ADC distortion with a 16×16 codebook leaves shortlist-50
+    * recall at 0.90 on the testdata while raw ADC top-5 sat at ~0.3 —
     * re-rank is where PQ recall comes from, not a luxury. */
   def knnPq(emb: DataFrame, queries: DataFrame, k: Int,
-            iters: Int = PqIters, rerank: Int = 50): DataFrame =
-    knnPqOf(new Corpus(emb), emb, queries, k, iters, rerank)
-
-  private def knnPqOf(c: Corpus, emb: DataFrame, queries: DataFrame, k: Int,
-                      iters: Int = PqIters, rerank: Int = 50): DataFrame = {
-    val cb = pqTrain(c, iters)
-    if (cb.isEmpty) {
-      val s = emb.sparkSession
-      import s.implicits._
-      return Seq.empty[(Long, Long, Int)].toDF("query_id", "nn_id", "rn")
-    }
-    val cbSeq = cb.map(_.toSeq.map(_.toSeq)).toSeq
-    // materialize codes/tables as STORED columns (scratch checkpoint):
-    // they are each statically single-use downstream, so Catalyst would
-    // inline the whole nested encode expression into the ADC fold and
-    // re-evaluate it per subspace step — measured 53 s for 5k pairs vs
-    // ~2 s materialized (the winnowing inlining lesson). At scale codes
-    // ARE a stored column — encode once is the PQ contract, not a hack
-    // (hence the per-JVM cache: the codes are model output, like cb).
-    val codes = pqCodesCache.computeIfAbsent((c.pqKey, iters),
-      _ => Checkpoints.scratch(
-        emb.select(col("vec_id").as("nn_id"),
-          pqCodes(unitVec(toDoubleVec(col("embedding"))), cbSeq)
-            .as("codes"))))
-    knnPqWith(emb, codes, cb, queries, k, rerank)
-  }
-
-  /** ADC scan + exact re-rank of [[knnPq]] against already-encoded
-    * corpus codes — split out so [[knnRecallGates]] shares one encode
-    * pass between the pq and ivfpq tiers (the codes are identical; the
-    * ivfpq index just carries the cell id besides). */
-  private def knnPqWith(emb: DataFrame, corpus: DataFrame,
-                        cb: Array[Array[Array[Double]]], queries: DataFrame,
-                        k: Int, rerank: Int): DataFrame = {
-    val cbSeq = cb.map(_.toSeq.map(_.toSeq)).toSeq
-    val cbl = typedlit(cbSeq)
-    val q = Checkpoints.scratch(
-      queries.select(col("vec_id").as("query_id"),
-        unitVec(toDoubleVec(col("embedding"))).as("vq"))
-      .withColumn("tabs",
-        transform(sequence(lit(0), lit(PqM - 1)), s =>
-          transform(sequence(lit(1), lit(PqK)), kk =>
-            aggregate(
-              zip_with(slice(col("vq"), s * PqSubDim + 1, lit(PqSubDim)),
-                element_at(element_at(cbl, s + 1), kk),
-                (a, b) => (a - b) * (a - b)),
-              lit(0.0d), (acc, x) => acc + x)))))
-    val wA = Window.partitionBy("query_id")
-      .orderBy(asc("approx_d"), asc("nn_id"))
-    val shortlist = corpus
-      .join(broadcast(q.select("query_id", "tabs")),
-        col("query_id") =!= col("nn_id"))
-      .withColumn("approx_d",
-        aggregate(sequence(lit(0), lit(PqM - 1)), lit(0.0d),
-          (acc, s) => acc + element_at(element_at(col("tabs"), s + 1),
-            element_at(col("codes"), s + 1) + 1)))
-      .withColumn("ra", row_number().over(wA))
-      .filter(col("ra") <= rerank)
-      .select("query_id", "nn_id")
-    val cv = emb.select(col("vec_id").as("nn_id"),
-      unitVec(toDoubleVec(col("embedding"))).as("vc"))
-    val wE = Window.partitionBy("query_id")
-      .orderBy(desc("sim"), asc("nn_id"))
-    broadcast(shortlist).join(cv, Seq("nn_id"))
-      .join(broadcast(q.select("query_id", "vq")), Seq("query_id"))
-      .withColumn("sim", round(dot_native(col("vq"), col("vc")), 6))
-      .withColumn("rn", row_number().over(wE))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("nn_id"), col("rn"))
-  }
+            iters: Int = PqIters, rerank: Int = PqRerank): DataFrame =
+    // nprobe = cells: a codebook never has more cells than asked for
+    knnIvfPq(emb, queries, k, cells = 16, nprobe = 16, iters = iters,
+      rerank = rerank)
 
   /** Margin-based bitext mining (Artetxe & Schwenk 2019 — the
     * LASER/CCMatrix parallel-corpus miner): candidate translation
@@ -1120,10 +1061,10 @@ object Similarity {
     *      knnIvf pattern) and precomputes its [M][K] ADC table;
     *   2. ADC scan: the probe frame broadcasts and EQUI-JOINS the index
     *      on the cell id — candidates are the probed cells' code rows
-    *      only (a BroadcastHashJoin; knnPq's all-codes scan was the
-    *      non-equi broadcast product this composition removes; PlanSpec
-    *      pins the hash join). Approx distance = Σ table lookups on the
-    *      codes — the corpus side touches no floats;
+    *      only (a BroadcastHashJoin, PlanSpec-pinned; with every cell
+    *      probed it is [[knnPq]]'s all-codes scan). Approx distance = Σ
+    *      table lookups on the codes — the corpus side touches no
+    *      floats;
     *   3. exact re-rank: the ADC top-`rerank` shortlist (nq·rerank
     *      rows, driver-bounded) fetches true vectors via broadcast
     *      join and re-ranks by exact cosine.
@@ -1155,7 +1096,9 @@ object Similarity {
   }
 
   /** Probe → ADC → re-rank of [[knnIvfPq]] against an already-built
-    * index — split out for [[knnRecallGates]]'s shared-model path.
+    * index — the one ADC probe core: [[knnPq]] is its every-cell case,
+    * and [[knnRecallGates]], the store gates and [[knnIvfPqServe]]
+    * call it on indexes they already hold.
     * Under `residual` the ADC table is per (query, probed cell) —
     * built from r_q = unit(q) − centroid(cell) on each probe row
     * (nq·nprobe driver-bounded rows, still scan-fused math).
@@ -1180,7 +1123,6 @@ object Similarity {
     val centsLit = typedlit(cents.map(_.toSeq).toSeq)
     // probe frame: one row per (query, probed cell), carrying that
     // row's ADC table — nq·nprobe rows of driver-bounded size
-    val probeStructs = centDotStructs(col("v"), cents)
     def tabsOf(qvc: Column): Column =
       transform(sequence(lit(0), lit(PqM - 1)), s =>
         transform(sequence(lit(1), lit(PqK)), kk =>
@@ -1196,8 +1138,7 @@ object Similarity {
       if (residual)
         // residual ADC tables are PER (query, cell): r_q depends on the
         // probed centroid, so the table builds after the explode
-        qBase.withColumn("probe",
-            explode(slice(reverse(array_sort(probeStructs)), 1, nprobe)))
+        qBase.withColumn("probe", probeCells(col("v"), cents, nprobe))
           .withColumn("cell", col("probe.cell"))
           .withColumn("qv",
             zip_with(col("vq"), element_at(centsLit, col("cell") + 1),
@@ -1208,8 +1149,7 @@ object Similarity {
         // table ONCE per query, then explode to probe rows — an
         // nprobe× saving on the probe stage's dominant math
         qBase.withColumn("tabs", tabsOf(col("vq")))
-          .withColumn("probe",
-            explode(slice(reverse(array_sort(probeStructs)), 1, nprobe)))
+          .withColumn("probe", probeCells(col("v"), cents, nprobe))
           .withColumn("cell", col("probe.cell"))
           .withColumn("qv", col("vq"))
     val q = Checkpoints.scratch(
@@ -1670,7 +1610,6 @@ object Similarity {
   private[graft] def clearModelCachesForTest(): Unit = {
     ivfModelCache.clear()
     pqModelCache.clear()
-    pqCodesCache.clear()
     ivfPqIndexCache.clear()
   }
 
@@ -2899,21 +2838,18 @@ object Similarity {
   }
 
   /** The DISTINCT cell set a probe of `queries` at width `nprobe`
-    * will touch, computed by the SAME expression the probe plan uses
-    * (identical struct sort + slice — no driver re-derivation whose
-    * tie-breaking could diverge): the manifest reader's pruning input
-    * ([[graft.sources.IndexStore.codesForCells]] opens exactly these
-    * cells' files). Driver-bounded: ≤ nq·nprobe ids. */
+    * will touch — [[probeCells]], the probe plan's own expression, so
+    * no driver re-derivation's tie-breaking can diverge: the manifest
+    * reader's pruning input ([[graft.sources.IndexStore.codesForCells]]
+    * opens exactly these cells' files). Driver-bounded: ≤ nq·nprobe
+    * ids. */
   def probeCellSet(cents: Array[Array[Double]], queries: DataFrame,
-                   nprobe: Int): Set[Int] = {
-    val probeStructs = centDotStructs(
-      toDoubleVec(col("embedding")), cents)
+                   nprobe: Int): Set[Int] =
     queries
-      .select(explode(slice(reverse(array_sort(probeStructs)), 1,
-        nprobe)).as("probe"))
+      .select(probeCells(toDoubleVec(col("embedding")), cents, nprobe)
+        .as("probe"))
       .select(col("probe.cell")).distinct()
       .collect().map(_.getInt(0)).toSet
-  }
 
   /** Serve a probe from an EXTERNALLY-HELD index snapshot (the
     * manifest reader's entry point: [[graft.sources.IndexStore]]

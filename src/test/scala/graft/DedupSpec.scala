@@ -388,35 +388,9 @@ class DedupSpec extends AnyFunSuite {
     assert(recall >= 0.6)
   }
 
-  test("connected components: chains collapse, labels are component minima") {
-    // two chains and an isolated pair: {1,2,3,4} via 1-2,2-3,3-4 (diameter
-    // 3 exercises multi-round propagation), {10,11}, {20,21,22} a triangle
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
-      (20L, 21L), (21L, 22L), (20L, 22L))
-      .toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
-  }
-
-  test("connected components fail loud, not wrong, past the iteration cap") {
-    // a 17-node path has diameter 16: min-label propagation needs 16
-    // rounds, so the default maxIter=15 must THROW (silently returning
-    // non-converged labels would make a downstream keep-one pass drop the
-    // wrong documents), while a sufficient cap converges to all-zeros
-    val chain = (0L until 16L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(chain, maxIter = 15).count()
-    }
-    assert(e.getMessage.contains("did not converge"))
-    val got = Dedup.connectedComponents(chain, maxIter = 20)
-      .as[(Long, Long)].collect().toMap
-    assert(got === (0L to 16L).map(_ -> 0L).toMap)
-  }
-
   test("star components match propagation and survive deep chains") {
-    // same mixed graph as the propagation test — identical fixpoint
+    // two chains and an isolated pair: {1,2,3,4} via 1-2,2-3,3-4,
+    // {10,11}, {20,21,22} a triangle — labels are component minima
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L))
       .toDF("id_a", "id_b")
@@ -424,8 +398,8 @@ class DedupSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(star === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
-    // a 201-node path (diameter 200) needs 200 propagation rounds — far
-    // past that tier's cap — but the star tier's O(log² n) alternation
+    // a 201-node path (diameter 200) would need 200 min-label
+    // propagation rounds, but the star closure's O(log² n) alternation
     // collapses it well inside the default iteration budget, including
     // with edges listed against the canonical orientation
     val chain = (0L until 200L).map(i => (i + 1, i)).toDF("id_a", "id_b")

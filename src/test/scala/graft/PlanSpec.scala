@@ -130,8 +130,8 @@ class PlanSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, dir)
     val p = plan(Similarity.knnIvfPq(emb, emb.filter(col("vec_id") < 10), 5))
     // the composition's whole point: candidates are the probed cells'
-    // code rows via a hash join on the cell id — knnPq's all-codes scan
-    // is a broadcast nested-loop product, which must NOT appear here
+    // code rows via a hash join on the cell id — a non-equi all-codes
+    // scan (a broadcast nested-loop product) must NOT appear here
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert("Left keys \\[1\\]: \\[cell#\\d+".r.findFirstIn(p).isDefined ||
