@@ -2,9 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Column-level text functions, all built from codegen'd
-  * `org.apache.spark.sql.functions` (no UDFs in the hot path).
+/** Column-level text functions, no UDFs. `tokenize` and `wordNgrams`
+  * are native Catalyst expressions whose generated code calls one static
+  * kernel per row; `letCol` and `charShingles` compose higher-order
+  * functions (`transform`), which Spark evaluates interpreted
+  * (`CodegenFallback`).
   *
   * Tokenizer semantics replicate the reference's `clean_words`
   * (/root/reference/client.py:16-21), verified by execution (SURVEY.md §2.1
@@ -14,15 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Exactly Python `string.punctuation` as a regex char class: ASCII
-    * 33-47, 58-64, 91-96, 123-126. Same literal works in Java regex and
-    * RE2 (DuckDB), avoiding locale-dependent `[[:punct:]]`. */
-  val PunctClass: String = "[!-/:-@\\[-`{-~]"
-
-  /** Reference O2 tokenize: `clean_words` semantics (client.py:16-21).
-    * Newlines act as separators (the reference reads line-by-line, so a
-    * `\n` can never be inside a token); punctuation is deleted BEFORE
-    * splitting (`"mid-word"` → `midword`); split on `' +'` only. */
   /** Bind an expression ONCE as a lambda variable (the HOF "let"):
     * `letCol(e)(x => body)` evaluates `e` once per row and every use
     * of `x` in the body is an O(1) variable read. Without it, a
@@ -34,10 +29,13 @@ object TextFunctions {
   def letCol(e: Column)(body: Column => Column): Column =
     element_at(transform(array(e), body), 1)
 
+  /** Reference O2 tokenize: `clean_words` semantics (client.py:16-21).
+    * Newlines act as separators (the reference reads line-by-line, so a
+    * `\n` can never be inside a token); punctuation is deleted BEFORE
+    * splitting (`"mid-word"` → `midword`); split on `' +'` only. One
+    * native byte-scan kernel ([[CleanWordsExpression.CleanWords]]). */
   def tokenize(text: Column): Column =
-    filter(
-      split(regexp_replace(regexp_replace(text, "\\n", " "), PunctClass, ""), " +"),
-      t => t.rlike("\\S"))
+    Bridge.toColumn(CleanWordsExpression.CleanWords(Bridge.toExpression(text)))
 
   /** Reference O5 case projection (client.py:63-67): fold case unless
     * case-sensitive. Applied pre-shuffle (map side) so shuffle keys are
@@ -45,14 +43,9 @@ object TextFunctions {
   def foldCase(word: Column, caseSensitive: Boolean): Column =
     if (caseSensitive) word else lower(word)
 
-  /** Whitespace tokens (simple split, for ngram/TF-IDF style analysis on
-    * already-clean text such as `documents.text`). */
-  def simpleTokens(text: Column): Column =
-    filter(split(text, " +"), t => t.rlike("\\S"))
-
   /** Character n-gram shingles of a string (for MinHash/Jaccard dedup).
-    * Built with sequence+transform (codegen'd higher-order funcs); a
-    * string shorter than n yields itself as its only shingle. */
+    * Built with sequence+transform (an interpreted higher-order
+    * function); a string shorter than n yields itself as its only shingle. */
   def charShingles(text: Column, n: Int): Column =
     array_distinct(
       transform(

@@ -254,7 +254,7 @@ object Profile {
     * regexes + fingerprint — ALL the heavy per-row work) materializes
     * ONCE via localCheckpoint and feeds four bounded aggregation legs;
     * without it each union leg re-expands the corpus subtree and the
-    * regex/tokenize pass runs 4× (the temperatureWeights lesson). The
+    * tokenize + PII-regex pass runs 4× (the temperatureWeights lesson). The
     * checkpointed frame is counts-and-flags, far smaller than the
     * text; only the vocab leg re-reads the corpus (it needs the token
     * arrays themselves), so the card costs two corpus passes total at

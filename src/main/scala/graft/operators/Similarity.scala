@@ -1151,16 +1151,14 @@ object Similarity {
         qBase.withColumn("tabs", tabsOf(col("vq")))
           .withColumn("probe", probeCells(col("v"), cents, nprobe))
           .withColumn("cell", col("probe.cell"))
-          .withColumn("qv", col("vq"))
     val q = Checkpoints.scratch(
-      qExpanded.select(col("vec_id").as("query_id"), col("vq"),
-        col("tabs"), col("cell")))
+      qExpanded.select(col("vec_id").as("query_id"), col("tabs"), col("cell")))
     // each corpus vector lives in exactly one cell and a query probes
     // distinct cells → a (query, nn) candidate appears at most once
     val wA = Window.partitionBy("query_id")
       .orderBy(asc("approx_d"), asc("nn_id"))
     val shortlist = index
-      .join(bq(q.select("query_id", "tabs", "cell")), Seq("cell"))
+      .join(bq(q), Seq("cell"))
       .filter(col("query_id") =!= col("nn_id"))
       .withColumn("approx_d",
         aggregate(sequence(lit(0), lit(PqM - 1)), lit(0.0d),
@@ -1173,9 +1171,12 @@ object Similarity {
       unitVec(toDoubleVec(col("embedding"))).as("vc"))
     val wE = Window.partitionBy("query_id")
       .orderBy(desc("sim"), asc("nn_id"))
+    // one vq per query, read from the query frame before the explode:
+    // query ids are unique (the candidate comment above relies on it),
+    // so no shuffle has to reduce the probe rows to one per query
     bq(shortlist).join(cv, Seq("nn_id"))
-      .join(bq(q.select("query_id", "vq")
-        .dropDuplicates("query_id")), Seq("query_id"))
+      .join(bq(qBase.select(col("vec_id").as("query_id"), col("vq"))),
+        Seq("query_id"))
       .withColumn("sim", round(dot_native(col("vq"), col("vc")), 6))
       .withColumn("rn", row_number().over(wE))
       .filter(col("rn") <= k)

@@ -8,9 +8,12 @@ import org.apache.spark.sql.functions._
   * composable DataFrame operator chain (SURVEY.md §2.1 O1-O7, §7.2 v1).
   *
   * Pipeline: text column → tokenize (O2, exact `clean_words` semantics,
-  * /root/reference/client.py:16-21) → optional case fold (O5,
+  * the reference's client.py:16-21) → optional case fold (O5,
   * client.py:63-67, applied pre-shuffle) → count-by-key (O6,
   * client.py:71-78, here Tungsten partial+final hash agg with spill).
+  * `tokenize` is one native byte-scan expression, so the map side —
+  * scan, tokenize explode, case fold, partial count — runs as one
+  * whole-stage codegen stage.
   * Partitioning (O3/O4, client.py:36-37) is Spark's full-key hash shuffle —
   * the reference's `ord(first char) % M` placement is an impl detail, not a
   * semantic contract (SURVEY.md §7.4.3), and its measured skew

@@ -1,10 +1,45 @@
 package graft
 
+import graft.functions.CleanWordsExpression.CleanWords
 import graft.operators.{Relational, WordCount}
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{ExplainMode, GenerateExec, InputAdapter,
+  SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Walks an executed plan's expressions, query stages included. */
+object PlanWalk extends AdaptiveSparkPlanHelper {
+  def expressions(p: SparkPlan): Seq[Expression] =
+    collect(p) { case n => n.expressions }.flatten
+
+  /** The interpreted (`CodegenFallback`) expression nodes of a plan. */
+  def fallbacks(p: SparkPlan): Seq[Expression] =
+    expressions(p).flatMap(_.collect { case e: CodegenFallback => e })
+
+  /** Tokenize paths: every expression from a plan node's expression
+    * root down to a `tokenize` kernel, and the kernel's own subtree. */
+  def tokenizePaths(p: SparkPlan): Seq[Expression] =
+    expressions(p).flatMap { root =>
+      root.collect { case e if e.exists(_.isInstanceOf[CleanWords]) => e } ++
+        root.collect { case k: CleanWords => k.child.collect { case x => x } }
+          .flatten
+    }
+
+  /** Whole-stage codegen subtrees (cut at their `InputAdapter`s). */
+  def codegenStages(p: SparkPlan): Seq[Seq[SparkPlan]] = {
+    def body(n: SparkPlan): Seq[SparkPlan] = n match {
+      case _: InputAdapter => Nil
+      case _ => n +: n.children.flatMap(body)
+    }
+    collect(p) { case w: WholeStageCodegenExec => body(w.child) }
+  }
+}
 
 /** Plan-hygiene regression tests: the physical plans that matter at
   * 100 TB must keep their shape — filters pushed into the parquet scan,
@@ -46,6 +81,29 @@ class PlanSpec extends AnyFunSuite {
     df.collect()
     val ep = df.queryExecution.executedPlan.toString
     assert("\\*\\(\\d+\\) HashAggregate".r.findAllIn(ep).size >= 2)
+  }
+
+  test("tokenize is native on the word-count and top_bigrams paths") {
+    val wc = WordCount.wordCount(Tables.documents(spark, dir), "text", false)
+    wc.collect()
+    val ep = wc.queryExecution.executedPlan
+    assert(PlanWalk.tokenizePaths(ep).exists(_.isInstanceOf[CleanWords]), ep)
+    // nothing on the word-count plan falls back to interpreted eval
+    assert(PlanWalk.fallbacks(ep).isEmpty, PlanWalk.fallbacks(ep))
+    // the map side (tokenize explode, case fold, partial count) is one
+    // whole-stage codegen stage
+    assert(PlanWalk.codegenStages(ep).exists(st =>
+      st.exists(_.isInstanceOf[GenerateExec]) && st.exists {
+        case h: HashAggregateExec =>
+          h.aggregateExpressions.exists(_.mode == Partial)
+        case _ => false
+      }), ep)
+    val bg = SparkEntry.queries("top_bigrams")(spark, dir)
+    bg.collect()
+    val bp = bg.queryExecution.executedPlan
+    val path = PlanWalk.tokenizePaths(bp)
+    assert(path.exists(_.isInstanceOf[CleanWords]), bp)
+    assert(!path.exists(_.isInstanceOf[CodegenFallback]), path)
   }
 
   test("top-k is TakeOrderedAndProject, not a global sort") {
@@ -466,7 +524,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(Profile.datasetCard(spark, dir))
     // four legs read the checkpointed feature frame; only the vocab leg
     // (which needs the token arrays) re-reads the corpus — without the
-    // checkpoint every union leg re-expands the tokenize/regex subtree
+    // checkpoint every union leg re-expands the tokenize + PII-regex subtree
     assert("\\(\\d+\\) Scan parquet".r.findAllIn(p).size == 1, p)
     assert(!p.contains("Join"), "card legs grew a join")
   }
