@@ -82,12 +82,4 @@ object VectorExpressions {
   def dot_native(a: Column, b: Column): Column =
     Bridge.toColumn(
       DotProduct(Bridge.toExpression(a), Bridge.toExpression(b)))
-
-  /** Codegen'd cosine: dot/(sqrt(dot aa)*sqrt(dot bb)) — same association
-    * as VectorFunctions.cosine and the DuckDB oracle. Precompute norms
-    * with `l2NormNative` and divide instead when one side repeats. */
-  def cosine_native(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.sqrt
-    dot_native(a, b) / (sqrt(dot_native(a, a)) * sqrt(dot_native(b, b)))
-  }
 }

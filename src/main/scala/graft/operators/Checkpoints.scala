@@ -2,11 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Checkpoint policy for the iterative operators (connected components,
-  * PageRank, BPE training): every round must materialize AND truncate
-  * its logical plan (see Dedup.connectedComponentsStar's scaladoc for
-  * the measured exponential-analysis blowup without it), but WHERE the
-  * round lands is an operability knob:
+/** Checkpoint policy for the iterative Spark operators (connected
+  * components, PageRank, NN-Descent; the BPE and unigram tokenizer
+  * trainers loop on the driver over one vocabulary fetch and take no
+  * rounds here): every round must materialize AND truncate its logical
+  * plan (see Dedup.connectedComponentsStar's scaladoc for the measured
+  * exponential-analysis blowup without it), but WHERE the round lands
+  * is an operability knob:
   *
   *   - default: `localCheckpoint(eager)` — executor-local blocks, zero
   *     extra I/O. The right choice single-node and for short jobs; an
@@ -24,7 +26,7 @@ import org.apache.spark.sql.DataFrame
   *     (spark.cleaner.referenceTracking.cleanCheckpoints is off by
   *     default and best-effort anyway), so the iteration loops call
   *     [[dropRound]] on each round once it is FULLY consumed — without
-  *     that, a 500-step BPE run would retain 500 corpus-scale snapshots.
+  *     that, a 500-round loop would retain 500 corpus-scale snapshots.
   *
   * The knob is a runtime conf (not a parameter threaded through every
   * operator signature) because it is a DEPLOYMENT property: the same

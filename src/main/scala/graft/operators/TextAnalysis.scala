@@ -3,8 +3,10 @@ package graft.operators
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * per-document token statistics, quality scoring, language-ID heuristic,
@@ -1315,104 +1317,85 @@ object TextAnalysis {
     * Sennrich et al. 2016.
     *
     * Scale shape: the corpus collapses to the (word, count) vocabulary
-    * in ONE corpus-scale aggregation; every training iteration after
-    * that runs on the vocabulary-bounded symbol table (the standard
-    * formulation — pair counts are weighted by word frequency, so the
-    * corpus is never re-scanned). Each iteration is a pair-count
-    * aggregation plus one argmax row to the driver (the winning pair is
-    * metadata, like the k-means codebook), and the merge itself is the
-    * native codegen'd [[graft.functions.BpeMergeExpression]] applied to
-    * the symbol arrays, with an eager localCheckpoint truncating the
-    * per-iteration lineage (same pathology as connected components).
-    * Not ANSI-expressible beyond step 0 → rows-only; [[bpeMergeGate]]
-    * is the hash-checked companion. */
+    * in ONE corpus-scale aggregation, fetched once ([[vocabulary]]);
+    * every merge step then runs on the driver over that dictionary, the
+    * way Sennrich et al. train — pair counts are weighted by word
+    * frequency, so the corpus is never re-scanned. Rows-only (not
+    * ANSI-expressible beyond step 0); [[bpeMergeGate]] is the
+    * hash-checked companion. */
   // (dir, nMerges) → trained merge rows. Training is deterministic, and
-  // both the rows-only query and the gate need the same table — without
-  // the cache the gate re-runs all 20 iterations (measured ~2× the cost
-  // of every other query at sf0.1). Same per-JVM pattern as the
-  // wordcount_textdir corpus cache.
+  // the gate and the encoders need the same table. Same per-JVM pattern
+  // as the wordcount_textdir corpus cache.
   private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Int), Seq[(Int, String, String, Long)]]()
+
+  private def bpeMerges(s: SparkSession, dir: String,
+                        nMerges: Int): Seq[(Int, String, String, Long)] =
+    bpeCache.computeIfAbsent((dir, nMerges), _ => trainBpe(s, dir, nMerges))
 
   def bpeTrainMerges(s: SparkSession, dir: String,
                      nMerges: Int = 20): DataFrame = {
     import s.implicits._
-    bpeCache.computeIfAbsent((dir, nMerges),
-      _ => trainBpe(s, dir, nMerges))
+    bpeMerges(s, dir, nMerges)
       .toDF("step", "pair_a", "pair_b", "pair_count")
       .orderBy("step")
   }
 
-  private[graft] def trainBpe(s: SparkSession, dir: String,
-                       nMerges: Int): Seq[(Int, String, String, Long)] = {
+  /** The (word, cnt) dictionary both tokenizer trainers start from —
+    * the corpus tokens lowercased and counted, in one aggregation and
+    * one fetch. Its size is the number of DISTINCT words (Heaps' law),
+    * not the corpus. */
+  private def vocabulary(s: SparkSession, dir: String): Array[(String, Long)] = {
     import s.implicits._
-    val words = WordCount.tokens(Tables.documents(s, dir), "text")
+    WordCount.tokens(Tables.documents(s, dir), "text")
       .select(lower(col("word")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-    // explicit per-char split (split(word, "") has trailing-empty
-    // surprises under Java's limit=-1 semantics)
-    var vocab = words.select(
-      transform(sequence(lit(1), length(col("word"))),
-        i => col("word").substr(i, lit(1))).as("syms"),
-      col("cnt"))
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var step = 0
-    var exhausted = false
-    // Resume store (spark.graft.resumeDir): for BPE the round state IS
-    // the merge table (tiny), not the corpus-scale vocab — a restarted
-    // run reads the highest complete merge snapshot and REPLAYS those
-    // merges onto the fresh char-split vocabulary as a chain of native
-    // bpe_merge_pair calls (the bpeEncoded compilation pattern: one
-    // fused projection, a single corpus pass), then continues training
-    // from step k. Replay is exact because each merge is a pure
-    // function of the symbol arrays and the stored (a, b) constants.
-    val priorMerges = Checkpoints.latestRound(s, "bpe_merges")
-      .map(_._2.select("step", "pair_a", "pair_b", "pair_count")
-        .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1))
-      .getOrElse(Seq.empty)
-    if (priorMerges.nonEmpty) {
-      merges ++= priorMerges
-      step = priorMerges.size
-      vocab = Checkpoints.materialize(priorMerges.foldLeft(vocab) {
-        case (v, (_, a, b, _)) => v.select(
-          graft.functions.BpeMergeExpression
-            .bpe_merge_pair(col("syms"), a, b).as("syms"), col("cnt"))
-      })
+      .as[(String, Long)].collect()
+  }
+
+  /** Spark's order for strings (UTF8_BINARY: unsigned UTF-8 bytes, which
+    * is code-point order — not Java's UTF-16 `String` order). */
+  private val sparkStringOrder: Ordering[UTF8String] =
+    Ordering.fromLessThan(_.binaryCompare(_) < 0)
+
+  /** The trainer: one [[vocabulary]] fetch, then every step on the
+    * driver. Words split into characters the way Spark's `length`/
+    * `substr` count them (UTF8String chars = code points); each step
+    * counts every adjacent pair weighted by word frequency (an exact
+    * `addExact` sum — an overflow fails as ANSI `sum` does), takes the
+    * argmax under (count desc, a asc, b asc) in Spark's binary string
+    * order, and applies [[graft.functions.BpeMergeUtil.merge]] — the
+    * function the `bpe_merge_pair` expression evaluates — to every
+    * word. Stops early when no word has two symbols left.
+    *
+    * Driver memory: the vocabulary's symbol arrays (≤ its total
+    * character count) plus one step's pair counts (no more entries than
+    * symbols). */
+  private[graft] def trainBpe(s: SparkSession, dir: String,
+                              nMerges: Int): Seq[(Int, String, String, Long)] = {
+    val vocab = vocabulary(s, dir)
+    val syms: Array[ArrayData] = vocab.map { case (w, _) =>
+      val u = UTF8String.fromString(w)
+      new GenericArrayData(Array.tabulate[Any](u.numChars)(i => u.substring(i, i + 1)))
     }
-    def snapshotMerges(): Unit =
-      Checkpoints.saveRound(
-        merges.toSeq.toDF("step", "pair_a", "pair_b", "pair_count"),
-        "bpe_merges", step)
-    while (step < nMerges && !exhausted) {
-      val top = vocab.filter(size(col("syms")) >= 2)
-        .select(explode(transform(
-          sequence(lit(1), size(col("syms")) - 1),
-          i => struct(element_at(col("syms"), i).as("a"),
-            element_at(col("syms"), i + 1).as("b")))).as("p"),
-          col("cnt"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("cnt")).as("pc"))
-        .orderBy(desc("pc"), asc("a"), asc("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
+    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    var exhausted = false
+    while (merges.size < nMerges && !exhausted) {
+      val pcs = scala.collection.mutable.HashMap[(UTF8String, UTF8String), Long]()
+      for (k <- syms.indices; i <- 0 until syms(k).numElements() - 1) {
+        val p = (syms(k).getUTF8String(i), syms(k).getUTF8String(i + 1))
+        pcs(p) = Math.addExact(pcs.getOrElse(p, 0L), vocab(k)._2)
+      }
+      if (pcs.isEmpty) exhausted = true
       else {
-        val (a, b, pc) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2))
-        merges += ((step, a, b, pc))
-        val merged = Checkpoints.materialize(vocab.select(
-          graft.functions.BpeMergeExpression
-            .bpe_merge_pair(col("syms"), a, b).as("syms"),
-          col("cnt")))
-        // the merge step is materialized; last step's round is consumed
-        Checkpoints.dropRound(vocab)
-        vocab = merged
-        step += 1
-        snapshotMerges()
+        val ((a, b), pc) = pcs.minBy { case ((a, b), pc) => (-pc, a, b) }(
+          Ordering.Tuple3(Ordering.Long, sparkStringOrder, sparkStringOrder))
+        merges += ((merges.size, a.toString, b.toString, pc))
+        val ab = UTF8String.concat(a, b)
+        for (k <- syms.indices)
+          syms(k) = graft.functions.BpeMergeUtil.merge(syms(k), a, b, ab)
       }
     }
-    // the merge table is driver-side; no one reads the final vocab round
-    Checkpoints.dropRound(vocab)
-    Checkpoints.clearRounds(s, "bpe_merges")
     merges.toSeq
   }
 
@@ -1426,9 +1409,7 @@ object TextAnalysis {
     * broadcast constant, the corpus never moves. */
   private def bpeEncoded(s: SparkSession, dir: String,
                          nMerges: Int): DataFrame = {
-    val pairs = bpeCache
-      .computeIfAbsent((dir, nMerges), _ => trainBpe(s, dir, nMerges))
-      .map(m => (m._2, m._3))
+    val pairs = bpeMerges(s, dir, nMerges).map(m => (m._2, m._3))
     val words = Tables.documents(s, dir)
       .select(col("doc_id"), explode(toks).as("w0"))
       .select(col("doc_id"), lower(col("w0")).as("word"))
@@ -1538,17 +1519,16 @@ object TextAnalysis {
     * word-frequency table, lex tie-break), the merge count is the
     * requested constant on this corpus, and the merge table must never
     * repeat a pair (symbols are never split, so a consumed adjacency
-    * cannot re-form — a repeat means the merge step is broken). */
+    * cannot re-form — a repeat means the merge step is broken). The
+    * merge table is on the driver, so the row is computed there. */
   def bpeMergeGate(s: SparkSession, dir: String,
                    nMerges: Int = 20): DataFrame = {
-    val m = bpeTrainMerges(s, dir, nMerges)
-    m.agg(
-      min(when(col("step") === 0, col("pair_a"))).as("step0_a"),
-      min(when(col("step") === 0, col("pair_b"))).as("step0_b"),
-      min(when(col("step") === 0, col("pair_count"))).as("step0_count"),
-      count(lit(1)).cast("int").as("n_merges"),
-      (count(lit(1)) === countDistinct(col("pair_a"), col("pair_b")))
-        .cast("int").as("distinct_ok"))
+    import s.implicits._
+    val m = bpeMerges(s, dir, nMerges)
+    val step0 = m.find(_._1 == 0)
+    Seq((step0.map(_._2), step0.map(_._3), step0.map(_._4), m.size,
+      if (m.map(r => (r._2, r._3)).distinct.size == m.size) 1 else 0))
+      .toDF("step0_a", "step0_b", "step0_count", "n_merges", "distinct_ok")
   }
 
   // ---- Unigram-LM tokenizer trainer (Kudo 2018 — the SentencePiece
@@ -1576,61 +1556,53 @@ object TextAnalysis {
     * cost onto a sentinel cannot wrap. */
   private val UnigramInf = 1000000000000000L // 1e15
 
-  /** Viterbi segmentation of one word under a literal (piece → cost
-    * micros) map — per-row column math, no UDF: a forward DP over the
-    * word's positions (each node keeps best cost + backpointer; window
-    * bounded by [[UnigramMaxPieceLen]], ties resolve to (min cost, min
-    * start) via struct array_min — deterministic), then a backward walk
-    * collecting the winning pieces. Returns struct(cost: long, pieces:
-    * array<string>); an unsegmentable word (possible only if the
-    * inventory lost a character) yields cost ≥ sentinel and EMPTY
-    * pieces — the coverage gate's trigger. try_element_at: ANSI mode
-    * makes plain element_at throw on a missing map key. */
-  private[graft] def unigramSegExpr(word: org.apache.spark.sql.Column,
-                                    costMap: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    val L = UnigramMaxPieceLen
-    val inf = lit(UnigramInf)
-    letCol(length(word)) { n =>
-      letCol(aggregate(
-        sequence(lit(2), n + 1),
-        array(struct(lit(0L).as("c"), lit(0).as("bp"))),
-        (acc, i) => concat(acc, array(
-          letCol(filter(
-            transform(sequence(greatest(lit(1), i - L), i - 1), j =>
-              struct(
-                (element_at(acc, j).getField("c") +
-                  coalesce(try_element_at(costMap, word.substr(j, i - j)),
-                    inf)).as("c"),
-                j.as("bp"))),
-            s => s.getField("c") < inf)) { cands =>
-            when(size(cands) > 0, array_min(cands))
-              .otherwise(struct(inf.as("c"), lit(0).as("bp")))
-          })))) { best =>
-        letCol(aggregate(
-          sequence(lit(1), n),
-          struct((n + 1).as("pos"), typedlit(Seq.empty[String]).as("ps")),
-          (acc, _) => when(acc.getField("pos") > 1,
-            letCol(element_at(best, acc.getField("pos"))) { node =>
-              struct(node.getField("bp").as("pos"),
-                concat(acc.getField("ps"), array(word.substr(
-                  node.getField("bp"),
-                  acc.getField("pos") - node.getField("bp")))).as("ps"))
-            }).otherwise(acc))) { walked =>
-          struct(
-            element_at(best, n + 1).getField("c").as("cost"),
-            when(walked.getField("pos") === 1,
-              reverse(walked.getField("ps")))
-              .otherwise(typedlit(Seq.empty[String])).as("pieces"))
-        }
+  /** Viterbi segmentation of one word under a (piece → cost micros)
+    * map — the one segmenter, for training and encoding alike. A
+    * forward DP over the word's character boundaries (characters as
+    * Spark's `length`/`substr` count them: code points), each node
+    * keeping its best cost and backpointer; the window is bounded by
+    * [[UnigramMaxPieceLen]], a candidate counts only below the
+    * [[UnigramInf]] sentinel, and ties resolve to (min cost, min start).
+    * Then a backward walk collects the winning pieces. Returns (cost,
+    * pieces); an unsegmentable word (possible only if the inventory
+    * lost a character) yields the sentinel cost and EMPTY pieces — the
+    * coverage gate's trigger. */
+  private[graft] def unigramSegment(word: String,
+                                    costs: Map[String, Long]): (Long, Seq[String]) = {
+    val at = charBounds(word)
+    val n = at.length - 1
+    val cost = Array.fill(n + 1)(UnigramInf)
+    val from = Array.fill(n + 1)(-1)
+    cost(0) = 0L
+    for (i <- 1 to n; j <- math.max(0, i - UnigramMaxPieceLen) until i)
+      costs.get(word.substring(at(j), at(i))).foreach { pc =>
+        val c = Math.addExact(cost(j), pc)
+        if (c < cost(i)) { cost(i) = c; from(i) = j }
       }
+    if (from(n) < 0) (cost(n), Seq.empty)
+    else {
+      val pieces = List.newBuilder[String]
+      var pos = n
+      while (pos > 0) {
+        pieces += word.substring(at(from(pos)), at(pos))
+        pos = from(pos)
+      }
+      (cost(n), pieces.result().reverse)
     }
   }
+
+  private def charCount(p: String): Int = p.codePointCount(0, p.length)
+
+  /** UTF-16 offsets of a word's character boundaries, 0 and
+    * `w.length` included — characters as Spark's `length`/`substr`
+    * count them (code points). */
+  private def charBounds(w: String): Array[Int] =
+    (0 to charCount(w)).map(w.offsetByCodePoints(0, _)).toArray
 
   /** (piece → cost micros) from usage counts: add-1 in count space (the
     * lang-ID NB convention — keeps zero-usage pieces alive at a steep
     * but finite cost), integer-millionths ln flooring. Costs are MODEL
-    * metadata compiled into the plan as a literal — never hashed. */
+    * metadata — never hashed. */
   private def unigramCosts(counts: Seq[(String, Long)]): Map[String, Long] = {
     val total = counts.map(_._2).sum
     val v = counts.size.toLong
@@ -1640,12 +1612,24 @@ object TextAnalysis {
     }.toMap
   }
 
-  // (dir, target) → (final (piece, cnt, cost) rows,
-  //                  per-round stats (round, n_pieces, improved),
-  //                  coverage flag) — the bpeCache pattern: training is
-  // deterministic and the pieces query + gate share one run
+  /** A trained unigram model: the final (piece, cnt, cost_micros) rows,
+    * per-round stats (round, n_pieces, improved), the coverage flag, and
+    * every vocabulary word's Viterbi segmentation under the final
+    * costs (the encoder's lookup table). */
+  private[graft] case class UnigramModel(
+      pieces: Seq[(String, Long, Long)], stats: Seq[(Int, Int, Int)],
+      coverage: Int, segmented: Seq[(String, Seq[String])])
+
+  // (dir, target) → trained model — the bpeCache pattern: training is
+  // deterministic and the pieces query, the gate and the encoders share
+  // one run
   private val unigramCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), (Seq[(String, Long, Long)], Seq[(Int, Int, Int)], Int)]()
+    (String, Int), UnigramModel]()
+
+  private def unigramModel(s: SparkSession, dir: String,
+                           vocabTarget: Int): UnigramModel =
+    unigramCache.computeIfAbsent((dir, vocabTarget),
+      _ => trainUnigram(s, dir, vocabTarget))
 
   /** The trained unigram piece inventory: (piece, cnt — final-EM usage
     * count, cost_micros). Rows-only (ANSI SQL cannot re-run EM);
@@ -1653,25 +1637,23 @@ object TextAnalysis {
   def unigramTrainPieces(s: SparkSession, dir: String,
                          vocabTarget: Int = UnigramVocabTarget): DataFrame = {
     import s.implicits._
-    unigramCache.computeIfAbsent((dir, vocabTarget),
-      _ => trainUnigram(s, dir, vocabTarget))
-      ._1.toDF("piece", "cnt", "cost_micros").orderBy("piece")
+    unigramModel(s, dir, vocabTarget).pieces
+      .toDF("piece", "cnt", "cost_micros").orderBy("piece")
   }
 
-  /** The trainer. Scale shape mirrors [[trainBpe]]: ONE corpus-scale
-    * aggregation collapses the corpus to the (word, cnt) vocabulary;
-    * everything after runs on that vocabulary-bounded table. Per EM
-    * step: one segmentation pass (the Viterbi expression against the
-    * literal cost map — scan-fused per-row math) + one piece-count
-    * aggregation + one scalar cost aggregate; the winning counts are
-    * model metadata (≤ seed-cap + alphabet rows) collected like the
-    * k-means codebook. Pruning drops the lowest-usage multi-char
-    * pieces per round until the inventory reaches the target — chars
-    * are never pruned, so every word stays segmentable (the coverage
-    * invariant). Resume store: the round state IS the (piece, count)
-    * table (tiny); a restarted run reloads the highest complete round
-    * snapshot and continues — the [[trainBpe]] discipline (a resumed
-    * run's gate covers the remaining rounds; the MODEL is identical).
+  /** The trainer: ONE [[vocabulary]] fetch, then seeding, EM and
+    * pruning on the driver over that dictionary (Kudo 2018 trains on
+    * exactly this table). Seeds are every ≤[[UnigramMaxPieceLen]]-char
+    * substring of every word, weighted by word count: all single
+    * characters plus the top [[UnigramSeedCap]] multi-char pieces by
+    * (count desc, piece asc in Spark's binary order). Each EM step
+    * segments every word with [[unigramSegment]] and re-estimates the
+    * costs from the usage counts. Each round then drops the
+    * lowest-usage multi-char pieces ((count, piece) ascending, `String`
+    * order) until the inventory reaches the target — characters (code
+    * points) are never pruned, so every word stays segmentable (the
+    * coverage invariant). Every sum is `addExact`/`multiplyExact`, so an
+    * overflow fails as ANSI Spark's `sum` does.
     *
     * Hard-EM monotonicity WITHIN a round (same inventory): the M-step
     * re-estimates costs from the Viterbi counts, the next E-step can
@@ -1680,38 +1662,33 @@ object TextAnalysis {
     * 1-micro cost flooring (slack: one micro per emitted piece, ≤ the
     * corpus token-occurrence count — applied as an integer bound).
     * ACROSS rounds the cost may legitimately rise (pruning removes
-    * options), so rounds are not compared to each other. */
+    * options), so rounds are not compared to each other.
+    *
+    * Driver memory: the vocabulary, its seed-substring counts (≤
+    * [[UnigramMaxPieceLen]] per character), and an inventory of at most
+    * [[UnigramSeedCap]] + alphabet pieces. */
   private[graft] def trainUnigram(s: SparkSession, dir: String,
-                                  vocabTarget: Int)
-      : (Seq[(String, Long, Long)], Seq[(Int, Int, Int)], Int) = {
-    import s.implicits._
-    val L = UnigramMaxPieceLen
-    val words = Checkpoints.scratch(
-      WordCount.tokens(Tables.documents(s, dir), "text")
-        .select(lower(col("word")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("cnt")))
-    // substring seed: every ≤L-gram of every vocab word, weighted
-    val subs = words.select(col("cnt"), explode(flatten(
-        transform(sequence(lit(1), length(col("word"))), i =>
-          transform(sequence(lit(1),
-              least(lit(L), length(col("word")) - i + 1)),
-            l => col("word").substr(i, l))))).as("piece"))
-      .groupBy("piece").agg(sum(col("cnt")).as("c"))
-      .localCheckpoint(true)
-    val chars = subs.filter(length(col("piece")) === 1)
-      .as[(String, Long)].collect().toSeq.sortBy(_._1)
-    val multis = subs.filter(length(col("piece")) > 1)
-      .orderBy(desc("c"), asc("piece")).limit(UnigramSeedCap)
-      .as[(String, Long)].collect().toSeq
-    var pieces: Seq[(String, Long)] = chars ++ multis
-    var round = 0
-    Checkpoints.latestRound(s, "unigram_pieces").foreach { case (r, df) =>
-      pieces = df.select("piece", "c").as[(String, Long)].collect().toSeq
-      round = r + 1
+                                  vocabTarget: Int): UnigramModel = {
+    val vocab = vocabulary(s, dir)
+    val subs = scala.collection.mutable.HashMap[String, Long]()
+    for ((w, cnt) <- vocab) {
+      val at = charBounds(w)
+      val n = at.length - 1
+      for (i <- 0 until n; l <- 1 to math.min(UnigramMaxPieceLen, n - i)) {
+        val p = w.substring(at(i), at(i + l))
+        subs(p) = Math.addExact(subs.getOrElse(p, 0L), cnt)
+      }
     }
+    val (chars, longer) = subs.toSeq.partition(p => charCount(p._1) == 1)
+    val multis = longer
+      .sortBy { case (p, c) => (-c, UTF8String.fromString(p)) }(
+        Ordering.Tuple2(Ordering.Long, sparkStringOrder))
+      .take(UnigramSeedCap)
+    var pieces: Seq[(String, Long)] = chars.sortBy(_._1) ++ multis
     val target = math.max(vocabTarget, chars.size)
     val stats = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
     var coverage = 1
+    var round = 0
     var done = pieces.isEmpty
     if (done) stats += ((0, 0, 1))
     while (!done) {
@@ -1721,40 +1698,31 @@ object TextAnalysis {
       var slack = 0L
       var improved = 1
       for (_ <- 1 to UnigramEmPerRound) {
-        val seg = words.withColumn("seg",
-          unigramSegExpr(col("word"), typedlit(costs)))
-          .select(col("cnt"), col("seg.cost").as("cost"),
-            col("seg.pieces").as("pieces"))
-          .localCheckpoint(true)
         // the cost sum counts SEGMENTABLE words only: an unsegmentable
         // word carries the ~1e15 sentinel, and summing sentinels over a
         // vocabulary overflows int64 (coverage_ok already flags the
         // unsegmentable case — the cost total is only meaningful for
         // the covered corpus)
-        val agg = seg.agg(
-          coalesce(sum(when(size(col("pieces")) > 0,
-            col("cost") * col("cnt")).otherwise(lit(0L))), lit(0L)),
-          coalesce(sum(size(col("pieces")) * col("cnt")), lit(0L)),
-          coalesce(min(when(size(col("pieces")) > 0, 1).otherwise(0)),
-            lit(1))).head()
-        val stepCost = agg.getLong(0)
-        coverage = math.min(coverage, agg.getInt(2))
+        var stepCost = 0L
+        var emitted = 0L
+        val used = scala.collection.mutable.HashMap[String, Long]()
+        for ((w, cnt) <- vocab) {
+          val (cost, ps) = unigramSegment(w, costs)
+          if (ps.nonEmpty)
+            stepCost = Math.addExact(stepCost, Math.multiplyExact(cost, cnt))
+          else coverage = 0
+          emitted = Math.addExact(emitted, Math.multiplyExact(ps.size.toLong, cnt))
+          ps.foreach(p => used(p) = Math.addExact(used.getOrElse(p, 0L), cnt))
+        }
         if (stepCost > prevStepCost + slack) improved = 0
         prevStepCost = stepCost
-        slack = agg.getLong(1) // 1 micro per emitted piece (flooring)
-        val usedMap = seg
-          .select(explode(col("pieces")).as("piece"), col("cnt"))
-          .groupBy("piece").agg(sum(col("cnt")).as("c"))
-          .as[(String, Long)].collect().toMap
-        lastCounts = pieces.map { case (p, _) =>
-          p -> usedMap.getOrElse(p, 0L) }
+        slack = emitted // 1 micro per emitted piece (flooring)
+        lastCounts = pieces.map { case (p, _) => p -> used.getOrElse(p, 0L) }
         costs = unigramCosts(lastCounts)
       }
       stats += ((round, pieces.size, improved))
       pieces = lastCounts
-      Checkpoints.saveRound(pieces.toDF("piece", "c"),
-        "unigram_pieces", round)
-      val prunable = pieces.filter(_._1.length > 1)
+      val prunable = pieces.filter(p => charCount(p._1) > 1)
       if (pieces.size <= target || prunable.isEmpty) done = true
       else {
         val dropN = math.min(pieces.size - target, math.max(1,
@@ -1765,47 +1733,29 @@ object TextAnalysis {
       }
       round += 1
     }
-    Checkpoints.clearRounds(s, "unigram_pieces")
     val finalCosts = unigramCosts(pieces)
-    (pieces.map { case (p, c) => (p, c, finalCosts(p)) }.sortBy(_._1),
-      stats.toSeq, coverage)
+    UnigramModel(
+      pieces.map { case (p, c) => (p, c, finalCosts(p)) }.sortBy(_._1),
+      stats.toSeq, coverage,
+      vocab.toSeq.map { case (w, _) => w -> unigramSegment(w, finalCosts)._2 })
   }
 
   /** Encode side of the unigram tokenizer — the serving path
-    * [[bpeEncoded]] has for BPE: segment every corpus word with the
-    * TRAINED piece inventory's Viterbi (the final cost map compiled
-    * into the plan as a literal; per-row column math, no join, no
-    * shuffle). The trained model is the cached artifact, so encode
-    * never retrains. */
-  // (dir, target) → checkpointed (word, pieces) VOCABULARY segmentation
-  // — the Viterbi DP is the expensive per-row expression, so it runs
-  // once per DISTINCT word (the trainer's own vocabulary-collapse
-  // argument: Heaps' law bounds the vocab, occurrences don't), cached
-  // per JVM like the model itself
-  private val unigramEncCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), DataFrame]()
-
-  private def unigramEncoded(s: SparkSession, dir: String,
-                             vocabTarget: Int): DataFrame = {
-    val words = Tables.documents(s, dir)
+    * [[bpeEncoded]] has for BPE: every corpus word occurrence joins its
+    * word's segmentation under the TRAINED inventory, which the trainer
+    * already computed for its whole vocabulary (the encoder tokenizes
+    * and lowercases the same way, so every occurrence finds its word).
+    * The table ships as a local relation; the model is the cached
+    * artifact, so encode never retrains. */
+  private[graft] def unigramEncoded(s: SparkSession, dir: String,
+                                    vocabTarget: Int): DataFrame = {
+    import s.implicits._
+    val vocabSeg = unigramModel(s, dir, vocabTarget).segmented
+      .toDF("word", "pieces")
+    Tables.documents(s, dir)
       .select(col("doc_id"), explode(toks).as("w0"))
       .select(col("doc_id"), lower(col("w0")).as("word"))
-    val vocabSeg = unigramEncCache.computeIfAbsent((dir, vocabTarget), _ => {
-      val (pieces, _, _) = unigramCache.computeIfAbsent(
-        (dir, vocabTarget), _ => trainUnigram(s, dir, vocabTarget))
-      val costs = pieces.map(p => p._1 -> p._3).toMap
-      val vocab = words.select("word").distinct()
-      Checkpoints.scratch(
-        if (costs.isEmpty)
-          vocab.withColumn("pieces", typedlit(Seq.empty[String]))
-        else vocab
-          .withColumn("seg", unigramSegExpr(col("word"), typedlit(costs)))
-          .select(col("word"), col("seg.pieces").as("pieces")))
-    })
-    // occurrence rows re-attach their word's segmentation through a
-    // vocab-keyed join (AQE broadcasts it at test scale; at corpus
-    // scale it's the standard token-dictionary hash join)
-    words.join(vocabSeg, Seq("word"))
+      .join(vocabSeg, Seq("word"))
       .select("doc_id", "word", "pieces")
   }
 
@@ -1852,7 +1802,7 @@ object TextAnalysis {
     * encode frames whose per-doc counts the encode gates already
     * hash-check (`bpe_encode_gate` / `unigram_encode_gate` are this
     * view's companions); rows-only because the piece counts come from
-    * the learned models. Langs-bounded output; both encodes are
+    * the learned models. Langs-bounded output; both trained models are
     * cached per JVM. */
   def tokenizerFertility(s: SparkSession, dir: String): DataFrame = {
     val langs = Tables.documents(s, dir).select("doc_id", "lang")
@@ -1885,7 +1835,7 @@ object TextAnalysis {
     * into ≥1 piece and at most one piece per character, for BOTH
     * trained tokenizers); ratio_ok — the emitted fertility is exactly
     * round(n_pieces / n_words, 4). Langs-bounded output; reuses the
-    * per-JVM encode caches the view itself fills. */
+    * per-JVM model caches the view itself fills. */
   def tokenizerFertilityGate(s: SparkSession, dir: String): DataFrame = {
     val exact = Tables.documents(s, dir)
       .select(col("lang"), explode(toks).as("w0"))
@@ -1923,14 +1873,14 @@ object TextAnalysis {
   def unigramGate(s: SparkSession, dir: String,
                   vocabTarget: Int = UnigramVocabTarget): DataFrame = {
     import s.implicits._
-    val (pieces, stats, coverage) = unigramCache.computeIfAbsent(
-      (dir, vocabTarget), _ => trainUnigram(s, dir, vocabTarget))
+    val UnigramModel(pieces, stats, coverage, _) =
+      unigramModel(s, dir, vocabTarget)
     val nCharsCorpus = WordCount.tokens(Tables.documents(s, dir), "text")
       .select(explode(transform(
         sequence(lit(1), length(lower(col("word")))),
         i => lower(col("word")).substr(i, lit(1)))).as("ch"))
-      .agg(count_distinct(col("ch"))).head().getLong(0)
-    val nCharPieces = pieces.count(_._1.length == 1).toLong
+      .agg(size(collect_set(col("ch")))).head().getInt(0).toLong
+    val nCharPieces = pieces.count(p => charCount(p._1) == 1).toLong
     Seq((nCharsCorpus,
       if (nCharPieces == nCharsCorpus) 1 else 0,
       coverage,

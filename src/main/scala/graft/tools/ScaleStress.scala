@@ -300,8 +300,9 @@ object ScaleStress {
       // r11 additions: the hybrid fusion (legs bounded by query-term
       // postings + the dense broadcast scan), the all-pairs bitext
       // tier (|en|·|de| cosine — the exact/gate tier; production mines
-      // via 2 ANN probes/doc), and the unigram trainer (vocabulary-
-      // bounded EM — slope should track the vocab aggregation)
+      // via 2 ANN probes/doc), and the unigram trainer (one vocabulary
+      // aggregate and fetch, then driver-side EM over that dictionary —
+      // slope should track the vocab aggregation)
       timed("hybrid_rrf") { Retrieval.hybridRrf(spark, outDir) },
       timed("bitext_mining") { Similarity.mineBitext(spark, outDir) },
       timed("unigram_pieces") {
@@ -319,9 +320,10 @@ object ScaleStress {
       // defaults (r12 ADVICE)
       timed("knn_ivfpq") {
         Similarity.knnIvfPqAuto(emb, emb.filter(col("vec_id") < 10), 5) },
-      // r12: the unigram ENCODE path (per-row Viterbi over the trained
-      // vocab) — train slope is vocab-bounded (unigram_pieces above);
-      // encode should track the corpus scan
+      // r12: the unigram ENCODE path (every word occurrence joins the
+      // trainer's segmentation of its vocabulary, a local relation) —
+      // train slope is vocab-bounded (unigram_pieces above); encode
+      // should track the corpus scan
       timed("unigram_encode") {
         TextAnalysis.unigramEncodeStats(spark, outDir) },
       // r13: the ingest path (batch core of the streaming ANN-index

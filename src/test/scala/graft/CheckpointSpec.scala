@@ -180,50 +180,6 @@ class CheckpointSpec extends AnyFunSuite {
     } finally spark.conf.unset(Checkpoints.ResumeKey)
   }
 
-  test("kill-resume: BPE training resumes from a planted merge round") {
-    // The BPE round state is the merge table itself; a fabricated
-    // control-char merge (impossible to learn from real text) leading
-    // the trained table proves the store was replayed. trainBpe is
-    // called directly to bypass the (dir, nMerges) memo cache.
-    val dir = java.nio.file.Files.createTempDirectory("graft-resumeBPE").toString
-    spark.conf.set(Checkpoints.ResumeKey, dir)
-    try {
-      val planted = Seq((0, "\u0001", "\u0002", 999L))
-        .toDF("step", "pair_a", "pair_b", "pair_count")
-      Checkpoints.saveRound(planted, "bpe_merges", 1)
-      val out = graft.operators.TextAnalysis
-        .trainBpe(spark, "/root/testdata/sf0.001", 3)
-      assert(out.size === 3)
-      assert(out.head === ((0, "\u0001", "\u0002", 999L)),
-        "planted merge not replayed from the store")
-      assert(out.map(_._1) === Seq(0, 1, 2))
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "bpe_merges")),
-        "store not cleared after completion")
-    } finally spark.conf.unset(Checkpoints.ResumeKey)
-  }
-
-  test("kill-resume: unigram training resumes from a planted piece round") {
-    // The unigram round state is the (piece, count) inventory; a
-    // control-char sentinel piece (unseedable from real text, and a
-    // single char so the pruner can never drop it) surviving into the
-    // trained inventory proves the store seeded the run. trainUnigram
-    // is called directly to bypass the (dir, target) memo cache.
-    val dir = java.nio.file.Files.createTempDirectory("graft-resumeUG").toString
-    spark.conf.set(Checkpoints.ResumeKey, dir)
-    try {
-      val planted = Seq(("\u0001", 5L)).toDF("piece", "c")
-      Checkpoints.saveRound(planted, "unigram_pieces", 0)
-      val (pieces, _, _) = graft.operators.TextAnalysis
-        .trainUnigram(spark, "/root/testdata/sf0.001", 200)
-      assert(pieces.map(_._1) === Seq("\u0001"),
-        "planted inventory not replayed from the store")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "unigram_pieces")),
-        "store not cleared after completion")
-    } finally spark.conf.unset(Checkpoints.ResumeKey)
-  }
-
   test("kill-resume: nn-descent resumes from a planted graph round") {
     // The descent's round state is the k-NN graph itself; plant a
     // fabricated final round (sim = -9 is impossible for a cosine, so

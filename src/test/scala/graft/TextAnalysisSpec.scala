@@ -831,9 +831,11 @@ class TextAnalysisSpec extends AnyFunSuite {
     val pieces = TextAnalysis.unigramTrainPieces(spark, dir)
       .as[(String, Long, Long)].collect()
     assert(pieces.nonEmpty)
-    // inventory bounds: piece lengths within the window, target honored
-    assert(pieces.forall(_._1.length <= TextAnalysis.UnigramMaxPieceLen))
-    val nCharPieces = pieces.count(_._1.length == 1)
+    // inventory bounds: piece lengths (in characters, as Spark counts
+    // them: code points) within the window, target honored
+    def chars(p: String) = p.codePointCount(0, p.length)
+    assert(pieces.forall(p => chars(p._1) <= TextAnalysis.UnigramMaxPieceLen))
+    val nCharPieces = pieces.count(p => chars(p._1) == 1)
     assert(pieces.length <=
       math.max(TextAnalysis.UnigramVocabTarget, nCharPieces))
     // every kept piece carries the add-1 cost of its own count under
@@ -844,6 +846,30 @@ class TextAnalysisSpec extends AnyFunSuite {
         math.log((c + 1).toDouble)) * 1e6).toLong
       assert(cost === want, s"cost mismatch for piece '$p'")
     }
+  }
+
+  test("unigram trainer keeps a supplementary-plane character through pruning") {
+    import graft.operators.TextAnalysis
+    // U+1F600 is ONE character to Spark (and to the seeder) but two
+    // UTF-16 units to Java's String.length; a pruner or gate counting
+    // the latter treats it as a prunable multi-char piece. It appears
+    // only inside longer words, so its own usage is low and an
+    // over-eager pruner would drop it — breaking coverage.
+    val text = Seq.fill(3)("abcd bcda cdab dabc").mkString(" ") +
+      " ab😀cd"
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ug-smp").toString
+    Seq((1L, text, "en", "t", text.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    // a target below the alphabet: pruning runs to the character floor
+    val (nChars, charsOk, covOk, monoOk, vocabOk) =
+      TextAnalysis.unigramGate(spark, tmp, vocabTarget = 3)
+        .as[(Long, Int, Int, Int, Int)].head()
+    assert(nChars === 5L)
+    assert((charsOk, covOk, monoOk, vocabOk) === ((1, 1, 1, 1)))
+    val pieces = TextAnalysis.unigramTrainPieces(spark, tmp, vocabTarget = 3)
+      .as[(String, Long, Long)].collect().map(_._1)
+    assert(pieces.sorted === Array("a", "b", "c", "d", "😀"))
   }
 
   test("winnowing: coverage and guaranteed detection of 7-token overlap") {

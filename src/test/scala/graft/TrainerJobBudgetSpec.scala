@@ -1,16 +1,21 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Job budgets of the codebook trainers, counted by a SparkListener.
-  * Training runs on the driver over one fetch of the corpus, so a
-  * fresh `ivfPqIndex` is the key aggregate (2 jobs under AQE), the
-  * training fetch and the index scratch; a registry hit is the key
-  * aggregate alone; the training-contract queries are one seed job
-  * plus one job per iteration. A Lloyd round that goes back to being a
-  * Spark aggregation breaks these. */
+/** Job budgets of the codebook and tokenizer trainers, counted by a
+  * SparkListener. Codebook training runs on the driver over one fetch
+  * of the corpus, so a fresh `ivfPqIndex` is the key aggregate (2 jobs
+  * under AQE), the training fetch and the index scratch; a registry hit
+  * is the key aggregate alone; the training-contract queries are one
+  * seed job plus one job per iteration. The BPE and unigram trainers
+  * run on the driver over one fetch of the (word, cnt) vocabulary,
+  * whatever the number of merge or EM steps: a cold `bpeMergeGate` is
+  * the documents schema read plus that aggregate (2 jobs under AQE),
+  * and a cold `unigramGate` adds its own corpus character-inventory
+  * aggregate (one more schema read and 2 jobs). A Lloyd round, merge
+  * step or EM step that goes back to being a Spark job breaks these. */
 class TrainerJobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -39,6 +44,30 @@ class TrainerJobBudgetSpec extends AnyFunSuite {
       val (_, nHit) = jobsOf(Similarity.ivfPqIndex(emb, 9, residual = residual))
       assert(nHit <= 2, s"registry hit (residual = $residual) ran $nHit jobs")
     }
+  }
+
+  /** sf0.001's documents in a fresh directory: the tokenizer trainers'
+    * per-JVM memo caches are keyed by directory, so each gate trains
+    * cold. */
+  private def freshDocs(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("a cold bpeMergeGate runs <= 3 jobs") {
+    val dir = freshDocs()
+    val (gate, n) = jobsOf(TextAnalysis.bpeMergeGate(spark, dir).collect())
+    assert(gate.length === 1 && gate(0).getInt(3) === 20)
+    assert(n <= 3, s"cold bpeMergeGate ran $n jobs")
+  }
+
+  test("a cold unigramGate runs <= 6 jobs") {
+    val dir = freshDocs()
+    val (gate, n) = jobsOf(TextAnalysis.unigramGate(spark, dir).collect())
+    assert(gate.length === 1 && gate(0).getInt(2) === 1)
+    assert(n <= 6, s"cold unigramGate ran $n jobs")
   }
 
   test("training-stats queries run <= iters + 1 jobs") {
