@@ -1,38 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Checkpoint policy for the iterative Spark operators (connected
-  * components, PageRank, NN-Descent; the BPE and unigram tokenizer
-  * trainers loop on the driver over one vocabulary fetch and take no
-  * rounds here): every round must materialize AND truncate its logical
-  * plan (see Dedup.connectedComponentsStar's scaladoc for the measured
-  * exponential-analysis blowup without it), but WHERE the round lands
-  * is an operability knob:
+/** Round bookkeeping for the iterative Spark operators: the star
+  * closure, PageRank and NN-Descent. Each engine states its round 0,
+  * its step and its `done` predicate; [[rounds]] owns the rest:
   *
-  *   - default: `localCheckpoint(eager)` — executor-local blocks, zero
-  *     extra I/O. The right choice single-node and for short jobs; an
-  *     executor loss mid-run loses blocks whose lineage was truncated,
-  *     so the JOB restarts from scratch. Superseded blocks are reclaimed
-  *     by the ContextCleaner once unreferenced.
-  *   - `spark.graft.checkpointDir=<dfs path>`: reliable
-  *     `Dataset.checkpoint(eager)` — each round persists to the shared
-  *     filesystem, so on a 1000-executor cluster losing an executor (or
-  *     a whole node) resumes from the last round instead of recomputing
-  *     hours of iterations. That durability is the last 100 TB
-  *     operability gap VERDICT r7/r8 flagged; the cost is one DFS
-  *     round-trip per iteration, amortized over iteration work. Nothing
-  *     reclaims reliable round files automatically
-  *     (spark.cleaner.referenceTracking.cleanCheckpoints is off by
-  *     default and best-effort anyway), so the iteration loops call
-  *     [[dropRound]] on each round once it is FULLY consumed — without
-  *     that, a 500-round loop would retain 500 corpus-scale snapshots.
+  *   - Namespace: a run's resume store is `<resumeDir>/<op>-<key>`,
+  *     where the key fingerprints the input and carries every parameter
+  *     that shapes a round, so a restart over another input or other
+  *     parameters never sees this run's rounds. The key is by-name and
+  *     evaluated only when the resume knob is set: the default path runs
+  *     no extra action.
+  *   - Exclusion: of two concurrent runs over one namespace in this JVM
+  *     (the dedup gates' two pair tiers agree exactly at full recall),
+  *     the first owns the store and the other runs store-less — two
+  *     writers on one round path would race.
+  *   - Order: each round is materialized, snapshotted, read by `done`,
+  *     and only then is its predecessor dropped, so `done` may compare
+  *     the two. A resumed snapshot is materialized before the store is
+  *     cleared under it, and the store is cleared when the loop
+  *     finishes, so a stale final round never seeds a later run.
+  *   - Refusal: a run that is not `done` within its `budget` of rounds
+  *     fails a `require`, and a stored round numbered above the budget
+  *     is refused and left in place — a fixed-round engine would
+  *     otherwise return more sweeps than were asked for.
   *
-  * The knob is a runtime conf (not a parameter threaded through every
-  * operator signature) because it is a DEPLOYMENT property: the same
-  * pipeline code runs locally and on the cluster, and results are
-  * byte-identical either way (CheckpointSpec pins that, plus that
-  * superseded round files are actually deleted).
+  * Every round must materialize AND truncate its logical plan (see
+  * Dedup.connectedComponentsStar's scaladoc for the exponential
+  * analysis blowup without it), but WHERE it lands is a deployment
+  * knob: by default `localCheckpoint(eager)` — executor-local blocks,
+  * no extra I/O, reclaimed by the ContextCleaner; an executor loss
+  * restarts the job. `spark.graft.checkpointDir=<dfs path>` makes each
+  * round a reliable `Dataset.checkpoint(eager)` on the shared
+  * filesystem, so a lost executor resumes from the last round instead
+  * of recomputing hours of iterations. Nothing reclaims reliable round
+  * files automatically, so [[rounds]] drops each one once it is
+  * consumed. The knobs are runtime confs, not operator parameters: the
+  * same pipeline code runs locally and on a cluster, with byte-identical
+  * results (CheckpointSpec pins that, and that superseded round files
+  * are deleted).
   */
 object Checkpoints {
 
@@ -75,9 +84,9 @@ object Checkpoints {
     * of the reliable-checkpoint knob. For fan-out dedup inside a single
     * query whose RETURNED lazy plan keeps reading the materialized
     * frame — under the reliable knob such a frame could never be
-    * [[dropRound]]ed (no caller knows when the final consumer is done),
-    * so every invocation would leak corpus-scale DFS files. The
-    * reliable knob exists for ITERATION rounds, where the loop owns the
+    * dropped (no caller knows when the final consumer is done), so
+    * every invocation would leak corpus-scale DFS files. The reliable
+    * knob exists for ITERATION rounds, where the loop owns the
     * lifecycle; scratch materializations keep executor-local blocks the
     * ContextCleaner reclaims (jaccardVerifyPairs made the same call). */
   def scratch(df: DataFrame): DataFrame = df.localCheckpoint(true)
@@ -87,88 +96,119 @@ object Checkpoints {
     * reliable-checkpoint knob survives EXECUTOR loss within one run
     * (its ReliableCheckpointRDD files are only readable by the context
     * that wrote them), while the resume store survives the DRIVER —
-    * each round is snapshotted as plain parquet under
-    * `<resumeDir>/<op>/round-<n>`, and a restarted run picks up from
-    * the highest COMPLETE round (parquet's _SUCCESS commit marker, so
-    * a kill mid-write never yields a partial resume point) instead of
-    * recomputing hours of iterations from round zero. Cost: one
-    * parquet write per round — worth it exactly when a round is
-    * expensive enough that recomputing all of them is worse. Superseded
-    * rounds are dropped as the loop advances; the op's store is cleared
-    * on successful convergence (a stale fixpoint must never seed a
-    * LATER run over different input). */
+    * each round is snapshotted as parquet under
+    * `<resumeDir>/<op>-<key>/round-<n>`, and a restarted run picks up
+    * from the highest complete round instead of recomputing from round
+    * zero. Cost: one parquet write per round — worth it when a round is
+    * expensive enough that recomputing all of them is worse. */
   val ResumeKey = "spark.graft.resumeDir"
 
-  private def resumeRoot(s: org.apache.spark.sql.SparkSession,
-                         op: String): Option[String] =
-    s.conf.getOption(ResumeKey).filter(_.nonEmpty).map(d => s"$d/$op")
+  /** Resume stores (by name) of the round loops running in this JVM. */
+  private val live = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def hadoopFs(s: org.apache.spark.sql.SparkSession,
-                       p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Highest complete round snapshot for `op`, as (round, frame read
-    * from the store), if the resume knob is set and one exists. */
-  def latestRound(s: org.apache.spark.sql.SparkSession,
-                  op: String): Option[(Int, DataFrame)] =
-    resumeRoot(s, op).flatMap { root =>
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = hadoopFs(s, rootPath)
-      if (!fs.exists(rootPath)) None
-      else {
-        val complete = fs.listStatus(rootPath).toSeq
-          .map(_.getPath)
-          .filter(p => p.getName.startsWith("round-") &&
-            fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-          .map(p => p.getName.stripPrefix("round-").toInt -> p)
-        if (complete.isEmpty) None
-        else {
-          val (n, p) = complete.maxBy(_._1)
-          Some(n -> s.read.parquet(p.toString))
-        }
+  /** Run an iterative operator's rounds. `init` is round 0: a plan the
+    * driver materializes, or a frame the engine already materialized
+    * (taken as is). `step(g, n)` plans round `n` from round `n - 1`;
+    * `done(g, n)` is asked of every round the run holds, the first one
+    * included, and the loop stops at the first yes or after `budget`
+    * steps. A `None` key runs store-less. Returns the last round. */
+  def rounds(op: String, key: => Option[String], budget: Int)(
+      init: DataFrame)(step: (DataFrame, Int) => DataFrame)(
+      done: (DataFrame, Int) => Boolean): DataFrame = {
+    val s = init.sparkSession
+    val store = resumeRoot(s).flatMap(_ => key).map(storeName(op, _))
+      .filter(live.add)
+    try {
+      val stored = store.flatMap(completeRounds(s, _).maxByOption(_._1))
+      var (n, g) = stored match {
+        case Some((r, snap)) =>
+          dropRound(init)
+          require(r <= budget, s"resume store ${storePath(s, store.get)} " +
+            s"holds round $r, beyond the $budget rounds $op was asked for")
+          (r, materialize(s.read.parquet(snap.toString)))
+        case None =>
+          val g0 = if (checkpointScan(init).isDefined) init
+                   else materialize(init)
+          store.foreach(saveRound(g0, _, 0))
+          (0, g0)
       }
-    }
-
-  /** Snapshot round `n` of `op` into the resume store (no-op when the
-    * knob is unset) and reclaim the superseded round. Call on a frame
-    * already materialized by [[materialize]] — the write then reads
-    * computed blocks, not lineage. */
-  def saveRound(df: DataFrame, op: String, n: Int): Unit =
-    resumeRoot(df.sparkSession, op).foreach { root =>
-      df.write.mode("overwrite").parquet(s"$root/round-$n")
-      if (n > 0) {
-        val prev = new org.apache.hadoop.fs.Path(s"$root/round-${n - 1}")
-        try { hadoopFs(df.sparkSession, prev).delete(prev, true); () }
-        catch { case _: java.io.IOException => () }
+      var fin = done(g, n)
+      var ran = 0
+      while (!fin && ran < budget) {
+        val next = materialize(step(g, n + 1))
+        n += 1
+        ran += 1
+        store.foreach(saveRound(next, _, n))
+        fin = done(next, n)
+        dropRound(g)
+        g = next
       }
+      require(fin, s"$op was not done after $budget rounds")
+      store.foreach(st => delete(s, storePath(s, st)))
+      g
+    } finally store.foreach(live.remove)
+  }
+
+  /** Materialize a loop's invariant input, run the loop over it, and
+    * drop it once the loop returns; the result must not read it. */
+  def invariant[A](df: DataFrame)(loop: DataFrame => A): A = {
+    val in = materialize(df)
+    val out = loop(in)
+    dropRound(in)
+    out
+  }
+
+  /** Whether a run of `op` over `key` would resume from a stored round. */
+  def resumable(s: SparkSession, op: String, key: String): Boolean =
+    resumeRoot(s).isDefined && completeRounds(s, storeName(op, key)).nonEmpty
+
+  /** The store directory name of `op` over `key`, under the resume dir. */
+  private[graft] def storeName(op: String, key: String): String = s"$op-$key"
+
+  private def resumeRoot(s: SparkSession): Option[String] =
+    s.conf.getOption(ResumeKey).filter(_.nonEmpty)
+
+  private def storePath(s: SparkSession, store: String): String =
+    s"${resumeRoot(s).get}/$store"
+
+  /** The store's complete rounds (parquet's _SUCCESS marker is the
+    * commit, so a kill mid-write never yields a resume point). */
+  private def completeRounds(s: SparkSession,
+                             store: String): Seq[(Int, Path)] = {
+    val root = new Path(storePath(s, store))
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(p => p.getName.startsWith("round-") &&
+        fs.exists(new Path(p, "_SUCCESS")))
+      .map(p => p.getName.stripPrefix("round-").toInt -> p)
+  }
+
+  /** Snapshot round `n` into `store` and delete round `n - 1` (a no-op
+    * while the resume knob is unset). Call on a materialized frame, so
+    * the write reads computed blocks. */
+  private[graft] def saveRound(df: DataFrame, store: String, n: Int): Unit =
+    resumeRoot(df.sparkSession).foreach { dir =>
+      df.write.mode("overwrite").parquet(s"$dir/$store/round-$n")
+      if (n > 0) delete(df.sparkSession, s"$dir/$store/round-${n - 1}")
     }
 
-  /** Clear `op`'s resume store after successful convergence. */
-  def clearRounds(s: org.apache.spark.sql.SparkSession, op: String): Unit =
-    resumeRoot(s, op).foreach { root =>
-      val p = new org.apache.hadoop.fs.Path(root)
-      try { hadoopFs(s, p).delete(p, true); () }
-      catch { case _: java.io.IOException => () }
-    }
+  private def delete(s: SparkSession, path: String): Unit = {
+    val (p, conf) = (new Path(path), s.sparkContext.hadoopConfiguration)
+    try { p.getFileSystem(conf).delete(p, true); () }
+    catch { case _: java.io.IOException => () }
+  }
 
-  /** Best-effort deletion of a superseded round's RELIABLE checkpoint
-    * files. Call ONLY on a frame returned by [[materialize]] and only
-    * once every read of it has completed (the successor round is
-    * materialized and any convergence comparison against it has run) —
-    * the caller owns that ordering because only the loop knows it.
-    * No-op in localCheckpoint mode (ContextCleaner reclaims blocks) and
-    * on frames that aren't a bare checkpoint scan. */
-  def dropRound(df: DataFrame): Unit =
+  private def checkpointScan(df: DataFrame): Option[LogicalRDD] =
     df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          try {
-            p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-            ()
-          } catch { case _: java.io.IOException => () }
-        }
-      case _ => ()
+      case l: LogicalRDD if l.rdd.isCheckpointed => Some(l)
+      case _ => None
     }
+
+  /** Delete a consumed round's RELIABLE checkpoint files. No-op in
+    * localCheckpoint mode (the ContextCleaner reclaims blocks) and on
+    * frames that are not a bare checkpoint scan. */
+  private[graft] def dropRound(df: DataFrame): Unit =
+    checkpointScan(df).flatMap(_.rdd.getCheckpointFile)
+      .foreach(delete(df.sparkSession, _))
 }

@@ -869,10 +869,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), sim.as("sim"))
   }
 
-  /** Resume-store namespaces of the star closures running in this JVM. */
-  private val liveStarStores =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Connected components over an undirected pair graph — the step that
     * turns near-dup PAIRS into duplicate CLUSTERS so a pipeline can keep
     * one representative per cluster (pairs alone can't: {a,b},{b,c} must
@@ -911,7 +907,15 @@ object Dedup {
     * the star steps read the (possibly expensive) pair query once, not
     * once per branch. A cluster deployment sets spark.graft.checkpointDir
     * to make every round a RELIABLE checkpoint for executor-loss
-    * tolerance ([[Checkpoints]]). */
+    * tolerance ([[Checkpoints]]).
+    *
+    * Resuming from a stored round ([[Checkpoints.rounds]]) is sound
+    * from ANY round: large/small-star preserves connectivity, so the
+    * unique fixpoint (the min-rooted star forest) is reachable from
+    * every intermediate edge set. The key is the round-0 audit, which
+    * the fixpoint check needs anyway. Not converging within `maxIter`
+    * rounds exceeds the O(log² n) bound, which indicates a bug, not a
+    * deep graph. */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50)
       : DataFrame = {
     val init = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
@@ -966,56 +970,21 @@ object Dedup {
     // remove passes before tuning inside them).
     def audit(e: DataFrame): (Long, String) =
       Audit.fingerprint(e, Seq("u", "v"))
-    var edges = Checkpoints.materialize(canon(init))
-    var edgeFp = audit(edges)
-    // Resume store (spark.graft.resumeDir): a restarted run seeds from
-    // the highest complete round snapshot instead of recomputing the
-    // loop from the input — sound because large/small-star preserves
-    // connectivity, so the unique fixpoint (min-rooted star forest) is
-    // reachable from ANY intermediate round's edge set. The namespace
-    // is keyed by the input edge set's fingerprint (the round-0 audit
-    // above — no extra action): concurrent closures over different
-    // graphs never share snapshots, and a restart never seeds from
-    // another graph's round. A concurrent closure over the SAME graph
-    // in this JVM (the dedup gates' two pair tiers agree exactly at
-    // full recall) runs store-less: two writers on one round path
-    // would race each other's overwrite. `roundNo` names snapshots
-    // globally across restarts; `iter` only budgets THIS run's rounds.
-    val session = pairs.sparkSession
-    val store = Some(s"components_star-${edgeFp._1}-${edgeFp._2}")
-      .filter(liveStarStores.add)
-    try {
-      val resumed = store.flatMap(Checkpoints.latestRound(session, _))
-      var roundNo = resumed.map(_._1).getOrElse(0)
-      resumed match {
-        case Some((_, snap)) =>
-          Checkpoints.dropRound(edges)
-          edges = Checkpoints.materialize(snap)
-          edgeFp = audit(edges)
-        case None => store.foreach(Checkpoints.saveRound(edges, _, 0))
-      }
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        val next = Checkpoints.materialize(
-          canon(smallStar(canon(largeStar(edges)))))
-        roundNo += 1
-        store.foreach(Checkpoints.saveRound(next, _, roundNo))
-        val nextFp = audit(next)
-        converged = nextFp == edgeFp
-        // the comparison was this round's last read of the old edges
-        Checkpoints.dropRound(edges)
-        edges = next
-        edgeFp = nextFp
-        iter += 1
-      }
-      require(converged,
-        s"connectedComponentsStar did not converge in $maxIter rounds — " +
-          s"O(log² n) bound exceeded, which indicates a bug, not a deep " +
-          s"graph")
-      // success: a stale fixpoint must never seed a later run's resume
-      store.foreach(Checkpoints.clearRounds(session, _))
-    } finally store.foreach(liveStarStores.remove)
+    val edges0 = Checkpoints.materialize(canon(init))
+    val fp0 = audit(edges0)
+    // Fixpoint = this round's audit equals the previous round's. The
+    // round-0 audit above is taken once: it keys the resume store and
+    // is the first comparison's baseline.
+    var last = Option.empty[(Long, String)]
+    val edges = Checkpoints.rounds("components_star",
+        Some(s"${fp0._1}-${fp0._2}"), maxIter)(edges0) { (e, _) =>
+      canon(smallStar(canon(largeStar(e))))
+    } { (e, _) =>
+      val fp = if (e eq edges0) fp0 else audit(e)
+      val fixed = last.contains(fp)
+      last = Some(fp)
+      fixed
+    }
     // fixpoint edges are (member, root) stars; roots label themselves
     edges.select(col("u").as("doc_id"), col("v").as("comp"))
       .union(edges.select(col("v").as("doc_id"), col("v").as("comp"))

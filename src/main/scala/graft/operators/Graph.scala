@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.gates.Audit
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -59,51 +60,49 @@ object Graph {
     *
     *   contrib(v) = sum over in-edges (u,v) of  rank(u) DIV outdeg(u)
     *   rank'(v)   = (100-damp)*scale DIV 100  +  (damp * contrib(v)) DIV 100
+    *
+    * Resuming from a stored sweep ([[Checkpoints.rounds]]) is sound
+    * because the update is a pure function of (edge list, round-k
+    * ranks): the remaining sweeps reproduce the uninterrupted run's
+    * ranks exactly. Round k does not depend on `iters`, so the key
+    * ([[pageRankKey]]) leaves it out: a run may continue a killed
+    * run's rounds whatever its `iters`, and refuses a stored round
+    * beyond its own `iters`.
     */
   def pageRank(edges: DataFrame, iters: Int, scale: Long = Scale,
                damp: Long = 85L): DataFrame = {
     require(iters >= 0 && damp >= 0 && damp <= 100)
-    // one shuffle of the big side, ever; partitioning survives checkpoint
-    val e = Checkpoints.materialize(edges.repartition(col("src")))
     val base = (100L - damp) * scale / 100L
-    // Resume store (spark.graft.resumeDir): each sweep's rank table
-    // snapshots as round-<n>, and a restarted run continues from the
-    // highest complete sweep — sound because the fixed-point integer
-    // update is a pure function of (edge list, round-k ranks), so the
-    // remaining sweeps reproduce the uninterrupted run's ranks exactly.
-    val session = edges.sparkSession
-    val resumed = Checkpoints.latestRound(session, "pagerank")
-    var roundNo = resumed.map(_._1).getOrElse(0)
-    // outdeg rides inside the rank table: one join per sweep instead of
-    // a ranks-deg join plus a deg-contrib join
-    var ranks = Checkpoints.materialize(resumed.map(_._2).getOrElse(
-      e.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("outdeg"))
-        .withColumn("pr", lit(scale))))
-    if (resumed.isEmpty) Checkpoints.saveRound(ranks, "pagerank", 0)
-    var i = roundNo
-    while (i < iters) {
-      val give = ranks
-        .select(col("node").as("src"), expr("pr DIV outdeg").as("give"))
-      val contrib = e.join(give, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum("give").as("contrib"))
-      val stepped = Checkpoints.materialize(ranks.drop("pr")
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"), col("outdeg"),
-          (lit(base) +
-            expr(s"($damp * coalesce(contrib, CAST(0 AS BIGINT))) DIV 100"))
-            .as("pr")))
-      // stepped is materialized; the old rank round is fully consumed
-      Checkpoints.dropRound(ranks)
-      ranks = stepped
-      i += 1
-      Checkpoints.saveRound(ranks, "pagerank", i)
-    }
-    // the result only reads the final rank round; the edge round is done
-    Checkpoints.dropRound(e)
-    Checkpoints.clearRounds(session, "pagerank")
-    ranks.select("node", "pr")
+    // one shuffle of the big side, ever; partitioning survives checkpoint
+    Checkpoints.invariant(edges.repartition(col("src"))) { e =>
+      // outdeg rides inside the rank table: one join per sweep instead
+      // of a ranks-deg join plus a deg-contrib join
+      Checkpoints.rounds("pagerank", Some(pageRankKey(e, scale, damp)),
+          iters)(
+        e.groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("outdeg"))
+          .withColumn("pr", lit(scale))) { (ranks, _) =>
+        val give = ranks
+          .select(col("node").as("src"), expr("pr DIV outdeg").as("give"))
+        val contrib = e.join(give, "src")
+          .groupBy(col("dst").as("node"))
+          .agg(sum("give").as("contrib"))
+        ranks.drop("pr")
+          .join(contrib, Seq("node"), "left")
+          .select(col("node"), col("outdeg"),
+            (lit(base) +
+              expr(s"($damp * coalesce(contrib, CAST(0 AS BIGINT))) DIV 100"))
+              .as("pr"))
+      }((_, n) => n >= iters)
+    }.select("node", "pr")
+  }
+
+  /** [[pageRank]]'s resume key: the edge list's content fingerprint and
+    * the two parameters a sweep's arithmetic reads. */
+  private[graft] def pageRankKey(edges: DataFrame, scale: Long = Scale,
+                                 damp: Long = 85L): String = {
+    val (n, h) = Audit.fingerprint(edges, Seq("src", "dst"))
+    s"$n-$h-$scale-$damp"
   }
 
   /** Gated query: top-k nodes of the customer<->supplier graph by rank

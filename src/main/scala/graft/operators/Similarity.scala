@@ -1533,32 +1533,31 @@ object Similarity {
     * [[nndescentAutoRho]] resolves it to the measured-best default
     * (1.0 everywhere since the r16 paired cold experiment); an
     * explicit positive ρ is honored verbatim. */
-  /** Resume-store namespace for ONE descent build: the corpus
-    * fingerprint plus every parameter that shapes a round's content
-    * (kb — the over-build width the rounds actually hold — iters,
-    * init bucketing, seed, ρ). The op name IS the store directory, so
-    * two differently-parameterized builds (the gated full-corpus
-    * build, [[knnGraphAppend]]'s base build over a different corpus,
-    * a stress build at another kb) can never resume from — and then
-    * registry-cache — each other's rounds after a driver restart
-    * (CheckpointSpec pins that a foreign build's round is ignored). */
-  private def nndescentOp(fp: (Long, String), kb: Int, iters: Int,
-                          initRounds: Int, bucketSize: Int, seed: Long,
-                          rho: Double): String =
-    s"nndescent-${fp._1}-${fp._2}-$kb-$iters-$initRounds-$bucketSize-" +
-      s"$seed-$rho"
+  /** Resume key of ONE descent build: the corpus fingerprint plus
+    * every parameter that shapes a round's content (kb — the
+    * over-build width the rounds actually hold — iters, init
+    * bucketing, seed, ρ). Two differently-parameterized builds (the
+    * gated full-corpus build, [[knnGraphAppend]]'s base build over a
+    * different corpus, a stress build at another kb) can never resume
+    * from — and then registry-cache — each other's rounds after a
+    * driver restart (CheckpointSpec pins that a foreign build's round
+    * is ignored). */
+  private def nndescentKey(fp: (Long, String), kb: Int, iters: Int,
+                           initRounds: Int, bucketSize: Int, seed: Long,
+                           rho: Double): String =
+    s"${fp._1}-${fp._2}-$kb-$iters-$initRounds-$bucketSize-$seed-$rho"
 
-  /** The resume-store op name [[knnGraphNnDescent]] would use for this
-    * (corpus, params) — exposed so the kill-resume spec plants rounds
-    * under the exact namespace the operator reads. */
-  private[graft] def nndescentOpFor(emb: DataFrame, k: Int = 10,
+  /** The resume key [[knnGraphNnDescent]] would use for this (corpus,
+    * params) — exposed so the kill-resume spec plants rounds under the
+    * exact store the operator reads. */
+  private[graft] def nndescentKeyFor(emb: DataFrame, k: Int = 10,
       iters: Int = 5, initRounds: Int = 4, bucketSize: Int = 8,
       buildK: Int = 0, seed: Long = 41L,
       rho: Double = RhoAuto): String = {
     val kb = if (buildK > 0) buildK else 2 * k
     val fp = corpusFp(emb, Seq("vec_id", "embedding"))
     val rhoEff = if (rho > 0.0) rho else nndescentAutoRho(fp._1, kb)
-    nndescentOp(fp, kb, iters, initRounds, bucketSize, seed, rhoEff)
+    nndescentKey(fp, kb, iters, initRounds, bucketSize, seed, rhoEff)
   }
 
   def knnGraphNnDescent(emb: DataFrame, k: Int, iters: Int,
@@ -1570,7 +1569,7 @@ object Similarity {
     // corpus size. Resolution is deterministic in (N, kb), so the
     // resolved value — not the sentinel — keys the namespace/registry.
     val rhoEff = if (rho > 0.0) rho else nndescentAutoRho(fp._1, kb)
-    val op = nndescentOp(fp, kb, iters, initRounds, bucketSize, seed,
+    val key = nndescentKey(fp, kb, iters, initRounds, bucketSize, seed,
       rhoEff)
     // a populated resume store FOR THIS build means a restarted driver
     // mid-descent: the store, not the registry, is the source of truth
@@ -1588,13 +1587,13 @@ object Similarity {
     // same descent, so keying on (kb, not k/buildK) shares ONE build
     // between them instead of re-descending per requested width.
     val wide =
-      if (Checkpoints.latestRound(emb.sparkSession, op).isDefined)
+      if (Checkpoints.resumable(emb.sparkSession, "nndescent", key))
         knnGraphNnDescentBuild(emb, kb, iters, initRounds,
-          bucketSize, kb, seed, rhoEff, op)
+          bucketSize, kb, seed, rhoEff, key)
       else nnGraphCache.computeIfAbsent(
         (fp, kb, iters, initRounds, bucketSize, seed, rhoEff),
         _ => knnGraphNnDescentBuild(emb, kb, iters, initRounds,
-          bucketSize, kb, seed, rhoEff, op))
+          bucketSize, kb, seed, rhoEff, key))
     if (kb == k) wide else wide.filter(col("rn") <= k)
   }
 
@@ -1617,8 +1616,7 @@ object Similarity {
   private def knnGraphNnDescentBuild(emb: DataFrame, k: Int, iters: Int,
                                      initRounds: Int, bucketSize: Int,
                                      buildK: Int, seed: Long,
-                                     rho: Double, op: String): DataFrame = {
-    val s = emb.sparkSession
+                                     rho: Double, key: String): DataFrame = {
     val u = Checkpoints.scratch(
       emb.select(col("vec_id"),
         unitVec(toDoubleVec(col("embedding"))).as("v")))
@@ -1629,36 +1627,19 @@ object Similarity {
     if (n < 2) return empty
     val kb = if (buildK > 0) buildK else 2 * k
     val nBuckets = math.max(1L, n / bucketSize)
-    val resume = Checkpoints.latestRound(s, op)
-    // a resumed round is store-backed: materialize off the files before
-    // clearRounds deletes them under a still-lazy result. A snapshot
-    // written before the tried flag existed (or a spec-planted round)
-    // resumes with every entry untried — over-scoring, same results.
-    val g0 = resume.map { r =>
-      val f = if (r._2.columns.contains("tried")) r._2
-              else r._2.withColumn("tried", lit(false))
-      Checkpoints.materialize(f)
-    }.getOrElse {
-      val rounds = (0 until initRounds).map { r =>
-        u.select(col("vec_id"),
-          lit(r).as("r"),
-          pmod(xxhash64(col("vec_id"), lit(seed + r)), lit(nBuckets))
-            .as("bkt"))
-      }.reduce(_ unionAll _)
-      val initPairs = rounds.as("x").join(rounds.as("y"), Seq("r", "bkt"))
-        .filter(col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
-        .distinct()
-      val g = Checkpoints.materialize(nnTopK(kb, nnScore(u, initPairs),
-        empty.withColumn("tried", lit(false))))
-      Checkpoints.saveRound(g, op, 0)
-      g
-    }
-    val startRound = resume.map(_._1).getOrElse(0)
-    val g = nnDescendRounds(u, g0, startRound, iters, kb, rho, seed,
-      Some(op))
-      .select("query_id", "nn_id", "sim", "rn")
-    Checkpoints.clearRounds(s, op)
+    val rounds = (0 until initRounds).map { r =>
+      u.select(col("vec_id"),
+        lit(r).as("r"),
+        pmod(xxhash64(col("vec_id"), lit(seed + r)), lit(nBuckets))
+          .as("bkt"))
+    }.reduce(_ unionAll _)
+    val initPairs = rounds.as("x").join(rounds.as("y"), Seq("r", "bkt"))
+      .filter(col("x.vec_id") < col("y.vec_id"))
+      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
+      .distinct()
+    val g = nnDescendRounds(u, nnTopK(kb, nnScore(u, initPairs),
+      empty.withColumn("tried", lit(false))), iters, kb, rho, seed,
+      Some(key))
     // truncate the over-built graph to the requested k
     if (kb == k) g else g.filter(col("rn") <= k)
   }
@@ -1699,53 +1680,59 @@ object Similarity {
       .select("query_id", "nn_id", "sim", "rn", "tried")
   }
 
-  /** Descent rounds `from`+1..`to` over a MATERIALIZED kb-wide graph
-    * (consumed: superseded rounds are dropped). `op = Some(name)`
-    * snapshots every round into the resume store (the cold-build
-    * path); None runs snapshot-free — the bounded append path, whose
-    * restart story is the stored BASE graph, not round files. */
-  private def nnDescendRounds(u: DataFrame, g0: DataFrame, from: Int,
-                              to: Int, kb: Int, rho: Double, seed: Long,
-                              op: Option[String]): DataFrame = {
-    // Dong's REVERSE SAMPLING (§2.3): B(v) = forward(v) ∪ a ≤kb sample
-    // of reverse(v). Forward lists are ≤ kb by construction; reverse
-    // lists are UNBOUNDED on hub nodes — at 100× stress (200k
-    // near-uniform vectors) unbounded reverse incidence blew Σ|B(v)|²
-    // past 230 GB of spill in one round (twice), because a hub with
-    // in-degree d contributes d² candidate pairs. The round-salted
-    // hash keeps the kept sample rotating, so a hub's dropped reverse
-    // edges get later rounds' chances — the ρ-sampling argument,
-    // applied where it is mandatory rather than optional.
-    //
-    // Dong's NEW/OLD split (§2.3, the local-join optimization): only
-    // meetings involving at least one UNTRIED list entry can produce a
-    // useful pair — a node's kb-th-best sim is NON-DECREASING, so a
-    // pair scored-and-rejected once can never enter later, and
-    // re-meeting two tried edges is provably wasted volume (the
-    // pre-optimization loop rescored every old-old meeting every round
-    // and anti-joined the survivors away). The flag lives IN the list
-    // (`tried` column): an entry activates once — when the ρ draw
-    // admits it — and ρ-skipped entries stay untried for later rounds,
-    // which is exactly where the independent-per-round ρ filter of the
-    // first implementation lost recall (old-old meetings never
-    // retried). Round volume is |activated|·|B| instead of Σ|B|², and
-    // the activated set shrinks as the graph converges.
-    //
-    // BOTH incidence sets — B over the full graph and B over the
-    // activated subset — come out of ONE window pass over the edge
-    // list (r19 ran incidence() twice: two window sorts, two distincts,
-    // then a node-keyed self-join — 4 extra Exchanges per round; at
-    // 100 TB each was an edge-list-scale shuffle). Exactness: the
-    // window's (hash, nb) order is TOTAL per node ((node, nb) unique —
-    // g holds one row per (query_id, nn_id)), and a subset inherits
-    // the superset's order, so the activated subset's row_number
-    // equals the running count of activated rows in the full order.
-    // Per-node sets are collect_set arrays (≤ 2·kb entries — bounded
-    // by construction), so candidate pairs are generated by a local
-    // explode instead of the self-join. Candidate SET identical:
-    // NnDescentEquivalenceSpec pins it against the unfused reference.
-    var g = g0
-    for (i <- (from + 1) to to) {
+  /** `iters` descent rounds over the kb-wide round-0 graph `g0`,
+    * returned as (query_id, nn_id, sim, rn). A `key` resumes and
+    * snapshots the rounds (the cold-build path); None runs store-less
+    * — the bounded append and forget paths, whose restart story is the
+    * stored BASE graph, not round files. Resuming is sound because a
+    * round is a pure function of (corpus, params, round number, the
+    * previous round's graph). */
+  private def nnDescendRounds(u: DataFrame, g0: DataFrame, iters: Int,
+                              kb: Int, rho: Double, seed: Long,
+                              key: Option[String]): DataFrame =
+    Checkpoints.rounds("nndescent", key, iters)(g0) { (prev, i) =>
+      // Dong's REVERSE SAMPLING (§2.3): B(v) = forward(v) ∪ a ≤kb sample
+      // of reverse(v). Forward lists are ≤ kb by construction; reverse
+      // lists are UNBOUNDED on hub nodes — at 100× stress (200k
+      // near-uniform vectors) unbounded reverse incidence blew Σ|B(v)|²
+      // past 230 GB of spill in one round (twice), because a hub with
+      // in-degree d contributes d² candidate pairs. The round-salted
+      // hash keeps the kept sample rotating, so a hub's dropped reverse
+      // edges get later rounds' chances — the ρ-sampling argument,
+      // applied where it is mandatory rather than optional.
+      //
+      // Dong's NEW/OLD split (§2.3, the local-join optimization): only
+      // meetings involving at least one UNTRIED list entry can produce a
+      // useful pair — a node's kb-th-best sim is NON-DECREASING, so a
+      // pair scored-and-rejected once can never enter later, and
+      // re-meeting two tried edges is provably wasted volume (the
+      // pre-optimization loop rescored every old-old meeting every round
+      // and anti-joined the survivors away). The flag lives IN the list
+      // (`tried` column): an entry activates once — when the ρ draw
+      // admits it — and ρ-skipped entries stay untried for later rounds,
+      // which is exactly where the independent-per-round ρ filter of the
+      // first implementation lost recall (old-old meetings never
+      // retried). Round volume is |activated|·|B| instead of Σ|B|², and
+      // the activated set shrinks as the graph converges.
+      //
+      // BOTH incidence sets — B over the full graph and B over the
+      // activated subset — come out of ONE window pass over the edge
+      // list (r19 ran incidence() twice: two window sorts, two distincts,
+      // then a node-keyed self-join — 4 extra Exchanges per round; at
+      // 100 TB each was an edge-list-scale shuffle). Exactness: the
+      // window's (hash, nb) order is TOTAL per node ((node, nb) unique —
+      // g holds one row per (query_id, nn_id)), and a subset inherits
+      // the superset's order, so the activated subset's row_number
+      // equals the running count of activated rows in the full order.
+      // Per-node sets are collect_set arrays (≤ 2·kb entries — bounded
+      // by construction), so candidate pairs are generated by a local
+      // explode instead of the self-join. Candidate SET identical:
+      // NnDescentEquivalenceSpec pins it against the unfused reference.
+      //
+      // A snapshot without the tried flag (a spec-planted round) resumes
+      // with every entry untried — over-scoring, same results.
+      val g = if (prev.columns.contains("tried")) prev
+              else prev.withColumn("tried", lit(false))
       val passNow =
         if (rho >= 1.0) lit(true)
         else pmod(xxhash64(col("query_id"), col("nn_id"),
@@ -1780,14 +1767,9 @@ object Similarity {
       val cur = g.select(least(col("query_id"), col("nn_id")).as("a"),
         greatest(col("query_id"), col("nn_id")).as("b")).distinct()
       val fresh = cand.join(cur, Seq("a", "b"), "left_anti")
-      val prev = g
       val prior = g.withColumn("tried", col("tried") || passNow)
-      g = Checkpoints.materialize(nnTopK(kb, nnScore(u, fresh), prior))
-      op.foreach(Checkpoints.saveRound(g, _, i))
-      Checkpoints.dropRound(prev)
-    }
-    g
-  }
+      nnTopK(kb, nnScore(u, fresh), prior)
+    }((_, n) => n >= iters).select("query_id", "nn_id", "sim", "rn")
 
   /** INCREMENTAL graph maintenance — the "appends just descend into the
     * existing graph" claim as code, the daily-embedding-ingest shape
@@ -1855,12 +1837,9 @@ object Similarity {
     // base entries enter TRIED (their meetings all happened during the
     // base build) — the append rounds activate only the fresh entries,
     // which keeps round volume increment-bounded by construction
-    val g0 = Checkpoints.materialize(
-      nnTopK(kb, nnScore(u, initPairs),
-        baseGraph.withColumn("tried", lit(true))))
-    val g = nnDescendRounds(u, g0, 0, appendIters, kb, 1.0, seed + 900,
-      None)
-    g.select("query_id", "nn_id", "sim", "rn")
+    nnDescendRounds(u, nnTopK(kb, nnScore(u, initPairs),
+        baseGraph.withColumn("tried", lit(true))), appendIters, kb, 1.0,
+      seed + 900, None)
   }
 
   /** Gate for [[knnGraphAppend]] (the [[nndescentGate]] pattern over
@@ -2248,12 +2227,8 @@ object Similarity {
       .select(least(col("x.vec_id"), col("y.vec_id")).as("a"),
         greatest(col("x.vec_id"), col("y.vec_id")).as("b"))
       .distinct()
-    val g0 = Checkpoints.materialize(
-      nnTopK(kb, nnScore(u, initPairs), kept))
-    val repaired = nnDescendRounds(u, g0, 0, repairRounds, kb, 1.0,
-      seed + 1700, None)
-    repaired.filter(col("rn") <= k)
-      .select("query_id", "nn_id", "sim", "rn")
+    nnDescendRounds(u, nnTopK(kb, nnScore(u, initPairs), kept),
+      repairRounds, kb, 1.0, seed + 1700, None).filter(col("rn") <= k)
   }
 
   /** Hash-checked right-to-be-forgotten gate for the vector tier —

@@ -1343,15 +1343,20 @@ object TextAnalysis {
 
   /** The (word, cnt) dictionary both tokenizer trainers start from —
     * the corpus tokens lowercased and counted, in one aggregation and
-    * one fetch. Its size is the number of DISTINCT words (Heaps' law),
-    * not the corpus. */
-  private def vocabulary(s: SparkSession, dir: String): Array[(String, Long)] = {
-    import s.implicits._
-    WordCount.tokens(Tables.documents(s, dir), "text")
-      .select(lower(col("word")).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .as[(String, Long)].collect()
-  }
+    * one fetch per `dir` (memoized like the trained models, so a query
+    * that trains both tokenizers fetches it once). Its size is the
+    * number of DISTINCT words (Heaps' law), not the corpus. */
+  private val vocabCache = new java.util.concurrent.ConcurrentHashMap[
+    String, Array[(String, Long)]]()
+
+  private def vocabulary(s: SparkSession, dir: String): Array[(String, Long)] =
+    vocabCache.computeIfAbsent(dir, _ => {
+      import s.implicits._
+      WordCount.tokens(Tables.documents(s, dir), "text")
+        .select(lower(col("word")).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("cnt"))
+        .as[(String, Long)].collect()
+    })
 
   /** Spark's order for strings (UTF8_BINARY: unsigned UTF-8 bytes, which
     * is code-point order — not Java's UTF-16 `String` order). */

@@ -159,6 +159,100 @@ class CheckpointSpec extends AnyFunSuite {
     } finally spark.conf.unset(Checkpoints.ResumeKey)
   }
 
+  /** The resume store a run reads: the op plus the engine's key. */
+  private def pageRankStore(edges: org.apache.spark.sql.DataFrame) =
+    Checkpoints.storeName("pagerank", Graph.pageRankKey(edges))
+
+  private def nndescentStore(emb: org.apache.spark.sql.DataFrame,
+                             k: Int = 10) =
+    Checkpoints.storeName("nndescent",
+      graft.operators.Similarity.nndescentKeyFor(emb, k = k))
+
+  private def withResumeDir[A](name: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    spark.conf.set(Checkpoints.ResumeKey, dir)
+    try body(dir)
+    finally spark.conf.unset(Checkpoints.ResumeKey)
+  }
+
+  private def exists(dir: String, store: String) =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(dir, store))
+
+  /** Two small strongly connected graphs on disjoint nodes. */
+  private lazy val prA = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+  private lazy val prB = Seq((11L, 12L), (12L, 11L), (12L, 13L), (13L, 11L))
+    .toDF("src", "dst")
+
+  /** A fabricated round: every node ranked `pr`, which only the store
+    * could have produced. */
+  private def sentinel(edges: org.apache.spark.sql.DataFrame, pr: Long) =
+    edges.select($"src".as("node")).distinct()
+      .select($"node", lit(1L).as("outdeg"), lit(pr).as("pr"))
+
+  private def ranks(edges: org.apache.spark.sql.DataFrame) =
+    Graph.pageRank(edges, 5).as[(Long, Long)].collect().sorted
+
+  test("kill-resume: a foreign graph's pageRank round is NOT resumed") {
+    val expB = ranks(prB)
+    withResumeDir("graft-resumePRf") { dir =>
+      Checkpoints.saveRound(sentinel(prA, 7L), pageRankStore(prA), 5)
+      assert(ranks(prB) === expB,
+        "another graph's rank round seeded this run")
+      // the other graph's round is untouched (its own restart may
+      // still need it)
+      assert(exists(dir, pageRankStore(prA)),
+        "another graph's store was cleared")
+    }
+  }
+
+  test("kill-resume: concurrent pageRank calls keep separate stores") {
+    val (expA, expB) = (ranks(prA), ranks(prB))
+    withResumeDir("graft-resumePRpar") { dir =>
+      // each graph's run resumes from its own store, inside
+      // Audit.parallel (the gates' shape)
+      Checkpoints.saveRound(sentinel(prA, 7L), pageRankStore(prA), 5)
+      Checkpoints.saveRound(sentinel(prB, 9L), pageRankStore(prB), 5)
+      val (ra, rb) = graft.gates.Audit.parallel(ranks(prA), ranks(prB))
+      assert(ra.map(_._2).distinct.toSeq === Seq(7L) &&
+        rb.map(_._2).distinct.toSeq === Seq(9L),
+        s"the runs shared a store: ${ra.toSeq} ${rb.toSeq}")
+      assert(!exists(dir, pageRankStore(prA)) &&
+        !exists(dir, pageRankStore(prB)))
+      // the SAME graph twice at once: one run owns the store and
+      // resumes; the other runs store-less and computes the ranks
+      Checkpoints.saveRound(sentinel(prA, 7L), pageRankStore(prA), 5)
+      val (sa, sb) = graft.gates.Audit.parallel(ranks(prA), ranks(prA))
+      assert(Seq(sa, sb).count(_.forall(_._2 == 7L)) === 1 &&
+        Seq(sa, sb).count(_.sameElements(expA)) === 1,
+        s"not exactly one resumed run: ${sa.toSeq} ${sb.toSeq}")
+      assert(!exists(dir, pageRankStore(prA)))
+    }
+  }
+
+  test("kill-resume: a resumed round beyond iters is refused") {
+    // a stored round 6 for a 5-round run would return more sweeps than
+    // asked for: both fixed-round engines refuse it and keep the store
+    withResumeDir("graft-resumeBeyond") { dir =>
+      val store = pageRankStore(prA)
+      Checkpoints.saveRound(sentinel(prA, 7L), store, 6)
+      val e = intercept[IllegalArgumentException] { ranks(prA) }
+      assert(e.getMessage.contains(s"$dir/$store") &&
+        e.getMessage.contains("round 6"), e.getMessage)
+      assert(exists(dir, s"$store/round-6"), "refused store was touched")
+
+      val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      val op = nndescentStore(emb)
+      Checkpoints.saveRound(Seq((7L, 8L, -9.0d, 1))
+        .toDF("query_id", "nn_id", "sim", "rn"), op, 6)
+      val e2 = intercept[IllegalArgumentException] {
+        graft.operators.Similarity.knnGraphNnDescent(emb, 10).collect()
+      }
+      assert(e2.getMessage.contains(s"$dir/$op") &&
+        e2.getMessage.contains("round 6"), e2.getMessage)
+      assert(exists(dir, s"$op/round-6"), "refused store was touched")
+    }
+  }
+
   test("kill-resume: pageRank resumes from a planted rank round") {
     // pageRank has no abort path to simulate a kill with, so exercise
     // the primitive directly: plant a fabricated round-<iters> rank
@@ -171,11 +265,14 @@ class CheckpointSpec extends AnyFunSuite {
     try {
       val planted = Seq((1L, 1L, 111L), (2L, 1L, 222L), (3L, 1L, 333L))
         .toDF("node", "outdeg", "pr")
-      Checkpoints.saveRound(planted, "pagerank", 5)
+      // the store is namespaced per (graph, params): plant under the
+      // exact store this graph's run reads
+      val store = pageRankStore(edges)
+      Checkpoints.saveRound(planted, store, 5)
       val out = Graph.pageRank(edges, 5).as[(Long, Long)].collect().sorted
       assert(out === Array((1L, 111L), (2L, 222L), (3L, 333L)))
       assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "pagerank")),
+        java.nio.file.Paths.get(dir, store)),
         "store not cleared after completion")
     } finally spark.conf.unset(Checkpoints.ResumeKey)
   }
@@ -194,7 +291,7 @@ class CheckpointSpec extends AnyFunSuite {
         .toDF("query_id", "nn_id", "sim", "rn")
       // the store is namespaced per (corpus, params) build — plant
       // under the exact op name the default-parameter build reads
-      val op = graft.operators.Similarity.nndescentOpFor(emb)
+      val op = nndescentStore(emb)
       Checkpoints.saveRound(planted, op, 5)
       val out = graft.operators.Similarity.knnGraphNnDescent(emb, 10)
         .as[(Long, Long, Double, Int)].collect()
@@ -221,7 +318,7 @@ class CheckpointSpec extends AnyFunSuite {
       val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
       val planted = Seq((7L, 8L, -9.0d, 1))
         .toDF("query_id", "nn_id", "sim", "rn")
-      val foreignOp = graft.operators.Similarity.nndescentOpFor(emb, k = 7)
+      val foreignOp = nndescentStore(emb, k = 7)
       Checkpoints.saveRound(planted, foreignOp, 5)
       val out = graft.operators.Similarity.knnGraphNnDescent(emb, 10)
         .filter($"sim" < -1.0).count()

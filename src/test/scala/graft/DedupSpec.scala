@@ -328,8 +328,8 @@ class DedupSpec extends AnyFunSuite {
     // and the default path's resume namespace (round snapshots,
     // registry key, output) is identical to an explicit rho=1.0 build
     val emb = Tables.embeddings(spark, dir)
-    assert(Similarity.nndescentOpFor(emb) ===
-      Similarity.nndescentOpFor(emb, rho = 1.0))
+    assert(Similarity.nndescentKeyFor(emb) ===
+      Similarity.nndescentKeyFor(emb, rho = 1.0))
   }
 
   test("graph append: arrivals descend into the base graph, full-k, gated recall") {

@@ -14,8 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * whatever the number of merge or EM steps: a cold `bpeMergeGate` is
   * the documents schema read plus that aggregate (2 jobs under AQE),
   * and a cold `unigramGate` adds its own corpus character-inventory
-  * aggregate (one more schema read and 2 jobs). A Lloyd round, merge
-  * step or EM step that goes back to being a Spark job breaks these. */
+  * aggregate (one more schema read and 2 jobs). Both trainers share one
+  * vocabulary fetch per directory, so a cold `tokenizerFertilityGate`,
+  * which trains both, fetches it once (19 jobs when each trainer
+  * fetched its own). A Lloyd round, merge step or EM step that goes
+  * back to being a Spark job breaks these. */
 class TrainerJobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -68,6 +71,14 @@ class TrainerJobBudgetSpec extends AnyFunSuite {
     val (gate, n) = jobsOf(TextAnalysis.unigramGate(spark, dir).collect())
     assert(gate.length === 1 && gate(0).getInt(2) === 1)
     assert(n <= 6, s"cold unigramGate ran $n jobs")
+  }
+
+  test("a cold tokenizerFertilityGate runs <= 16 jobs") {
+    val dir = freshDocs()
+    val (gate, n) =
+      jobsOf(TextAnalysis.tokenizerFertilityGate(spark, dir).collect())
+    assert(gate.nonEmpty)
+    assert(n <= 16, s"cold tokenizerFertilityGate ran $n jobs")
   }
 
   test("training-stats queries run <= iters + 1 jobs") {
