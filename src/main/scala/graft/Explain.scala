@@ -10,18 +10,16 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    def usage = s"usage: Explain <query> [sfDir] [show]; known: ${
-      SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"
-    require(args.nonEmpty, usage)
+    require(args.nonEmpty, "usage: Explain <query> [sfDir] [show]")
     val name = args(0)
-    require(SparkEntry.queries.contains(name), s"unknown query '$name'\n$usage")
+    val query = catalog.Catalog.lookup(Seq(name)).head
     val rest = args.drop(1)
     val show = rest.lastOption.contains("show")
     val dirArgs = if (show) rest.dropRight(1) else rest
     val dir = dirArgs.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val df = SparkEntry.queries(name)(spark, dir)
+    val df = query.build(spark, dir)
     println(s"=== $name: optimized plan (pre-execution) ===")
     df.explain("formatted")
     // execute this df's OWN QueryExecution (a write.save() would plan a

@@ -1,18 +1,13 @@
 package graft
 
-import graft.operators._
+import graft.catalog.{Catalog, GateTwin, Oracle, Query}
+import graft.operators.WordCount
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every entry in `queries` has a same-named entry in `oracleSql` (ANSI SQL
-  * run by DuckDB over the same parquet tables) unless the operator is not
-  * SQL-expressible, in which case the driver records a rows-only check.
-  * Column names are aliased identically on both sides (the driver sorts
-  * columns by name before hashing).
-  */
+/** Driver contract — see SURVEY.md §7. The queries are declared once, with
+  * their checks, in [[graft.catalog]]; the three maps here are views of
+  * that catalog. */
 object SparkEntry {
 
   /** Flagship: the reference's word-count job (SURVEY.md §2.1) as top-k
@@ -21,4718 +16,14 @@ object SparkEntry {
     WordCount.topK(
       Tables.documents(spark, "/root/testdata/sf0.001"), "text", 20)
 
-  /** Shared DuckDB SQL fragment: reference-exact tokenization of
-    * documents.text (newline→space, strip Python string.punctuation,
-    * split on runs of spaces, drop whitespace-only tokens). */
-  private val DuckTokens: String =
-    """SELECT unnest(string_split_regex(
-      |         regexp_replace(regexp_replace(text, chr(10), ' ', 'g'),
-      |                        '[!-/:-@\[-`{-~]', '', 'g'),
-      |         ' +')) AS word
-      |FROM documents""".stripMargin
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Catalog.all.map(q => q.name -> q.build).toMap
 
-  /** Temp dirs to delete at JVM exit (single hook, registered lazily).
-    * Deletion must wait for exit: the DataFrames built over these dirs are
-    * lazy and may be re-executed arbitrarily late (best-of-N benching). */
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private lazy val reaperInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach { d =>
-        try {
-          java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        } catch { case _: Throwable => () }
-      }))
+  /** The DuckDB oracle of every query whose check is [[Oracle]]. */
+  val oracleSql: Map[String, String] =
+    Catalog.all.collect { case Query(n, _, Oracle(sql)) => n -> sql }.toMap
 
-  private def reapAtExit(dir: String): Unit = {
-    reaperInstalled
-    tempDirs.add(dir)
-    ()
-  }
-
-  // sf dir → written-once .txt corpus dir for wordcount_textdir
-  private val textDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- reference parity: word count (SURVEY.md §2.1 O1-O7) ---
-    "wordcount_ci" -> ((s, dir) =>
-      WordCount.wordCount(Tables.documents(s, dir), "text", caseSensitive = false)
-        ),
-    "wordcount_cs" -> ((s, dir) =>
-      WordCount.wordCount(Tables.documents(s, dir), "text", caseSensitive = true)
-        ),
-    "wordcount_topk" -> ((s, dir) =>
-      WordCount.topK(Tables.documents(s, dir), "text", 50)),
-    // Reference input format end-to-end (O1 text-dir scan → O7): write the
-    // corpus out as .txt files once, scan the directory back with
-    // Tables.textDir, word-count the lines. Line-splitting preserves the
-    // token multiset (the tokenizer already treats newline as a space), so
-    // the oracle over documents.text checks the whole O1→O7 chain.
-    "wordcount_textdir" -> ((s, dir) => {
-      // one corpus write per (JVM, sf dir), cached: the per-JVM temp path
-      // keeps cross-PROCESS runs (Bench + Verify, parallel CI) isolated —
-      // a fixed path keyed on `dir` alone races, one process's overwrite
-      // deleting files mid-read of the other's lazy scan — while repeat
-      // in-process invocations (Bench best-of-N) reuse the files instead
-      // of rewriting them. Dirs are reaped at JVM exit (the returned
-      // DataFrame is lazy, so deleting any earlier could race a re-scan).
-      val tmp = textDirCache.computeIfAbsent(dir, d => {
-        val t = java.nio.file.Files
-          .createTempDirectory("graft_textdir_").toString
-        reapAtExit(t)
-        Tables.documents(s, d).select("text")
-          .write.mode("overwrite").text(t)
-        t
-      })
-      WordCount.wordCount(Tables.textDir(s, tmp), "line", caseSensitive = false)
-    }),
-    // Hive-style partitioned parquet sink + partition-PRUNED re-scan: the
-    // scan's PartitionFilters eliminate every non-matching lang directory
-    // before any file is opened (asserted in SourcesSpec) — at 100 TB
-    // that's the difference between reading one partition and the corpus.
-    "partitioned_lang_stats" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_partdir_").toString
-      reapAtExit(tmp)
-      Tables.documents(s, dir).select("doc_id", "lang", "text")
-        .write.mode("overwrite").partitionBy("lang").parquet(tmp)
-      s.read.parquet(tmp)
-        .filter(col("lang").isin("en", "es"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).as("n_chars"),
-          min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-        .orderBy("lang")
-    }),
-    // --- relational breadth (SURVEY.md §2.3 absent categories, built new) ---
-    "pricing_summary" -> (Relational.pricingSummary _),
-    "top_revenue_orders" -> (Relational.topRevenueOrders _),
-    "region_revenue" -> (Relational.regionRevenue _),
-    // the SQL frontend end-to-end: temp-view catalog + spark.sql text;
-    // Catalyst plans it exactly like the DataFrame form (same pushdown,
-    // same broadcasts) — asserted equivalent here by its own oracle
-    "sql_frontend_revenue" -> ((s, dir) => {
-      graft.sources.Views.register(s, dir)
-      // revenue summed in per-row-rounded integer cents: double sums
-      // reduce in partition order and can differ in the last ulp right
-      // at a .005 rounding boundary — integer sums cannot
-      s.sql("""
-        SELECT c_mktsegment,
-               CAST(year(o_orderdate) AS INT) AS yr,
-               SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0)
-                   AS BIGINT)) AS rev_cents,
-               count(DISTINCT o_orderkey) AS n_orders
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2
-        ORDER BY 1, 2""")
-    }),
-    "order_priority" -> (Relational.orderPriority _),
-    "top_orders_per_customer" -> (Relational.topOrdersPerCustomer _),
-    "running_customer_spend" -> (Relational.runningCustomerSpend _),
-    "order_status_stats" -> (Relational.orderStatusStats _),
-    "rollup_revenue" -> (Relational.rollupRevenue _),
-    "modest_customers" -> (Relational.modestCustomers _),
-    "repeat_customers" -> (Relational.repeatCustomers _),
-    "customers_without_orders" -> (Relational.customersWithoutOrders _),
-    "big_spenders" -> (Relational.bigSpenders _),
-    "events_json_stats" -> (Relational.eventsJsonStats _),
-    "events_variant_stats" -> (Relational.eventsVariantStats _),
-    "events_hourly" -> (Relational.eventsHourly _),
-    // --- event-sequence analytics (telemetry views) ---
-    "funnel_counts" -> (EventAnalytics.funnelCounts _),
-    "retention_cohorts" -> (EventAnalytics.retentionCohorts _),
-    "resample_ffill" -> (EventAnalytics.resampleForwardFill _),
-    "part_brand_revenue" -> (Relational.partBrandRevenue _),
-    "nation_coverage" -> (Relational.nationCoverage _),
-    "above_average_orders" -> (Relational.aboveAverageOrders _),
-    // --- text analysis (north-star LLM-pipeline operators) ---
-    "token_stats" -> (TextAnalysis.tokenStats _),
-    "quality_score" -> (TextAnalysis.qualityScore _),
-    // Gopher/MassiveText composite reject rules as one scan; every
-    // threshold a cross-multiplied integer comparison so the per-rule
-    // rejection counts hash-match the ANSI recompute exactly
-    "gopher_rules" -> (TextAnalysis.gopherRules _),
-    // the A1.2 repetition battery (13 published reject rules as one
-    // scan; doubled-doc plant keeps the reject counts live)
-    "gopher_repetition" -> (TextAnalysis.gopherRepetition _),
-    // length-bucketed padding-waste accounting (batching prep): exact
-    // integer token masses per ceil(len/16)*16 bucket + a __total__
-    // row, waste in floor-division millionths
-    "padding_waste" -> ((s, dir) => TextAnalysis.paddingWaste(s, dir)),
-    // curriculum-learning order: quality-quantile stages with per-stage
-    // doc/token accounting (ntile semantics, no global window)
-    "curriculum_stages" -> ((s, dir) =>
-      TextAnalysis.curriculumStages(s, dir)),
-    "lang_id" -> (TextAnalysis.langId _),
-    // trained count-space Naive Bayes over the marker-planted corpus:
-    // integer-millionth log weights make the argmax hash-exact
-    "lang_id_nb" -> (TextAnalysis.langIdNb _),
-    // model-eval view: (label, pred) error structure of the trained NB
-    "lang_id_confusion" -> (TextAnalysis.langIdNbConfusion _),
-    // per-lang robust (median/MAD) token-length outliers, all-integer
-    "length_outliers" -> (TextAnalysis.lengthOutliers _),
-    // Gopher-style deflate-ratio repetitiveness signal (native
-    // expression), checked through its planted-repeat invariant gate
-    // (r17: the rows-only per-doc view consolidated into the gate —
-    // deflate is not oracle-expressible, and the gate runs the same
-    // expression over the same corpus with hash-checked flags)
-    "compression_ratio_gate" -> (TextAnalysis.compressionRatioGate _),
-    "lang_id_nb_gate" -> ((s, dir) => TextAnalysis.langIdNbGate(s, dir)),
-    // trained quality filter: all-int64 batch perceptron over hashed
-    // bag-of-words — the full train+score recurrence is hash-exact
-    // against an oracle that unrolls the same integer updates
-    "quality_classifier" -> (QualityClassifier.qualityPerceptron _),
-    "quality_classifier_gate" ->
-      (QualityClassifier.qualityPerceptronGate _),
-    "fingerprint_md5" -> (TextAnalysis.fingerprintMd5 _),
-    // rolling fingerprint checked through its gate (r17 consolidation:
-    // xxhash64 is not oracle-expressible; the gate folds the SAME
-    // rollingFpExpr over every doc + reversed plants and hash-checks
-    // determinism/injectivity/order-sensitivity)
-    "fingerprint_gate" -> (TextAnalysis.fingerprintGate _),
-    "contamination_check" -> ((s, dir) =>
-      TextAnalysis.contaminationCheck(s, dir, n = 8)),
-    // the bloom-pruned + exact-confirmed two-tier variant must produce
-    // the IDENTICAL answer (bloom has no false negatives; the exact
-    // semi-join kills its false positives) — same oracle SQL
-    "contamination_bloom" -> ((s, dir) =>
-      TextAnalysis.contaminationCheckBloom(s, dir, n = 8)),
-    "doc_repetition" -> (TextAnalysis.docRepetition _),
-    "top_domains" -> (TextAnalysis.topDomains _),
-    "bpe_token_stats" -> (TextAnalysis.bpeTokenStats _),
-    "top_bigrams" -> ((s, dir) => TextAnalysis.topBigrams(s, dir, 30)),
-    "tfidf_top_terms" -> ((s, dir) => TextAnalysis.tfidfTopTerms(s, dir, 5)),
-    "bm25_topk" -> ((s, dir) => Retrieval.bm25TopK(s, dir, k = 10)),
-    // hybrid retrieval: BM25 + embedding-cosine legs fused by integer
-    // reciprocal-rank fusion — both legs oracle-expressible, so the
-    // whole hybrid ranking hash-checks
-    "hybrid_rrf" -> ((s, dir) => Retrieval.hybridRrf(s, dir)),
-    // RAG-prep capstone: CDC chunks -> exact chunk dedup -> BM25 over
-    // the chunk index (chunk id = doc_id*stride + chunk_idx)
-    "chunk_index_assembly" ->
-      ((s, dir) => Retrieval.chunkIndexAssembly(s, dir)),
-    // materialized searchable index export; stop-list NULL above df 64
-    "inverted_index" -> ((s, dir) => Retrieval.invertedIndex(s, dir)),
-    // the release datasheet: one long-format hash-checked summary table
-    "dataset_card" -> (Profile.datasetCard _),
-    // novelty runs on the near-dup plant so shared grams exist to find
-    "ngram_novelty" -> ((s, dir) =>
-      TextAnalysis.ngramNovelty(Dedup.withNearDups(Tables.documents(s, dir)))),
-    "dict_encode_stats" -> (TextAnalysis.dictEncodeStats _),
-    "url_canonical" -> (TextAnalysis.urlCanonical _),
-    "pii_scrub" -> (TextAnalysis.piiScrub _),
-    "text_normalize" -> (TextAnalysis.textNormalize _),
-    "lm_typicality" -> (TextAnalysis.lmTypicality _),
-    // BPE merge-table induction, checked through its gate (r17
-    // consolidation: the gate trains the SAME 20-merge table — step-0
-    // argmax SQL-exact, table-level invariants hash-checked; encode
-    // gates downstream fail loudly on a broken table)
-    "bpe_merge_gate" -> ((s, dir) =>
-      TextAnalysis.bpeMergeGate(s, dir, nMerges = 20)),
-    // SentencePiece-style unigram-LM tokenizer, checked through its
-    // gate (r17 consolidation: SQL can't re-run EM; the gate trains
-    // the SAME piece inventory and hash-checks the char inventory +
-    // coverage/monotone/vocab invariants)
-    "unigram_gate" -> ((s, dir) => TextAnalysis.unigramGate(s, dir)),
-    // the unigram ENCODE surface, checked through the roundtrip/
-    // bounds gate (r17 consolidation: the gate runs the SAME per-doc
-    // Viterbi encode; piece counts ride its hashed flag columns)
-    "unigram_encode_gate" -> ((s, dir) =>
-      TextAnalysis.unigramEncodeGate(s, dir)),
-    // per-language fertility of the two trained tokenizers, checked
-    // through its DIRECT gate (r17 consolidation: the gate computes
-    // the SAME view — exact per-lang word/char counts hash-green,
-    // consistency flags pinned)
-    "tokenizer_fertility_gate" -> ((s, dir) =>
-      TextAnalysis.tokenizerFertilityGate(s, dir)),
-    // trained-BPE encode surface, checked through the roundtrip/
-    // bounds gate (r17 consolidation — same encode, hashed flags)
-    "bpe_encode_gate" -> ((s, dir) =>
-      TextAnalysis.bpeEncodeGate(s, dir, nMerges = 20)),
-    // FFD packing + the tokens-on-disk capstone, each checked through
-    // its conservation/capacity gate (r17 consolidation: the gates run
-    // the SAME packing over the same token counts; per-shard doc/token
-    // totals hash-green, occupancy/lower-bound/half-empty flags pinned)
-    "bpe_pack_gate" -> ((s, dir) => TextAnalysis.bpePackGate(s, dir)),
-    "ffd_pack_gate" -> ((s, dir) =>
-      TextAnalysis.ffdPackGate(s, dir, capacity = 256)),
-    "boilerplate_scrub" -> ((s, dir) =>
-      TextAnalysis.boilerplateScrub(s, dir, minDocs = 10)),
-    "doc_chunks" -> ((s, dir) =>
-      TextAnalysis.chunkDocuments(s, dir, chunkTokens = 64, stride = 48)),
-    // content-defined chunking: boundaries from local token hashes, so
-    // chunk identities survive upstream edits (chunk-level dedup/cache)
-    "cdc_chunks" -> (TextAnalysis.cdcChunks _),
-    // MOSS winnowing: rightmost-min-per-window fingerprint selection
-    // with the guaranteed-detection property for 7-token shared runs
-    "winnow_fingerprints" -> (TextAnalysis.winnowFingerprints _),
-    "corpus_refresh" -> (Incremental.corpusRefresh _),
-    // release-gate snapshot diff: headline integer metrics unpivoted
-    // to (metric, before, after, delta) rows
-    "snapshot_drift" -> (Profile.snapshotDrift _),
-    // refresh-time drift monitors: base snapshot vs the merged refresh
-    "token_drift" -> ((s, dir) => {
-      val base = Tables.documents(s, dir)
-      Profile.tokenDrift(base,
-        Incremental.mergeUpsert(base, Incremental.syntheticDelta(base),
-          "doc_id"), 30)
-    }),
-    "token_drift_kl" -> ((s, dir) => {
-      val base = Tables.documents(s, dir)
-      Profile.tokenDriftKl(base,
-        Incremental.mergeUpsert(base, Incremental.syntheticDelta(base),
-          "doc_id"))
-    }),
-    "scd2_customer_priority" -> (Incremental.scd2CustomerPriority _),
-    "event_priority_stats" -> (Incremental.eventPriorityStats _),
-    "cascade_delete_audit" -> (Relational.cascadeDeleteAudit _),
-    "heavy_hitter_gate" -> ((s, dir) =>
-      Grouping.heavyHitterGate(s, dir, k = 64)),
-    // --- dedup (north-star LLM-pipeline operators) ---
-    "dedup_exact_groups" -> ((s, dir) =>
-      Dedup.exactGroups(Dedup.withExactDups(Tables.documents(s, dir)))
-        ),
-    "dedup_jaccard_pairs" -> ((s, dir) =>
-      Dedup.jaccardPairsAuto(Dedup.withNearDups(Tables.documents(s, dir)), 0.5)),
-    // asymmetric containment: half-copies plant at J ≈ 0.5 but
-    // containment ≈ 1 — the regime symmetric Jaccard misses
-    "dedup_containment_pairs" -> ((s, dir) =>
-      Dedup.containmentPairsAuto(
-        Dedup.withContainedDups(Tables.documents(s, dir)), ContainTau)
-        .orderBy("contained_id", "container_id")),
-    "dedup_minhash_pairs" -> ((s, dir) =>
-      Dedup.minhashLshPairs(Dedup.withNearDups(Tables.documents(s, dir)),
-        k = 32, bands = 8, tau = 0.4)),
-    "dedup_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(Dedup.withNearDups(Tables.documents(s, dir)),
-        maxDist = 8)),
-    // exact tier ∩ LSH candidates == exact tier on this corpus (recall 1,
-    // deterministic) — gives the MinHash path a DuckDB-hash-checked row
-    "dedup_minhash_agreement" -> ((s, dir) =>
-      Dedup.minhashAgreement(Dedup.withNearDups(Tables.documents(s, dir)),
-        tau = 0.5, k = 32, bands = 8, estTau = 0.4)),
-    // exact tier ∩ SimHash candidates == exact tier (pigeonhole recall is
-    // guaranteed within the Hamming threshold). maxDist 16, not the demo
-    // query's 8: measured exact-tier distances reach 8 at sf0.01 / 13 at
-    // sf0.001, so 16 gives the gate ~2× corpus-drift margin
-    "dedup_simhash_agreement" -> ((s, dir) =>
-      Dedup.simhashAgreement(Dedup.withNearDups(Tables.documents(s, dir)),
-        tau = 0.5, maxDist = 16)),
-    "dedup_embedding_pairs" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairs(Tables.embeddings(s, dir), 0.45)),
-    "dedup_components" -> ((s, dir) =>
-      Dedup.dedupComponents(Dedup.withNearDups(Tables.documents(s, dir)),
-        tau = 0.5)),
-    // quality-aware keep-one: the cleanest member of each near-dup
-    // cluster survives (ties -> min doc_id), singletons keep themselves
-    "dedup_keep_best" -> ((s, dir) => {
-      val corpus = Dedup.withNearDups(Tables.documents(s, dir))
-      Dedup.keepBestDedup(corpus, TextAnalysis.qualityScoreOf(corpus),
-        tau = 0.5)
-    }),
-    // substring-level duplicate spans over the near-dup-planted corpus
-    // (Spark side works on native window HASHES, the oracle on the
-    // window strings — agreement also proves the hash kernel faithful)
-    // winnowing-candidate near-dup tier: deterministic detection
-    // guarantee for 7-token runs, frequent-fp stop list, exact verify
-    "dedup_winnow_pairs" -> ((s, dir) =>
-      Dedup.winnowNearDupPairs(
-        Dedup.withNearDups(Tables.documents(s, dir)), tau = 0.5)),
-    "dup_spans" -> ((s, dir) =>
-      Dedup.duplicateSpans(Dedup.withNearDups(Tables.documents(s, dir)),
-        windowLen = 40)),
-    // the REMOVAL step dup_spans only reports: cut every duplicated
-    // window except in its min-doc_id owner; md5 pins the spliced text
-    "scrub_dup_spans" -> ((s, dir) =>
-      Dedup.scrubDuplicateSpans(
-        Dedup.withNearDups(Tables.documents(s, dir)), windowLen = 40)),
-    // the same star closure under its own query name (one closure
-    // engine; the oracle SQL is dedup_components')
-    "dedup_components_star" -> ((s, dir) =>
-      Dedup.dedupComponentsStar(
-        Dedup.withNearDups(Tables.documents(s, dir)), tau = 0.5)),
-    "neardup_pipeline" -> ((s, dir) =>
-      Dedup.nearDupPipeline(Dedup.withNearDups(Tables.documents(s, dir)),
-        tau = 0.5, k = 32, bands = 8, estTau = 0.4)),
-    "dedup_cluster_sizes" -> ((s, dir) =>
-      Dedup.clusterSizeHistogram(
-        Dedup.withNearDups(Tables.documents(s, dir)), tau = 0.5)),
-    // --- similarity search ---
-    "knn_bruteforce" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.knnBruteForce(emb, emb.filter(col("vec_id") < 10), 5)
-    }),
-    "knn_lsh" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.knnLsh(emb, emb.filter(col("vec_id") < 10), 5)
-    }),
-    // multi-probe LSH (Lv et al. 2007): Hamming-1 bucket perturbation
-    // on the QUERY side only — recall tuning over the unchanged index
-    "knn_lsh_mp" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.knnLsh(emb, emb.filter(col("vec_id") < 10), 5,
-        multiProbe = true)
-    }),
-    "knn_ivf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.knnIvf(emb, emb.filter(col("vec_id") < 10), 5)
-    }),
-    // driver-checkable shape + recall-floor invariants for both ANN tiers
-    "knn_recall_gates" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.knnRecallGates(emb, emb.filter(col("vec_id") < 10), 5)
-    }),
-    "knn_pq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.knnPq(emb, emb.filter(col("vec_id") < 10), 5)
-    }),
-    // margin-based bitext mining (LASER/CCMatrix): each en doc's
-    // best-margin de counterpart, ratio margin in exact integer micros
-    "bitext_mining" -> ((s, dir) => Similarity.mineBitext(s, dir)),
-    // the PRODUCTION miner: same margin scoring over 2 knnIvfPq probes
-    // per doc — k·(|en|+|de|) candidates, never the all-pairs product
-    // (rows-only; bitext_ann_gate is the hash-green companion)
-    "bitext_mining_ann" -> ((s, dir) => Similarity.mineBitextAnn(s, dir)),
-    // pair recall of the ANN miner vs the exact tier ≥ 0.8 (measured
-    // 0.939/0.961/0.949 at sf0.001/0.01/0.1), plus
-    // the one-pair-per-source bound; side sizes + exact pair count
-    // SQL-recomputed
-    "bitext_ann_gate" -> ((s, dir) => Similarity.bitextAnnGate(s, dir)),
-    // the composed IVFADC production tier under the measured scaling
-    // policies — ln-scaled rerank + candidate-mass nprobe (rows-only;
-    // the recall gate's ivfpq row is the hash-green companion)
-    "knn_ivfpq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.knnIvfPqAuto(emb, emb.filter(col("vec_id") < 10), 5)
-    }),
-    // per-iteration PQ codebook contract (kmeans_train_stats pattern)
-    "pq_train_stats" -> ((s, dir) =>
-      Similarity.pqTrainStats(Tables.embeddings(s, dir))),
-    // incremental index maintenance: an increment encoded under frozen
-    // models reproduces the full build's rows exactly (append-only
-    // ingest contract; counts SQL-recomputable, equality flags pinned)
-    "ivfpq_append_gate" -> ((s, dir) =>
-      Similarity.ivfPqAppendGate(s, dir)),
-    // rebuild-trigger policy for the partition-appended index: retrain
-    // when the count policy wants >= 2x the trained cells; policy
-    // arithmetic SQL-recomputable (IEEE sqrt is correctly rounded),
-    // append completeness + cell-range safety measured on the real path
-    "ivfpq_reindex_gate" -> ((s, dir) =>
-      Similarity.ivfPqReindexGate(s, dir)),
-    // embedding-snapshot drift (the vector-tier token_drift twin),
-    // checked through its gate (r17 consolidation: cell identity is
-    // the seeded trainer's, not oracle-expressible; the gate computes
-    // the SAME occupancy frame and hash-checks conservation +
-    // share-sum + cell-range + smoothed-KL>=0 with snapshot sizes
-    // SQL-exact)
-    "embedding_drift_gate" -> ((s, dir) =>
-      Similarity.embeddingDriftGate(s, dir)),
-    // the drift monitor's CONSUMER: the composed rebuild trigger
-    // (count-growth OR occupancy-drift-KL) on two structurally-forced
-    // scenarios — steady (KL identically 0, never rebuilds) and
-    // encoder_shift (counts unchanged so the count arm provably can't
-    // fire; the drift arm must) — counts + cell policy SQL-exact
-    "ivfpq_reindex_drift_gate" -> ((s, dir) =>
-      Similarity.ivfPqReindexDriftGate(s, dir)),
-    // the stored-index round trip: persist partitionBy(cell), re-read
-    // the files, probe FROM DISK — content checksum + probe equality
-    // vs the in-memory artifact pinned (SourcesSpec pins the pruning
-    // mechanics; this gates the result a deployment depends on)
-    "ivfpq_store_gate" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivfstore_").toString
-      reapAtExit(tmp)
-      Similarity.ivfPqStoreGate(s, dir, tmp)
-    }),
-    // cell compaction: real partition-append episodes -> one-file-
-    // per-cell rewrite; file-count reduction, content checksum, and
-    // compacted-store probe equality pinned. Bench-sized episode
-    // (2 slices, ~sqrt(N)/2 cells) — the flags are cell-count-
-    // independent; the full 4-slice scaledCells episode is priced in
-    // ScaleStress
-    "ivfpq_compact_gate" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivfcompact_").toString
-      reapAtExit(tmp)
-      Similarity.ivfPqCompactGate(s, dir, tmp, benchSized = true)
-    }),
-    // the compaction TRIGGER policy over the live manifest: build + 2
-    // partition-appends, then both maybeCompact arms — unreachable
-    // threshold provably no-ops (no commit), threshold 1.0 provably
-    // fires (files >= occupied cells always) and the fired compact
-    // preserves content/shape/probe
-    "auto_compact_gate" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_autocompact_").toString
-      reapAtExit(tmp)
-      Similarity.autoCompactGate(s, dir, tmp, benchSized = true)
-    }),
-    // the SERVING MANIFEST: snapshot versioning over the stored index
-    // (version-log commits, file-list snapshots) driven through every
-    // mutation path on ONE store — build -> append (files shared by
-    // reference) -> compact (full swap) -> forget (bounded rewrite) ->
-    // pinned-v1 reader isolation -> live-store probe equality ->
-    // vacuum-to-live; counts + live_version SQL-exact, flags pinned
-    "index_manifest_gate" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivfmanifest_").toString
-      reapAtExit(tmp)
-      Similarity.indexManifestGate(s, dir, tmp, benchSized = true)
-    }),
-    // drift-fired rebuild THROUGH the store: the decision's drift arm
-    // fires on the re-encoded corpus (count arm provably silent), the
-    // action is an atomic new-model-generation commit; old pinned
-    // readers keep their generation, the new one re-gates recall.
-    // Bench-sized (~sqrt(N)/2 cells for BOTH generations) — the flags
-    // are cell-count-independent; the full corpus-count-policy episode
-    // is priced in ScaleStress's manifest_rebuild row
-    "manifest_rebuild_gate" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivfrebuild_").toString
-      reapAtExit(tmp)
-      Similarity.manifestRebuildGate(s, dir, tmp, benchSized = true)
-    }),
-    // the GRAPH lifecycle capstone: base build -> real append descent
-    // -> forget from the artifact the append just produced (tombstone
-    // + bounded repair, never a rebuild) -> shape + recall re-gate,
-    // all on ONE living graph
-    "graph_lifecycle" -> ((s, dir) =>
-      Similarity.graphLifecycleGate(s, dir)),
-    // the INDEX-LIFECYCLE capstone (corpus_refresh_assembly's ANN
-    // twin): morning-0 build -> real ivfPqAppend ingest -> rebuild
-    // trigger evaluates -> the policy-deployed snapshot re-gates
-    // recall — composed as ONE plan; counts + policy arithmetic
-    // SQL-exact, composition flags pinned
-    "ivfpq_lifecycle" -> ((s, dir) =>
-      Similarity.ivfPqLifecycleGate(s, dir)),
-    // right-to-be-forgotten for the vector tier (the cascade_delete
-    // contract extended to the ANN index + k-NN graph): tombstone
-    // anti-joins + bounded graph repair; zero deleted ids anywhere,
-    // survivor conservation, full-k lists, survivor recall pinned
-    "vector_forget_gate" -> ((s, dir) =>
-      Similarity.vectorForgetGate(s, dir)),
-    // predicate-constrained ANN (the RAG retrieval shape): the filter
-    // semi-joins the stored code rows BEFORE the ADC join, probe
-    // width re-derived from the filtered count (rows-only; the gate
-    // next is the hash-green companion)
-    "knn_ivfpq_filtered" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val allowed = Tables.documents(s, dir)
-        .filter(col("lang") === "de")
-        .select(col("doc_id").as("vec_id"))
-        .join(emb.select("vec_id"), Seq("vec_id"), "left_semi")
-      Similarity.knnIvfPqFiltered(emb, allowed,
-        emb.filter(col("vec_id") < 10), 5)
-    }),
-    // result ⊆ filter, full-k delivery, recall vs brute force OVER
-    // THE FILTERED SUBSET ≥ 0.6 — counts SQL-exact, flags pinned
-    "knn_ivfpq_filtered_gate" -> ((s, dir) =>
-      Similarity.knnIvfPqFilteredGate(s, dir)),
-    // approximate all-corpus k-NN GRAPH via NN-Descent — the third ANN
-    // shape (bounded-query probes, index ingest, now graph-for-every-
-    // node); iterative seeded descent → rows-only, nndescent_gate is
-    // the hash-green companion
-    "knn_graph_nndescent" -> ((s, dir) =>
-      Similarity.knnGraphNnDescent(Tables.embeddings(s, dir), 10)),
-    // graph-shape counts (every node holds exactly min(k, N-1) edges)
-    // + recall floor vs the exact graph on a deterministic node sample,
-    // restated as oracle constants (floor 0.6; measured recall@10
-    // 0.998/0.991/0.934 at sf0.001/0.01/0.1 — full-graph, not sampled)
-    "nndescent_gate" -> ((s, dir) =>
-      Similarity.nndescentGate(Tables.embeddings(s, dir))),
-    // incremental graph maintenance: base graph + bucket-seeded
-    // arrivals + bounded descent rounds — never a rebuild (measured
-    // recall 0.992/0.989/0.890 vs cold build's 0.998/0.991/0.934)
-    "nndescent_append_gate" -> ((s, dir) =>
-      Similarity.nndescentAppendGate(s, dir)),
-    // hubness audit of the graph: in-degree histogram with the orphan
-    // (in_degree = 0) row — the embedding-pathology check (rows-only;
-    // hubness_gate pins the exact conservation laws)
-    "knn_graph_hubness" -> ((s, dir) =>
-      Similarity.knnGraphHubness(Tables.embeddings(s, dir))),
-    // node mass = N, edge mass = N·min(k, N-1), in-degree <= N-1 —
-    // all exact SQL on the corpus count
-    "hubness_gate" -> ((s, dir) =>
-      Similarity.hubnessGate(Tables.embeddings(s, dir))),
-    "embedding_quantize" -> ((s, dir) =>
-      Similarity.normalizeQuantize(Tables.embeddings(s, dir))),
-    "kmeans_train_stats" -> ((s, dir) =>
-      Similarity.kmeansTrainStats(Tables.embeddings(s, dir),
-        cells = 8, iters = 3)),
-    // SemDeDup-style pipeline: k-means cells bound the pair space, exact
-    // cosine verifies, star components keep one per cluster. Cell
-    // assignment isn't SQL-expressible → rows-only, with the hash-checked
-    // gate next asserting subset/recall/survivor invariants vs the exact
-    // global pair set
-    "semantic_dedup" -> ((s, dir) =>
-      Dedup.semanticDedup(Tables.embeddings(s, dir), tau = 0.45)),
-    "semantic_dedup_gate" -> ((s, dir) =>
-      Dedup.semanticDedupGate(Tables.embeddings(s, dir), tau = 0.45)),
-    // graph-tier semantic dedup: the NN-Descent k-NN graph as the
-    // candidate tier (codebook-free — no rebuild cycle; appends just
-    // descend further), exact-formula re-verify (rows-only; the gate
-    // next is the hash-green companion — measured pair recall
-    // 1.000/1.000/0.979 at the three SFs vs floor 0.75)
-    "semantic_dedup_graph" -> ((s, dir) =>
-      Dedup.semanticDedupGraph(Tables.embeddings(s, dir), tau = 0.45)),
-    "semantic_dedup_graph_gate" -> ((s, dir) =>
-      Dedup.semanticDedupGraphGate(Tables.embeddings(s, dir), tau = 0.45)),
-    // --- as-of join (operator Spark lacks; composed, not ported) ---
-    "asof_event_order" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("event_id", "user_id", "ts")
-      val ord = Tables.orders(s, dir)
-        .select("o_custkey", "o_orderdate", "o_orderkey", "o_totalprice")
-      AsOfJoin.asOfBackward(ev, "user_id", "ts", ord, "o_custkey", "o_orderdate")
-        .select(col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
-          col("asof.o_orderkey").as("o_orderkey"),
-          col("asof.o_totalprice").as("o_totalprice"))
-    }),
-    // same semantics through the native physical operator (plans.AsOfJoinExec)
-    "asof_event_order_native" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("event_id", "user_id", "ts")
-      val ord = Tables.orders(s, dir)
-        .select("o_custkey", "o_orderdate", "o_orderkey", "o_totalprice")
-      AsOfJoin.asOfBackwardNative(ev, "user_id", "ts",
-          ord, "o_custkey", "o_orderdate", rightTieBreak = Seq("o_orderkey"))
-        .select(col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
-          col("o_orderkey"), col("o_totalprice"))
-    }),
-    // --- range join (binned interval-point equi-join rewrite) ---
-    "shipped_in_order_window" -> (RangeJoin.shipmentsInOrderWindow _),
-    // interval-interval overlap (binned, first-instant dedup bin)
-    "concurrent_sessions" -> ((s, dir) =>
-      RangeJoin.concurrentSessions(s, dir, "30 minutes")),
-    // --- deterministic sampling (corpus curation) ---
-    "sample_hash_docs" -> (Sampling.documentsSample _),
-    "sample_stratified_lang" -> (Sampling.documentsStratified _),
-    "sample_mixture_lang" -> (Sampling.documentsMixture _),
-    // Efraimidis-Spirakis length-weighted sample without replacement:
-    // integer-millionth keys make top-k membership engine-exact
-    "weighted_sample" -> ((s, dir) => Sampling.weightedSample(s, dir)),
-    // RefinedWeb anti-domination rule: deterministic-random cap per
-    // source (hash order, not quality — capping bounds influence)
-    "domain_cap" -> ((s, dir) => Curation.domainCap(s, dir, DomainCapN)),
-    // contrastive training pairs: near-dup positive + hash-drawn
-    // negatives, reproducible across engines and epochs
-    "contrastive_pairs" ->
-      ((s, dir) => Curation.contrastivePairs(s, dir, ContrastiveK)),
-    // curation by the TRAINED filter: the oracle retrains the identical
-    // integer perceptron and reproduces the survivor mass exactly
-    "curation_trained_filter" ->
-      (Curation.trainedQualityFilter _),
-    // deterministic global shuffle into trainer shards + balance audit
-    // (ShardN is the single source for both engines' shard formula)
-    "training_shards" -> ((s, dir) => Sampling.documentsShards(s, dir, ShardN)),
-    "shard_stats" -> ((s, dir) => Sampling.shardStats(s, dir, ShardN)),
-    // per-shard delivery manifest: counts + id range + order-independent
-    // xor content checksum
-    "shard_manifest" -> ((s, dir) => Sampling.shardManifest(s, dir, ShardN)),
-    // mixture-to-token-budget materialization (epochs + hash remainder)
-    "mixture_budget" -> ((s, dir) => Sampling.mixtureBudget(s, dir,
-      Map("en" -> 500000L, "zh" -> 150000L), defaultWeight = 100000L)),
-    // temperature-flattened mixture weights (share^alpha, alpha = 0.5)
-    "mixture_temperature" -> ((s, dir) =>
-      Sampling.temperatureWeights(s, dir)),
-    // the composed self-tuning mixer: corpus-derived temperature
-    // weights drive the epochs-plus-remainder budget materializer
-    "mixture_temperature_budget" -> ((s, dir) =>
-      Sampling.temperatureMixtureBudget(s, dir)),
-    "sequence_packing" -> ((s, dir) =>
-      TextAnalysis.sequencePacking(s, dir, windowTokens = 2048)),
-    // --- explicit salting (skew fallback when AQE split isn't enough) ---
-    "skewed_user_segment_stats" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id").as("custkey"), col("value"))
-      val cust = Tables.customer(s, dir)
-        .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
-      SkewJoin.saltedEquiJoin(ev, cust, "custkey", saltBuckets = 8)
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_events"),
-          round(sum("value"), 2).as("sum_value"))
-        .orderBy("c_mktsegment")
-    }),
-    // --- grouping/ranking breadth + stats ---
-    "top_event_per_user" -> (Grouping.topEventPerUser _),
-    "cube_order_stats" -> (Grouping.cubeOrderStats _),
-    "lineitem_stats" -> (Grouping.lineitemStats _),
-    "user_sessions" -> ((s, dir) => Grouping.userSessions(s, dir, "30 minutes")),
-    "events_type_pivot" -> (Grouping.eventsTypePivot _),
-    "events_type_unpivot" -> (Grouping.eventsTypeUnpivot _),
-    "order_grouping_sets" -> (Grouping.orderGroupingSets _),
-    "rolling_7d_revenue" -> (Grouping.rolling7dRevenue _),
-    "order_gaps_quartiles" -> (Grouping.orderGapsQuartiles _),
-    "order_rank_stats" -> (Grouping.orderRankStats _),
-    "robust_price_stats" -> (Grouping.robustPriceStats _),
-    "user_event_type_sets" -> (Grouping.userEventTypeSets _),
-    // sketch tier (HLL++/GK percentiles), checked through the bounds
-    // gate (r17 consolidation: algorithm-specific estimates can't
-    // hash-match another engine; the gate runs the SAME sketches and
-    // pins them inside their error budgets next to exact SQL values)
-    "approx_stats_bounds" -> (Grouping.approxStatsBounds _),
-    "wordcount_nostop" -> (TextAnalysis.wordCountNoStopwords _),
-    // --- structured streaming (settled result is batch-checkable) ---
-    "streamed_events_hourly" -> (graft.streaming.Streaming.streamedEventsHourly _),
-    "streamed_segment_revenue" -> (graft.streaming.Streaming.streamedSegmentRevenue _),
-    "streamed_conversions" -> (graft.streaming.Streaming.streamedConversions _),
-    "streamed_dedup_events" -> (graft.streaming.Streaming.streamedDedupEvents _),
-    // live-ingest drift monitor: stream-aggregated token histogram
-    // (vocab-bounded state) diffed against yesterday's static snapshot
-    "streamed_token_drift" ->
-      ((s, dir) => graft.streaming.Streaming.streamedTokenDrift(s, dir, 30)),
-    "streamed_dedup_against_base" ->
-      (graft.streaming.Streaming.streamedDedupAgainstBase _),
-    // model SERVING in the stream: batch-trained perceptron weights
-    // ride every micro-batch plan as a literal; integer margins make
-    // the settled result equal the batch scorer exactly
-    "streamed_quality_filter" ->
-      (graft.streaming.Streaming.streamedQualityFilter _),
-    // MinHash near-dup filter in the micro-batch path: stream-side
-    // signatures vs the broadcast base band index, exact verify,
-    // settles to the batch incrementalNearDup answer (shared oracle)
-    "streamed_neardup_ingest" ->
-      (graft.streaming.Streaming.streamedNearDupIngest _),
-    // streaming ANN-index ingest: arrivals IVF-assign + PQ-encode
-    // scan-side under the frozen nightly models (stateless — the
-    // models are the state); settled rows pinned equal to the batch
-    // ivfPqAppend of the same replay, counts SQL-recomputable
-    "streamed_ivfpq_ingest" ->
-      (graft.streaming.Streaming.streamedIvfPqIngest _),
-    // STREAMED ERASURE: right-to-be-forgotten requests as a stream,
-    // each micro-batch = one bounded IndexStore.forget + one atomic
-    // manifest commit; settled log length SQL-exact, re-drain on the
-    // same checkpoint commits nothing (resume_safe), doomed ids gone,
-    // survivors conserved, live probe still full-k
-    "streamed_forget_gate" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sforget_root_").toString
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_sforget_work_").toString
-      reapAtExit(root); reapAtExit(work)
-      graft.streaming.Streaming.streamedForget(s, dir, root, work,
-        benchSized = true)
-    }),
-    // STREAMED INGEST through the manifest: each micro-batch is one
-    // transactional IndexStore.append (txn-stamped — a replayed batch
-    // at/below the committed watermark is skipped, never duplicated);
-    // settled log length SQL-exact, live content == batch append,
-    // conservation, re-drain no-op, full-k probe
-    "streamed_append_store" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sappend_root_").toString
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_sappend_work_").toString
-      reapAtExit(root); reapAtExit(work)
-      graft.streaming.Streaming.streamedAppendStore(s, dir, root, work,
-        benchSized = true)
-    }),
-    // MIXED-MUTATION LIFECYCLE: appends AND forgets interleaved
-    // through ONE checkpointed stream onto ONE store — txn-stamped
-    // append commits, idempotent forget commits, settled log length
-    // SQL-exact, live content == the batch sequence, re-drain no-op,
-    // full-k probe (the kill-resume half lives in StreamingSpec)
-    "streamed_lifecycle_gate" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_slife_root_").toString
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_slife_work_").toString
-      reapAtExit(root); reapAtExit(work)
-      graft.streaming.Streaming.streamedLifecycle(s, dir, root, work,
-        benchSized = true)
-    }),
-    // --- end-to-end curation composition (quality→scrub→dedup→sample) ---
-    "curation_pipeline" -> ((s, dir) => Curation.curationPipeline(s, dir)),
-    // k-anonymity-style small-cell suppression for published breakdowns
-    "small_cell_release" -> ((s, dir) => Curation.smallCellRelease(s, dir)),
-    // --- corpus-assembly capstone: raw documents in, sharded training
-    // set out (curation → near-dup dedup → decontamination → mixture
-    // budget → shard assignment, composed as ONE plan) ---
-    "corpus_assembly" -> ((s, dir) => CorpusAssembly.corpusAssembly(s, dir)),
-    // the production (candidate-bounded LSH) dedup tier, driver-gated at
-    // tau = LshGateTau where the tiers provably keep the same survivors
-    // (see the constant's scaladoc); same oracle template as the exact
-    // tier, different threshold
-    "corpus_assembly_lsh" -> ((s, dir) => CorpusAssembly.corpusAssembly(
-      s, dir, tau = CorpusAssembly.LshGateTau, lshTier = true)),
-    // refresh capstone: merge the day's delta → drop fresh near-dups of
-    // the existing corpus → re-shard → drift-gate (corpus_assembly's
-    // daily complement; stages referenced, not re-implemented)
-    "corpus_refresh_assembly" ->
-      ((s, dir) => CorpusAssembly.corpusRefreshAssembly(s, dir)),
-    // incremental-ingest near-dup: planted fresh increment (near copies
-    // of doc_id < 20, the dedup-family convention) vs the base corpus
-    "incremental_neardup" -> ((s, dir) => {
-      // guardPlantWindow: a corpus draw whose base ids reach the plant
-      // window would merge the id spaces and break incrementalNearDup's
-      // disjointness contract — fail loud, scan-fused (ADVICE r9)
-      val docs = Tables.documents(s, dir).select(
-        Dedup.guardPlantWindow(col("doc_id")).as("doc_id"), col("text"))
-      val fresh = docs.filter(col("doc_id") < Dedup.PlantCount)
-        .select((col("doc_id") + Dedup.DupIdOffset).as("doc_id"),
-          regexp_replace(col("text"), "^[^ ]+ ", "").as("text"))
-      Dedup.incrementalNearDup(docs, fresh)
-    }),
-    // per-language quality percentile (relative curation threshold)
-    "quality_top_pct" -> ((s, dir) => Curation.qualityTopPct(s, dir, QualityPct)),
-    // --- multimodal binary-column plumbing ---
-    // The operator returns features as array<float>; the driver's pandas
-    // harness can't sort/hash array cells (round-1 crash), so the query
-    // projects each lane to its exact integer byte sum: the stub decode
-    // divides an integer lane sum by 255 exactly once, so round(f*255)
-    // recovers it bit-exactly and DuckDB can recompute it from the bytes.
-    "multimodal_features" -> ((s, dir) => {
-      val feats = graft.multimodal.Multimodal.extractFeatures(
-        graft.multimodal.Multimodal.mediaFromDocuments(
-          Tables.documents(s, dir)))
-      val lanes = (0 until graft.multimodal.Multimodal.FeatureDim).map(j =>
-        round(element_at(col("features"), j + 1).cast("double") * 255d, 0)
-          .cast("long").as(s"f$j"))
-      feats.select(Seq(col("doc_id"), col("modality"),
-          col("n_bytes").cast("long").as("n_bytes")) ++ lanes: _*)
-    }),
-    // modality pushed INTO mediaFromDocuments: the video predicate runs
-    // before asset fabrication, so no image raster is built just to be
-    // dropped by sampleFrames' filter.
-    "multimodal_frame_sample" -> ((s, dir) =>
-      graft.multimodal.Multimodal.sampleFrames(
-        graft.multimodal.Multimodal.mediaFromDocuments(
-          Tables.documents(s, dir), modality = Some("video")),
-        durationMs = 1000, strideMs = 250)
-        ),
-    // byte_sum checks the actual resampled BYTES (header + NN raster for
-    // images), not just shapes — the oracle recomputes both from text
-    "multimodal_resize" -> ((s, dir) =>
-      graft.multimodal.Multimodal.contentByteSums(
-        graft.multimodal.Multimodal.resizeImages(
-          graft.multimodal.Multimodal.mediaFromDocuments(
-            Tables.documents(s, dir)), targetW = 16, targetH = 16))
-        ),
-    // --- multimodal perceptual near-dup (dHash-style tier) ---
-    // rows-only: the banded Hamming bucket join isn't ANSI-expressible;
-    // the companion gate below is the hash-checked invariant. Pairs are
-    // between exact-signature REPRESENTATIVES (sigGroups collapses
-    // Hamming-0 classes first), so output stays linear even on a corpus
-    // with huge duplicate classes.
-    "multimodal_neardup_pairs" -> ((s, dir) => {
-      val m = graft.multimodal.Multimodal
-      val media = m.mediaFromDocuments(Tables.documents(s, dir))
-      m.nearDupPairs(media.unionByName(m.plantedPerceptualDups(media)),
-        m.GateMaxDist)
-    }),
-    // recall gate on planted perceptual twins — oracle is the planted
-    // pair formula, so a codec/signature/banding bug flips the hash
-    "multimodal_neardup_gate" -> ((s, dir) =>
-      graft.multimodal.Multimodal.nearDupGate(Tables.documents(s, dir),
-        graft.multimodal.Multimodal.GateMaxDist)),
-    // --- graph / link analysis (crawl-graph scoring tier) ---
-    // fixed-point integer PageRank: bit-identical across engines and
-    // partition layouts because every sum is an integer sum
-    "pagerank_suppliers" -> ((s, dir) => Graph.pageRankTop(s, dir)),
-    // --- data layout (Z-order multi-dimensional clustering) ---
-    "zorder_bucket_stats" -> (Layout.zorderBucketStats _),
-    "zorder_scaled_stats" -> (Layout.zorderScaledStats _),
-    // --- data profiling (pre-training corpus audit) ---
-    "documents_profile" -> (Profile.documentsProfile _),
-    "price_histogram" -> ((s, dir) => Profile.priceHistogram(s, dir)),
-    "fk_integrity_audit" -> (Profile.fkIntegrityAudit _),
-    "spend_deciles" -> (Profile.spendDeciles _),
-    // --- entity resolution (blocked edit-distance matching) ---
-    "fuzzy_part_match" -> (FuzzyMatch.fuzzyPartMatch _),
-    // --- one-pass distributed model fitting ---
-    "ols_chars_per_token" -> (Regression.olsCharsPerToken _),
-    // --- graph cohesion (ordered-wedge triangle counting) ---
-    "supplier_triangles" -> (Graph.supplierTriangles _),
-    // --- sequence + collocation statistics ---
-    "event_transitions" -> (EventAnalytics.eventTransitions _),
-    // the streaming twin of user_sessions (the batch session_window
-    // query above at 549): append mode + watermark finalizes exactly
-    // the CLOSED sessions (end <= final watermark = max ts), a cut the
-    // oracle re-states as a HAVING — hash-green, not rows-only
-    "streamed_sessions" ->
-      (graft.streaming.Streaming.streamedSessions _),
-    "collocations_pmi" -> ((s, dir) => TextAnalysis.collocationsPmi(s, dir)),
-    // --- migration validation (engine-portable checksums) ---
-    "corpus_checksums" -> (Profile.corpusChecksums _),
-    // --- ANSI set operations (INTERSECT / EXCEPT / UNION) ---
-    "nation_part_overlap" -> ((s, dir) => Relational.nationPartOverlap(s, dir)),
-    // --- tokenizer sizing + eval integrity ---
-    "vocab_coverage" -> ((s, dir) => TextAnalysis.vocabCoverage(s, dir)),
-    "split_leakage_audit" -> ((s, dir) => Sampling.splitLeakageAudit(s, dir)),
-    // near-dup tier of the leakage audit: asymmetric LSH across the split
-    "split_leakage_neardup" -> ((s, dir) =>
-      Sampling.splitLeakageNearDup(
-        Dedup.withNearDups(Tables.documents(s, dir)))),
-    // --- streaming ordered per-key state (flatMapGroupsWithState) ---
-    "streamed_transitions" ->
-      ((s, dir) => graft.streaming.Streaming.streamedTransitions(s, dir)),
-  )
-
-  /** Shard count for training_shards/shard_stats — interpolated into the
-    * DuckDB oracles so both engines derive the shard formula from ONE
-    * value (ADVICE r8). */
-  private val ShardN = 16
-
-  /** domain_cap's per-source cap — one value for the Spark call and
-    * the oracle (10 binds at every SF: testdata sources hold ≥ 25
-    * docs). */
-  private val DomainCapN = 10
-
-  /** contrastive_pairs' negatives per anchor (shared with the oracle). */
-  private val ContrastiveK = 3
-
-  /** Knuth hash constant + 2^31 fold modulus of Sampling's hash family,
-    * as oracle text — ONE definition drives Sampling.hashBucket/
-    * hashOrderKey/bucketMillionths AND every oracle SQL string (ADVICE
-    * r9: four SQL strings hardcoded these; the ShardN pattern). */
-  private val HashMult = Sampling.Mult
-  private val Fold31 = Sampling.Fold
-
-  /** corpus_assembly oracle fragments derived from CorpusAssembly's
-    * shared defaults — one definition drives both engines (same
-    * anti-desync pattern as ShardN). */
-  private lazy val CaWeightCase: String =
-    CorpusAssembly.DefaultWeights.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"WHEN '$k' THEN $v" }.mkString(" ")
-  private lazy val CaRepFactor: Int = CorpusAssembly.DefaultMaxEpochs + 2
-  private lazy val CaNgM1: Int = CorpusAssembly.DefaultNgram - 1
-  private lazy val CaBench: Long = CorpusAssembly.DefaultBenchMaxId
-
-  /** quality_top_pct's percentile — one value for the Spark call and
-    * the oracle threshold. */
-  private val QualityPct = 25
-
-  /** containment tau — one value for the Spark call and the oracle
-    * threshold (the ShardN anti-desync pattern). */
-  private val ContainTau = 0.9
-
-  /** The BM25 oracle as a corpus-parameterized template: `preCtes` are
-    * extra CTE definitions (trailing comma + newline, or empty) and
-    * `corpusSel` must yield (doc_id, text) — one SQL body serves both
-    * the documents-table query and the chunk-index capstone. */
-  private def bm25SqlOver(preCtes: String, corpusSel: String): String =
-    s"""WITH ${preCtes}corpus AS ($corpusSel),
-       |q AS (SELECT CAST(qid AS BIGINT) AS qid, qtext
-       |  FROM (VALUES ${Retrieval.Queries.map { case (q, t) =>
-           s"($q, '$t')" }.mkString(", ")}) v(qid, qtext)),
-       |qt AS (SELECT qid, unnest(string_split(qtext, ' ')) AS term
-       |       FROM q),
-       |terms AS (SELECT doc_id, unnest(toks) AS term
-       |  FROM (SELECT doc_id, $DuckTokList AS toks FROM corpus) t),
-       |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-       |       FROM terms GROUP BY 1, 2),
-       |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-       |       FROM tf GROUP BY 1),
-       |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-       |       FROM tf GROUP BY 1),
-       |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |         CAST(sum(dl) AS BIGINT) AS n_tokens FROM dl),
-       |c AS (
-       |  SELECT qt.qid, tf.doc_id,
-       |    CAST(floor(
-       |      ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-       |      (tf.tf * ${Retrieval.K1 + 1.0} /
-       |       (tf.tf + ${Retrieval.K1} * (1.0 - ${Retrieval.B} +
-       |        ${Retrieval.B} * dl.dl * st.n_docs / st.n_tokens))) *
-       |      1000000.0) AS BIGINT) AS contrib
-       |  FROM tf JOIN qt USING (term) JOIN df USING (term)
-       |       JOIN dl USING (doc_id) CROSS JOIN st),
-       |sc AS (SELECT qid, doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-       |         CAST(sum(contrib) AS BIGINT) AS score_micro
-       |       FROM c GROUP BY 1, 2)
-       |SELECT qid, doc_id, n_terms, score_micro, rn FROM (
-       |  SELECT qid, doc_id, n_terms, score_micro,
-       |    row_number() OVER (PARTITION BY qid
-       |      ORDER BY score_micro DESC, doc_id) AS rn
-       |  FROM sc) x
-       |WHERE rn <= 10 ORDER BY qid, rn""".stripMargin
-
-  /** DuckDB fragment: per-doc token LIST with the same tokenizer. */
-  private val DuckTokList: String =
-    """list_filter(string_split_regex(
-      |  regexp_replace(regexp_replace(text, chr(10), ' ', 'g'),
-      |                 '[!-/:-@\[-`{-~]', '', 'g'),
-      |  ' +'), x -> regexp_matches(x, '\S'))""".stripMargin
-
-  /** Gaps-and-islands recompute of the 2h session windows; the HAVING
-    * keeps exactly the sessions the streaming twin's final watermark
-    * (global max ts, delay 0) has finalized. The batch sessionization
-    * query (`user_sessions`, 30-min gap) has its own oracle — this one
-    * exists for the CLOSED-cut streaming semantics. */
-  private def streamedSessionsSql: String =
-    s"""WITH b AS (
-       |  SELECT user_id, ts, value,
-       |    CASE WHEN lag(ts) OVER w IS NULL
-       |         OR ts - lag(ts) OVER w >= INTERVAL 2 HOUR
-       |         THEN 1 ELSE 0 END AS brk
-       |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-       |s AS (
-       |  SELECT user_id, ts, value,
-       |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-       |      ROWS UNBOUNDED PRECEDING) AS sid
-       |  FROM b)
-       |SELECT user_id,
-       |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       |  CAST(count(*) AS BIGINT) AS n_events,
-       |  round(sum(value), 2) AS sum_value,
-       |  epoch_us(max(ts)) - epoch_us(min(ts)) AS dur_us
-       |FROM s GROUP BY user_id, sid
-       |HAVING max(ts) + INTERVAL 2 HOUR <= (SELECT max(ts) FROM events)
-       |ORDER BY user_id, session_start""".stripMargin
-
-  /** The capstone oracle as a tau-parameterized template: the gated
-    * exact-tier query interpolates DefaultTau, the LSH-tier gate
-    * interpolates LshGateTau — one SQL definition, two thresholds. */
-  /** Exact recompute of the cross-increment near-dup filter: planted
-    * fresh docs (ids +DupIdOffset) vs base, bigram Jaccard ≥ 0.9 (the
-    * LSH-deterministic band, splitLeakageNearDup's convention), one row
-    * per dropped fresh doc keyed to its smallest base match. Shared by
-    * `incremental_neardup` (the batch operator) and
-    * `streamed_neardup_ingest` (the micro-batch ingest filter, which
-    * settles to the identical answer by construction). */
-  private lazy val incrementalNearDupSql: String =
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text, FALSE AS fresh FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + ${Dedup.DupIdOffset},
-       |    regexp_replace(text, '^[^ ]+ ', ''), TRUE
-       |  FROM documents WHERE doc_id < 20),
-       |t AS (SELECT doc_id, fresh, $DuckTokList AS toks FROM corpus),
-       |feats AS (
-       |  SELECT DISTINCT doc_id, fresh,
-       |    toks[i] || ' ' || toks[i+1] AS feat
-       |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-       |                   AS i) g),
-       |sizes AS (SELECT doc_id, count(*) AS sz FROM feats GROUP BY 1),
-       |inter AS (
-       |  SELECT a.doc_id AS fid, b.doc_id AS bid, count(*) AS n_inter
-       |  FROM feats a JOIN feats b
-       |    ON a.feat = b.feat AND a.fresh AND NOT b.fresh
-       |  GROUP BY 1,2),
-       |v AS (
-       |  SELECT fid, bid,
-       |    round(n_inter::DOUBLE / (sa.sz + sb.sz - n_inter), 6)
-       |      AS jaccard
-       |  FROM inter
-       |  JOIN sizes sa ON sa.doc_id = fid
-       |  JOIN sizes sb ON sb.doc_id = bid
-       |  WHERE round(n_inter::DOUBLE / (sa.sz + sb.sz - n_inter), 6)
-       |    >= ${Dedup.IncrementalTau}),
-       |r AS (
-       |  SELECT fid, bid, jaccard,
-       |    row_number() OVER (PARTITION BY fid ORDER BY bid) AS rn
-       |  FROM v)
-       |SELECT fid AS doc_id, bid AS dup_of, jaccard
-       |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin
-
-  private def corpusAssemblySql(tau: Double): String =
-    s"""WITH RECURSIVE q AS (
-         |  SELECT doc_id, lang,
-         |    regexp_replace(
-         |      regexp_replace(text, 'https?://[^\\s]+', '<URL>', 'g'),
-         |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-         |      '<EMAIL>', 'g') AS ctext
-         |  FROM (SELECT doc_id, lang, text, $DuckTokList AS toks
-         |        FROM documents) t0
-         |  WHERE round(0.4 * round(len(list_filter(toks,
-         |        x -> list_contains(
-         |          ['${TextAnalysis.Stopwords.mkString("','")}'], x)))::DOUBLE
-         |        / len(toks), 4)
-         |      + 0.6 * round(len(list_distinct(toks))::DOUBLE
-         |        / len(toks), 4), 4) >= ${CorpusAssembly.DefaultMinQuality}),
-         |e AS (
-         |  SELECT doc_id, lang, ctext FROM (
-         |    SELECT q.*, row_number() OVER (PARTITION BY md5(ctext)
-         |                                   ORDER BY doc_id) AS rn
-         |    FROM q) f
-         |  WHERE rn = 1),
-         |tk AS (SELECT doc_id, $DuckTokList AS toks
-         |       FROM (SELECT doc_id, ctext AS text FROM e) x),
-         |feats AS (
-         |  SELECT DISTINCT doc_id, toks[i] || ' ' || toks[i+1] AS feat
-         |  FROM tk, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-         |                    AS i) g),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM feats GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-         |  FROM feats a JOIN feats b
-         |    ON a.feat = b.feat AND a.doc_id < b.doc_id
-         |  GROUP BY 1,2),
-         |pairs AS (
-         |  SELECT id_a, id_b FROM inter
-         |  JOIN sizes sa ON sa.doc_id = id_a
-         |  JOIN sizes sb ON sb.doc_id = id_b
-         |  WHERE round(n_inter::DOUBLE / (sa.sz + sb.sz - n_inter), 6)
-         |    >= $tau),
-         |edges AS (
-         |  SELECT id_a, id_b FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT id_a, id_a FROM edges
-         |  UNION
-         |  SELECT r.src, e2.id_b FROM reach r
-         |  JOIN edges e2 ON r.dst = e2.id_a),
-         |dropped AS (
-         |  SELECT src AS doc_id FROM reach
-         |  GROUP BY 1 HAVING min(dst) <> src),
-         |strain AS (
-         |  SELECT doc_id, lang, ctext FROM e
-         |  WHERE doc_id >= $CaBench
-         |    AND doc_id NOT IN (SELECT doc_id FROM dropped)),
-         |ttk AS (SELECT doc_id, $DuckTokList AS toks
-         |        FROM (SELECT doc_id, ctext AS text FROM strain) x),
-         |bg AS (
-         |  SELECT DISTINCT array_to_string(list_slice(toks, i, i+$CaNgM1), ' ')
-         |    AS gram
-         |  FROM (SELECT $DuckTokList AS toks FROM (
-         |          SELECT regexp_replace(
-         |            regexp_replace(text, 'https?://[^\\s]+', '<URL>', 'g'),
-         |            '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-         |            '<EMAIL>', 'g') AS text
-         |          FROM documents WHERE doc_id < $CaBench) b0) b1,
-         |    LATERAL (SELECT unnest(generate_series(1,
-         |               greatest(len(toks)-$CaNgM1, 0))) AS i) g),
-         |tg AS (
-         |  SELECT DISTINCT doc_id,
-         |    array_to_string(list_slice(toks, i, i+$CaNgM1), ' ') AS gram
-         |  FROM ttk, LATERAL (SELECT unnest(generate_series(1,
-         |               greatest(len(toks)-$CaNgM1, 0))) AS i) g),
-         |contam AS (SELECT DISTINCT tg.doc_id FROM tg
-         |           JOIN bg USING (gram)),
-         |train AS (
-         |  SELECT s.doc_id, s.lang, CAST(len(tt.toks) AS BIGINT) AS n_toks,
-         |    ((s.doc_id % $Fold31) * $HashMult) % 1000000 AS bm
-         |  FROM strain s JOIN ttk tt USING (doc_id)
-         |  WHERE s.doc_id NOT IN (SELECT doc_id FROM contam)),
-         |b AS (SELECT CAST(sum(n_toks) AS BIGINT) // 2 AS budget FROM train),
-         |a2 AS (SELECT lang, CAST(sum(n_toks) AS BIGINT) AS available_toks
-         |       FROM train GROUP BY lang),
-         |r2 AS (
-         |  SELECT lang,
-         |    CAST(least(target_toks // available_toks, ${CorpusAssembly.DefaultMaxEpochs}) AS BIGINT)
-         |      AS full_epochs,
-         |    CAST(least(999999, CASE WHEN available_toks < 8796093022208
-         |        THEN ((target_toks % available_toks) * 1000000)
-         |          // available_toks
-         |        ELSE (target_toks % available_toks)
-         |          // greatest(available_toks // 1000000, 1) END) AS BIGINT)
-         |      AS rem_rate_millionths
-         |  FROM (SELECT lang, available_toks,
-         |          (budget // 1000000) * w + ((budget % 1000000) * w)
-         |            // 1000000 AS target_toks
-         |        FROM (SELECT a2.*, b.budget,
-         |            CAST(CASE lang $CaWeightCase
-         |              ELSE ${CorpusAssembly.DefaultWeightOther} END
-         |              AS BIGINT) AS w
-         |          FROM a2, b) t1) t2),
-         |cop AS (
-         |  SELECT train.doc_id, train.lang, train.n_toks,
-         |    full_epochs + CASE WHEN bm < rem_rate_millionths
-         |      THEN 1 ELSE 0 END AS copies
-         |  FROM train JOIN r2 USING (lang)),
-         |expd AS (
-         |  SELECT doc_id, lang, n_toks,
-         |    unnest(generate_series(0, copies - 1)) AS epoch
-         |  FROM cop WHERE copies > 0),
-         |h AS (
-         |  SELECT doc_id, epoch, lang, n_toks,
-         |    doc_id * $CaRepFactor + epoch AS rep_id,
-         |    (((doc_id * $CaRepFactor + epoch) % $Fold31) * $HashMult)
-         |      % $Fold31 AS hkey
-         |  FROM expd)
-         |SELECT doc_id, CAST(epoch AS INTEGER) AS epoch, lang, n_toks,
-         |  (hkey * ${CorpusAssembly.DefaultNShards}) // $Fold31 AS shard,
-         |  CAST(row_number() OVER (PARTITION BY (hkey * ${CorpusAssembly.DefaultNShards}) // $Fold31
-         |    ORDER BY hkey, rep_id) AS INTEGER) AS pos
-         |FROM h ORDER BY doc_id, epoch""".stripMargin
-
-  /** DuckDB recomputation of the exact word-bigram Jaccard tier (J ≥ 0.5)
-    * over the near-dup-planted corpus. Shared by `dedup_jaccard_pairs`
-    * and BOTH agreement gates: the agreement queries semi-join this exact
-    * tier against a candidate tier whose recall on this corpus is 1
-    * (deterministic), so their correct answer IS the exact tier. */
-  private lazy val ExactJaccardTierSql: String =
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 10000, regexp_replace(text, '^[^ ]+ ', '')
-       |  FROM documents WHERE doc_id < 20),
-       |t AS (SELECT doc_id, $DuckTokList AS toks FROM corpus),
-       |feats AS (
-       |  SELECT DISTINCT doc_id, toks[i] || ' ' || toks[i+1] AS feat
-       |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-       |                   AS i) g),
-       |sizes AS (SELECT doc_id, count(*) AS sz FROM feats GROUP BY 1),
-       |inter AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-       |  FROM feats a JOIN feats b
-       |    ON a.feat = b.feat AND a.doc_id < b.doc_id
-       |  GROUP BY 1,2)
-       |SELECT id_a, id_b,
-       |  round(n_inter::DOUBLE / (sa.sz + sb.sz - n_inter), 6) AS jaccard
-       |FROM inter
-       |JOIN sizes sa ON sa.doc_id = id_a
-       |JOIN sizes sb ON sb.doc_id = id_b
-       |WHERE round(n_inter::DOUBLE / (sa.sz + sb.sz - n_inter), 6) >= 0.5
-       |ORDER BY id_a, id_b""".stripMargin
-
-  /** DuckDB retraining of the count-space NB language-ID model — the
-    * identical marker plant, counts, smoothing, integer-millionth log
-    * weights, and (score DESC, lang ASC) argmax as
-    * TextAnalysis.nbScores. Float work is confined to one ln per
-    * distinct (token, lang) weight, floored to BIGINT millionths before
-    * any sum, so both engines aggregate identical integers. */
-  private lazy val NbScoresSql: String =
-    s"""corpus AS (
-       |  SELECT doc_id, lang,
-       |    text || ' ' || repeat('qq' || CAST(li AS VARCHAR) || ' ', 6) ||
-       |    'qq' || CAST((li + 1) % 5 AS VARCHAR) ||
-       |    ' qq' || CAST((li + 2) % 5 AS VARCHAR) AS text
-       |  FROM (SELECT doc_id, lang, text,
-       |          CASE lang WHEN 'de' THEN 0 WHEN 'en' THEN 1
-       |               WHEN 'es' THEN 2 WHEN 'fr' THEN 3 ELSE 4 END AS li
-       |        FROM documents) d),
-       |tk AS (SELECT doc_id, lang, $DuckTokList AS toks FROM corpus),
-       |tok AS (SELECT doc_id, lang AS lang_label, unnest(toks) AS w
-       |        FROM tk),
-       |cnt AS (SELECT lang_label AS l, w, count(*) AS c
-       |        FROM tok GROUP BY 1, 2),
-       |tots AS (SELECT lang_label AS l, count(*) AS tot
-       |         FROM tok GROUP BY 1),
-       |vocab AS (SELECT count(DISTINCT w) AS v FROM tok),
-       |pri AS (
-       |  SELECT lang AS l,
-       |    CAST(floor(ln(count(*)::DOUBLE /
-       |      (SELECT count(*)::DOUBLE FROM corpus)) * 1000000.0)
-       |      AS BIGINT) AS prior
-       |  FROM corpus GROUP BY 1),
-       |langs AS (SELECT DISTINCT lang AS l FROM corpus),
-       |scores AS (
-       |  SELECT t.doc_id, t.lang_label, lg.l, pr.prior +
-       |    CAST(sum(CAST(floor(ln(
-       |      (coalesce(c.c, 0) + 1)::DOUBLE / (tt.tot + vb.v)::DOUBLE)
-       |      * 1000000.0) AS BIGINT)) AS BIGINT) AS score
-       |  FROM tok t
-       |  CROSS JOIN langs lg
-       |  LEFT JOIN cnt c ON c.l = lg.l AND c.w = t.w
-       |  JOIN tots tt ON tt.l = lg.l
-       |  CROSS JOIN vocab vb
-       |  JOIN pri pr ON pr.l = lg.l
-       |  GROUP BY t.doc_id, t.lang_label, lg.l, pr.prior),
-       |pred AS (
-       |  SELECT doc_id, lang_label, l AS lang_pred, score,
-       |    row_number() OVER (PARTITION BY doc_id
-       |                       ORDER BY score DESC, l ASC) AS rn
-       |  FROM scores)""".stripMargin
-
-  /** DuckDB retraining of the batch-perceptron quality filter — the
-    * identical marker plant, feature hash, and K unrolled integer
-    * update steps as QualityClassifier.trainPerceptron. Because the
-    * whole recurrence is int64 (no floats, not even rounded ones), the
-    * oracle reproduces the weights, margins, and predictions EXACTLY:
-    * w1 is the all-misclassified first step from w0 = 0; each later
-    * step scores with the previous weights (LEFT JOIN + coalesce for
-    * unseen features) and folds the misclassified-doc gradient in via
-    * FULL OUTER JOIN. The bias rides as feature f = D with x = 1. */
-  private lazy val PerceptronSql: String = {
-    val D = QualityClassifier.D
-    val copies = QualityClassifier.MarkerCopies
-    val head =
-      s"""corpus AS (
-         |  SELECT doc_id,
-         |    CAST(CASE WHEN doc_id % 3 = 0 THEN -1 ELSE 1 END AS BIGINT)
-         |      AS label,
-         |    text || ' ' || CASE WHEN doc_id % 3 = 0
-         |      THEN repeat('xjunk ', $copies) || 'xclean'
-         |      ELSE repeat('xclean ', $copies) || 'xjunk' END AS text
-         |  FROM documents),
-         |tk AS (SELECT doc_id, label, $DuckTokList AS toks FROM corpus),
-         |feats AS (
-         |  SELECT doc_id, label, f, CAST(count(*) AS BIGINT) AS x FROM (
-         |    SELECT doc_id, label,
-         |      CAST((ascii(w) * 97 + length(w) * 13) % $D AS BIGINT) AS f
-         |    FROM (SELECT doc_id, label, unnest(toks) AS w FROM tk))
-         |  GROUP BY 1, 2, 3
-         |  UNION ALL
-         |  SELECT doc_id, label, CAST($D AS BIGINT) AS f,
-         |    CAST(1 AS BIGINT) AS x
-         |  FROM corpus),
-         |w1 AS (
-         |  SELECT f, CAST(sum(label * x) AS BIGINT) AS w
-         |  FROM feats GROUP BY 1)""".stripMargin
-    val steps = (2 to QualityClassifier.Iters).map { t =>
-      val wp = s"w${t - 1}"
-      s"""m$t AS (
-         |  SELECT fe.doc_id, fe.label,
-         |    CAST(coalesce(sum($wp.w * fe.x), 0) AS BIGINT) AS margin
-         |  FROM feats fe LEFT JOIN $wp ON fe.f = $wp.f
-         |  GROUP BY 1, 2),
-         |w$t AS (
-         |  SELECT coalesce(a.f, g.f) AS f,
-         |    CAST(coalesce(a.w, 0) + coalesce(g.g, 0) AS BIGINT) AS w
-         |  FROM $wp a FULL OUTER JOIN (
-         |    SELECT fe.f, CAST(sum(fe.label * fe.x) AS BIGINT) AS g
-         |    FROM feats fe JOIN m$t ON fe.doc_id = m$t.doc_id
-         |    WHERE m$t.margin * m$t.label <= 0
-         |    GROUP BY 1) g ON a.f = g.f)""".stripMargin
-    }
-    val wk = s"w${QualityClassifier.Iters}"
-    val fin =
-      s"""mfin AS (
-         |  SELECT fe.doc_id, fe.label,
-         |    CAST(coalesce(sum($wk.w * fe.x), 0) AS BIGINT) AS margin
-         |  FROM feats fe LEFT JOIN $wk ON fe.f = $wk.f
-         |  GROUP BY 1, 2)""".stripMargin
-    (head +: steps :+ fin).mkString(",\n")
-  }
-
-  /** DuckDB recomputation of benchmark contamination (shared by the
-    * exact one-tier path and the bloom-pruned two-tier path, whose
-    * result must be identical). */
-  private lazy val ContaminationSql: String =
-    s"""WITH snip AS (
-       |  SELECT doc_id + 50 AS t_id,
-       |    array_to_string(list_slice($DuckTokList, 1, 8), ' ') AS snippet
-       |  FROM documents WHERE doc_id < 20),
-       |corpus AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN s.snippet IS NOT NULL
-       |      THEN d.text || ' ' || s.snippet ELSE d.text END AS text
-       |  FROM documents d LEFT JOIN snip s ON d.doc_id = s.t_id),
-       |t AS (SELECT doc_id, $DuckTokList AS toks FROM corpus),
-       |grams AS (
-       |  SELECT DISTINCT doc_id,
-       |    array_to_string(list_slice(toks, i, i+7), ' ') AS gram
-       |  FROM t, LATERAL (SELECT unnest(generate_series(1,
-       |                     greatest(len(toks)-7, 0))) AS i) g),
-       |bench AS (SELECT gram, doc_id AS bench_id FROM grams
-       |          WHERE doc_id < 50)
-       |SELECT g.doc_id, count(DISTINCT g.gram) AS n_grams_hit,
-       |  count(DISTINCT b.bench_id) AS n_bench_docs
-       |FROM grams g JOIN bench b USING (gram)
-       |WHERE g.doc_id >= 50
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** One unrolled fixed-point PageRank sweep for the DuckDB oracle —
-    * the same BIGINT arithmetic as Graph.pageRank (integer division is
-    * identical for non-negative operands: Spark DIV truncates, DuckDB
-    * `//` floors). */
-  private def duckPageRankIter(i: Int): String =
-    s"""r$i AS (
-       |  SELECT d.node,
-       |    150000000 + (85 * coalesce(s.contrib, 0)) // 100 AS pr
-       |  FROM deg d LEFT JOIN (
-       |    SELECT e.dst AS node,
-       |      CAST(sum(r.pr // g.outdeg) AS BIGINT) AS contrib
-       |    FROM edges e
-       |    JOIN r${i - 1} r ON e.src = r.node
-       |    JOIN deg g ON e.src = g.node
-       |    GROUP BY e.dst) s ON d.node = s.node)"""
-
-  /** Shared Morton-spread CTE chain: expects a prior CTE `t0` exposing
-    * `a0`/`b0` (32-bit-masked dimensions) plus passthrough columns;
-    * yields `z` with the interleaved code as `zv`. Constants are the
-    * classic mask-shift ladder, identical to InterleaveBits' codegen. */
-  private val DuckMortonSpread: String =
-    """t1 AS (SELECT *,
-      |  (a0 | (a0 << 16)) & 281470681808895 AS a1,
-      |  (b0 | (b0 << 16)) & 281470681808895 AS b1 FROM t0),
-      |t2 AS (SELECT *,
-      |  (a1 | (a1 << 8)) & 71777214294589695 AS a2,
-      |  (b1 | (b1 << 8)) & 71777214294589695 AS b2 FROM t1),
-      |t3 AS (SELECT *,
-      |  (a2 | (a2 << 4)) & 1085102592571150095 AS a3,
-      |  (b2 | (b2 << 4)) & 1085102592571150095 AS b3 FROM t2),
-      |t4 AS (SELECT *,
-      |  (a3 | (a3 << 2)) & 3689348814741910323 AS a4,
-      |  (b3 | (b3 << 2)) & 3689348814741910323 AS b4 FROM t3),
-      |t5 AS (SELECT *,
-      |  (a4 | (a4 << 1)) & 6148914691236517205 AS a5,
-      |  (b4 | (b4 << 1)) & 6148914691236517205 AS b5 FROM t4),
-      |z AS (SELECT *, a5 | (b5 << 1) AS zv FROM t5)""".stripMargin
-
-  /** One per-column profile leg for the documents-profile oracle. */
-  private def duckProfileLeg(c: String): String =
-    s"""SELECT '$c' AS col_name,
-       |  CAST(count(*) AS BIGINT) AS n_rows,
-       |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_null,
-       |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-       |  CAST(min($c) AS VARCHAR) AS min_v,
-       |  CAST(max($c) AS VARCHAR) AS max_v
-       |FROM documents"""
-
-  def oracleSql: Map[String, String] = Map(
-    "documents_profile" ->
-      s"""SELECT * FROM (
-         |${Seq("doc_id", "text", "lang", "source", "n_chars")
-             .map(duckProfileLeg).mkString("\nUNION ALL\n")}
-         |) p ORDER BY col_name""".stripMargin,
-    "price_histogram" ->
-      """WITH c AS (
-        |  SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS cents
-        |  FROM lineitem),
-        |b AS (SELECT min(cents) AS cmin, max(cents) AS cmax FROM c)
-        |SELECT least((cents - cmin) * 32 // greatest(cmax - cmin + 1, 1),
-        |         31) AS bucket,
-        |  CAST(count(*) AS BIGINT) AS cnt,
-        |  min(cents) AS lo_cents, max(cents) AS hi_cents
-        |FROM c, b GROUP BY 1 ORDER BY 1""".stripMargin,
-    "pagerank_suppliers" ->
-      s"""WITH pairs AS (
-         |  SELECT DISTINCT o.o_custkey AS c,
-         |    l.l_suppkey + 10000000000 AS sp
-         |  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
-         |edges AS (
-         |  SELECT c AS src, sp AS dst FROM pairs
-         |  UNION ALL SELECT sp AS src, c AS dst FROM pairs),
-         |deg AS (SELECT src AS node, count(*) AS outdeg
-         |        FROM edges GROUP BY 1),
-         |r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS pr FROM deg),
-         |${(1 to 5).map(duckPageRankIter).mkString(",\n")}
-         |SELECT node, pr FROM r5
-         |ORDER BY pr DESC, node LIMIT 20""".stripMargin,
-    // the Morton interleave re-derived in pure SQL bit-twiddling (the
-    // classic mask-shift spread, one CTE per step)
-    "zorder_bucket_stats" ->
-      s"""WITH t0 AS (
-        |  SELECT l_partkey, l_suppkey,
-        |    l_partkey & 4294967295 AS a0,
-        |    l_suppkey & 4294967295 AS b0
-        |  FROM lineitem),
-        |$DuckMortonSpread
-        |SELECT zv // 65536 AS bucket, CAST(count(*) AS BIGINT) AS cnt,
-        |  min(l_partkey) AS min_part, max(l_partkey) AS max_part,
-        |  min(l_suppkey) AS min_supp, max(l_suppkey) AS max_supp
-        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same spread, over dimensions first range-scaled onto [0, 2^16)
-    // with the same integer affine map as Layout.scaledZ
-    "zorder_scaled_stats" ->
-      s"""WITH b AS (
-        |  SELECT min(l_orderkey) AS xmin, max(l_orderkey) AS xmax,
-        |    min(l_partkey) AS ymin, max(l_partkey) AS ymax
-        |  FROM lineitem),
-        |t0 AS (
-        |  SELECT l_orderkey, l_partkey,
-        |    ((l_orderkey - xmin) * 65535) // greatest(xmax - xmin, 1)
-        |      AS a0,
-        |    ((l_partkey - ymin) * 65535) // greatest(ymax - ymin, 1)
-        |      AS b0
-        |  FROM lineitem, b),
-        |$DuckMortonSpread
-        |SELECT zv // 16777216 AS bucket, CAST(count(*) AS BIGINT) AS cnt,
-        |  min(l_orderkey) AS min_ord, max(l_orderkey) AS max_ord,
-        |  min(l_partkey) AS min_part, max(l_partkey) AS max_part
-        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
-    "wordcount_ci" ->
-      s"""SELECT lower(word) AS word, count(*) AS cnt
-         |FROM ($DuckTokens) t
-         |WHERE regexp_matches(word, '\\S')
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "wordcount_cs" ->
-      s"""SELECT word, count(*) AS cnt
-         |FROM ($DuckTokens) t
-         |WHERE regexp_matches(word, '\\S')
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "wordcount_topk" ->
-      s"""SELECT lower(word) AS word, count(*) AS cnt
-         |FROM ($DuckTokens) t
-         |WHERE regexp_matches(word, '\\S')
-         |GROUP BY 1 ORDER BY cnt DESC, word LIMIT 50""".stripMargin,
-    // identical counts to wordcount_ci: the .txt round trip only re-splits
-    // lines, and the tokenizer already folds newlines to spaces
-    "wordcount_textdir" ->
-      s"""SELECT lower(word) AS word, count(*) AS cnt
-         |FROM ($DuckTokens) t
-         |WHERE regexp_matches(word, '\\S')
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "lang_id" ->
-      """SELECT doc_id, lang AS lang_label,
-        |  CASE
-        |    WHEN len(regexp_extract_all(text, '[\x{4E00}-\x{9FFF}]'))::DOUBLE
-        |         / greatest(length(text), 1) > 0.05 THEN 'zh'
-        |    WHEN len(regexp_extract_all(text, '[\x{3040}-\x{30FF}]'))::DOUBLE
-        |         / greatest(length(text), 1) > 0.05 THEN 'ja'
-        |    WHEN len(regexp_extract_all(text, '[\x{0400}-\x{04FF}]'))::DOUBLE
-        |         / greatest(length(text), 1) > 0.05 THEN 'ru'
-        |    WHEN len(regexp_extract_all(text, '[áéíóúñ¿¡]'))::DOUBLE
-        |         / greatest(length(text), 1) > 0.01 THEN 'es'
-        |    ELSE 'en' END AS lang_pred
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "lang_id_nb" ->
-      s"""WITH $NbScoresSql
-         |SELECT doc_id, lang_label, lang_pred, score
-         |FROM pred WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // structural truths of the BPE packing, stated without retraining
-    // the tokenizer: every non-empty doc packed once, no overfull
-    // window, token mass conserved (flags Spark-verified, pinned at 1)
-    "bpe_pack_gate" ->
-      s"""SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents
-         |         WHERE len($DuckTokList) > 0) AS n_docs,
-         |  CAST(1 AS INTEGER) AS within_cap,
-         |  CAST(1 AS INTEGER) AS conserved""".stripMargin,
-    // deflate isn't SQL-recomputable; the gate's correct answer is the
-    // plant structure itself: 10 repeat pairs, corpus + 20 planted
-    // rows, both invariant flags true
-    "compression_ratio_gate" ->
-      """SELECT (SELECT CAST(count(*) + 20 AS BIGINT) FROM documents)
-        |    AS n_docs,
-        |  CAST(10 AS BIGINT) AS n_pairs,
-        |  CAST(1 AS BIGINT) AS all_bounded,
-        |  CAST(1 AS BIGINT) AS all_repeats_better""".stripMargin,
-    "lang_id_confusion" ->
-      s"""WITH $NbScoresSql
-         |SELECT lang_label, lang_pred, CAST(count(*) AS BIGINT) AS n_docs
-         |FROM pred WHERE rn = 1
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // the robust_price_stats integer median/MAD arithmetic per lang,
-    // emitting the flagged docs instead of per-group counts
-    "length_outliers" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, lang, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 40000, lang, substr(text, 1, 15)
-         |  FROM documents WHERE doc_id < 10
-         |  UNION ALL
-         |  SELECT doc_id + 50000, lang, repeat(text || ' ', 20)
-         |  FROM documents WHERE doc_id < 10),
-         |t AS (
-         |  SELECT doc_id, lang, CAST(len($DuckTokList) AS BIGINT)
-         |    AS n_toks
-         |  FROM corpus),
-         |m AS (
-         |  SELECT lang, CAST(2 * quantile_cont(n_toks, 0.5) AS BIGINT)
-         |    AS med2
-         |  FROM t GROUP BY 1),
-         |d AS (
-         |  SELECT t.doc_id, t.lang, t.n_toks,
-         |    2 * n_toks - med2 AS dev2, med2
-         |  FROM t JOIN m USING (lang)),
-         |md AS (
-         |  SELECT lang, CAST(2 * quantile_cont(abs(dev2), 0.5) AS BIGINT)
-         |    AS mad4
-         |  FROM d GROUP BY 1)
-         |SELECT doc_id, lang, n_toks, med2, mad4, reason FROM (
-         |  SELECT d.doc_id, d.lang, d.n_toks, d.med2, md.mad4,
-         |    CASE WHEN d.n_toks < 5 THEN 'too_short'
-         |         WHEN 2 * dev2 > 3 * mad4 THEN 'too_long' END AS reason
-         |  FROM d JOIN md USING (lang)) f
-         |WHERE reason IS NOT NULL
-         |ORDER BY doc_id""".stripMargin,
-    "small_cell_release" ->
-      s"""WITH c AS (
-         |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(len($DuckTokList)) AS BIGINT) AS n_toks
-         |  FROM documents GROUP BY 1, 2)
-         |SELECT * FROM (
-         |  SELECT lang, source, n_docs, n_toks, CAST(1 AS BIGINT)
-         |    AS n_cells
-         |  FROM c WHERE n_docs >= 8
-         |  UNION ALL
-         |  SELECT '__suppressed__', '__suppressed__',
-         |    coalesce(CAST(sum(n_docs) AS BIGINT), CAST(0 AS BIGINT)),
-         |    coalesce(CAST(sum(n_toks) AS BIGINT), CAST(0 AS BIGINT)),
-         |    CAST(count(*) AS BIGINT)
-         |  FROM c WHERE n_docs < 8) u
-         |ORDER BY lang, source""".stripMargin,
-    "lang_id_nb_gate" ->
-      s"""WITH $NbScoresSql
-         |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN lang_pred = lang_label THEN 1 ELSE 0 END)
-         |       AS BIGINT) AS n_correct,
-         |  CASE WHEN sum(CASE WHEN lang_pred = lang_label
-         |                     THEN 1 ELSE 0 END) * 1000
-         |            >= count(*) * 950
-         |       THEN 1 ELSE 0 END AS acc_ok
-         |FROM pred WHERE rn = 1""".stripMargin,
-    "quality_classifier" ->
-      s"""WITH $PerceptronSql
-         |SELECT doc_id, label, margin,
-         |  CAST(CASE WHEN margin > 0 THEN 1 ELSE -1 END AS BIGINT) AS pred
-         |FROM mfin ORDER BY doc_id""".stripMargin,
-    "quality_classifier_gate" ->
-      s"""WITH $PerceptronSql
-         |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN (CASE WHEN margin > 0 THEN 1 ELSE -1 END)
-         |                     = label THEN 1 ELSE 0 END)
-         |       AS BIGINT) AS n_correct,
-         |  CASE WHEN sum(CASE WHEN (CASE WHEN margin > 0 THEN 1 ELSE -1
-         |                           END) = label THEN 1 ELSE 0 END) * 1000
-         |            >= count(*) * ${QualityClassifier.FloorMillis}
-         |       THEN 1 ELSE 0 END AS acc_ok
-         |FROM mfin""".stripMargin,
-    // Recompute the decode's integer lane sums from the UTF-8 bytes
-    // (hex-pair extraction). Image rows (doc_id%3=0) are real 64×64 PGM:
-    // raster pixel k = byte[k mod nb], lane = horizontal band k div 512,
-    // n_bytes = 13-byte header + 4096 raster. Audio/video keep the
-    // declared stub: lane = i mod 8 over the raw bytes.
-    "multimodal_features" ->
-      """WITH b AS (
-        |  SELECT doc_id, hex(encode(text)) AS h,
-        |    octet_length(encode(text)) AS nb
-        |  FROM documents),
-        |img AS (
-        |  SELECT doc_id, 4109 AS n_bytes, i // 512 AS lane,
-        |    (strpos('0123456789ABCDEF',
-        |       substr(h, 2*(i % greatest(nb,1))+1, 1)) - 1) * 16 +
-        |    (strpos('0123456789ABCDEF',
-        |       substr(h, 2*(i % greatest(nb,1))+2, 1)) - 1) AS bv
-        |  FROM b, LATERAL (SELECT unnest(generate_series(0, 4095)) AS i) g
-        |  WHERE doc_id % 3 = 0),
-        |aud AS (
-        |  SELECT doc_id, 44 + 2*n AS n_bytes,
-        |    least(i // greatest(n // 8, 1), 7) AS lane,
-        |    abs(((doc_id*31 + i*17) % 20001) - 10000) AS bv
-        |  FROM (SELECT doc_id, 160 + (doc_id % 41) * 4 AS n
-        |        FROM documents WHERE doc_id % 3 = 1) d,
-        |  LATERAL (SELECT unnest(generate_series(0, n-1)) AS i) g),
-        |vid AS (
-        |  SELECT doc_id, frames * 4109 AS n_bytes, k AS lane,
-        |    (doc_id*7 + k*13 + i) % 256 AS bv
-        |  FROM (SELECT doc_id, 4 + (doc_id % 5) AS frames
-        |        FROM documents WHERE doc_id % 3 = 2) d,
-        |  LATERAL (SELECT unnest(generate_series(0, frames-1)) AS k) f,
-        |  LATERAL (SELECT unnest(generate_series(0, 4095)) AS i) g),
-        |u AS (SELECT * FROM img UNION ALL SELECT * FROM aud
-        |      UNION ALL SELECT * FROM vid)
-        |SELECT doc_id,
-        |  CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image'
-        |    WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
-        |  CAST(n_bytes AS BIGINT) AS n_bytes,
-        |  CAST(coalesce(sum(bv) FILTER (WHERE lane = 0), 0) AS BIGINT) AS f0,
-        |  CAST(coalesce(sum(bv) FILTER (WHERE lane = 1), 0) AS BIGINT) AS f1,
-        |  CAST(coalesce(sum(bv) FILTER (WHERE lane = 2), 0) AS BIGINT) AS f2,
-        |  CAST(coalesce(sum(bv) FILTER (WHERE lane = 3), 0) AS BIGINT) AS f3,
-        |  CAST(coalesce(sum(bv) FILTER (WHERE lane = 4), 0) AS BIGINT) AS f4,
-        |  CAST(coalesce(sum(bv) FILTER (WHERE lane = 5), 0) AS BIGINT) AS f5,
-        |  CAST(coalesce(sum(bv) FILTER (WHERE lane = 6), 0) AS BIGINT) AS f6,
-        |  CAST(coalesce(sum(bv) FILTER (WHERE lane = 7), 0) AS BIGINT) AS f7
-        |FROM u GROUP BY doc_id, n_bytes ORDER BY doc_id""".stripMargin,
-    "pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity),2) AS sum_qty,
-        |  round(sum(l_extendedprice),2) AS sum_base_price,
-        |  round(sum(l_extendedprice*(1-l_discount)),2) AS sum_disc_price,
-        |  round(sum(l_extendedprice*(1-l_discount)*(1+l_tax)),2) AS sum_charge,
-        |  round(avg(l_quantity),6) AS avg_qty,
-        |  round(avg(l_extendedprice),6) AS avg_price,
-        |  round(avg(l_discount),6) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "top_revenue_orders" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
-        |  round(sum(l_extendedprice*(1-l_discount)),2) AS rev
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1997-01-01'
-        |GROUP BY 1,2 ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin,
-    "region_revenue" ->
-      """SELECT n_name,
-        |  round(sum(l_extendedprice*(1-l_discount)),2) AS rev
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY rev DESC, n_name""".stripMargin,
-    "sql_frontend_revenue" ->
-      """SELECT c_mktsegment,
-        |  CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |  CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0)
-        |    AS BIGINT)) AS BIGINT) AS rev_cents,
-        |  CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_orders
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "order_priority" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "top_orders_per_customer" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "running_customer_spend" ->
-      """SELECT o_custkey, o_orderkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS o_date,
-        |  round(sum(o_totalprice) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2)
-        |    AS running_spend
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "order_status_stats" ->
-      """SELECT o_orderstatus,
-        |  count(DISTINCT o_custkey) AS n_customers,
-        |  count(*) AS n_orders,
-        |  round(sum(o_totalprice),2) AS total_price,
-        |  round(avg(o_totalprice),4) AS avg_price
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "rollup_revenue" ->
-      """SELECT coalesce(r_name,'ALL') AS region_name,
-        |  coalesce(n_name,'ALL') AS nation_name,
-        |  round(sum(l_extendedprice*(1-l_discount)),2) AS rev
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY region_name, nation_name""".stripMargin,
-    "modest_customers" ->
-      """SELECT custkey FROM (
-        |  SELECT DISTINCT o_custkey AS custkey FROM orders
-        |  EXCEPT
-        |  SELECT DISTINCT o_custkey AS custkey FROM orders
-        |  WHERE o_totalprice > 300000.0) t
-        |ORDER BY custkey""".stripMargin,
-    "repeat_customers" ->
-      """SELECT custkey FROM (
-        |  SELECT o_custkey AS custkey FROM orders
-        |  WHERE year(o_orderdate) = 1995
-        |  INTERSECT
-        |  SELECT o_custkey AS custkey FROM orders
-        |  WHERE year(o_orderdate) = 2000) t
-        |ORDER BY custkey""".stripMargin,
-    "customers_without_orders" ->
-      """SELECT n_name, count(*) AS n_customers
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                  AND o_orderdate < TIMESTAMP '1996-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "big_spenders" ->
-      """SELECT c_custkey, c_name, total_spend, n_orders FROM (
-        |  SELECT o_custkey, round(sum(o_totalprice),2) AS total_spend,
-        |    count(*) AS n_orders
-        |  FROM orders GROUP BY 1 HAVING round(sum(o_totalprice),2) > 1000000.0) t
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_spend DESC, c_custkey""".stripMargin,
-    "events_json_stats" ->
-      """SELECT event_type, n, sum_k,
-        |  CAST(sum_k AS DOUBLE) / n AS avg_k
-        |FROM (
-        |  SELECT event_type, count(*) AS n,
-        |    CAST(sum(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k
-        |  FROM events GROUP BY 1) t
-        |ORDER BY 1""".stripMargin,
-    // the VARIANT-typed extraction must agree with string extraction;
-    // min/max stay INTEGER (Spark int), only the sum needs the BIGINT cast
-    "events_variant_stats" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS INTEGER))
-        |    AS BIGINT) AS sum_k,
-        |  min(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS min_k,
-        |  max(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS max_k
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "events_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        |  event_type, count(*) AS n, round(sum(value),2) AS sum_value
-        |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "token_stats" ->
-      s"""SELECT doc_id, len(toks) AS n_tokens,
-         |  len(list_distinct(toks)) AS n_distinct,
-         |  length(text) AS n_chars,
-         |  round(list_sum(list_transform(toks, x -> length(x)))::DOUBLE
-         |        / len(toks), 4) AS avg_token_len
-         |FROM (SELECT doc_id, text, $DuckTokList AS toks FROM documents) t
-         |ORDER BY doc_id""".stripMargin,
-    // padding-waste: same token lists, same integer bucket/ratio math
-    "padding_waste" ->
-      s"""WITH t AS (SELECT len($DuckTokList) AS len FROM documents),
-         |b AS (SELECT CAST(ceil(len / 16.0) * 16 AS BIGINT) AS hi,
-         |             len FROM t),
-         |g AS (SELECT hi, CAST(count(*) AS BIGINT) AS n_docs,
-         |             CAST(sum(len) AS BIGINT) AS real_tokens
-         |      FROM b GROUP BY 1),
-         |u AS (SELECT format('{:09d}', hi) AS bucket, n_docs,
-         |             real_tokens, hi * n_docs AS padded_tokens
-         |      FROM g
-         |      UNION ALL
-         |      SELECT '__total__',
-         |             COALESCE(CAST(sum(n_docs) AS BIGINT), 0),
-         |             COALESCE(CAST(sum(real_tokens) AS BIGINT), 0),
-         |             COALESCE(CAST(sum(hi * n_docs) AS BIGINT), 0)
-         |      FROM g)
-         |SELECT bucket, n_docs, real_tokens, padded_tokens,
-         |  CAST((padded_tokens - real_tokens) * 1000000
-         |       // GREATEST(padded_tokens, 1) AS BIGINT)
-         |    AS waste_millionths
-         |FROM u ORDER BY bucket""".stripMargin,
-    // Gopher A1.2 repetition battery: identical segment/gram
-    // definitions, identical cross-multiplied integer thresholds; the
-    // oracle recomputes gram counts relationally (unnest + GROUP BY)
-    // where Spark runs sorted-array aggregates — different shapes,
-    // value-identical. Generated from the SAME (n, pct) constant
-    // tables as the Spark side so the engines cannot drift.
-    "gopher_repetition" -> {
-      val topJoins = TextAnalysis.RepTopNgram.map { case (n, _) =>
-        s"LEFT JOIN tp t$n ON s.doc_id = t$n.doc_id AND t$n.n = $n"
-      }.mkString("\n")
-      val dupJoins = TextAnalysis.RepDupNgram.map { case (n, _) =>
-        s"LEFT JOIN dp d$n ON s.doc_id = d$n.doc_id AND d$n.n = $n"
-      }.mkString("\n")
-      val topSel = TextAnalysis.RepTopNgram.map { case (n, _) =>
-        s"COALESCE(t$n.cover, 0) AS top$n" }.mkString(", ")
-      val dupSel = TextAnalysis.RepDupNgram.map { case (n, _) =>
-        s"COALESCE(d$n.cover, 0) AS dup$n" }.mkString(", ")
-      val topFlags = TextAnalysis.RepTopNgram.map { case (n, pct) =>
-        f"CASE WHEN 100*top$n > $pct*total THEN 1 ELSE 0 END AS r_top_$n%02d"
-      }.mkString(",\n")
-      val dupFlags = TextAnalysis.RepDupNgram.map { case (n, pct) =>
-        f"CASE WHEN 100*dup$n > $pct*total THEN 1 ELSE 0 END AS r_dup_$n%02d"
-      }.mkString(",\n")
-      val allFlags = Seq("r_line_frac", "r_line_chars", "r_para_frac",
-        "r_para_chars") ++
-        TextAnalysis.RepTopNgram.map { case (n, _) => f"r_top_$n%02d" } ++
-        TextAnalysis.RepDupNgram.map { case (n, _) => f"r_dup_$n%02d" }
-      val sums = allFlags.map(f =>
-        s"COALESCE(CAST(SUM($f) AS BIGINT), 0) AS $f").mkString(",\n")
-      val unions = (Seq(
-        "reject_dup_line_frac" -> "r_line_frac",
-        "reject_dup_line_chars" -> "r_line_chars",
-        "reject_dup_para_frac" -> "r_para_frac",
-        "reject_dup_para_chars" -> "r_para_chars") ++
-        TextAnalysis.RepTopNgram.map { case (n, _) =>
-          f"reject_top_ngram_$n%02d" -> f"r_top_$n%02d" } ++
-        TextAnalysis.RepDupNgram.map { case (n, _) =>
-          f"reject_dup_ngram_$n%02d" -> f"r_dup_$n%02d" })
-        .map { case (name, c) => s"UNION ALL SELECT '$name', $c FROM a" }
-        .mkString("\n")
-      val ns = (TextAnalysis.RepTopNgram ++ TextAnalysis.RepDupNgram)
-        .map(_._1).mkString(",")
-      s"""WITH corpus AS (
-         |  SELECT doc_id, CASE WHEN doc_id % 11 = 0
-         |    THEN text || ' ' || text ELSE text END AS text
-         |  FROM documents),
-         |t AS (SELECT doc_id, text, $DuckTokList AS toks FROM corpus),
-         |base AS (SELECT doc_id, toks,
-         |  length(array_to_string(toks, ' '))::BIGINT AS total,
-         |  list_filter(string_split(text, chr(10)),
-         |    l -> trim(l) <> '') AS lines,
-         |  list_filter(string_split(text, chr(10)||chr(10)),
-         |    l -> trim(l) <> '') AS paras
-         |  FROM t),
-         |seg AS (SELECT doc_id, total,
-         |  len(lines)::BIGINT AS nl,
-         |  len(list_distinct(lines))::BIGINT AS nld,
-         |  COALESCE(list_sum(list_transform(lines, x -> length(x))),
-         |    0)::BIGINT AS lc,
-         |  COALESCE(list_sum(list_transform(list_distinct(lines),
-         |    x -> length(x))), 0)::BIGINT AS lcd,
-         |  len(paras)::BIGINT AS np,
-         |  len(list_distinct(paras))::BIGINT AS npd,
-         |  COALESCE(list_sum(list_transform(paras, x -> length(x))),
-         |    0)::BIGINT AS pc,
-         |  COALESCE(list_sum(list_transform(list_distinct(paras),
-         |    x -> length(x))), 0)::BIGINT AS pcd
-         |  FROM base),
-         |g AS (SELECT doc_id, n, gram, count(*)::BIGINT AS cnt,
-         |             length(gram)::BIGINT AS glen
-         |  FROM (
-         |    SELECT b.doc_id, ns.n,
-         |      unnest(list_transform(
-         |        generate_series(1, greatest(len(b.toks) - ns.n + 1, 0)),
-         |        i -> array_to_string(
-         |          list_slice(b.toks, i, i + ns.n - 1), ' '))) AS gram
-         |    FROM base b, (SELECT unnest([$ns]) AS n) ns) x
-         |  GROUP BY doc_id, n, gram),
-         |tp AS (SELECT doc_id, n, cnt * glen AS cover FROM (
-         |    SELECT doc_id, n, cnt, glen, gram,
-         |      row_number() OVER (PARTITION BY doc_id, n
-         |        ORDER BY cnt DESC, gram) AS rn
-         |    FROM g WHERE n <= 4) y WHERE rn = 1),
-         |dp AS (SELECT doc_id, n,
-         |    COALESCE(SUM(CASE WHEN cnt >= 2 THEN cnt * glen
-         |      ELSE 0 END), 0)::BIGINT AS cover
-         |  FROM g WHERE n >= 5 GROUP BY doc_id, n),
-         |m AS (SELECT s.doc_id, s.total, s.nl, s.nld, s.lc, s.lcd,
-         |  s.np, s.npd, s.pc, s.pcd,
-         |  $topSel, $dupSel
-         |  FROM seg s
-         |$topJoins
-         |$dupJoins),
-         |fl AS (SELECT
-         |  CASE WHEN 100*(nl - nld) > 30*nl THEN 1 ELSE 0 END
-         |    AS r_line_frac,
-         |  CASE WHEN 100*(lc - lcd) > 20*lc THEN 1 ELSE 0 END
-         |    AS r_line_chars,
-         |  CASE WHEN 100*(np - npd) > 30*np THEN 1 ELSE 0 END
-         |    AS r_para_frac,
-         |  CASE WHEN 100*(pc - pcd) > 20*pc THEN 1 ELSE 0 END
-         |    AS r_para_chars,
-         |$topFlags,
-         |$dupFlags
-         |  FROM m),
-         |a AS (SELECT
-         |  COALESCE(CAST(SUM(CASE WHEN ${allFlags.mkString(" + ")} = 0
-         |    THEN 1 ELSE 0 END) AS BIGINT), 0) AS pas,
-         |$sums
-         |  FROM fl)
-         |SELECT 'pass_all' AS rule, pas AS n_docs FROM a
-         |$unions
-         |ORDER BY rule""".stripMargin
-    },
-    // Gopher composite rules: identical clean_words tokens, identical
-    // cross-multiplied integer thresholds — exact per-rule counts
-    "gopher_rules" ->
-      s"""WITH t AS (SELECT doc_id, text, $DuckTokList AS toks
-         |           FROM documents),
-         |m AS (SELECT
-         |  len(toks)::BIGINT AS n_words,
-         |  COALESCE(list_sum(list_transform(toks, x -> length(x))),
-         |    0)::BIGINT AS sum_len,
-         |  (length(text) - length(replace(text, '#', '')))::BIGINT
-         |    AS n_hash,
-         |  ((length(text) - length(replace(text, '...', ''))) // 3)::BIGINT
-         |    AS n_ell,
-         |  len(string_split(text, chr(10)))::BIGINT AS n_lines,
-         |  len(list_filter(string_split(text, chr(10)), l ->
-         |    starts_with(ltrim(l), '-') OR starts_with(ltrim(l), '*')
-         |    OR starts_with(ltrim(l), '•')))::BIGINT AS n_bullet,
-         |  len(list_filter(string_split(text, chr(10)), l ->
-         |    ends_with(rtrim(l), '...')))::BIGINT AS n_ell_end,
-         |  len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]')))::BIGINT
-         |    AS n_alpha,
-         |  len(list_intersect(list_distinct(toks),
-         |    ['the','be','to','of','and','that','have','with']))::BIGINT
-         |    AS n_stop
-         |  FROM t),
-         |fl AS (SELECT
-         |  CASE WHEN n_words < 50 OR n_words > 100000 THEN 1 ELSE 0 END
-         |    AS r_wc,
-         |  CASE WHEN sum_len < 3*n_words OR sum_len > 10*n_words
-         |    THEN 1 ELSE 0 END AS r_mwl,
-         |  CASE WHEN 10*n_hash > n_words OR 10*n_ell > n_words
-         |    THEN 1 ELSE 0 END AS r_sym,
-         |  CASE WHEN 10*n_bullet > 9*n_lines THEN 1 ELSE 0 END AS r_bul,
-         |  CASE WHEN 10*n_ell_end > 3*n_lines THEN 1 ELSE 0 END AS r_ell,
-         |  CASE WHEN 10*n_alpha < 8*n_words THEN 1 ELSE 0 END AS r_alp,
-         |  CASE WHEN n_stop < 2 THEN 1 ELSE 0 END AS r_stp
-         |  FROM m),
-         |a AS (SELECT
-         |  COALESCE(CAST(sum(r_wc) AS BIGINT), 0) AS wc,
-         |  COALESCE(CAST(sum(r_mwl) AS BIGINT), 0) AS mwl,
-         |  COALESCE(CAST(sum(r_sym) AS BIGINT), 0) AS sym,
-         |  COALESCE(CAST(sum(r_bul) AS BIGINT), 0) AS bul,
-         |  COALESCE(CAST(sum(r_ell) AS BIGINT), 0) AS ell,
-         |  COALESCE(CAST(sum(r_alp) AS BIGINT), 0) AS alp,
-         |  COALESCE(CAST(sum(r_stp) AS BIGINT), 0) AS stp,
-         |  COALESCE(CAST(sum(CASE WHEN
-         |    r_wc+r_mwl+r_sym+r_bul+r_ell+r_alp+r_stp = 0
-         |    THEN 1 ELSE 0 END) AS BIGINT), 0) AS pas
-         |  FROM fl)
-         |SELECT 'pass_all' AS rule, pas AS n_docs FROM a
-         |UNION ALL SELECT 'reject_alpha_words', alp FROM a
-         |UNION ALL SELECT 'reject_bullet_lines', bul FROM a
-         |UNION ALL SELECT 'reject_ellipsis_lines', ell FROM a
-         |UNION ALL SELECT 'reject_mean_word_len', mwl FROM a
-         |UNION ALL SELECT 'reject_stopwords', stp FROM a
-         |UNION ALL SELECT 'reject_symbol_ratio', sym FROM a
-         |UNION ALL SELECT 'reject_word_count', wc FROM a
-         |ORDER BY rule""".stripMargin,
-    "quality_score" ->
-      s"""SELECT doc_id, n_tokens, stop_ratio, distinct_ratio,
-         |  round(0.4*stop_ratio + 0.6*distinct_ratio, 4) AS quality_score
-         |FROM (
-         |  SELECT doc_id, len(toks) AS n_tokens,
-         |    round(len(list_filter(toks, x -> list_contains(
-         |      ['${TextAnalysis.Stopwords.mkString("','")}'], x)))::DOUBLE
-         |      / len(toks), 4) AS stop_ratio,
-         |    round(len(list_distinct(toks))::DOUBLE / len(toks), 4)
-         |      AS distinct_ratio
-         |  FROM (SELECT doc_id, $DuckTokList AS toks FROM documents) t) q
-         |ORDER BY doc_id""".stripMargin,
-    // the staging is EXACTLY ntile over (quality DESC, doc_id) — the
-    // Spark side computes the same assignment without the global window
-    "curriculum_stages" ->
-      s"""WITH q AS (
-         |  SELECT doc_id, len(toks) AS n_tokens,
-         |    round(0.4*round(len(list_filter(toks, x -> list_contains(
-         |        ['${TextAnalysis.Stopwords.mkString("','")}'], x)))::DOUBLE
-         |        / len(toks), 4) +
-         |      0.6*round(len(list_distinct(toks))::DOUBLE / len(toks), 4),
-         |      4) AS quality_score
-         |  FROM (SELECT doc_id, $DuckTokList AS toks FROM documents) t),
-         |s AS (
-         |  SELECT n_tokens, quality_score,
-         |    ntile(4) OVER (ORDER BY quality_score DESC, doc_id) AS stage
-         |  FROM q)
-         |SELECT stage, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-         |  min(quality_score) AS min_quality,
-         |  max(quality_score) AS max_quality
-         |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-    "bpe_token_stats" ->
-      s"""SELECT doc_id, len(bt) AS n_bpe_tokens, len(wt) AS n_ws_tokens,
-         |  round(len(bt)::DOUBLE / greatest(len(wt), 1), 4) AS bpe_per_word
-         |FROM (SELECT doc_id,
-         |  regexp_extract_all(text,
-         |    '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\\s]+')
-         |    AS bt,
-         |  $DuckTokList AS wt FROM documents) t
-         |ORDER BY doc_id""".stripMargin,
-    "fingerprint_md5" ->
-      """SELECT doc_id, md5(text) AS fp FROM documents ORDER BY doc_id""",
-    // the round trip through the partitioned sink is lossless, so the
-    // oracle reads the original table directly
-    "partitioned_lang_stats" ->
-      """SELECT lang, count(*) AS n_docs, CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM documents WHERE lang IN ('en', 'es')
-        |GROUP BY 1 ORDER BY lang""".stripMargin,
-    // the fingerprint itself is xxhash64-based (not ANSI-expressible);
-    // the gate's n_docs/n_keys are exact recomputations and the flags
-    // assert determinism + injectivity (see TextAnalysis.fingerprintGate)
-    "fingerprint_gate" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 20000,
-         |    array_to_string(list_reverse($DuckTokList), ' ')
-         |  FROM documents WHERE doc_id < 20),
-         |k AS (SELECT array_to_string($DuckTokList, ' ') AS tok_key
-         |      FROM corpus)
-         |SELECT count(*) AS n_docs, count(DISTINCT tok_key) AS n_keys,
-         |  1 AS functional_ok, 1 AS injective_ok
-         |FROM k""".stripMargin,
-    "contamination_check" -> ContaminationSql,
-    // bloom prune + exact confirm computes the identical answer — the
-    // equality with the one-tier exact path IS the check
-    "contamination_bloom" -> ContaminationSql,
-    "doc_repetition" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 11 = 0 THEN text || ' ' || text
-         |         ELSE text END AS text
-         |  FROM documents),
-         |t AS (SELECT doc_id, $DuckTokList AS toks FROM corpus),
-         |g AS (SELECT doc_id,
-         |  list_transform(generate_series(1, greatest(len(toks)-2, 0)),
-         |    i -> array_to_string(list_slice(toks, i, i+2), ' ')) AS grams
-         |  FROM t)
-         |SELECT doc_id, len(grams) AS n_3grams,
-         |  len(list_distinct(grams)) AS n_distinct,
-         |  1.0::DOUBLE - (len(list_distinct(grams))::DOUBLE
-         |                 / greatest(len(grams), 1)) AS rep_ratio
-         |FROM g ORDER BY doc_id""".stripMargin,
-    "top_domains" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 4 = 0 THEN
-        |      text || ' see https://d' || (doc_id % 7) ||
-        |      '.example.com/p/' || doc_id
-        |    ELSE text END AS text
-        |  FROM documents),
-        |urls AS (SELECT unnest(regexp_extract_all(text,
-        |           'https?://[^\s]+')) AS url FROM corpus)
-        |SELECT regexp_extract(url, 'https?://([^/]+)', 1) AS domain,
-        |  count(*) AS n_urls
-        |FROM urls GROUP BY 1
-        |ORDER BY n_urls DESC, domain""".stripMargin,
-    // only step 0 of BPE training is ANSI-recomputable (later steps see
-    // merged symbols); the gate pins it plus table-level invariants
-    "bpe_merge_gate" ->
-      s"""WITH w AS (SELECT lower(word) AS word, count(*) AS cnt
-         |           FROM ($DuckTokens) t
-         |           WHERE regexp_matches(word, '\\S') GROUP BY 1),
-         |prs AS (SELECT substr(word, i, 1) AS a, substr(word, i + 1, 1)
-         |          AS b, cnt
-         |        FROM w, LATERAL (SELECT unnest(generate_series(1,
-         |                           length(word) - 1)) AS i) g),
-         |pc AS (SELECT a, b, CAST(sum(cnt) AS BIGINT) AS c
-         |       FROM prs GROUP BY 1, 2)
-         |SELECT a AS step0_a, b AS step0_b, c AS step0_count,
-         |  20 AS n_merges, 1 AS distinct_ok
-         |FROM pc ORDER BY c DESC, a, b LIMIT 1""".stripMargin,
-    // the unigram trainer's ANSI-checkable side: the corpus character
-    // inventory is exact (tokenize → lowercase → distinct chars) and
-    // the four invariants — chars retained, full coverage, within-round
-    // EM monotone, vocab target honored — are pinned at 1
-    "unigram_gate" ->
-      s"""WITH w AS (SELECT DISTINCT lower(word) AS word
-         |           FROM ($DuckTokens) t
-         |           WHERE regexp_matches(word, '\\S')),
-         |c AS (SELECT DISTINCT substr(word, i, 1) AS ch
-         |      FROM w, LATERAL (SELECT unnest(generate_series(1,
-         |                         length(word))) AS i) g)
-         |SELECT (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_chars,
-         |  1 AS chars_ok, 1 AS coverage_ok, 1 AS monotone_ok,
-         |  1 AS vocab_ok""".stripMargin,
-    // the unigram encoder's gate carries the SAME ANSI-checkable
-    // surface as bpe_encode_gate (the flags gate a Viterbi backtrack
-    // instead of a merge chain, but the exact counts and the pinned
-    // invariants are identical SQL)
-    "unigram_encode_gate" ->
-      s"""SELECT doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(sum(length(word)) AS BIGINT) AS n_chars,
-         |  1 AS roundtrip_ok, 1 AS bounds_ok
-         |FROM (SELECT doc_id, lower(word) AS word
-         |      FROM (SELECT doc_id, unnest($DuckTokList) AS word
-         |            FROM documents) u) t
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the fertility view's direct gate: per-language word/char counts
-    // are exact SQL (the encode gates' per-doc surface re-aggregated by
-    // lang, crossed with the two tokenizer labels); the view-consistency
-    // flags (word counts match, piece counts within [n_words, n_chars],
-    // fertility = round(pieces/words, 4)) are pinned at 1
-    "tokenizer_fertility_gate" ->
-      s"""WITH t AS (SELECT lang, lower(word) AS word
-         |           FROM (SELECT lang, unnest($DuckTokList) AS word
-         |                 FROM documents) u),
-         |a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_words,
-         |             CAST(sum(length(word)) AS BIGINT) AS n_chars
-         |      FROM t GROUP BY 1)
-         |SELECT tok AS tokenizer, lang, n_words, n_chars,
-         |  1 AS words_ok, 1 AS bounds_ok, 1 AS ratio_ok
-         |FROM a CROSS JOIN (SELECT unnest(['bpe', 'unigram']) AS tok) k
-         |ORDER BY 1, 2""".stripMargin,
-    // exact word/char counts recomputed; the encode invariants
-    // (symbol concat round-trips the word, counts in [1, n_chars])
-    // are pinned at 1 — a broken merge flips them and fails the hash
-    "bpe_encode_gate" ->
-      s"""SELECT doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(sum(length(word)) AS BIGINT) AS n_chars,
-         |  1 AS roundtrip_ok, 1 AS bounds_ok
-         |FROM (SELECT doc_id, lower(word) AS word
-         |      FROM (SELECT doc_id, unnest($DuckTokList) AS word
-         |            FROM documents) u) t
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // exact per-shard doc/token counts recomputed; the FFD invariants
-    // (capacity, ceil lower bound, ≤1 half-empty bin) pinned at 1
-    "ffd_pack_gate" ->
-      s"""SELECT lang AS shard,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_toks) AS BIGINT) AS total_toks,
-         |  1 AS occupancy_ok, 1 AS lower_bound_ok, 1 AS half_empty_ok
-         |FROM (SELECT lang, len($DuckTokList) AS n_toks FROM documents) t
-         |WHERE n_toks > 0
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // count-space LM scoring: integer sums are exact on both engines;
-    // the single final division is correctly rounded (see lmTypicality)
-    "lm_typicality" ->
-      s"""WITH t AS (SELECT doc_id, $DuckTokList AS toks FROM documents),
-         |grams AS (
-         |  SELECT doc_id, toks[i] || ' ' || toks[i+1] AS bigram
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-         |                   AS i) g),
-         |big AS (SELECT bigram, count(*) AS c_big FROM grams GROUP BY 1),
-         |pre AS (SELECT split_part(bigram, ' ', 1) AS prefix,
-         |               count(*) AS c_pre FROM grams GROUP BY 1)
-         |SELECT doc_id, count(*) AS n_bigrams,
-         |  CAST(sum(c_big) AS BIGINT) AS sum_big,
-         |  CAST(sum(c_pre) AS BIGINT) AS sum_pre,
-         |  CAST(CAST(sum(c_big) AS BIGINT) AS DOUBLE) /
-         |    CAST(CAST(sum(c_pre) AS BIGINT) AS DOUBLE) AS typicality
-         |FROM grams g
-         |JOIN big USING (bigram)
-         |JOIN pre ON split_part(bigram, ' ', 1) = pre.prefix
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // DuckDB ships the same Unicode tables (nfc_normalize); chr(769)
-    // rebuilds the planted combining-acute suffix byte-for-byte
-    "text_normalize" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 6 = 0 THEN
-        |      text || ' cafe' || chr(769) || ' re' || chr(769) ||
-        |      'sume' || chr(769)
-        |    ELSE text END AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(nfc_normalize(text) <> text AS INT) AS changed,
-        |  length(text) AS n_chars_raw,
-        |  length(nfc_normalize(text)) AS n_chars_nfc,
-        |  md5(nfc_normalize(text)) AS nfc_fp
-        |FROM corpus ORDER BY doc_id""".stripMargin,
-    "boilerplate_scrub" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN
-        |      'subscribe to our newsletter' || chr(10) || text ||
-        |      chr(10) || 'all rights reserved'
-        |    WHEN doc_id % 3 = 1 THEN text || chr(10) || 'all rights reserved'
-        |    ELSE text END AS text
-        |  FROM documents),
-        |d AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM corpus),
-        |lines AS (
-        |  SELECT doc_id, len(ls) AS n_lines, i AS pos, ls[i] AS line
-        |  FROM d, LATERAL (SELECT unnest(generate_series(1, len(ls)))
-        |                   AS i) g),
-        |freq AS (SELECT line FROM (
-        |  SELECT line, count(DISTINCT doc_id) AS nd FROM lines
-        |  GROUP BY 1) f WHERE nd >= 10),
-        |kept AS (SELECT * FROM lines
-        |         WHERE line NOT IN (SELECT line FROM freq))
-        |SELECT doc_id, CAST(max(n_lines) AS BIGINT) AS n_lines,
-        |  count(*) AS n_kept,
-        |  md5(string_agg(line, chr(10) ORDER BY pos)) AS kept_fp
-        |FROM kept GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "doc_chunks" ->
-      s"""WITH t AS (SELECT doc_id, $DuckTokList AS toks FROM documents),
-         |st AS (SELECT doc_id, toks,
-         |  unnest(generate_series(1, greatest(len(toks), 1), 48)) AS start
-         |  FROM t)
-         |SELECT doc_id, CAST((start - 1) // 48 AS BIGINT) AS chunk_id,
-         |  len(list_slice(toks, start, start + 63)) AS n_toks,
-         |  md5(array_to_string(list_slice(toks, start, start + 63), ' '))
-         |    AS chunk_fp
-         |FROM st ORDER BY doc_id, chunk_id""".stripMargin,
-    // the same chunks-by-running-boundary-count formulation, window-sum
-    // style: a token belongs to chunk (#boundary tokens strictly before
-    // it); boundary tokens END their chunk. Spark derives the identical
-    // spans from end-position arrays — the md5 fingerprints must agree
-    // byte-for-byte.
-    "cdc_chunks" ->
-      s"""WITH t AS (SELECT doc_id, $DuckTokList AS toks FROM documents),
-         |tp AS (
-         |  SELECT doc_id, toks[pos] AS w, pos
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)))
-         |                   AS pos) p),
-         |f AS (
-         |  SELECT doc_id, w, pos,
-         |    CASE WHEN substr(md5(w), 1, 2)
-         |              <= '${TextAnalysis.CdcBoundaryHexMax}'
-         |         THEN 1 ELSE 0 END AS bnd
-         |  FROM tp),
-         |c AS (
-         |  SELECT doc_id, w, pos,
-         |    coalesce(sum(bnd) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS chunk_idx
-         |  FROM f)
-         |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-         |  CAST(count(*) AS BIGINT) AS n_toks,
-         |  md5(string_agg(w, ' ' ORDER BY pos)) AS chunk_fp
-         |FROM c GROUP BY doc_id, chunk_idx
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
-    // same packed-key trick as the Spark side: v = hash·2^20 +
-    // (2^20−1−pos) makes "smallest hash, rightmost pos" a plain MIN;
-    // the frame CURRENT ROW..w−1 FOLLOWING mirrors Spark's slice
-    // windows including the partial tails
-    "winnow_fingerprints" ->
-      s"""WITH t AS (SELECT doc_id, $DuckTokList AS toks FROM documents),
-         |g AS (
-         |  SELECT doc_id,
-         |    array_to_string(list_slice(toks, i,
-         |      i + ${TextAnalysis.WinnowK - 1}), ' ') AS gram, i AS pos
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1,
-         |    len(toks) - ${TextAnalysis.WinnowK - 1})) AS i) p),
-         |v AS (
-         |  SELECT doc_id, pos,
-         |    CAST('0x' || substr(md5(gram), 1, 10) AS BIGINT) * 1048576
-         |      + (1048575 - pos) AS v
-         |  FROM g),
-         |s AS (
-         |  SELECT DISTINCT doc_id,
-         |    min(v) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN CURRENT ROW AND ${TextAnalysis.WinnowW - 1}
-         |      FOLLOWING) AS v
-         |  FROM v)
-         |SELECT doc_id, CAST(1048575 - (v % 1048576) AS BIGINT) AS pos,
-         |  CAST(v // 1048576 AS BIGINT) AS gram_hash
-         |FROM s ORDER BY doc_id, pos""".stripMargin,
-    "snapshot_drift" ->
-      """WITH delta AS (
-        |  SELECT doc_id, text || ' [revised]' AS text, lang, 'upsert' AS op
-        |  FROM documents WHERE doc_id % 7 = 0 AND doc_id % 13 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 30000, text, lang, 'upsert'
-        |  FROM documents WHERE doc_id < 25
-        |  UNION ALL
-        |  SELECT doc_id, NULL, lang, 'delete'
-        |  FROM documents WHERE doc_id % 13 = 0),
-        |aft AS (
-        |  SELECT coalesce(b.doc_id, d.doc_id) AS doc_id,
-        |    coalesce(d.lang, b.lang) AS lang,
-        |    md5(coalesce(d.text, b.text)) AS fp,
-        |    CAST(length(coalesce(d.text, b.text)) AS BIGINT) AS n_chars
-        |  FROM documents b FULL OUTER JOIN delta d ON b.doc_id = d.doc_id
-        |  WHERE d.op IS NULL OR d.op <> 'delete'),
-        |bse AS (
-        |  SELECT doc_id, lang, md5(text) AS fp,
-        |    CAST(length(text) AS BIGINT) AS n_chars
-        |  FROM documents),
-        |bp AS (SELECT CAST(count(*) AS BIGINT) AS r,
-        |         CAST(count(DISTINCT lang) AS BIGINT) AS l,
-        |         CAST(count(DISTINCT fp) AS BIGINT) AS t,
-        |         CAST(sum(n_chars) AS BIGINT) AS c FROM bse),
-        |ap AS (SELECT CAST(count(*) AS BIGINT) AS r,
-        |         CAST(count(DISTINCT lang) AS BIGINT) AS l,
-        |         CAST(count(DISTINCT fp) AS BIGINT) AS t,
-        |         CAST(sum(n_chars) AS BIGINT) AS c FROM aft)
-        |SELECT metric, "before", "after", "after" - "before" AS delta
-        |FROM (
-        |  SELECT 'n_chars' AS metric, bp.c AS "before", ap.c AS "after"
-        |  FROM bp, ap
-        |  UNION ALL
-        |  SELECT 'n_distinct_texts', bp.t, ap.t FROM bp, ap
-        |  UNION ALL
-        |  SELECT 'n_langs', bp.l, ap.l FROM bp, ap
-        |  UNION ALL
-        |  SELECT 'n_rows', bp.r, ap.r FROM bp, ap) x
-        |ORDER BY metric""".stripMargin,
-    "corpus_refresh" ->
-      """WITH delta AS (
-        |  SELECT doc_id, text || ' [revised]' AS text, lang, 'upsert' AS op
-        |  FROM documents WHERE doc_id % 7 = 0 AND doc_id % 13 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 30000, text, lang, 'upsert'
-        |  FROM documents WHERE doc_id < 25
-        |  UNION ALL
-        |  SELECT doc_id, NULL, lang, 'delete'
-        |  FROM documents WHERE doc_id % 13 = 0)
-        |SELECT coalesce(b.doc_id, d.doc_id) AS doc_id,
-        |  CASE WHEN d.doc_id IS NULL THEN 'kept'
-        |       WHEN b.doc_id IS NULL THEN 'inserted'
-        |       ELSE 'updated' END AS row_status,
-        |  coalesce(d.lang, b.lang) AS lang,
-        |  md5(coalesce(d.text, b.text)) AS fp,
-        |  length(coalesce(d.text, b.text)) AS n_chars
-        |FROM documents b FULL OUTER JOIN delta d ON b.doc_id = d.doc_id
-        |WHERE d.op IS NULL OR d.op <> 'delete'
-        |ORDER BY doc_id""".stripMargin,
-    // drift monitors share corpus_refresh's delta/after CTEs; token
-    // counts use the reference tokenizer (lowercased, wordcount_ci
-    // convention)
-    "token_drift" ->
-      s"""WITH delta AS (
-         |  SELECT doc_id, text || ' [revised]' AS text, 'upsert' AS op
-         |  FROM documents WHERE doc_id % 7 = 0 AND doc_id % 13 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 30000, text, 'upsert'
-         |  FROM documents WHERE doc_id < 25
-         |  UNION ALL
-         |  SELECT doc_id, NULL, 'delete'
-         |  FROM documents WHERE doc_id % 13 = 0),
-         |aft AS (
-         |  SELECT coalesce(b.doc_id, d.doc_id) AS doc_id,
-         |    coalesce(d.text, b.text) AS text
-         |  FROM documents b FULL OUTER JOIN delta d ON b.doc_id = d.doc_id
-         |  WHERE d.op IS NULL OR d.op <> 'delete'),
-         |cb AS (SELECT lower(word) AS word, CAST(count(*) AS BIGINT)
-         |         AS n_before
-         |       FROM (SELECT unnest($DuckTokList) AS word
-         |             FROM documents) x GROUP BY 1),
-         |ca AS (SELECT lower(word) AS word, CAST(count(*) AS BIGINT)
-         |         AS n_after
-         |       FROM (SELECT unnest($DuckTokList) AS word
-         |             FROM aft) x GROUP BY 1),
-         |m AS (SELECT coalesce(cb.word, ca.word) AS word,
-         |        coalesce(n_before, CAST(0 AS BIGINT)) AS n_before,
-         |        coalesce(n_after, CAST(0 AS BIGINT)) AS n_after
-         |      FROM cb FULL OUTER JOIN ca ON cb.word = ca.word)
-         |SELECT word, n_before, n_after,
-         |  n_after - n_before AS delta
-         |FROM m
-         |ORDER BY abs(n_after - n_before) DESC, word ASC
-         |LIMIT 30""".stripMargin,
-    "token_drift_kl" ->
-      s"""WITH delta AS (
-         |  SELECT doc_id, text || ' [revised]' AS text, 'upsert' AS op
-         |  FROM documents WHERE doc_id % 7 = 0 AND doc_id % 13 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 30000, text, 'upsert'
-         |  FROM documents WHERE doc_id < 25
-         |  UNION ALL
-         |  SELECT doc_id, NULL, 'delete'
-         |  FROM documents WHERE doc_id % 13 = 0),
-         |aft AS (
-         |  SELECT coalesce(b.doc_id, d.doc_id) AS doc_id,
-         |    coalesce(d.text, b.text) AS text
-         |  FROM documents b FULL OUTER JOIN delta d ON b.doc_id = d.doc_id
-         |  WHERE d.op IS NULL OR d.op <> 'delete'),
-         |cb AS (SELECT lower(word) AS word, CAST(count(*) AS BIGINT)
-         |         AS n_before
-         |       FROM (SELECT unnest($DuckTokList) AS word
-         |             FROM documents) x GROUP BY 1),
-         |ca AS (SELECT lower(word) AS word, CAST(count(*) AS BIGINT)
-         |         AS n_after
-         |       FROM (SELECT unnest($DuckTokList) AS word
-         |             FROM aft) x GROUP BY 1),
-         |m AS (SELECT coalesce(cb.word, ca.word) AS word,
-         |        coalesce(n_before, CAST(0 AS BIGINT)) AS n_before,
-         |        coalesce(n_after, CAST(0 AS BIGINT)) AS n_after
-         |      FROM cb FULL OUTER JOIN ca ON cb.word = ca.word),
-         |t AS (SELECT coalesce(CAST(sum(n_before) AS BIGINT),
-         |          CAST(0 AS BIGINT)) AS n1,
-         |        coalesce(CAST(sum(n_after) AS BIGINT),
-         |          CAST(0 AS BIGINT)) AS n2,
-         |        CAST(count(*) AS BIGINT) AS v FROM m),
-         |terms AS (
-         |  SELECT (n_before + 1) * CAST(floor(
-         |      (ln((n_before + 1)::DOUBLE / greatest(t.n1 + t.v, 1)) -
-         |       ln((n_after + 1)::DOUBLE / greatest(t.n2 + t.v, 1)))
-         |      * 1000000.0) AS BIGINT) AS term
-         |  FROM m, t)
-         |SELECT t.n1 AS n_tokens_before, t.n2 AS n_tokens_after,
-         |  t.v AS vocab_union,
-         |  greatest(coalesce(CAST(sum(term) AS BIGINT), CAST(0 AS BIGINT)),
-         |    CAST(0 AS BIGINT))
-         |    // greatest(t.n1 + t.v, 1) AS kl_millionths
-         |FROM t LEFT JOIN terms ON TRUE
-         |GROUP BY t.n1, t.n2, t.v""".stripMargin,
-    // same gaps-and-islands shape; version numbering is deterministic
-    // because o_orderkey breaks orderdate ties in every window
-    "scd2_customer_priority" ->
-      """WITH flagged AS (
-        |  SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority,
-        |    lag(o_orderpriority) OVER w AS prev
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey
-        |               ORDER BY o_orderdate, o_orderkey)),
-        |numbered AS (
-        |  SELECT *, CAST(sum(CASE WHEN prev IS NULL
-        |        OR prev <> o_orderpriority THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY o_custkey
-        |            ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS version
-        |  FROM flagged),
-        |islands AS (
-        |  SELECT o_custkey AS custkey, version,
-        |    min(o_orderpriority) AS priority,
-        |    min(o_orderdate) AS vf_ts,
-        |    CAST(count(*) AS BIGINT) AS n_orders
-        |  FROM numbered GROUP BY 1, 2)
-        |SELECT custkey, version, priority,
-        |  strftime(vf_ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
-        |  coalesce(strftime(lead(vf_ts) OVER (PARTITION BY custkey
-        |      ORDER BY version), '%Y-%m-%d %H:%M:%S'),
-        |    '9999-12-31 00:00:00') AS valid_to,
-        |  n_orders
-        |FROM islands ORDER BY custkey, version""".stripMargin,
-    // the same islands derivation, joined point-in-time onto events
-    "event_priority_stats" ->
-      """WITH flagged AS (
-        |  SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority,
-        |    lag(o_orderpriority) OVER w AS prev
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey
-        |               ORDER BY o_orderdate, o_orderkey)),
-        |numbered AS (
-        |  SELECT *, CAST(sum(CASE WHEN prev IS NULL
-        |        OR prev <> o_orderpriority THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY o_custkey
-        |            ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS version
-        |  FROM flagged),
-        |islands AS (
-        |  SELECT o_custkey AS custkey, version,
-        |    min(o_orderpriority) AS priority,
-        |    min(o_orderdate) AS vf_ts
-        |  FROM numbered GROUP BY 1, 2),
-        |dim AS (
-        |  SELECT custkey, priority, vf_ts,
-        |    lead(vf_ts) OVER (PARTITION BY custkey ORDER BY version)
-        |      AS vt_ts
-        |  FROM islands)
-        |SELECT d.priority, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users,
-        |  CAST(sum(CAST(round(e.value * 100, 0) AS BIGINT)) AS BIGINT)
-        |    AS value_cents
-        |FROM events e JOIN dim d
-        |  ON e.user_id = d.custkey AND e.ts >= d.vf_ts
-        |  AND (d.vt_ts IS NULL OR e.ts < d.vt_ts)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "funnel_counts" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (
-        |  SELECT e.user_id, min(e.ts) AS t2
-        |  FROM events e JOIN v ON e.user_id = v.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS t3
-        |  FROM events e JOIN c ON e.user_id = c.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY 1)
-        |SELECT 1 AS stage, 'view' AS stage_name,
-        |  CAST((SELECT count(*) FROM v) AS BIGINT) AS n_users
-        |UNION ALL SELECT 2, 'view>click',
-        |  CAST((SELECT count(*) FROM c) AS BIGINT)
-        |UNION ALL SELECT 3, 'view>click>purchase',
-        |  CAST((SELECT count(*) FROM p) AS BIGINT)
-        |ORDER BY stage""".stripMargin,
-    // integer week indexes (day-diff DIV 7): engine-portable, no
-    // week-of-year calendar semantics
-    "retention_cohorts" ->
-      """WITH e AS (
-        |  SELECT user_id,
-        |    date_diff('day', TIMESTAMP '2024-01-01 00:00:00', ts) // 7
-        |      AS week
-        |  FROM events),
-        |f AS (SELECT user_id, min(week) AS cohort_week FROM e GROUP BY 1),
-        |a AS (
-        |  SELECT DISTINCT f.cohort_week, e.week - f.cohort_week
-        |    AS week_offset, e.user_id
-        |  FROM e JOIN f USING (user_id))
-        |SELECT cohort_week, week_offset, CAST(count(*) AS BIGINT)
-        |  AS n_users
-        |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "resample_ffill" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id,
-        |    date_diff('day', TIMESTAMP '2024-01-01 00:00:00', ts) AS day,
-        |    ts, value
-        |  FROM events),
-        |byday AS (
-        |  SELECT user_id, day, value AS obs FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id, day
-        |      ORDER BY ts DESC, event_id DESC) AS rn FROM e) t
-        |  WHERE rn = 1),
-        |span AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |grid AS (
-        |  SELECT u.user_id, g.day
-        |  FROM (SELECT DISTINCT user_id FROM byday) u, span,
-        |    LATERAL (SELECT unnest(generate_series(d0, d1)) AS day) g),
-        |filled AS (
-        |  SELECT g.user_id, g.day, b.obs,
-        |    last_value(b.obs IGNORE NULLS) OVER (
-        |      PARTITION BY g.user_id ORDER BY g.day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f
-        |  FROM grid g LEFT JOIN byday b
-        |    ON g.user_id = b.user_id AND g.day = b.day)
-        |SELECT user_id, day, round(f, 6) AS value,
-        |  CAST(CASE WHEN obs IS NOT NULL THEN 1 ELSE 0 END AS INTEGER)
-        |    AS observed
-        |FROM filled WHERE f IS NOT NULL
-        |ORDER BY user_id, day""".stripMargin,
-    "cascade_delete_audit" ->
-      """WITH doomed AS (
-        |  SELECT c_custkey AS k FROM customer WHERE c_custkey % 97 = 0),
-        |dorders AS (
-        |  SELECT o_orderkey AS k FROM orders
-        |  WHERE o_custkey IN (SELECT k FROM doomed)),
-        |c AS (
-        |  SELECT 'customer' AS tbl,
-        |    (SELECT count(*) FROM customer) AS nb, count(*) AS na,
-        |    coalesce(CAST(sum(c_custkey) AS BIGINT), 0) AS ks
-        |  FROM customer WHERE c_custkey NOT IN (SELECT k FROM doomed)),
-        |e AS (
-        |  SELECT 'events' AS tbl,
-        |    (SELECT count(*) FROM events) AS nb, count(*) AS na,
-        |    coalesce(CAST(sum(event_id) AS BIGINT), 0) AS ks
-        |  FROM events WHERE user_id NOT IN (SELECT k FROM doomed)),
-        |o AS (
-        |  SELECT 'orders' AS tbl,
-        |    (SELECT count(*) FROM orders) AS nb, count(*) AS na,
-        |    coalesce(CAST(sum(o_orderkey) AS BIGINT), 0) AS ks
-        |  FROM orders WHERE o_custkey NOT IN (SELECT k FROM doomed)),
-        |l AS (
-        |  SELECT 'lineitem' AS tbl,
-        |    (SELECT count(*) FROM lineitem) AS nb, count(*) AS na,
-        |    coalesce(CAST(sum(l_orderkey) AS BIGINT), 0) AS ks
-        |  FROM lineitem
-        |  WHERE l_orderkey NOT IN (SELECT k FROM dorders))
-        |SELECT tbl, CAST(nb AS BIGINT) AS n_before,
-        |  CAST(na AS BIGINT) AS n_after,
-        |  CAST(nb - na AS BIGINT) AS n_purged,
-        |  ks AS key_sum_after
-        |FROM (SELECT * FROM c UNION ALL SELECT * FROM e
-        |      UNION ALL SELECT * FROM o UNION ALL SELECT * FROM l) u
-        |ORDER BY tbl""".stripMargin,
-    // the sketch itself is not ANSI-expressible; n_tokens/n_heavy are
-    // exact recomputations and the flags assert containment + the
-    // deterministic MG error bound (see Grouping.heavyHitterGate)
-    "heavy_hitter_gate" ->
-      s"""WITH w AS (SELECT lower(word) AS word FROM ($DuckTokens) t
-         |           WHERE regexp_matches(word, '\\S')),
-         |c AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),
-         |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_tokens FROM c)
-         |SELECT n_tokens,
-         |  (SELECT count(*) FROM c, n n2 WHERE cnt * 65 > n2.n_tokens)
-         |    AS n_heavy,
-         |  1 AS containment_ok, 1 AS bound_ok
-         |FROM n""".stripMargin,
-    "top_bigrams" ->
-      s"""WITH t AS (SELECT doc_id, $DuckTokList AS toks FROM documents),
-         |pairs AS (
-         |  SELECT toks[i] || ' ' || toks[i+1] AS bigram
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-         |                   AS i) g)
-         |SELECT bigram, count(*) AS cnt FROM pairs
-         |GROUP BY 1 ORDER BY cnt DESC, bigram LIMIT 30""".stripMargin,
-    "tfidf_top_terms" ->
-      s"""WITH terms AS (
-         |  SELECT doc_id, unnest(toks) AS term
-         |  FROM (SELECT doc_id, $DuckTokList AS toks FROM documents) t),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1,2),
-         |df AS (SELECT term, count(DISTINCT doc_id) AS df
-         |       FROM terms GROUP BY 1),
-         |n AS (SELECT count(*) AS n_docs FROM documents)
-         |SELECT doc_id, term, tf, df, tfidf, rn FROM (
-         |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-         |    round(tf.tf * ln(n.n_docs::DOUBLE / df.df), 6) AS tfidf,
-         |    row_number() OVER (PARTITION BY tf.doc_id
-         |      ORDER BY round(tf.tf * ln(n.n_docs::DOUBLE / df.df), 6) DESC,
-         |               tf.term) AS rn
-         |  FROM tf JOIN df USING(term) CROSS JOIN n) x
-         |WHERE rn <= 5 ORDER BY doc_id, rn""".stripMargin,
-    // BM25 with the identical double expression tree (constants and the
-    // query VALUES list interpolated from Retrieval's definitions); the
-    // per-term floor-to-micros makes the sum order-independent
-    // every card number re-states an already-green oracle's arithmetic:
-    // the quality_score blend, the pii regexes, the exact-dup grouping
-    "dataset_card" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, lang, text, $DuckTokList AS toks
-         |  FROM documents),
-         |pd AS (
-         |  SELECT doc_id, lang,
-         |    CAST(len(toks) AS BIGINT) AS n_toks,
-         |    CAST(len(text) AS BIGINT) AS n_chars,
-         |    round(0.4*round(len(list_filter(toks, x -> list_contains(
-         |        ['${TextAnalysis.Stopwords.mkString("','")}'], x)))::DOUBLE
-         |        / len(toks), 4)
-         |      + 0.6*round(len(list_distinct(toks))::DOUBLE
-         |        / len(toks), 4), 4) AS q,
-         |    regexp_matches(text, '${TextAnalysis.EmailRe}') AS has_email,
-         |    regexp_matches(text, '${TextAnalysis.UrlRe}') AS has_url,
-         |    md5(text) AS fp
-         |  FROM base),
-         |g AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-         |    CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-         |    CAST(sum(CASE WHEN has_email THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS docs_with_email,
-         |    CAST(sum(CASE WHEN has_url THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS docs_with_url,
-         |    CAST(min(n_toks) AS BIGINT) AS min_toks,
-         |    CAST(max(n_toks) AS BIGINT) AS max_toks,
-         |    CAST(2 * quantile_cont(n_toks, 0.5) AS BIGINT) AS med2_toks
-         |  FROM pd),
-         |v AS (SELECT CAST(count(DISTINCT lower(w)) AS BIGINT) AS c
-         |      FROM (SELECT unnest(toks) AS w FROM base)),
-         |l AS (SELECT lang, CAST(count(*) AS BIGINT) AS d,
-         |        CAST(sum(n_toks) AS BIGINT) AS t
-         |      FROM pd GROUP BY lang),
-         |qh AS (SELECT CAST(floor(q*10) AS BIGINT) AS b,
-         |         CAST(count(*) AS BIGINT) AS n
-         |       FROM pd GROUP BY 1),
-         |dg AS (SELECT
-         |    CAST(coalesce(sum(CASE WHEN n > 1 THEN 1 END), 0) AS BIGINT)
-         |      AS g2,
-         |    CAST(coalesce(sum(CASE WHEN n > 1 THEN n - 1 END), 0)
-         |      AS BIGINT) AS r2
-         |  FROM (SELECT count(*) AS n FROM pd GROUP BY fp) s)
-         |SELECT * FROM (
-         |  SELECT 'global' AS section, 'n_docs' AS metric, n_docs AS value
-         |  FROM g
-         |  UNION ALL SELECT 'global', 'n_tokens', n_tokens FROM g
-         |  UNION ALL SELECT 'global', 'n_chars', sum_chars FROM g
-         |  UNION ALL SELECT 'global', 'vocab_size', c FROM v
-         |  UNION ALL SELECT 'length', 'min_toks', min_toks FROM g
-         |  UNION ALL SELECT 'length', 'max_toks', max_toks FROM g
-         |  UNION ALL SELECT 'length', 'med2_toks', med2_toks FROM g
-         |  UNION ALL SELECT 'pii', 'docs_with_email', docs_with_email FROM g
-         |  UNION ALL SELECT 'pii', 'docs_with_url', docs_with_url FROM g
-         |  UNION ALL SELECT 'lang', 'docs:' || lang, d FROM l
-         |  UNION ALL SELECT 'lang', 'tokens:' || lang, t FROM l
-         |  UNION ALL SELECT 'quality', 'decile_' || b, n FROM qh
-         |  UNION ALL SELECT 'dup', 'exact_dup_groups', g2 FROM dg
-         |  UNION ALL SELECT 'dup', 'exact_redundant_docs', r2 FROM dg) u
-         |ORDER BY section, metric""".stripMargin,
-    "inverted_index" ->
-      s"""WITH tf AS (
-         |  SELECT lower(word) AS term, doc_id, count(*) AS tf
-         |  FROM (SELECT doc_id, unnest($DuckTokList) AS word
-         |        FROM documents) x
-         |  GROUP BY 1, 2)
-         |SELECT term, CAST(count(*) AS BIGINT) AS df,
-         |  CAST(sum(tf) AS BIGINT) AS total_tf,
-         |  CASE WHEN count(*) <= 64
-         |    THEN string_agg(doc_id, ',' ORDER BY doc_id) END AS postings
-         |FROM tf GROUP BY term ORDER BY term""".stripMargin,
-    "bm25_topk" ->
-      bm25SqlOver("", "SELECT doc_id, text FROM documents"),
-    // both hybrid legs recomputed exactly (the bm25 template with the
-    // query docs' own distinct tokens as terms + the knn_bruteforce
-    // cosine), fused by the same integer floor(1e9/(60+rank)) formula
-    "hybrid_rrf" ->
-      s"""WITH t AS (SELECT doc_id, $DuckTokList AS toks FROM documents),
-         |qt AS (SELECT DISTINCT doc_id AS qid, unnest(toks) AS term
-         |       FROM t WHERE doc_id < 4),
-         |terms AS (SELECT doc_id, unnest(toks) AS term FROM t),
-         |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |       FROM terms GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-         |       FROM tf GROUP BY 1),
-         |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-         |       FROM tf GROUP BY 1),
-         |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |         CAST(sum(dl) AS BIGINT) AS n_tokens FROM dl),
-         |c AS (
-         |  SELECT qt.qid, tf.doc_id,
-         |    CAST(floor(
-         |      ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-         |      (tf.tf * ${Retrieval.K1 + 1.0} /
-         |       (tf.tf + ${Retrieval.K1} * (1.0 - ${Retrieval.B} +
-         |        ${Retrieval.B} * dl.dl * st.n_docs / st.n_tokens))) *
-         |      1000000.0) AS BIGINT) AS contrib
-         |  FROM tf JOIN qt USING (term) JOIN df USING (term)
-         |       JOIN dl USING (doc_id) CROSS JOIN st
-         |  WHERE tf.doc_id <> qt.qid),
-         |sc AS (SELECT qid, doc_id, CAST(sum(contrib) AS BIGINT) AS sm
-         |       FROM c GROUP BY 1, 2),
-         |lexk AS (SELECT qid, doc_id, r FROM (
-         |  SELECT qid, doc_id, row_number() OVER (PARTITION BY qid
-         |    ORDER BY sm DESC, doc_id) AS r FROM sc) x
-         |  WHERE r <= ${Retrieval.RrfRankK}),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |      FROM embeddings),
-         |q AS (SELECT vec_id AS qid, v AS vq FROM e WHERE vec_id < 4),
-         |sims AS (
-         |  SELECT qid, e.vec_id AS doc_id,
-         |    round(
-         |      list_sum(list_transform(list_zip(vq, e.v), x -> x[1]*x[2])) /
-         |      (sqrt(list_sum(list_transform(vq, x -> x*x))) *
-         |       sqrt(list_sum(list_transform(e.v, x -> x*x)))), 6) AS sim
-         |  FROM q JOIN e ON qid <> e.vec_id),
-         |cosk AS (SELECT qid, doc_id, r FROM (
-         |  SELECT qid, doc_id, row_number() OVER (PARTITION BY qid
-         |    ORDER BY sim DESC, doc_id) AS r FROM sims) x
-         |  WHERE r <= ${Retrieval.RrfRankK}),
-         |f AS (
-         |  SELECT coalesce(l.qid, c2.qid) AS qid,
-         |    coalesce(l.doc_id, c2.doc_id) AS doc_id,
-         |    coalesce(CAST(floor(1000000000.0 /
-         |      (${Retrieval.RrfK} + l.r)) AS BIGINT), 0) +
-         |    coalesce(CAST(floor(1000000000.0 /
-         |      (${Retrieval.RrfK} + c2.r)) AS BIGINT), 0) AS rrf_nano
-         |  FROM lexk l FULL OUTER JOIN cosk c2
-         |    ON l.qid = c2.qid AND l.doc_id = c2.doc_id)
-         |SELECT qid, doc_id, rrf_nano, rn FROM (
-         |  SELECT qid, doc_id, rrf_nano,
-         |    row_number() OVER (PARTITION BY qid
-         |      ORDER BY rrf_nano DESC, doc_id) AS rn
-         |  FROM f) x
-         |WHERE rn <= 10 ORDER BY qid, rn""".stripMargin,
-    // chunk-level retrieval: the same BM25 template over the deduped
-    // CDC chunk corpus (chunk id = doc_id·stride + chunk_idx)
-    "chunk_index_assembly" ->
-      bm25SqlOver(
-        s"""ct AS (SELECT doc_id, $DuckTokList AS toks FROM documents),
-           |ctp AS (
-           |  SELECT doc_id, toks[pos] AS w, pos
-           |  FROM ct, LATERAL (SELECT unnest(generate_series(1,
-           |                      len(toks))) AS pos) p),
-           |cf AS (
-           |  SELECT doc_id, w, pos,
-           |    CASE WHEN substr(md5(w), 1, 2)
-           |              <= '${TextAnalysis.CdcBoundaryHexMax}'
-           |         THEN 1 ELSE 0 END AS bnd
-           |  FROM ctp),
-           |cc AS (
-           |  SELECT doc_id, w, pos,
-           |    coalesce(sum(bnd) OVER (PARTITION BY doc_id ORDER BY pos
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |      AS chunk_idx
-           |  FROM cf),
-           |ch AS (
-           |  SELECT CAST(doc_id * ${Retrieval.ChunkIdStride} + chunk_idx
-           |              AS BIGINT) AS doc_id,
-           |    string_agg(w, ' ' ORDER BY pos) AS text
-           |  FROM cc GROUP BY doc_id, chunk_idx),
-           |ded AS (
-           |  SELECT doc_id, text FROM (
-           |    SELECT doc_id, text, row_number() OVER (
-           |      PARTITION BY md5(text) ORDER BY doc_id) AS drn
-           |    FROM ch) x
-           |  WHERE drn = 1),
-           |""".stripMargin,
-        "SELECT doc_id, text FROM ded"),
-    // novelty over the near-dup plant: each planted copy's gram set is a
-    // subset of its base's, so copies score 0 and bases near 0
-    "ngram_novelty" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + ${Dedup.DupIdOffset},
-         |    regexp_replace(text, '^[^ ]+ ', '')
-         |  FROM documents WHERE doc_id < ${Dedup.PlantCount}),
-         |t AS (SELECT doc_id, $DuckTokList AS toks FROM corpus),
-         |g AS (
-         |  SELECT DISTINCT doc_id,
-         |    array_to_string(list_slice(toks, i, i+7), ' ') AS gram
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1,
-         |                     greatest(len(toks)-7, 0))) AS i) w),
-         |wc AS (SELECT doc_id,
-         |         count(*) OVER (PARTITION BY gram) AS gdocs FROM g),
-         |per AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         |          CAST(sum(CASE WHEN gdocs >= 2 THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS n_shared
-         |        FROM wc GROUP BY 1)
-         |SELECT c.doc_id,
-         |  coalesce(n_grams, CAST(0 AS BIGINT)) AS n_grams,
-         |  coalesce(n_shared, CAST(0 AS BIGINT)) AS n_shared,
-         |  CASE WHEN coalesce(n_grams, 0) = 0 THEN CAST(1000000 AS BIGINT)
-         |       ELSE (n_grams - n_shared) * 1000000 // n_grams
-         |  END AS novelty_millionths
-         |FROM (SELECT doc_id FROM corpus) c LEFT JOIN per USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    // the oracle's global row_number() IS the spec the distributed
-    // local-rank+offset id assignment must reproduce
-    "dict_encode_stats" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, lower(word) AS word
-         |  FROM (SELECT doc_id, unnest($DuckTokList) AS word
-         |        FROM documents) t),
-         |vocab AS (SELECT word, count(*) AS cnt FROM toks GROUP BY 1),
-         |ids AS (
-         |  SELECT word,
-         |    CAST(row_number() OVER (ORDER BY cnt DESC, word) - 1
-         |      AS BIGINT) AS id
-         |  FROM vocab)
-         |SELECT t.doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_toks,
-         |  CAST(sum(i.id) AS BIGINT) AS id_sum,
-         |  min(i.id) AS id_min,
-         |  max(i.id) AS id_max,
-         |  CAST(count(DISTINCT i.id) AS BIGINT) AS n_distinct
-         |FROM toks t JOIN ids i USING (word)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the planted raw spellings are recomputed by formula (fixture-by-
-    // construction), then canonicalized with the same regex pipeline
-    "url_canonical" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 3
-        |      WHEN 0 THEN 'https://d' || (doc_id % 7) ||
-        |        '.example.com/p/' || (doc_id % 20) || '?ref=a'
-        |      WHEN 1 THEN 'HTTPS://WWW.d' || (doc_id % 7) ||
-        |        '.EXAMPLE.COM:443/p/' || (doc_id % 20) ||
-        |        '?utm_source=x&ref=a'
-        |      ELSE 'https://D' || (doc_id % 7) ||
-        |        '.example.com/p/' || (doc_id % 20) || '?ref=a#frag'
-        |    END AS url
-        |  FROM documents WHERE doc_id % 4 = 0),
-        |parts AS (
-        |  SELECT url,
-        |    array_to_string(list_filter(string_split(
-        |      regexp_extract(url, '[?]([^#]*)', 1), '&'),
-        |      x -> NOT regexp_matches(x, '^utm_') AND x <> ''), '&')
-        |      AS qs
-        |  FROM planted),
-        |canon AS (
-        |  SELECT
-        |    lower(regexp_extract(url, '^([A-Za-z]+)://', 1)) || '://' ||
-        |    regexp_replace(regexp_replace(
-        |      lower(regexp_extract(url, '^[A-Za-z]+://([^/?#]+)', 1)),
-        |      ':(443|80)$', ''), '^www\.', '') ||
-        |    regexp_extract(regexp_extract(url,
-        |      '^[A-Za-z]+://[^/?#]+([^#]*)', 1), '^([^?]*)', 1) ||
-        |    CASE WHEN qs <> '' THEN '?' || qs ELSE '' END AS canon_url,
-        |    url
-        |  FROM parts)
-        |SELECT canon_url, CAST(count(*) AS BIGINT) AS n_urls,
-        |  CAST(count(DISTINCT url) AS BIGINT) AS n_variants
-        |FROM canon GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dedup_exact_groups" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000, text FROM documents WHERE doc_id < 20)
-        |SELECT md5(text) AS content_hash, count(*) AS n_copies,
-        |  min(doc_id) AS keep_doc_id
-        |FROM corpus GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dedup_jaccard_pairs" -> ExactJaccardTierSql,
-    // the full winnow-candidate chain: fingerprints -> sub-cap postings
-    // pairs -> exact bigram-Jaccard on the candidates only
-    "dedup_winnow_pairs" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 10000, regexp_replace(text, '^[^ ]+ ', '')
-         |  FROM documents WHERE doc_id < 20),
-         |t AS (SELECT doc_id, $DuckTokList AS toks FROM corpus),
-         |g AS (
-         |  SELECT doc_id,
-         |    array_to_string(list_slice(toks, i,
-         |      i + ${TextAnalysis.WinnowK - 1}), ' ') AS gram, i AS pos
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1,
-         |    len(toks) - ${TextAnalysis.WinnowK - 1})) AS i) p),
-         |v AS (
-         |  SELECT doc_id, pos,
-         |    CAST('0x' || substr(md5(gram), 1, 10) AS BIGINT) * 1048576
-         |      + (1048575 - pos) AS v
-         |  FROM g),
-         |sel AS (
-         |  SELECT DISTINCT doc_id,
-         |    min(v) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN CURRENT ROW AND ${TextAnalysis.WinnowW - 1}
-         |      FOLLOWING) AS v
-         |  FROM v),
-         |fp AS (SELECT DISTINCT doc_id, CAST(v // 1048576 AS BIGINT)
-         |         AS h FROM sel),
-         |rare AS (SELECT h FROM (
-         |  SELECT h, count(*) AS df FROM fp GROUP BY 1) x
-         |  WHERE df <= ${Dedup.WinnowDfCap}),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM fp a
-         |  JOIN rare r ON r.h = a.h
-         |  JOIN fp b ON b.h = a.h AND a.doc_id < b.doc_id),
-         |feats AS (
-         |  SELECT DISTINCT doc_id, toks[i] || ' ' || toks[i+1] AS feat
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-         |                   AS i) g2),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM feats GROUP BY 1),
-         |inter AS (
-         |  SELECT c.id_a, c.id_b, count(*) AS n_inter
-         |  FROM cand c
-         |  JOIN feats a ON a.doc_id = c.id_a
-         |  JOIN feats b ON b.doc_id = c.id_b AND b.feat = a.feat
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b,
-         |  round(n_inter::DOUBLE / (sa.sz + sb.sz - n_inter), 6)
-         |    AS jaccard
-         |FROM inter
-         |JOIN sizes sa ON sa.doc_id = id_a
-         |JOIN sizes sb ON sb.doc_id = id_b
-         |WHERE round(n_inter::DOUBLE / (sa.sz + sb.sz - n_inter), 6)
-         |      >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
-    // asymmetric containment recompute: same bigram features, the
-    // denominator is the CONTAINED side's set size; both directions of
-    // each unordered pair tested (exact dups emit both at 1.0)
-    "dedup_containment_pairs" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + ${Dedup.DupIdOffset},
-         |    substr(text, 1, len(text) // 2)
-         |  FROM documents WHERE doc_id < ${Dedup.PlantCount}),
-         |t AS (SELECT doc_id, $DuckTokList AS toks FROM corpus),
-         |feats AS (
-         |  SELECT DISTINCT doc_id, toks[i] || ' ' || toks[i+1] AS feat
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-         |                   AS i) g),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM feats GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-         |  FROM feats a JOIN feats b
-         |    ON a.feat = b.feat AND a.doc_id < b.doc_id
-         |  GROUP BY 1,2),
-         |dirs AS (
-         |  SELECT id_a AS contained_id, id_b AS container_id,
-         |    round(n_inter::DOUBLE / sa.sz, 6) AS containment
-         |  FROM inter
-         |  JOIN sizes sa ON sa.doc_id = id_a
-         |  UNION ALL
-         |  SELECT id_b, id_a, round(n_inter::DOUBLE / sb.sz, 6)
-         |  FROM inter
-         |  JOIN sizes sb ON sb.doc_id = id_b)
-         |SELECT contained_id, container_id, containment
-         |FROM dirs WHERE containment >= $ContainTau
-         |ORDER BY contained_id, container_id""".stripMargin,
-    // the oracle recomputes duplicate windows from the SUBSTRINGS
-    // themselves; output columns are position-difference invariant so
-    // 0- vs 1-based window starts cancel out
-    "dup_spans" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000, regexp_replace(text, '^[^ ]+ ', '')
-        |  FROM documents WHERE doc_id < 20),
-        |sh AS (
-        |  SELECT doc_id, i AS pos, substr(text, i, 40) AS w
-        |  FROM corpus, LATERAL (SELECT unnest(generate_series(1,
-        |                          length(text) - 39)) AS i) g
-        |  WHERE length(text) >= 40),
-        |dupset AS (SELECT w FROM (
-        |  SELECT w, count(DISTINCT doc_id) AS nd FROM sh GROUP BY 1) f
-        |  WHERE nd >= 2),
-        |dup AS (SELECT doc_id, pos FROM sh
-        |        WHERE w IN (SELECT w FROM dupset)),
-        |isl AS (SELECT doc_id, pos,
-        |  pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-        |    AS grp FROM dup),
-        |spans AS (SELECT doc_id, grp, max(pos) - min(pos) + 40
-        |            AS span_chars
-        |          FROM isl GROUP BY 1, 2)
-        |SELECT doc_id, count(*) AS n_dup_spans,
-        |  CAST(sum(span_chars) AS BIGINT) AS n_dup_chars,
-        |  max(span_chars) AS max_span
-        |FROM spans GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    // the full removal policy on window STRINGS: owner = min doc_id per
-    // duplicated window; non-owners cut [pos, pos+40); covered chars
-    // merge via the running-max islands trick; splice = string_agg of
-    // lag-delimited kept segments + the tail. md5 of the spliced text
-    // must equal Spark's HOF-fold splice byte-for-byte.
-    "scrub_dup_spans" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000, regexp_replace(text, '^[^ ]+ ', '')
-        |  FROM documents WHERE doc_id < 20),
-        |sh AS (
-        |  SELECT doc_id, i AS pos, substr(text, i, 40) AS w
-        |  FROM corpus, LATERAL (SELECT unnest(generate_series(1,
-        |                          length(text) - 39)) AS i) g
-        |  WHERE length(text) >= 40),
-        |own AS (
-        |  SELECT w, min(doc_id) AS owner
-        |  FROM (SELECT DISTINCT w, doc_id FROM sh)
-        |  GROUP BY w HAVING count(*) >= 2),
-        |cuts AS (
-        |  SELECT sh.doc_id, pos AS s, pos + 40 AS e
-        |  FROM sh JOIN own ON sh.w = own.w
-        |  WHERE sh.doc_id <> own.owner),
-        |m0 AS (
-        |  SELECT doc_id, s, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS prev_max
-        |  FROM cuts),
-        |m1 AS (
-        |  SELECT doc_id, s, e,
-        |    sum(CASE WHEN s > coalesce(prev_max, 0) THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY s) AS grp
-        |  FROM m0),
-        |iv AS (
-        |  SELECT doc_id, grp, min(s) AS s, max(e) AS e
-        |  FROM m1 GROUP BY 1, 2),
-        |st AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans_cut,
-        |    CAST(sum(e - s) AS BIGINT) AS n_cut_chars
-        |  FROM iv GROUP BY 1),
-        |seg AS (
-        |  SELECT doc_id, s, e,
-        |    lag(e, 1, 1) OVER (PARTITION BY doc_id ORDER BY s) AS prev_e
-        |  FROM iv),
-        |spl AS (
-        |  SELECT seg.doc_id,
-        |    string_agg(substr(c.text, CAST(prev_e AS INTEGER),
-        |      CAST(s - prev_e AS INTEGER)), '' ORDER BY s) AS head,
-        |    max(e) AS last_e
-        |  FROM seg JOIN corpus c ON seg.doc_id = c.doc_id
-        |  GROUP BY seg.doc_id)
-        |SELECT c.doc_id, CAST(length(c.text) AS BIGINT) AS n_chars,
-        |  coalesce(st.n_cut_chars, 0) AS n_cut_chars,
-        |  coalesce(st.n_spans_cut, 0) AS n_spans_cut,
-        |  md5(CASE WHEN spl.doc_id IS NULL THEN c.text
-        |           ELSE coalesce(spl.head, '') ||
-        |                substr(c.text, CAST(spl.last_e AS INTEGER)) END)
-        |    AS scrubbed_fp
-        |FROM corpus c
-        |LEFT JOIN spl ON c.doc_id = spl.doc_id
-        |LEFT JOIN st ON c.doc_id = st.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
-    // identical SQL to dedup_jaccard_pairs: the Spark side semi-joins the
-    // exact tier against the MinHash LSH candidates, and on this corpus
-    // (all passing pairs J >= 0.9) deterministic LSH recall is 1, so
-    // agreement == the exact tier. A signature/banding/estimate bug makes
-    // the semi-join drop pairs and the hash mismatch.
-    "dedup_minhash_agreement" -> ExactJaccardTierSql,
-    // same exact tier: SimHash pigeonhole banding has guaranteed recall
-    // within the Hamming threshold, and the planted J >= 0.9 pairs all
-    // sit within it, so exact ⋉ simhash == exact on this corpus.
-    "dedup_simhash_agreement" -> ExactJaccardTierSql,
-    // survivors = corpus minus non-min members of the pair-graph closure
-    // (LSH recall is 1 on this corpus, so verified pairs == exact tier)
-    "neardup_pipeline" ->
-      s"""WITH RECURSIVE pairs AS (
-         |  ${ExactJaccardTierSql.replace("\n", "\n  ")}),
-         |edges AS (
-         |  SELECT id_a, id_b FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT id_a, id_a FROM edges
-         |  UNION
-         |  SELECT r.src, e.id_b FROM reach r
-         |  JOIN edges e ON r.dst = e.id_a),
-         |dropped AS (
-         |  SELECT src AS doc_id FROM reach
-         |  GROUP BY 1 HAVING min(dst) <> src),
-         |corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 10000, regexp_replace(text, '^[^ ]+ ', '')
-         |  FROM documents WHERE doc_id < 20)
-         |SELECT c.doc_id, md5(c.text) AS content_fp
-         |FROM corpus c ANTI JOIN dropped d ON c.doc_id = d.doc_id
-         |ORDER BY c.doc_id""".stripMargin,
-    // recursive transitive closure over the SQL-recomputed pair set:
-    // comp(v) = min id reachable from v — the same fixpoint the Spark
-    // side's large-star/small-star closure reaches
-    "dedup_components" ->
-      s"""WITH RECURSIVE pairs AS (
-         |  ${ExactJaccardTierSql.replace("\n", "\n  ")}),
-         |edges AS (
-         |  SELECT id_a, id_b FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT id_a, id_a FROM edges
-         |  UNION
-         |  SELECT r.src, e.id_b FROM reach r
-         |  JOIN edges e ON r.dst = e.id_a)
-         |SELECT src AS doc_id, min(dst) AS comp
-         |FROM reach GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same closure, then the quality formula of the quality_score
-    // oracle recomputed over the PLANTED corpus; per-cluster argmax by
-    // (quality DESC, doc_id) — deterministic because quality is
-    // 4-dp-rounded identically in both engines
-    "dedup_keep_best" ->
-      s"""WITH RECURSIVE pairs AS (
-         |  ${ExactJaccardTierSql.replace("\n", "\n  ")}),
-         |corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 10000, regexp_replace(text, '^[^ ]+ ', '')
-         |  FROM documents WHERE doc_id < 20),
-         |q AS (
-         |  SELECT doc_id,
-         |    round(0.4*round(len(list_filter(toks, x -> list_contains(
-         |        ['${TextAnalysis.Stopwords.mkString("','")}'], x)))::DOUBLE
-         |        / len(toks), 4)
-         |      + 0.6*round(len(list_distinct(toks))::DOUBLE / len(toks), 4),
-         |      4) AS quality_score
-         |  FROM (SELECT doc_id, $DuckTokList AS toks FROM corpus) t),
-         |edges AS (
-         |  SELECT id_a, id_b FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT id_a, id_a FROM edges
-         |  UNION
-         |  SELECT r.src, e.id_b FROM reach r
-         |  JOIN edges e ON r.dst = e.id_a),
-         |cmp AS (SELECT src AS doc_id, min(dst) AS comp
-         |        FROM reach GROUP BY 1),
-         |lab AS (
-         |  SELECT c.doc_id, COALESCE(cmp.comp, c.doc_id) AS comp
-         |  FROM corpus c LEFT JOIN cmp ON c.doc_id = cmp.doc_id)
-         |SELECT comp, cluster_size, doc_id AS keep_doc_id, quality_score
-         |FROM (
-         |  SELECT comp, doc_id, quality_score,
-         |    CAST(count(*) OVER (PARTITION BY comp) AS BIGINT)
-         |      AS cluster_size,
-         |    row_number() OVER (PARTITION BY comp
-         |      ORDER BY quality_score DESC, doc_id) AS rn
-         |  FROM lab JOIN q USING (doc_id)) s
-         |WHERE rn = 1 ORDER BY comp""".stripMargin,
-    // histogram over the same closure: component → size → size → count
-    "dedup_cluster_sizes" ->
-      s"""WITH RECURSIVE pairs AS (
-         |  ${ExactJaccardTierSql.replace("\n", "\n  ")}),
-         |edges AS (
-         |  SELECT id_a, id_b FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT id_a, id_a FROM edges
-         |  UNION
-         |  SELECT r.src, e.id_b FROM reach r
-         |  JOIN edges e ON r.dst = e.id_a),
-         |comp AS (SELECT src AS doc_id, min(dst) AS comp
-         |         FROM reach GROUP BY 1),
-         |sizes AS (SELECT comp, count(*) AS cluster_size
-         |          FROM comp GROUP BY 1)
-         |SELECT cluster_size, count(*) AS n_clusters
-         |FROM sizes GROUP BY 1 ORDER BY cluster_size""".stripMargin,
-    // the closure oracle is algorithm-agnostic: it checks the star
-    // closure's labels, whatever query name runs it
-    "dedup_components_star" ->
-      s"""WITH RECURSIVE pairs AS (
-         |  ${ExactJaccardTierSql.replace("\n", "\n  ")}),
-         |edges AS (
-         |  SELECT id_a, id_b FROM pairs
-         |  UNION
-         |  SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT id_a, id_a FROM edges
-         |  UNION
-         |  SELECT r.src, e.id_b FROM reach r
-         |  JOIN edges e ON r.dst = e.id_a)
-         |SELECT src AS doc_id, min(dst) AS comp
-         |FROM reach GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the ANN gates re-state shape + recall-floor invariants as constants
-    // (see Similarity.knnRecallGates): 10 queries × k=5, every query gets
-    // its full k, and recall@5 vs the exact tier clears the floor
-    "knn_recall_gates" ->
-      """SELECT 'ivf' AS method, CAST(50 AS BIGINT) AS n_results,
-        |  CAST(10 AS BIGINT) AS n_queries, 1 AS full_k, 1 AS recall_ok
-        |UNION ALL
-        |SELECT 'ivfpq', 50, 10, 1, 1
-        |UNION ALL
-        |SELECT 'ivfpq_res', 50, 10, 1, 1
-        |UNION ALL
-        |SELECT 'lsh', 50, 10, 1, 1
-        |UNION ALL
-        |SELECT 'lsh_mp', 50, 10, 1, 1
-        |UNION ALL
-        |SELECT 'pq', 50, 10, 1, 1
-        |ORDER BY method""".stripMargin,
-    // NN-Descent graph gate: shape counts are exact SQL (N nodes ×
-    // min(k, N-1) edges each — full_k pins the graph delivers them
-    // all), recall floor restated as a constant like knn_recall_gates
-    "nndescent_gate" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-        |  CAST(count(*) * LEAST(10, count(*) - 1) AS BIGINT) AS n_edges,
-        |  1 AS full_k, 1 AS recall_ok
-        |FROM embeddings""".stripMargin,
-    // append-gate counts: the 1/8 split and edge mass are pure
-    // functions of the corpus count; recall/full-k flags constant
-    "nndescent_append_gate" ->
-      """SELECT CAST(count(*) - count(*) // 8 AS BIGINT) AS n_base,
-        |  CAST(count(*) // 8 AS BIGINT) AS n_inc,
-        |  CAST(count(*) * LEAST(10, count(*) - 1) AS BIGINT) AS n_edges,
-        |  1 AS full_k, 1 AS recall_ok
-        |FROM embeddings""".stripMargin,
-    // hubness conservation laws: node and edge mass are pure functions
-    // of the corpus count, the in-degree bound a constant flag
-    "hubness_gate" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-        |  CAST(count(*) * LEAST(10, count(*) - 1) AS BIGINT) AS n_edges,
-        |  1 AS edge_mass_ok, 1 AS node_mass_ok, 1 AS bound_ok
-        |FROM embeddings""".stripMargin,
-    // per-iteration PQ contract: every sub-vector assigned (rows × M),
-    // cells bounded, L2 error non-increasing (Lloyd monotonicity) —
-    // float error stays out of the hash, like kmeans_train_stats
-    "pq_train_stats" ->
-      """SELECT CAST(i AS INTEGER) AS iter,
-        |  (SELECT count(*) * 16 FROM embeddings) AS n_assigned,
-        |  1 AS cells_ok, 1 AS improved
-        |FROM (SELECT unnest(generate_series(0, 2)) AS i) t
-        |ORDER BY iter""".stripMargin,
-    // per-iteration k-means contract: every vector assigned (exact
-    // count), cells within bounds, Lloyd objective non-decreasing —
-    // float objective stays out of the hash (see kmeansTrainStats)
-    "kmeans_train_stats" ->
-      """SELECT CAST(i AS INTEGER) AS iter,
-        |  (SELECT count(*) FROM embeddings) AS n_assigned,
-        |  1 AS cells_ok, 1 AS improved
-        |FROM (SELECT unnest(generate_series(0, 2)) AS i) t
-        |ORDER BY iter""".stripMargin,
-    // exact sides recomputed, sketch estimates asserted within budget
-    // (see Grouping.approxStatsBounds)
-    "approx_stats_bounds" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  count(DISTINCT l_partkey) AS exact_parts,
-        |  1 AS parts_ok, 1 AS median_ok, 1 AS p90_ok
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dedup_embedding_pairs" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings)
-        |SELECT id_a, id_b, sim FROM (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    round(
-        |      list_sum(list_transform(list_zip(a.v, b.v), x -> x[1]*x[2])) /
-        |      (sqrt(list_sum(list_transform(a.v, x -> x*x))) *
-        |       sqrt(list_sum(list_transform(b.v, x -> x*x)))), 6) AS sim
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id) t
-        |WHERE sim >= 0.45 ORDER BY id_a, id_b""".stripMargin,
-    // exact quantities SQL-recomputed (corpus size, global τ-pair
-    // count); the cell-bounding invariants re-stated as constant flags —
-    // all deterministic (seeded codebook, ordered tie-breaks), measured
-    // recall 0.857/1.0/0.979 at sf0.001/0.01/0.1 vs the 0.75 floor
-    "semantic_dedup_gate" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(list_zip(a.v, b.v), x -> x[1]*x[2])) /
-        |      (sqrt(list_sum(list_transform(a.v, x -> x*x))) *
-        |       sqrt(list_sum(list_transform(b.v, x -> x*x)))), 6) >= 0.45)
-        |SELECT (SELECT count(*) FROM e) AS n_vectors,
-        |  (SELECT count(*) FROM pairs) AS n_pairs_exact,
-        |  1 AS subset_ok, 1 AS recall_ok, 1 AS survivors_ok""".stripMargin,
-    // graph-tier twin of semantic_dedup_gate: identical exact-side
-    // recompute (corpus size + global τ-pair count), flags constant
-    "semantic_dedup_graph_gate" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(list_zip(a.v, b.v), x -> x[1]*x[2])) /
-        |      (sqrt(list_sum(list_transform(a.v, x -> x*x))) *
-        |       sqrt(list_sum(list_transform(b.v, x -> x*x)))), 6) >= 0.45)
-        |SELECT (SELECT count(*) FROM e) AS n_vectors,
-        |  (SELECT count(*) FROM pairs) AS n_pairs_exact,
-        |  1 AS subset_ok, 1 AS recall_ok, 1 AS survivors_ok""".stripMargin,
-    // append-path determinism gate: exact counts + pinned equality
-    "ivfpq_append_gate" ->
-      """SELECT (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n_emb,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings
-        |   WHERE vec_id < 50) AS n_inc,
-        |  1 AS count_ok, 1 AS rows_ok,
-        |  1 AS res_count_ok, 1 AS res_rows_ok""".stripMargin,
-    // rebuild-trigger policy recompute: the cell-count policy
-    // (max(16, min(4096, min(ceil(4*sqrt(n)), n/32)))) is exact in SQL
-    // because IEEE sqrt is correctly rounded, *4 and ceil are exact,
-    // and the rest is integer min/max; measured append flags pinned 1
-    "ivfpq_reindex_gate" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_now
-        |           FROM embeddings),
-        |p AS (SELECT n_now, GREATEST(1, n_now // 8) AS n_base FROM n),
-        |c AS (SELECT n_now, n_base,
-        |  CAST(GREATEST(16, LEAST(4096,
-        |    LEAST(CAST(ceil(4*sqrt(n_base)) AS BIGINT), n_base // 32)))
-        |    AS INTEGER) AS stale_cells,
-        |  CAST(GREATEST(16, LEAST(4096,
-        |    LEAST(CAST(ceil(4*sqrt(n_now)) AS BIGINT), n_now // 32)))
-        |    AS INTEGER) AS fresh_cells
-        |  FROM p)
-        |SELECT 'stale' AS snapshot, n_base AS n_trained_at, n_now,
-        |  stale_cells AS cells, n_now // stale_cells AS occ_mean,
-        |  CASE WHEN fresh_cells >= 2*stale_cells THEN 1 ELSE 0 END
-        |    AS rebuild,
-        |  1 AS append_complete, 1 AS cells_in_range FROM c
-        |UNION ALL
-        |SELECT 'fresh', n_now, n_now, fresh_cells,
-        |  n_now // fresh_cells, 0, 1, 1 FROM c""".stripMargin,
-    // lifecycle capstone: the same count-policy arithmetic as the
-    // reindex gate (IEEE sqrt exact), one composed row; the measured
-    // composition flags (append conservation, cell-range safety,
-    // full-k delivery, deployed-snapshot recall) pinned 1
-    "ivfpq_lifecycle" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_now
-        |           FROM embeddings),
-        |p AS (SELECT n_now, GREATEST(1, n_now // 8) AS n_base FROM n),
-        |c AS (SELECT n_now, n_base,
-        |  CAST(GREATEST(16, LEAST(4096,
-        |    LEAST(CAST(ceil(4*sqrt(n_base)) AS BIGINT), n_base // 32)))
-        |    AS INTEGER) AS stale_cells,
-        |  CAST(GREATEST(16, LEAST(4096,
-        |    LEAST(CAST(ceil(4*sqrt(n_now)) AS BIGINT), n_now // 32)))
-        |    AS INTEGER) AS fresh_cells
-        |  FROM p)
-        |SELECT n_base, GREATEST(n_now - n_base, 0) AS n_inc, n_now,
-        |  stale_cells, fresh_cells,
-        |  CASE WHEN fresh_cells >= 2*stale_cells THEN 1 ELSE 0 END
-        |    AS rebuild,
-        |  1 AS append_complete, 1 AS cells_in_range,
-        |  1 AS full_k, 1 AS recall_ok FROM c""".stripMargin,
-    // embedding drift gate: snapshot split counts exact, occupancy
-    // conservation / share-sum / cell-range / Gibbs-KL flags pinned 1
-    "embedding_drift_gate" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_now
-        |           FROM embeddings)
-        |SELECT n_now - n_now // 8 AS n_base, n_now,
-        |  1 AS base_conserved, 1 AS now_conserved, 1 AS shares_ok,
-        |  1 AS cells_ok, 1 AS kl_ok
-        |FROM n""".stripMargin,
-    // stored-index round trip: corpus/query counts exact, the
-    // write/read/probe equality flags pinned 1
-    "ivfpq_store_gate" ->
-      """SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n_emb,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings
-        |   WHERE vec_id < 10) AS n_queries,
-        |  1 AS store_complete, 1 AS store_match,
-        |  1 AS probe_match""".stripMargin,
-    // drift-consuming rebuild trigger: corpus count + cell policy
-    // SQL-exact; steady => all trigger arms 0 (KL identically zero),
-    // encoder_shift => count arm 0 exact, drift arm pinned 1
-    "ivfpq_reindex_drift_gate" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_emb
-        |           FROM embeddings),
-        |c AS (SELECT n_emb,
-        |  CAST(GREATEST(16, LEAST(4096,
-        |    LEAST(CAST(ceil(4*sqrt(n_emb)) AS BIGINT), n_emb // 32)))
-        |    AS INTEGER) AS cells FROM n)
-        |SELECT 'steady' AS scenario, n_emb AS n_base, n_emb AS n_now,
-        |  cells, 0 AS count_rebuild, 0 AS drift_rebuild, 0 AS rebuild
-        |FROM c
-        |UNION ALL
-        |SELECT 'encoder_shift', n_emb, n_emb, cells, 0, 1, 1 FROM c""".stripMargin,
-    // serving manifest: corpus/prefix-split/erasure-set counts and
-    // live_version SQL-exact; the seven snapshot-contract flags
-    // (op sequence, shared-file append, conservation, compact swap,
-    // forget + bounded rewrite, probe/isolation/vacuum) pinned 1
-    "index_manifest_gate" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_emb
-        |           FROM embeddings)
-        |SELECT n_emb, n_emb - n_emb // 8 AS n_base,
-        |  n_emb // 8 AS n_inc,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings
-        |   WHERE vec_id % 97 = 0) AS n_doomed,
-        |  CAST(4 AS BIGINT) AS live_version,
-        |  1 AS ops_ok, 1 AS append_shared, 1 AS append_conserved,
-        |  1 AS compact_ok, 1 AS forget_ok, 1 AS forget_bounded,
-        |  1 AS probe_ok, 1 AS pruned_probe_ok
-        |FROM n""".stripMargin,
-    // compaction gate: counts + the bench-sized cell arithmetic
-    // (ceil(sqrt(N)/2) floored at 1, capped at the policy count)
-    // SQL-exact, file-shape/content/probe flags pinned 1
-    "ivfpq_compact_gate" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_emb
-        |           FROM embeddings)
-        |SELECT n_emb,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings
-        |   WHERE vec_id < 10) AS n_queries,
-        |  CAST(GREATEST(1, LEAST(
-        |    GREATEST(16, LEAST(4096,
-        |      LEAST(CAST(ceil(4*sqrt(n_emb)) AS BIGINT), n_emb // 32))),
-        |    CAST(ceil(sqrt(GREATEST(n_emb, 1))/2) AS BIGINT)))
-        |    AS INTEGER) AS cells,
-        |  1 AS files_reduced, 1 AS content_match, 1 AS probe_match
-        |FROM n""".stripMargin,
-    // auto-compaction trigger: counts + the episode's version-log
-    // length (build + 2 appends + exactly one fired compact) SQL-exact;
-    // the no-op arm, fire arm and shape/content/probe flags pinned 1
-    "auto_compact_gate" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_emb
-        |           FROM embeddings)
-        |SELECT n_emb, n_emb - n_emb // 8 AS n_base,
-        |  n_emb // 8 AS n_inc,
-        |  CAST(4 AS BIGINT) AS versions_committed,
-        |  1 AS noop_ok, 1 AS fired, 1 AS shape_ok, 1 AS content_ok,
-        |  1 AS probe_ok
-        |FROM n""".stripMargin,
-    // drift-fired rebuild through the store: counts SQL-exact, the
-    // count arm provably 0 (same size), drift/generation/isolation/
-    // recall flags pinned
-    "manifest_rebuild_gate" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_emb
-        |           FROM embeddings)
-        |SELECT n_emb AS n_base, n_emb AS n_now, 0 AS count_rebuild,
-        |  1 AS drift_rebuild, 1 AS gen_advanced, 1 AS old_reader_ok,
-        |  1 AS recall_ok
-        |FROM n""".stripMargin,
-    // graph lifecycle capstone: the append split (7/8 base + 1/8
-    // increment) and the cascade doomed set are exact counts; the
-    // composed clean/shape/recall flags pinned 1
-    "graph_lifecycle" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_now
-        |           FROM embeddings)
-        |SELECT n_now - n_now // 8 AS n_base, n_now // 8 AS n_inc,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings
-        |   WHERE vec_id % 97 = 0) AS n_del,
-        |  1 AS graph_clean, 1 AS full_k, 1 AS recall_ok
-        |FROM n""".stripMargin,
-    // right-to-be-forgotten gate: doomed set is the cascade
-    // convention (vec_id % 97 = 0) — counts exact, cleanliness/
-    // conservation/repair/recall flags pinned 1
-    "vector_forget_gate" ->
-      """SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n_emb,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings
-        |   WHERE vec_id % 97 = 0) AS n_del,
-        |  1 AS index_clean, 1 AS index_count_ok, 1 AS graph_clean,
-        |  1 AS graph_full_k, 1 AS recall_ok""".stripMargin,
-    // filtered-probe gate: corpus/filter/query sizes exact (the
-    // filter is documents.lang = 'de' carrying an embedding), flags
-    // pinned 1
-    "knn_ivfpq_filtered_gate" ->
-      """SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n_emb,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents d
-        |   JOIN embeddings e ON d.doc_id = e.vec_id
-        |   WHERE d.lang = 'de') AS n_allowed,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings
-        |   WHERE vec_id < 10) AS n_queries,
-        |  1 AS subset_ok, 1 AS full_k, 1 AS recall_ok""".stripMargin,
-    // exact recompute of the ratio-margin miner: all-pairs en×de
-    // cosine, top-4 neighborhood sums in integer micros, floor-division
-    // margin, best per source doc above the 1.0 floor
-    "bitext_mining" ->
-      """WITH d AS (SELECT doc_id, lang FROM documents),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |      FROM embeddings),
-        |a AS (SELECT vec_id AS src_id, v AS va FROM e
-        |      JOIN d ON vec_id = doc_id AND lang = 'en'),
-        |b AS (SELECT vec_id AS tgt_id, v AS vb FROM e
-        |      JOIN d ON vec_id = doc_id AND lang = 'de'),
-        |p AS (
-        |  SELECT src_id, tgt_id,
-        |    round(
-        |      list_sum(list_transform(list_zip(va, vb), x -> x[1]*x[2])) /
-        |      (sqrt(list_sum(list_transform(va, x -> x*x))) *
-        |       sqrt(list_sum(list_transform(vb, x -> x*x)))), 6) AS cos
-        |  FROM a CROSS JOIN b),
-        |pm AS (SELECT src_id, tgt_id, cos,
-        |         CAST(round(cos * 1e6) AS BIGINT) AS cm FROM p),
-        |r AS (SELECT src_id, tgt_id, cos, cm,
-        |        row_number() OVER (PARTITION BY src_id
-        |          ORDER BY cos DESC, tgt_id) AS ra,
-        |        row_number() OVER (PARTITION BY tgt_id
-        |          ORDER BY cos DESC, src_id) AS rb
-        |      FROM pm),
-        |sa AS (SELECT src_id, CAST(sum(cm) AS BIGINT) AS sa FROM r
-        |       WHERE ra <= 4 GROUP BY 1),
-        |sb AS (SELECT tgt_id, CAST(sum(cm) AS BIGINT) AS sb FROM r
-        |       WHERE rb <= 4 GROUP BY 1),
-        |m AS (
-        |  SELECT r.src_id, r.tgt_id, r.cos,
-        |    (r.cm * 8 * 1000000) // (sa.sa + sb.sb) AS margin_micros
-        |  FROM r JOIN sa ON r.src_id = sa.src_id
-        |         JOIN sb ON r.tgt_id = sb.tgt_id
-        |  WHERE sa.sa + sb.sb > 0)
-        |SELECT src_id, tgt_id, cos, margin_micros FROM (
-        |  SELECT src_id, tgt_id, cos, margin_micros,
-        |    row_number() OVER (PARTITION BY src_id
-        |      ORDER BY margin_micros DESC, tgt_id) AS rn
-        |  FROM m) x
-        |WHERE rn = 1 AND margin_micros >= 1000000
-        |ORDER BY src_id""".stripMargin,
-    // ANN-miner gate: side sizes + the exact tier's pair count
-    // recomputed (the same all-pairs margin pipeline as bitext_mining,
-    // wrapped in counts); recall/bound invariants pinned as flags
-    "bitext_ann_gate" ->
-      """WITH d AS (SELECT doc_id, lang FROM documents),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |      FROM embeddings),
-        |a AS (SELECT vec_id AS src_id, v AS va FROM e
-        |      JOIN d ON vec_id = doc_id AND lang = 'en'),
-        |b AS (SELECT vec_id AS tgt_id, v AS vb FROM e
-        |      JOIN d ON vec_id = doc_id AND lang = 'de'),
-        |p AS (
-        |  SELECT src_id, tgt_id,
-        |    round(
-        |      list_sum(list_transform(list_zip(va, vb), x -> x[1]*x[2])) /
-        |      (sqrt(list_sum(list_transform(va, x -> x*x))) *
-        |       sqrt(list_sum(list_transform(vb, x -> x*x)))), 6) AS cos
-        |  FROM a CROSS JOIN b),
-        |pm AS (SELECT src_id, tgt_id, cos,
-        |         CAST(round(cos * 1e6) AS BIGINT) AS cm FROM p),
-        |r AS (SELECT src_id, tgt_id, cos, cm,
-        |        row_number() OVER (PARTITION BY src_id
-        |          ORDER BY cos DESC, tgt_id) AS ra,
-        |        row_number() OVER (PARTITION BY tgt_id
-        |          ORDER BY cos DESC, src_id) AS rb
-        |      FROM pm),
-        |sa AS (SELECT src_id, CAST(sum(cm) AS BIGINT) AS sa FROM r
-        |       WHERE ra <= 4 GROUP BY 1),
-        |sb AS (SELECT tgt_id, CAST(sum(cm) AS BIGINT) AS sb FROM r
-        |       WHERE rb <= 4 GROUP BY 1),
-        |m AS (
-        |  SELECT r.src_id, r.tgt_id,
-        |    (r.cm * 8 * 1000000) // (sa.sa + sb.sb) AS margin_micros
-        |  FROM r JOIN sa ON r.src_id = sa.src_id
-        |         JOIN sb ON r.tgt_id = sb.tgt_id
-        |  WHERE sa.sa + sb.sb > 0),
-        |best AS (
-        |  SELECT src_id FROM (
-        |    SELECT src_id, margin_micros,
-        |      row_number() OVER (PARTITION BY src_id
-        |        ORDER BY margin_micros DESC, tgt_id) AS rn
-        |    FROM m) x
-        |  WHERE rn = 1 AND margin_micros >= 1000000)
-        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM a) AS n_src,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM b) AS n_tgt,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM best) AS n_exact,
-        |  1 AS recall_ok, 1 AS bounded_ok""".stripMargin,
-    "knn_bruteforce" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS vq FROM e WHERE vec_id < 10),
-        |sims AS (
-        |  SELECT query_id, e.vec_id AS nn_id,
-        |    round(
-        |      list_sum(list_transform(list_zip(vq, e.v), x -> x[1]*x[2])) /
-        |      (sqrt(list_sum(list_transform(vq, x -> x*x))) *
-        |       sqrt(list_sum(list_transform(e.v, x -> x*x)))), 6) AS sim
-        |  FROM q JOIN e ON query_id <> e.vec_id)
-        |SELECT query_id, nn_id, sim, rn FROM (
-        |  SELECT query_id, nn_id, sim,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY sim DESC, nn_id) AS rn
-        |  FROM sims) t
-        |WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
-    "asof_event_order" ->
-      """SELECT e.event_id, e.user_id,
-        |  strftime(e.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-        |  o.o_orderkey, o.o_totalprice
-        |FROM events e
-        |JOIN LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = e.user_id AND o_orderdate <= e.ts
-        |  ORDER BY o_orderdate DESC, o_orderkey DESC LIMIT 1) o ON true
-        |ORDER BY e.event_id""".stripMargin,
-    "asof_event_order_native" ->
-      """SELECT e.event_id, e.user_id,
-        |  strftime(e.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-        |  o.o_orderkey, o.o_totalprice
-        |FROM events e
-        |JOIN LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = e.user_id AND o_orderdate <= e.ts
-        |  ORDER BY o_orderdate DESC, o_orderkey DESC LIMIT 1) o ON true
-        |ORDER BY e.event_id""".stripMargin,
-    "streamed_events_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        |  event_type, count(*) AS n, round(sum(value),2) AS sum_value
-        |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    // every event is streamed TWICE (self-union replay); the in-stream
-    // dedup restores exactly the distinct set, so the oracle is the plain
-    // batch count
-    "streamed_dedup_events" ->
-      """SELECT event_type, count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // settled stream-static anti join == batch anti join
-    // the settled stream histogram equals the batch histogram, so the
-    // whole drift view is the plain before/after SQL; before is the
-    // snapshot missing every 10th doc
-    "streamed_token_drift" ->
-      s"""WITH cb AS (
-         |  SELECT lower(word) AS word, CAST(count(*) AS BIGINT)
-         |    AS n_before
-         |  FROM (SELECT unnest($DuckTokList) AS word
-         |        FROM documents WHERE doc_id % 10 <> 0) x GROUP BY 1),
-         |ca AS (
-         |  SELECT lower(word) AS word, CAST(count(*) AS BIGINT)
-         |    AS n_after
-         |  FROM (SELECT unnest($DuckTokList) AS word
-         |        FROM documents) x GROUP BY 1),
-         |m AS (SELECT coalesce(cb.word, ca.word) AS word,
-         |        coalesce(n_before, CAST(0 AS BIGINT)) AS n_before,
-         |        coalesce(n_after, CAST(0 AS BIGINT)) AS n_after
-         |      FROM cb FULL OUTER JOIN ca ON cb.word = ca.word)
-         |SELECT word, n_before, n_after, n_after - n_before AS delta
-         |FROM m ORDER BY abs(delta) DESC, word LIMIT 30""".stripMargin,
-    "streamed_quality_filter" ->
-      s"""WITH $PerceptronSql,
-         |pred AS (
-         |  SELECT doc_id,
-         |    CAST(CASE WHEN margin > 0 THEN 1 ELSE -1 END AS BIGINT)
-         |      AS pred,
-         |    margin
-         |  FROM mfin)
-         |SELECT d.lang, pred, CAST(count(*) AS BIGINT) AS n_docs,
-         |  min(margin) AS min_margin, max(margin) AS max_margin
-         |FROM documents d JOIN pred USING (doc_id)
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "streamed_dedup_against_base" ->
-      """WITH base AS (SELECT md5(text) AS h FROM documents
-        |              WHERE doc_id % 3 = 0)
-        |SELECT lang, count(*) AS n_new_docs,
-        |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM documents
-        |WHERE md5(text) NOT IN (SELECT h FROM base)
-        |GROUP BY 1 ORDER BY lang""".stripMargin,
-    // the perceptual-twin gate's correct answer IS the planted-pair
-    // formula: every doc_id % 5 = 0 row gets a perturbed twin at
-    // id + 10000000, and the recall semi-join must keep all of them
-    "multimodal_neardup_gate" ->
-      """SELECT doc_id AS id_a, doc_id + 10000000 AS id_b
-        |FROM documents WHERE doc_id % 5 = 0
-        |ORDER BY id_a, id_b""".stripMargin,
-    // the sampled frame is regenerated by formula: 8 fps over 1 s, index
-    // clamped to the last frame, raster pixel = (id*7 + k*13 + i) % 256
-    "multimodal_frame_sample" ->
-      """WITH v AS (SELECT doc_id, 4 + (doc_id % 5) AS frames
-        |           FROM documents WHERE doc_id % 3 = 2),
-        |s AS (
-        |  SELECT doc_id, frames, ms,
-        |    CAST(least(ms // 125, frames - 1) AS INTEGER) AS frame_idx
-        |  FROM v, LATERAL (SELECT unnest(generate_series(0, 999, 250))
-        |                   AS ms) g)
-        |SELECT doc_id, CAST(ms AS INTEGER) AS frame_ms, frame_idx,
-        |  CAST((SELECT sum((s.doc_id*7 + s.frame_idx*13 + i) % 256)
-        |        FROM (SELECT unnest(generate_series(0, 4095)) AS i) px)
-        |       AS BIGINT) AS frame_sum
-        |FROM s ORDER BY doc_id, frame_ms""".stripMargin,
-    // images: 13-byte resized header "P5\n16 16\n255\n" (ASCII sum 557)
-    // + NN raster out(y,x) = plane[256y+4x], plane[k] = byte[k mod nb];
-    // audio: WAV bytes by formula; video: motion-PGM bytes by formula
-    "multimodal_resize" ->
-      """WITH b AS (
-        |  SELECT doc_id, hex(encode(text)) AS h,
-        |    octet_length(encode(text)) AS nb
-        |  FROM documents),
-        |img AS (
-        |  SELECT doc_id, 'image' AS modality, 269 AS n_bytes,
-        |    557 + coalesce(sum(
-        |      (strpos('0123456789ABCDEF', substr(h,
-        |         2*((256*(i//16) + 4*(i%16)) % greatest(nb,1))+1, 1)) - 1)*16 +
-        |      (strpos('0123456789ABCDEF', substr(h,
-        |         2*((256*(i//16) + 4*(i%16)) % greatest(nb,1))+2, 1)) - 1)),
-        |      0) AS byte_sum,
-        |    16 AS width, 16 AS height
-        |  FROM b, LATERAL (SELECT unnest(generate_series(0, 255)) AS i) g
-        |  WHERE doc_id % 3 = 0 GROUP BY doc_id, nb),
-        |aud AS (
-        |  -- WAV bytes regenerated by formula: 1722 is the constant
-        |  -- header byte sum (RIFF/WAVE/fmt/data tags + fixed fields);
-        |  -- the two size fields and each LE sample contribute their
-        |  -- base-256 digit sums
-        |  SELECT d.doc_id, 'audio' AS modality, 44 + 2*n AS n_bytes,
-        |    1722 + ((36 + 2*n) % 256) + ((36 + 2*n) // 256)
-        |         + ((2*n) % 256) + ((2*n) // 256)
-        |         + coalesce(sum((u % 256) + (u // 256)), 0) AS byte_sum,
-        |    64 AS width, 64 AS height
-        |  FROM (SELECT doc_id, 160 + (doc_id % 41) * 4 AS n
-        |        FROM documents WHERE doc_id % 3 = 1) d,
-        |  LATERAL (SELECT unnest(generate_series(0, n-1)) AS i) g,
-        |  LATERAL (SELECT CASE WHEN sv < 0 THEN sv + 65536 ELSE sv END AS u
-        |           FROM (SELECT ((d.doc_id*31 + i*17) % 20001) - 10000
-        |                 AS sv) q) s
-        |  GROUP BY d.doc_id, n),
-        |vid AS (
-        |  -- per-frame NN resize by formula: each 64x64 frame resamples
-        |  -- to 16x16 (src index 256*(i//16) + 4*(i%16), like img), with
-        |  -- the 557-byte resized header and 269 bytes per frame
-        |  SELECT d.doc_id, 'video' AS modality, frames * 269 AS n_bytes,
-        |    frames * 557 +
-        |      coalesce(sum((d.doc_id*7 + k*13 +
-        |        (256*(i//16) + 4*(i%16))) % 256), 0) AS byte_sum,
-        |    16 AS width, 16 AS height
-        |  FROM (SELECT doc_id, 4 + (doc_id % 5) AS frames
-        |        FROM documents WHERE doc_id % 3 = 2) d,
-        |  LATERAL (SELECT unnest(generate_series(0, frames-1)) AS k) f,
-        |  LATERAL (SELECT unnest(generate_series(0, 255)) AS i) g
-        |  GROUP BY d.doc_id, frames)
-        |SELECT doc_id, modality, CAST(n_bytes AS INTEGER) AS n_bytes,
-        |  CAST(byte_sum AS BIGINT) AS byte_sum, width, height
-        |FROM (SELECT * FROM img UNION ALL SELECT * FROM aud
-        |      UNION ALL SELECT * FROM vid) u
-        |ORDER BY doc_id""".stripMargin,
-    "shipped_in_order_window" ->
-      """SELECT o_orderkey, count(l.l_shipdate) AS n_shipped
-        |FROM orders o LEFT JOIN lineitem l
-        |  ON l.l_shipdate >= o.o_orderdate
-        | AND l.l_shipdate < o.o_orderdate + INTERVAL 1 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "sample_hash_docs" ->
-      s"""SELECT doc_id,
-        |  ((doc_id % $Fold31) * $HashMult) % 100 AS bucket, lang, n_chars
-        |FROM documents
-        |WHERE ((doc_id % $Fold31) * $HashMult) % 100 < 20
-        |ORDER BY doc_id""".stripMargin,
-    "sample_stratified_lang" ->
-      s"""SELECT doc_id, lang, n_chars FROM (
-        |  SELECT doc_id, lang, n_chars,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY ((doc_id % $Fold31) * $HashMult) % 100, doc_id)
-        |      AS rn
-        |  FROM documents) t
-        |WHERE rn <= 10 ORDER BY lang, doc_id""".stripMargin,
-    "sample_mixture_lang" ->
-      s"""SELECT doc_id, lang,
-        |  ((doc_id % $Fold31) * $HashMult) % 100 AS bucket
-        |FROM documents
-        |WHERE ((doc_id % $Fold31) * $HashMult) % 100 <
-        |  CASE lang WHEN 'en' THEN 90 WHEN 'zh' THEN 40 ELSE 60 END
-        |ORDER BY doc_id""".stripMargin,
-    // A-Res keys with the IDENTICAL float-op order as the Spark side
-    // (ln → divide by weight → scale → floor) so the integer millionths
-    // agree; k and the hash constants all interpolate from one place
-    "weighted_sample" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, lang,
-         |    CAST(len($DuckTokList) AS BIGINT) AS n_toks,
-         |    ((doc_id % $Fold31) * $HashMult) % 1000000 AS bm
-         |  FROM documents),
-         |k AS (
-         |  SELECT doc_id, lang, n_toks,
-         |    CAST(floor(ln((bm::DOUBLE + 0.5) / 1000000.0)
-         |      / n_toks::DOUBLE * 1000000.0) AS BIGINT) AS key_micro
-         |  FROM d WHERE n_toks > 0)
-         |SELECT doc_id, lang, n_toks, key_micro FROM k
-         |ORDER BY key_micro DESC, doc_id ASC LIMIT 100""".stripMargin,
-    "curation_trained_filter" ->
-      s"""WITH $PerceptronSql,
-         |pred AS (
-         |  SELECT doc_id, CASE WHEN margin > 0 THEN 1 ELSE -1 END AS pred
-         |  FROM mfin)
-         |SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN pred = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_kept,
-         |  CAST(sum(CASE WHEN pred = 1 THEN len($DuckTokList) ELSE 0 END)
-         |       AS BIGINT) AS n_toks_kept
-         |FROM documents d JOIN pred USING (doc_id)
-         |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
-    "contrastive_pairs" ->
-      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n
-         |           FROM documents),
-         |a AS (SELECT doc_id AS anchor_id,
-         |        doc_id + ${Dedup.DupIdOffset} AS pos_id
-         |      FROM documents WHERE doc_id < ${Dedup.PlantCount}),
-         |x AS (
-         |  SELECT anchor_id, pos_id, CAST(r AS BIGINT) AS neg_rank, n.n,
-         |    ((((anchor_id * $ContrastiveK + r) % $Fold31)
-         |      * $HashMult) % $Fold31) % n.n AS raw
-         |  FROM a, n,
-         |    LATERAL (SELECT unnest(generate_series(1, $ContrastiveK))
-         |             AS r) g)
-         |SELECT anchor_id, pos_id, neg_rank,
-         |  CASE WHEN raw = anchor_id THEN (raw + 1) % n ELSE raw END
-         |    AS neg_id
-         |FROM x ORDER BY anchor_id, neg_rank""".stripMargin,
-    "domain_cap" ->
-      s"""SELECT doc_id, source, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT doc_id, source,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY ((doc_id % $Fold31) * $HashMult) % $Fold31,
-         |               doc_id) AS rk
-         |  FROM documents) t
-         |WHERE rk <= $DomainCapN ORDER BY doc_id""".stripMargin,
-    // $ShardN and $Fold31 interpolate the SAME constants the Spark side
-    // uses (Sampling.shardOf / ADVICE r8: a default-shard-count change
-    // must not silently desync the oracle)
-    "training_shards" ->
-      s"""WITH h AS (
-         |  SELECT doc_id,
-         |    ((doc_id % $Fold31) * $HashMult) % $Fold31 AS hkey
-         |  FROM documents),
-         |s AS (SELECT doc_id, hkey,
-         |        (hkey * $ShardN) // $Fold31 AS shard FROM h)
-         |SELECT doc_id, shard,
-         |  CAST(row_number() OVER (PARTITION BY shard
-         |    ORDER BY hkey, doc_id) AS INTEGER) AS pos, hkey
-         |FROM s ORDER BY doc_id""".stripMargin,
-    "shard_stats" ->
-      s"""WITH t AS (
-         |  SELECT (((doc_id % $Fold31) * $HashMult) % $Fold31 * $ShardN)
-         |      // $Fold31 AS shard,
-         |    len($DuckTokList) AS n_toks
-         |  FROM documents)
-         |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_toks) AS BIGINT) AS shard_toks
-         |FROM t GROUP BY shard ORDER BY shard""".stripMargin,
-    "shard_manifest" ->
-      s"""WITH t AS (
-         |  SELECT (((doc_id % $Fold31) * $HashMult) % $Fold31 * $ShardN)
-         |      // $Fold31 AS shard,
-         |    doc_id, len($DuckTokList) AS n_toks,
-         |    CAST('0x' || substr(md5(concat_ws('|', doc_id, text)), 1, 14)
-         |      AS BIGINT) AS h
-         |  FROM documents)
-         |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_toks) AS BIGINT) AS shard_toks,
-         |  min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id,
-         |  CAST(coalesce(bit_xor(h), 0) AS BIGINT) AS content_xor56
-         |FROM t GROUP BY shard ORDER BY shard""".stripMargin,
-    "mixture_budget" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, lang, CAST(len($DuckTokList) AS BIGINT) AS n_toks,
-         |    ((doc_id % $Fold31) * $HashMult) % 1000000 AS bm
-         |  FROM documents),
-         |b AS (SELECT CAST(sum(n_toks) AS BIGINT) // 2 AS budget FROM d),
-         |a AS (SELECT lang, CAST(sum(n_toks) AS BIGINT) AS available_toks,
-         |        CAST(count(*) AS BIGINT) AS n_docs FROM d GROUP BY lang),
-         |r AS (
-         |  SELECT lang, available_toks, n_docs,
-         |    (budget // 1000000) * w + ((budget % 1000000) * w) // 1000000
-         |      AS target_toks
-         |  FROM (SELECT a.*, b.budget,
-         |      CAST(CASE lang WHEN 'en' THEN 500000 WHEN 'zh' THEN 150000
-         |        ELSE 100000 END AS BIGINT) AS w
-         |    FROM a, b) t),
-         |r2 AS (
-         |  SELECT lang, available_toks, n_docs, target_toks,
-         |    target_toks // available_toks AS full_epochs,
-         |    CAST(least(999999, CASE WHEN available_toks < 8796093022208
-         |        THEN ((target_toks % available_toks) * 1000000)
-         |          // available_toks
-         |        ELSE (target_toks % available_toks)
-         |          // greatest(available_toks // 1000000, 1) END) AS BIGINT)
-         |      AS rem_rate_millionths
-         |  FROM r),
-         |k AS (
-         |  SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs_sampled,
-         |    CAST(sum(d.n_toks) AS BIGINT) AS sampled_toks
-         |  FROM d JOIN r2 ON d.lang = r2.lang
-         |  WHERE d.bm < r2.rem_rate_millionths GROUP BY d.lang)
-         |SELECT r2.lang, available_toks, n_docs, target_toks, full_epochs,
-         |  rem_rate_millionths,
-         |  COALESCE(n_docs_sampled, 0) AS n_docs_sampled,
-         |  COALESCE(sampled_toks, 0) AS sampled_toks,
-         |  full_epochs * available_toks + COALESCE(sampled_toks, 0)
-         |    AS achieved_toks
-         |FROM r2 LEFT JOIN k ON r2.lang = k.lang
-         |ORDER BY r2.lang""".stripMargin,
-    // same integer share + single floor(1e6·exp(α·ln(share))) float step
-    // as Sampling.temperatureWeights; α derived from the one shared
-    // constant by the identical division in both engines
-    "mixture_temperature" ->
-      s"""WITH d AS (
-         |  SELECT lang, CAST(len($DuckTokList) AS BIGINT) AS n_toks
-         |  FROM documents),
-         |a AS (SELECT lang, CAST(sum(n_toks) AS BIGINT) AS available_toks,
-         |        CAST(count(*) AS BIGINT) AS n_docs FROM d GROUP BY lang),
-         |t AS (SELECT CAST(sum(available_toks) AS BIGINT) AS total_toks
-         |      FROM a),
-         |sh AS (
-         |  SELECT lang, n_docs, available_toks,
-         |    CASE WHEN total_toks < ${1L << 43}
-         |      THEN (available_toks * 1000000) // total_toks
-         |      ELSE available_toks // greatest(total_toks // 1000000, 1)
-         |      END AS share_millionths
-         |  FROM a, t),
-         |u AS (
-         |  SELECT sh.*,
-         |    CAST(floor(1000000.0 *
-         |        exp((${Sampling.TempAlphaMillionths} / 1000000.0) *
-         |          ln(CAST(greatest(share_millionths, 1) AS DOUBLE))))
-         |      AS BIGINT) AS u_micros
-         |  FROM sh),
-         |s AS (SELECT CAST(sum(u_micros) AS BIGINT) AS sum_u FROM u)
-         |SELECT lang, n_docs, available_toks, share_millionths,
-         |  (u_micros * 1000000) // sum_u AS temp_weight_millionths
-         |FROM u, s ORDER BY lang""".stripMargin,
-    // the temperature-weight derivation of mixture_temperature chained
-    // into the budget arithmetic of mixture_budget — both already
-    // hash-checked standalone; this pins their composition
-    "mixture_temperature_budget" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, lang, CAST(len($DuckTokList) AS BIGINT) AS n_toks,
-         |    ((doc_id % $Fold31) * $HashMult) % 1000000 AS bm
-         |  FROM documents),
-         |b AS (SELECT CAST(sum(n_toks) AS BIGINT) // 2 AS budget FROM d),
-         |a AS (SELECT lang, CAST(sum(n_toks) AS BIGINT) AS available_toks,
-         |        CAST(count(*) AS BIGINT) AS n_docs FROM d GROUP BY lang),
-         |t AS (SELECT CAST(sum(available_toks) AS BIGINT) AS total_toks
-         |      FROM a),
-         |sh AS (
-         |  SELECT lang, n_docs, available_toks,
-         |    CASE WHEN total_toks < ${1L << 43}
-         |      THEN (available_toks * 1000000) // total_toks
-         |      ELSE available_toks // greatest(total_toks // 1000000, 1)
-         |      END AS share_millionths
-         |  FROM a, t),
-         |u AS (
-         |  SELECT sh.*,
-         |    CAST(floor(1000000.0 *
-         |        exp((${Sampling.TempAlphaMillionths} / 1000000.0) *
-         |          ln(CAST(greatest(share_millionths, 1) AS DOUBLE))))
-         |      AS BIGINT) AS u_micros
-         |  FROM sh),
-         |su AS (SELECT CAST(sum(u_micros) AS BIGINT) AS sum_u FROM u),
-         |wt AS (SELECT lang, n_docs, available_toks,
-         |         (u_micros * 1000000) // sum_u AS w FROM u, su),
-         |r AS (
-         |  SELECT lang, available_toks, n_docs,
-         |    (budget // 1000000) * w + ((budget % 1000000) * w) // 1000000
-         |      AS target_toks
-         |  FROM wt, b),
-         |r2 AS (
-         |  SELECT lang, available_toks, n_docs, target_toks,
-         |    target_toks // available_toks AS full_epochs,
-         |    CAST(least(999999, CASE WHEN available_toks < ${1L << 43}
-         |        THEN ((target_toks % available_toks) * 1000000)
-         |          // available_toks
-         |        ELSE (target_toks % available_toks)
-         |          // greatest(available_toks // 1000000, 1) END) AS BIGINT)
-         |      AS rem_rate_millionths
-         |  FROM r),
-         |k AS (
-         |  SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs_sampled,
-         |    CAST(sum(d.n_toks) AS BIGINT) AS sampled_toks
-         |  FROM d JOIN r2 ON d.lang = r2.lang
-         |  WHERE d.bm < r2.rem_rate_millionths GROUP BY d.lang)
-         |SELECT r2.lang, available_toks, n_docs, target_toks, full_epochs,
-         |  rem_rate_millionths,
-         |  COALESCE(n_docs_sampled, 0) AS n_docs_sampled,
-         |  COALESCE(sampled_toks, 0) AS sampled_toks,
-         |  full_epochs * available_toks + COALESCE(sampled_toks, 0)
-         |    AS achieved_toks
-         |FROM r2 LEFT JOIN k ON r2.lang = k.lang
-         |ORDER BY r2.lang""".stripMargin,
-    "sequence_packing" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, lang, len($DuckTokList) AS n_toks
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, lang, n_toks,
-         |    sum(n_toks) OVER (PARTITION BY lang ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM t)
-         |SELECT lang,
-         |  CAST(floor((cum - n_toks) / 2048) AS BIGINT) AS window_id,
-         |  count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS first_doc
-         |FROM c GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "skewed_user_segment_stats" ->
-      """SELECT c_mktsegment, count(*) AS n_events,
-        |  round(sum(value),2) AS sum_value
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "top_event_per_user" ->
-      """SELECT user_id, event_id, event_type, round(value,6) AS value, rn
-        |FROM (
-        |  SELECT user_id, event_id, event_type, value,
-        |    row_number() OVER (PARTITION BY user_id
-        |                       ORDER BY value DESC, event_id) AS rn
-        |  FROM events) t
-        |WHERE rn <= 1 ORDER BY user_id""".stripMargin,
-    "cube_order_stats" ->
-      """SELECT coalesce(o_orderstatus,'ALL') AS status,
-        |  coalesce(o_orderpriority,'ALL') AS priority,
-        |  count(*) AS n_orders, round(sum(o_totalprice),2) AS total
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY 1,2""".stripMargin,
-    "lineitem_stats" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_extendedprice, 0.5),4) AS median_price,
-        |  round(quantile_cont(l_extendedprice, 0.9),4) AS p90_price,
-        |  round(stddev_samp(l_quantity),4) AS sd_qty,
-        |  round(corr(l_quantity, l_extendedprice),4) AS corr_qty_price,
-        |  round(avg(l_discount),6) AS avg_disc
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "order_rank_stats" ->
-      """SELECT o_custkey AS custkey, o_orderkey AS orderkey,
-        |  round(o_totalprice, 2) AS price,
-        |  round(percent_rank() OVER w_asc, 6) AS price_pct_rank,
-        |  round(cume_dist() OVER w_asc, 6) AS price_cume_dist,
-        |  first_value(o_orderkey) OVER w_desc AS top_order
-        |FROM orders
-        |WINDOW
-        |  w_asc AS (PARTITION BY o_custkey
-        |            ORDER BY o_totalprice, o_orderkey),
-        |  w_desc AS (PARTITION BY o_custkey
-        |             ORDER BY o_totalprice DESC, o_orderkey)
-        |ORDER BY custkey, orderkey""".stripMargin,
-    // medians doubled-then-cast stay exact over integers (interpolation
-    // is always .0/.5); the 3x-MAD test is a pure BIGINT comparison
-    "robust_price_stats" ->
-      """WITH c AS (
-        |  SELECT l_returnflag,
-        |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS cents
-        |  FROM lineitem),
-        |m AS (
-        |  SELECT l_returnflag,
-        |    CAST(2 * quantile_cont(cents, 0.5) AS BIGINT) AS med2
-        |  FROM c GROUP BY 1),
-        |d AS (
-        |  SELECT c.l_returnflag, abs(2 * cents - med2) AS dev2, med2
-        |  FROM c JOIN m USING (l_returnflag)),
-        |md AS (
-        |  SELECT l_returnflag,
-        |    CAST(2 * quantile_cont(dev2, 0.5) AS BIGINT) AS mad4
-        |  FROM d GROUP BY 1)
-        |SELECT d.l_returnflag, CAST(count(*) AS BIGINT) AS n,
-        |  min(d.med2) AS med2, min(md.mad4) AS mad4,
-        |  CAST(sum(CASE WHEN 2 * dev2 > 3 * mad4 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_outliers
-        |FROM d JOIN md USING (l_returnflag)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "user_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id
-        |           ORDER BY ts, event_id) >= INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |    sum(new_sess) OVER (PARTITION BY user_id
-        |      ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS sess_id
-        |  FROM e)
-        |SELECT user_id,
-        |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |  strftime(max(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S')
-        |    AS session_end,
-        |  count(*) AS n_events, round(sum(value),2) AS session_value
-        |FROM s GROUP BY user_id, sess_id
-        |ORDER BY user_id, session_start""".stripMargin,
-    // same session construction as user_sessions (proven equivalent to
-    // session_window there), then the exact overlap self-join the binned
-    // operator must reproduce; durations are integer second diffs
-    "concurrent_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id
-        |           ORDER BY ts, event_id) >= INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    sum(new_sess) OVER (PARTITION BY user_id
-        |      ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS sess_id
-        |  FROM e),
-        |sess AS (
-        |  SELECT user_id, sess_id, min(ts) AS st,
-        |    max(ts) + INTERVAL 30 MINUTE AS en
-        |  FROM s GROUP BY user_id, sess_id)
-        |SELECT a.user_id AS user_a, b.user_id AS user_b,
-        |  count(*) AS n_session_pairs,
-        |  CAST(sum(date_diff('second', greatest(a.st, b.st),
-        |                     least(a.en, b.en))) AS BIGINT)
-        |    AS overlap_seconds
-        |FROM sess a JOIN sess b
-        |  ON a.user_id < b.user_id AND a.st < b.en AND b.st < a.en
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "events_type_pivot" ->
-      """SELECT hour(ts) AS hod,
-        |  coalesce(round(sum(value) FILTER (WHERE event_type='click'),2),0.0)
-        |    AS click,
-        |  coalesce(round(sum(value) FILTER (WHERE event_type='error'),2),0.0)
-        |    AS error,
-        |  coalesce(round(sum(value) FILTER (WHERE event_type='purchase'),2),0.0)
-        |    AS purchase,
-        |  coalesce(round(sum(value) FILTER (WHERE event_type='signup'),2),0.0)
-        |    AS signup,
-        |  coalesce(round(sum(value) FILTER (WHERE event_type='view'),2),0.0)
-        |    AS view
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "rolling_7d_revenue" ->
-      """WITH daily AS (
-        |  SELECT l_shipdate AS ship_date,
-        |    round(sum(CAST(l_extendedprice*(1-l_discount)
-        |                   AS DECIMAL(18,4))),2)::DOUBLE AS day_rev
-        |  FROM lineitem GROUP BY 1)
-        |SELECT strftime(ship_date, '%Y-%m-%d') AS ship_day, day_rev,
-        |  round(sum(day_rev) OVER (ORDER BY ship_date
-        |    RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW),2)
-        |    AS rev_7d
-        |FROM daily ORDER BY 1""".stripMargin,
-    "part_brand_revenue" ->
-      """SELECT p_brand,
-        |  round(sum(l_extendedprice*(1-l_discount)),2) AS rev,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1 ORDER BY rev DESC, p_brand LIMIT 10""".stripMargin,
-    "nation_coverage" ->
-      """SELECT coalesce(c.c_nationkey, s.s_nationkey) AS nationkey,
-        |  coalesce(n_customers, 0) AS n_customers,
-        |  coalesce(n_suppliers, 0) AS n_suppliers
-        |FROM (SELECT c_nationkey, count(*) AS n_customers
-        |      FROM customer GROUP BY 1) c
-        |FULL OUTER JOIN (SELECT s_nationkey, count(*) AS n_suppliers
-        |                 FROM supplier GROUP BY 1) s
-        |  ON c.c_nationkey = s.s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "above_average_orders" ->
-      """SELECT o_orderstatus, count(*) AS n_above,
-        |  round(min(o_totalprice), 2) AS min_above
-        |FROM orders
-        |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "events_type_unpivot" ->
-      """WITH agg AS (
-        |  SELECT hour(ts) AS hod, event_type, round(sum(value),2) AS v
-        |  FROM events GROUP BY 1,2),
-        |hours AS (SELECT DISTINCT hour(ts) AS hod FROM events),
-        |types AS (SELECT unnest(['click','error','purchase','signup','view'])
-        |          AS event_type)
-        |SELECT h.hod, t.event_type, coalesce(a.v, 0.0) AS sum_value
-        |FROM hours h CROSS JOIN types t
-        |LEFT JOIN agg a ON a.hod = h.hod AND a.event_type = t.event_type
-        |ORDER BY 1,2""".stripMargin,
-    "order_grouping_sets" ->
-      """SELECT coalesce(o_orderstatus,'ALL') AS status,
-        |  coalesce(o_orderpriority,'ALL') AS priority,
-        |  coalesce(CAST(year(o_orderdate) AS VARCHAR),'ALL') AS o_year,
-        |  count(*) AS n_orders, round(sum(o_totalprice),2) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, year(o_orderdate)),
-        |                        (o_orderpriority), ())
-        |ORDER BY 1,2,3""".stripMargin,
-    "pii_scrub" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN text || ' contact user' || doc_id ||
-        |           '@example.com via https://example.com/d/' || doc_id
-        |      ELSE text END AS text
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, text,
-        |    regexp_replace(
-        |      regexp_replace(text, 'https?://[^\s]+', '<URL>', 'g'),
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-        |      '<EMAIL>', 'g') AS sc
-        |  FROM d)
-        |SELECT doc_id,
-        |  len(regexp_extract_all(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-        |  len(regexp_extract_all(text, 'https?://[^\s]+')) AS n_urls,
-        |  md5(sc) AS scrubbed_fp,
-        |  length(sc) AS n_chars_scrubbed
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "embedding_quantize" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |n AS (SELECT vec_id, v,
-        |  greatest(round(sqrt(list_sum(list_transform(v, x -> x*x))), 6),
-        |           1e-9) AS norm FROM e),
-        |q AS (SELECT vec_id, norm,
-        |  list_transform(v, x -> CAST(least(greatest(
-        |    floor(x / norm * 127 + 0.5), -127), 127) AS INTEGER))
-        |    AS qv FROM n)
-        |SELECT vec_id, norm,
-        |  CAST(list_sum(qv) AS BIGINT) AS q_sum,
-        |  list_min(qv) AS q_min, list_max(qv) AS q_max
-        |FROM q ORDER BY vec_id""".stripMargin,
-    "streamed_segment_revenue" ->
-      """SELECT c_mktsegment, count(*) AS n_events,
-        |  round(sum(value),2) AS sum_value
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "streamed_conversions" ->
-      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |  p.user_id,
-        |  CAST(epoch(date_trunc('second', p.ts)) -
-        |       epoch(date_trunc('second', c.ts)) AS BIGINT) AS delay_s,
-        |  round(p.value, 6) AS value
-        |FROM events c JOIN events p ON c.user_id = p.user_id
-        |  AND c.event_type = 'click' AND p.event_type = 'purchase'
-        |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
-        |ORDER BY click_id, purchase_id""".stripMargin,
-    "curation_pipeline" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, lang,
-         |    CASE WHEN doc_id % 5 = 0
-         |      THEN text || ' contact user' || doc_id ||
-         |           '@example.com via https://example.com/d/' || doc_id
-         |      ELSE text END AS text
-         |  FROM documents),
-         |t AS (SELECT doc_id, lang, text, $DuckTokList AS toks FROM d),
-         |q AS (
-         |  SELECT doc_id, lang, text, len(toks) AS n_tokens,
-         |    round(0.4 * round(len(list_filter(toks, x -> list_contains(
-         |        ['${TextAnalysis.Stopwords.mkString("','")}'], x)))::DOUBLE
-         |        / len(toks), 4)
-         |      + 0.6 * round(len(list_distinct(toks))::DOUBLE
-         |        / len(toks), 4), 4) AS quality_score
-         |  FROM t),
-         |s AS (
-         |  SELECT doc_id, lang, n_tokens, quality_score,
-         |    md5(regexp_replace(
-         |      regexp_replace(text, 'https?://[^\\s]+', '<URL>', 'g'),
-         |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-         |      '<EMAIL>', 'g')) AS scrubbed_fp
-         |  FROM q WHERE quality_score >= 0.3),
-         |k AS (
-         |  SELECT *, row_number() OVER (PARTITION BY scrubbed_fp
-         |                               ORDER BY doc_id) AS rn
-         |  FROM s)
-         |SELECT doc_id, lang, n_tokens, quality_score, scrubbed_fp
-         |FROM k
-         |WHERE rn = 1 AND ((doc_id % $Fold31) * $HashMult) % 100 < 50
-         |ORDER BY doc_id""".stripMargin,
-    // full capstone recompute: quality gate → scrub → exact dedup →
-    // exact-Jaccard closure → 8-gram decontamination → mixture rates →
-    // replica explode → shard/pos from the hash high bits. Stage
-    // arithmetic is copied from the per-stage oracles above (quality/
-    // scrub from curation_pipeline, pairs+closure from neardup_pipeline,
-    // grams from ContaminationSql, rates from mixture_budget, shard
-    // formula from training_shards) so one definition per stage holds
-    // across BOTH engines via CorpusAssembly.Default* constants
-    // (CaRepFactor = maxEpochs + 2, CaWeightCase from DefaultWeights).
-    "corpus_assembly" -> corpusAssemblySql(CorpusAssembly.DefaultTau),
-    // LSH-tier capstone gate: same oracle TEMPLATE at tau = LshGateTau
-    // (0.9) — in that band every exact-tier pair is either an exact
-    // copy (identical MinHash signatures, LSH recall deterministically
-    // 1) or a J >= 0.9 near-copy (band-miss odds ~1e-4 per pair,
-    // deterministic per corpus — the incremental_neardup triage
-    // convention), so the candidate-bounded production tier and the
-    // SQL-exact closure provably keep the same survivors
-    "corpus_assembly_lsh" -> corpusAssemblySql(CorpusAssembly.LshGateTau),
-    // exact recompute of the cross-increment near-dup filter: planted
-    // fresh docs (ids +10000) vs base, bigram Jaccard >= 0.9 (the
-    // LSH-deterministic band, splitLeakageNearDup's convention), one
-    // row per dropped fresh doc keyed to its smallest base match
-    "incremental_neardup" -> incrementalNearDupSql,
-    // the STREAMING ingest filter settles to the identical answer (same
-    // candidates, same estimate cut, same exact J — see
-    // Streaming.streamedNearDupIngest), so it shares the exact oracle
-    "streamed_neardup_ingest" -> incrementalNearDupSql,
-    // streaming ANN-index ingest: settled = batch ivfPqAppend of the
-    // same replay (equality flags pinned; counts SQL-recomputable)
-    "streamed_ivfpq_ingest" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_emb,
-        |  CAST(count(*) AS BIGINT) AS n_stream,
-        |  1 AS count_ok, 1 AS rows_ok FROM embeddings""".stripMargin,
-    // streamed erasure: corpus + erasure-set counts and the settled
-    // version-log length (1 build + one forget commit per request
-    // slice) SQL-exact; erasure/conservation/resume/probe flags pinned
-    "streamed_forget_gate" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_emb,
-        |  CAST(sum(CASE WHEN vec_id % 97 = 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_doomed
-        |  FROM embeddings)
-        |SELECT n_emb, coalesce(n_doomed, 0) AS n_doomed,
-        |  CASE WHEN n_emb = 0 THEN CAST(0 AS BIGINT)
-        |       ELSE 1 + LEAST(3, coalesce(n_doomed, 0)) END
-        |    AS versions_committed,
-        |  CASE WHEN n_emb > 0 AND coalesce(n_doomed, 0) > 0
-        |       THEN 1 ELSE 0 END AS exercised,
-        |  1 AS doomed_gone, 1 AS conserved, 1 AS resume_safe,
-        |  1 AS probe_full_k
-        |FROM n""".stripMargin,
-    // streamed transactional ingest: corpus/prefix-split counts and
-    // the settled version-log length (1 build + one append commit per
-    // arrival slice) SQL-exact; content/conservation/resume/probe
-    // flags pinned
-    "streamed_append_store" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_emb
-        |           FROM embeddings)
-        |SELECT n_emb, n_emb - n_emb // 8 AS n_base,
-        |  n_emb // 8 AS n_inc,
-        |  CASE WHEN n_emb = 0 THEN CAST(0 AS BIGINT)
-        |       ELSE 1 + LEAST(3, n_emb // 8) END AS versions_committed,
-        |  CASE WHEN n_emb // 8 > 0 THEN 1 ELSE 0 END AS exercised,
-        |  1 AS content_match, 1 AS conserved, 1 AS resume_safe,
-        |  1 AS probe_full_k
-        |FROM n""".stripMargin,
-    // mixed lifecycle stream: split/erasure-set counts and the
-    // settled version-log length — MEASURED Spark-side, predicted
-    // here: the gated (bench-sized) tape is 1 build + one txn-stamped
-    // append (whole increment, if non-empty) + one idempotent forget
-    // (base % 61, if non-empty); content/conservation/resume/probe
-    // flags pinned, `exercised` recomputed from corpus counts so a
-    // degenerate escape can't pose as a driven run
-    "streamed_lifecycle_gate" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_emb
-        |           FROM embeddings),
-        |r AS (SELECT vec_id,
-        |        row_number() OVER (ORDER BY vec_id) AS rn
-        |      FROM embeddings),
-        |b AS (SELECT
-        |    CAST(coalesce(sum(CASE WHEN vec_id % 122 = 0
-        |      THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_f1,
-        |    CAST(coalesce(sum(CASE WHEN vec_id % 61 = 0
-        |      AND vec_id % 122 <> 0 THEN 1 ELSE 0 END), 0)
-        |      AS BIGINT) AS n_f2
-        |  FROM r, n WHERE rn <= n_emb - n_emb // 8)
-        |SELECT n_emb, n_emb - n_emb // 8 AS n_base,
-        |  n_emb // 8 AS n_inc,
-        |  coalesce(n_f1, 0) + coalesce(n_f2, 0) AS n_doomed,
-        |  CASE WHEN n_emb = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE 1 + (CASE WHEN n_emb // 8 > 0 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN coalesce(n_f1, 0) + coalesce(n_f2, 0) > 0
-        |        THEN 1 ELSE 0 END)
-        |    END AS versions_committed,
-        |  CASE WHEN n_emb > 0 AND (n_emb // 8 > 0
-        |      OR coalesce(n_f1, 0) + coalesce(n_f2, 0) > 0)
-        |    THEN 1 ELSE 0 END AS exercised,
-        |  1 AS content_match, 1 AS conserved, 1 AS resume_safe,
-        |  1 AS probe_full_k
-        |FROM n, b""".stripMargin,
-    // refresh capstone recompute, stage by stage: syntheticDelta merge
-    // (corpus_refresh's fragment) → fresh-vs-existing bigram Jaccard ≥
-    // tau (incremental_neardup's fragment) → per-shard stats over the
-    // survivors (shard_stats' hash formula) + add-1 KL drift gate
-    // between the base snapshot and the refreshed corpus
-    // (token_drift_kl's fragment, same empty-corpus guards)
-    "corpus_refresh_assembly" ->
-      s"""WITH delta AS (
-         |  SELECT doc_id, text || ' [revised]' AS text, lang,
-         |    'upsert' AS op
-         |  FROM documents WHERE doc_id % 7 = 0 AND doc_id % 13 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 30000, text, lang, 'upsert'
-         |  FROM documents WHERE doc_id < 25
-         |  UNION ALL
-         |  SELECT doc_id, NULL, lang, 'delete'
-         |  FROM documents WHERE doc_id % 13 = 0),
-         |merged AS (
-         |  SELECT coalesce(b.doc_id, d.doc_id) AS doc_id,
-         |    CASE WHEN d.doc_id IS NULL THEN 'kept'
-         |         WHEN b.doc_id IS NULL THEN 'inserted'
-         |         ELSE 'updated' END AS row_status,
-         |    coalesce(d.lang, b.lang) AS lang,
-         |    coalesce(d.text, b.text) AS text
-         |  FROM documents b FULL OUTER JOIN delta d ON b.doc_id = d.doc_id
-         |  WHERE d.op IS NULL OR d.op <> 'delete'),
-         |t AS (SELECT doc_id, row_status = 'inserted' AS fresh,
-         |        $DuckTokList AS toks FROM merged),
-         |feats AS (
-         |  SELECT DISTINCT doc_id, fresh,
-         |    toks[i] || ' ' || toks[i+1] AS feat
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-         |                   AS i) g),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM feats GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS fid, b.doc_id AS bid, count(*) AS n_inter
-         |  FROM feats a JOIN feats b
-         |    ON a.feat = b.feat AND a.fresh AND NOT b.fresh
-         |  GROUP BY 1,2),
-         |dropped AS (
-         |  SELECT DISTINCT fid AS doc_id FROM inter
-         |  JOIN sizes sa ON sa.doc_id = fid
-         |  JOIN sizes sb ON sb.doc_id = bid
-         |  WHERE round(n_inter::DOUBLE / (sa.sz + sb.sz - n_inter), 6)
-         |    >= ${Dedup.IncrementalTau}),
-         |fin AS (
-         |  SELECT m.doc_id, m.lang, m.text FROM merged m
-         |  WHERE m.doc_id NOT IN (SELECT doc_id FROM dropped)),
-         |cb AS (SELECT lower(word) AS word, CAST(count(*) AS BIGINT)
-         |         AS n_before
-         |       FROM (SELECT unnest($DuckTokList) AS word
-         |             FROM documents) x GROUP BY 1),
-         |ca AS (SELECT lower(word) AS word, CAST(count(*) AS BIGINT)
-         |         AS n_after
-         |       FROM (SELECT unnest(t.toks) AS word
-         |             FROM t JOIN fin ON t.doc_id = fin.doc_id) x
-         |       GROUP BY 1),
-         |m2 AS (SELECT coalesce(cb.word, ca.word) AS word,
-         |        coalesce(n_before, CAST(0 AS BIGINT)) AS n_before,
-         |        coalesce(n_after, CAST(0 AS BIGINT)) AS n_after
-         |      FROM cb FULL OUTER JOIN ca ON cb.word = ca.word),
-         |tt AS (SELECT coalesce(CAST(sum(n_before) AS BIGINT),
-         |          CAST(0 AS BIGINT)) AS n1,
-         |        coalesce(CAST(sum(n_after) AS BIGINT),
-         |          CAST(0 AS BIGINT)) AS n2,
-         |        CAST(count(*) AS BIGINT) AS v FROM m2),
-         |terms AS (
-         |  SELECT (n_before + 1) * CAST(floor(
-         |      (ln((n_before + 1)::DOUBLE / greatest(tt.n1 + tt.v, 1)) -
-         |       ln((n_after + 1)::DOUBLE / greatest(tt.n2 + tt.v, 1)))
-         |      * 1000000.0) AS BIGINT) AS term
-         |  FROM m2, tt),
-         |klrow AS (
-         |  SELECT tt.n1 AS n_tokens_before, tt.n2 AS n_tokens_after,
-         |    tt.v AS vocab_union,
-         |    greatest(coalesce(CAST(sum(term) AS BIGINT),
-         |        CAST(0 AS BIGINT)), CAST(0 AS BIGINT))
-         |      // greatest(tt.n1 + tt.v, 1) AS kl_millionths
-         |  FROM tt LEFT JOIN terms ON TRUE
-         |  GROUP BY tt.n1, tt.n2, tt.v),
-         |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_dropped_fresh
-         |       FROM dropped),
-         |sh AS (
-         |  SELECT (((fin.doc_id % $Fold31) * $HashMult) % $Fold31
-         |      * ${CorpusAssembly.DefaultNShards}) // $Fold31 AS shard,
-         |    CAST(len(t.toks) AS BIGINT) AS n_toks
-         |  FROM fin JOIN t ON t.doc_id = fin.doc_id),
-         |sh2 AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-         |          CAST(sum(n_toks) AS BIGINT) AS shard_toks
-         |        FROM sh GROUP BY shard)
-         |SELECT sh2.shard, sh2.n_docs, sh2.shard_toks,
-         |  nd.n_dropped_fresh, klrow.n_tokens_before,
-         |  klrow.n_tokens_after, klrow.vocab_union, klrow.kl_millionths
-         |FROM sh2, nd, klrow ORDER BY sh2.shard""".stripMargin,
-    // same quality blend as curation_pipeline, ranked per lang; keep =
-    // integer percentile threshold so both engines agree exactly
-    "quality_top_pct" ->
-      s"""WITH q AS (
-         |  SELECT doc_id, lang,
-         |    round(0.4 * round(len(list_filter(toks, x -> list_contains(
-         |        ['${TextAnalysis.Stopwords.mkString("','")}'], x)))::DOUBLE
-         |        / len(toks), 4)
-         |      + 0.6 * round(len(list_distinct(toks))::DOUBLE
-         |        / len(toks), 4), 4) AS quality_score
-         |  FROM (SELECT doc_id, lang, $DuckTokList AS toks
-         |        FROM documents) t),
-         |r AS (
-         |  SELECT doc_id, lang, quality_score,
-         |    CAST(row_number() OVER (PARTITION BY lang
-         |      ORDER BY quality_score DESC, doc_id) AS INTEGER) AS rk,
-         |    count(*) OVER (PARTITION BY lang) AS n_lang
-         |  FROM q WHERE quality_score IS NOT NULL)
-         |SELECT doc_id, lang, quality_score, rk
-         |FROM r WHERE rk <= (n_lang * $QualityPct) // 100
-         |ORDER BY lang, rk""".stripMargin,
-    "user_event_type_sets" ->
-      """SELECT user_id,
-        |  string_agg(DISTINCT event_type, ',' ORDER BY event_type)
-        |    AS event_types,
-        |  count(DISTINCT event_type) AS n_types
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "order_gaps_quartiles" ->
-      """SELECT o_custkey, o_orderkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS o_date,
-        |  coalesce(CAST(date_diff('day',
-        |    lag(o_orderdate) OVER (PARTITION BY o_custkey
-        |                           ORDER BY o_orderdate, o_orderkey),
-        |    o_orderdate) AS INTEGER), -1) AS gap_days,
-        |  CAST(ntile(4) OVER (PARTITION BY o_custkey
-        |    ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER)
-        |    AS spend_quartile
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "wordcount_nostop" ->
-      s"""SELECT lower(word) AS word, count(*) AS cnt
-         |FROM ($DuckTokens) t
-         |WHERE regexp_matches(word, '\\S')
-         |  AND lower(word) NOT IN
-         |    ('${TextAnalysis.Stopwords.mkString("','")}')
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "fk_integrity_audit" -> {
-      def leg(name: String, child: String, fk: String,
-              parent: String, pk: String): String =
-        s"""SELECT '$name' AS edge,
-           |  CAST(count(*) AS BIGINT) AS n_child,
-           |  CAST(sum(CASE WHEN p.$pk IS NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_orphans,
-           |  CAST(count(DISTINCT CASE WHEN p.$pk IS NULL THEN c.$fk END)
-           |    AS BIGINT) AS n_orphan_keys
-           |FROM $child c
-           |LEFT JOIN (SELECT DISTINCT $pk FROM $parent) p
-           |  ON c.$fk = p.$pk""".stripMargin
-      Seq(
-        leg("orders->customer", "orders", "o_custkey",
-          "customer", "c_custkey"),
-        leg("lineitem->orders", "lineitem", "l_orderkey",
-          "orders", "o_orderkey"),
-        leg("lineitem->part", "lineitem", "l_partkey", "part", "p_partkey"),
-        leg("lineitem->supplier", "lineitem", "l_suppkey",
-          "supplier", "s_suppkey"),
-        leg("customer->nation", "customer", "c_nationkey",
-          "nation", "n_nationkey"),
-        leg("supplier->nation", "supplier", "s_nationkey",
-          "nation", "n_nationkey"),
-        leg("nation->region", "nation", "n_regionkey",
-          "region", "r_regionkey"),
-        leg("events->customer", "events", "user_id",
-          "customer", "c_custkey"))
-        .mkString("SELECT * FROM (\n", "\nUNION ALL\n",
-          "\n) a ORDER BY edge")
-    },
-    "spend_deciles" ->
-      """WITH sp AS (
-        |  SELECT o_custkey,
-        |    CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |      AS BIGINT) AS spend_cents
-        |  FROM orders GROUP BY 1),
-        |d AS (SELECT spend_cents,
-        |        CAST(ntile(10) OVER (ORDER BY spend_cents, o_custkey)
-        |          AS INTEGER) AS decile
-        |      FROM sp)
-        |SELECT decile, CAST(count(*) AS BIGINT) AS n_customers,
-        |  min(spend_cents) AS lo_cents, max(spend_cents) AS hi_cents,
-        |  CAST(sum(spend_cents) AS BIGINT) AS sum_cents
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    "fuzzy_part_match" ->
-      """WITH n AS (SELECT DISTINCT p_name FROM part
-        |           WHERE p_name IS NOT NULL)
-        |SELECT a.p_name AS a, b.p_name AS b,
-        |  CAST(levenshtein(a.p_name, b.p_name) AS INTEGER) AS dist
-        |FROM n a, n b
-        |WHERE a.p_name < b.p_name
-        |  AND levenshtein(a.p_name, b.p_name) <= 2
-        |ORDER BY a, b""".stripMargin,
-    "ols_chars_per_token" ->
-      s"""WITH t AS (SELECT lang, len($DuckTokList) AS x,
-         |             length(text) AS y FROM documents),
-         |a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n,
-         |        CAST(sum(x) AS BIGINT) AS sx,
-         |        CAST(sum(y) AS BIGINT) AS sy,
-         |        CAST(sum(x * x) AS BIGINT) AS sxx,
-         |        CAST(sum(x * y) AS BIGINT) AS sxy
-         |      FROM t GROUP BY 1)
-         |SELECT lang, n,
-         |  CAST(n * sxy - sx * sy AS BIGINT) AS slope_num,
-         |  CAST(n * sxx - sx * sx AS BIGINT) AS slope_den
-         |FROM a ORDER BY lang""".stripMargin,
-    "supplier_triangles" ->
-      """WITH e AS (
-        |  SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
-        |  FROM lineitem l1 JOIN lineitem l2
-        |    ON l1.l_orderkey = l2.l_orderkey
-        |   AND l1.l_suppkey < l2.l_suppkey),
-        |tri AS (SELECT CAST(count(*) AS BIGINT) AS n_triangles
-        |        FROM e e1
-        |        JOIN e e2 ON e1.b = e2.a
-        |        JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |st AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM e),
-        |nd AS (SELECT CAST(count(DISTINCT v) AS BIGINT) AS n_nodes
-        |       FROM (SELECT a AS v FROM e
-        |             UNION ALL SELECT b AS v FROM e) u)
-        |SELECT n_nodes, n_edges, n_triangles FROM nd, st, tri""".stripMargin,
-    "event_transitions" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type AS src,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |c AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS cnt
-        |      FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT src, CAST(sum(cnt) AS BIGINT) AS src_total
-        |      FROM c GROUP BY 1)
-        |SELECT c.src, c.dst, c.cnt,
-        |  CAST(c.cnt * 1000000 // t.src_total AS BIGINT) AS p_millionths
-        |FROM c JOIN t ON c.src = t.src
-        |ORDER BY 1, 2""".stripMargin,
-    // the streaming twin emits exactly the CLOSED sessions — end
-    // (last event + gap) <= the final watermark (global max ts)
-    "streamed_sessions" -> streamedSessionsSql,
-    "collocations_pmi" ->
-      s"""WITH t AS (SELECT doc_id, $DuckTokList AS toks FROM documents),
-         |uni AS (
-         |  SELECT w, CAST(count(*) AS BIGINT) AS wc
-         |  FROM (SELECT unnest(toks) AS w FROM t) u GROUP BY 1),
-         |bi AS (
-         |  SELECT toks[i] AS x, toks[i+1] AS y,
-         |    CAST(count(*) AS BIGINT) AS cnt
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-         |                   AS i) g
-         |  GROUP BY 1, 2),
-         |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_bi FROM bi)
-         |SELECT x, y, cnt,
-         |  CAST(cnt * n_bi * 1000000 // (ux.wc * uy.wc) AS BIGINT)
-         |    AS pmi_scaled
-         |FROM bi JOIN uni ux ON bi.x = ux.w
-         |JOIN uni uy ON bi.y = uy.w
-         |CROSS JOIN n
-         |WHERE cnt >= 5
-         |ORDER BY pmi_scaled DESC, x, y LIMIT 30""".stripMargin,
-    "corpus_checksums" -> {
-      def leg(tbl: String, cols: String): String =
-        s"""SELECT '$tbl' AS tbl, CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(coalesce(bit_xor(CAST('0x' ||
-           |    substr(md5(concat_ws('|', $cols)), 1, 14) AS BIGINT)), 0)
-           |    AS BIGINT) AS xor56
-           |FROM $tbl""".stripMargin
-      def cents(c: String) = s"CAST(round($c * 100, 0) AS BIGINT)"
-      Seq(
-        leg("region", "r_regionkey, r_name"),
-        leg("nation", "n_nationkey, n_name, n_regionkey"),
-        leg("customer", s"c_custkey, c_name, c_nationkey, " +
-          s"${cents("c_acctbal")}, c_mktsegment"),
-        leg("supplier",
-          s"s_suppkey, s_name, s_nationkey, ${cents("s_acctbal")}"),
-        leg("part", s"p_partkey, p_name, p_brand, p_type, p_size, " +
-          s"${cents("p_retailprice")}"),
-        leg("orders", s"o_orderkey, o_custkey, o_orderstatus, " +
-          s"${cents("o_totalprice")}, epoch_us(o_orderdate), " +
-          s"o_orderpriority"),
-        leg("lineitem", s"l_orderkey, l_linenumber, l_partkey, " +
-          s"l_suppkey, CAST(l_quantity AS BIGINT), " +
-          s"${cents("l_extendedprice")}, epoch_us(l_shipdate)"),
-        leg("documents", "doc_id, lang, source, n_chars, text"),
-        leg("events", "event_id, user_id, event_type, epoch_us(ts)"))
-        .mkString("SELECT * FROM (\n", "\nUNION ALL\n",
-          "\n) a ORDER BY tbl")
-    },
-    "nation_part_overlap" ->
-      """WITH pa AS (
-        |  SELECT DISTINCT l.l_partkey FROM lineitem l
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |  WHERE n.n_name = 'NATION_1'),
-        |pb AS (
-        |  SELECT DISTINCT l.l_partkey FROM lineitem l
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |  WHERE n.n_name = 'NATION_2')
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM pa) AS n_a,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM pb) AS n_b,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM
-        |    (SELECT * FROM pa INTERSECT SELECT * FROM pb) i) AS n_both,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM
-        |    (SELECT * FROM pa EXCEPT SELECT * FROM pb) x) AS n_only_a,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM
-        |    (SELECT * FROM pa UNION SELECT * FROM pb) u) AS n_union""".stripMargin,
-    "vocab_coverage" ->
-      s"""WITH toks AS (SELECT unnest(toks) AS w FROM
-         |  (SELECT $DuckTokList AS toks FROM documents) t),
-         |c AS (SELECT w, CAST(count(*) AS BIGINT) AS cnt
-         |      FROM toks GROUP BY 1),
-         |r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, w) AS rn
-         |      FROM c),
-         |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_tokens,
-         |               CAST(count(*) AS BIGINT) AS n_vocab FROM c),
-         |ks AS (SELECT unnest([100, 1000, 5000]) AS k)
-         |SELECT k, n_vocab, n_tokens,
-         |  CAST(coalesce(sum(cnt), 0) AS BIGINT) AS covered,
-         |  CAST(CAST(coalesce(sum(cnt), 0) AS BIGINT) * 1000000
-         |    // n_tokens AS BIGINT) AS coverage_millionths
-         |FROM ks LEFT JOIN r ON r.rn <= ks.k CROSS JOIN tot
-         |GROUP BY k, n_vocab, n_tokens ORDER BY k""".stripMargin,
-    "split_leakage_audit" ->
-      s"""WITH d AS (
-        |  SELECT doc_id, md5(text) AS fp,
-        |    ((doc_id % $Fold31) * $HashMult) % 100 AS b
-        |  FROM documents),
-        |te AS (SELECT doc_id AS test_id, fp FROM d WHERE b < 10),
-        |tr AS (SELECT doc_id AS train_id, fp FROM d WHERE b >= 10),
-        |lk AS (SELECT te.test_id FROM te JOIN tr ON te.fp = tr.fp)
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM tr) AS n_train,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM te) AS n_test,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM lk) AS n_leak_pairs,
-        |  (SELECT CAST(count(DISTINCT test_id) AS BIGINT) FROM lk)
-        |    AS n_leaky_test_docs""".stripMargin,
-    "split_leakage_neardup" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 10000, regexp_replace(text, '^[^ ]+ ', '')
-         |  FROM documents WHERE doc_id < 20),
-         |d AS (
-         |  SELECT doc_id, text,
-         |    ((doc_id % $Fold31) * $HashMult) % 100 < 10 AS is_test
-         |  FROM corpus),
-         |t AS (SELECT doc_id, is_test, $DuckTokList AS toks FROM d),
-         |feats AS (
-         |  SELECT DISTINCT doc_id, is_test,
-         |    toks[i] || ' ' || toks[i+1] AS feat
-         |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks)-1))
-         |                   AS i) g),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM feats GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.is_test AS ta, count(*) AS n_inter
-         |  FROM feats a JOIN feats b
-         |    ON a.feat = b.feat AND a.doc_id < b.doc_id
-         |   AND a.is_test <> b.is_test
-         |  GROUP BY 1,2,3),
-         |lk AS (
-         |  SELECT CASE WHEN ta THEN id_a ELSE id_b END AS test_id
-         |  FROM inter
-         |  JOIN sizes sa ON sa.doc_id = id_a
-         |  JOIN sizes sb ON sb.doc_id = id_b
-         |  -- pinned to the planted J >= 0.9 band (LSH miss prob <= 2e-4
-         |  -- there), so an organic mid-Jaccard pair can't flip this gate
-         |  WHERE round(n_inter::DOUBLE / (sa.sz + sb.sz - n_inter), 6)
-         |    >= 0.9)
-         |SELECT
-         |  (SELECT CAST(count(*) AS BIGINT) FROM d WHERE NOT is_test)
-         |    AS n_train,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM d WHERE is_test)
-         |    AS n_test,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM lk) AS n_neardup_pairs,
-         |  (SELECT CAST(count(DISTINCT test_id) AS BIGINT) FROM lk)
-         |    AS n_leaky_test_docs""".stripMargin,
-    "streamed_transitions" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type AS src,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS dst
-        |  FROM events)
-        |SELECT src, dst, CAST(count(*) AS BIGINT) AS cnt
-        |FROM seq WHERE dst IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-  )
-
-  /** §7.4.6's rows-only pairing rule as CHECKED DATA: every query with
-    * no SQL-expressible oracle (absent from [[oracleSql]] — the driver
-    * records a weaker rows-only check for it) must name the hash-green
-    * gate that backstops its semantics, and that gate must itself be
-    * an [[oracleSql]] key. [[Verify]] refuses to run if any query is
-    * in neither map and EntrySurfaceSpec pins the same closure, so the
-    * rows-only surface (14 rows at r17) can only grow past an explicit
-    * gate pairing — never silently.
-    *
-    * Pairings (query → its verification gate): each gate recomputes
-    * the paired query's contract as hashed columns — recall floors for
-    * the ANN tiers, agreement/containment checks for the dedup pair
-    * lists, margin/coverage gates for the miners. */
-  val gatePairs: Map[String, String] = Map(
-    "bitext_mining_ann" -> "bitext_ann_gate",
-    "dedup_minhash_pairs" -> "dedup_minhash_agreement",
-    "dedup_simhash_pairs" -> "dedup_simhash_agreement",
-    "knn_graph_hubness" -> "hubness_gate",
-    "knn_graph_nndescent" -> "nndescent_gate",
-    "knn_ivf" -> "knn_recall_gates",
-    "knn_ivfpq" -> "knn_recall_gates",
-    "knn_lsh" -> "knn_recall_gates",
-    "knn_lsh_mp" -> "knn_recall_gates",
-    "knn_pq" -> "knn_recall_gates",
-    "knn_ivfpq_filtered" -> "knn_ivfpq_filtered_gate",
-    "multimodal_neardup_pairs" -> "multimodal_neardup_gate",
-    "semantic_dedup" -> "semantic_dedup_gate",
-    "semantic_dedup_graph" -> "semantic_dedup_graph_gate",
-  )
+  /** Each rows-only query → the hash-checked gate that backs it. */
+  val gatePairs: Map[String, String] =
+    Catalog.all.collect { case Query(n, _, GateTwin(g)) => n -> g }.toMap
 }

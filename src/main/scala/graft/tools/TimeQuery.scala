@@ -19,6 +19,7 @@ package graft.tools
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
+    graft.catalog.Catalog.lookup(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_TQ_REPS", "3").toInt

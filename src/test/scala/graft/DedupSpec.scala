@@ -317,16 +317,10 @@ class DedupSpec extends AnyFunSuite {
 
   test("nn-descent default rho: resolver pins the measured-best full descent") {
     import graft.operators.Similarity
-    // the r16 paired COLD experiment rejected the spill-threshold
-    // switch to 0.5 (strictly dominated at 100×: no cold wall-clock
-    // win, recall 0.910 vs 0.934 — see nndescentAutoRho's scaladoc),
-    // so the resolver returns the full descent at EVERY size the
-    // switch would have covered
-    assert(Similarity.nndescentAutoRho(20000L, 20) === 1.0)
-    assert(Similarity.nndescentAutoRho(200000L, 20) === 1.0)
-    assert(Similarity.nndescentAutoRho(20000L, 40) === 1.0)
-    // and the default path's resume namespace (round snapshots,
-    // registry key, output) is identical to an explicit rho=1.0 build
+    // the default is the full descent (see the rho-sampling
+    // knnGraphNnDescent's scaladoc): the default path's resume namespace
+    // (round snapshots, registry key, output) is identical to an
+    // explicit rho=1.0 build
     val emb = Tables.embeddings(spark, dir)
     assert(Similarity.nndescentKeyFor(emb) ===
       Similarity.nndescentKeyFor(emb, rho = 1.0))

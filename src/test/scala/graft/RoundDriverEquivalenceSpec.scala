@@ -148,7 +148,7 @@ class RoundDriverEquivalenceSpec extends AnyFunSuite {
                           seed: Long, rho: Double): DataFrame = {
       val fp = corpusFp(emb, Seq("vec_id", "embedding"))
       val kb = if (buildK > 0) buildK else 2 * k
-      val rhoEff = if (rho > 0.0) rho else Similarity.nndescentAutoRho(fp._1, kb)
+      val rhoEff = if (rho > 0.0) rho else 1.0
       val op = s"nndescent-${fp._1}-${fp._2}-$kb-$iters-$initRounds-" +
         s"$bucketSize-$seed-$rhoEff"
       val wide = knnGraphNnDescentBuild(emb, kb, iters, initRounds,
